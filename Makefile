@@ -6,7 +6,7 @@ PY ?= python
 SF ?= /root/testdata/sf0.01
 SF_SMALL ?= /root/testdata/sf0.001
 
-.PHONY: test test-full oracle oracle-small audit gate bench
+.PHONY: test test-full oracle oracle-small audit gate bench perfbench
 
 # fast feedback loop (<5 min): everything not marked slow
 test:
@@ -38,3 +38,13 @@ gate: test-full oracle oracle-small audit
 # JSON at 1-min load >= 1.5)
 bench:
 	$(PY) bench.py
+
+# repository benchmark gate (BENCHMARK.json): the planted-fault self-test,
+# then one short seeded run of every declared workload; fails unless each
+# run reports correct
+perfbench:
+	$(PY) perfbench/selftest.py
+	for w in $$($(PY) -c "import json; print(*(w['name'] for w in json.load(open('BENCHMARK.json'))['workloads']))"); do \
+		$(PY) perfbench/run.py --workload $$w --seed 1 --seconds 5 --trace 0 | tail -n 1 | \
+			$(PY) -c "import json, sys; r = json.load(sys.stdin); print(json.dumps(r)); sys.exit(not r['correct'])" || exit 1; \
+	done

@@ -267,18 +267,9 @@ def dec_sum_distinct(c: Column | str, scale: int = 6) -> Column:
     return F.sum_distinct(_col(c).cast(f"decimal(27,{scale})")).cast("double")
 
 
-def dec_avg(c: Column | str, scale: int = 6) -> Column:
-    """Order-independent AVG: exact decimal sum, then one double division."""
-    return (F.sum(_col(c).cast(f"decimal(27,{scale})")).cast("double") / F.count(_col(c))).alias("avg")
-
-
 def dec_sum_sql(expr: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
 
 
 def dec_sum_distinct_sql(expr: str, scale: int = 6) -> str:
     return f"CAST(SUM(DISTINCT CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
-
-
-def dec_avg_sql(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE) / COUNT({expr})"

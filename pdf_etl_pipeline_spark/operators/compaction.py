@@ -39,10 +39,6 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.operators import fsutil
 
 
-def _dir_bytes(path: str) -> int:
-    return fsutil.dir_bytes(path)
-
-
 def data_file_count(path: str) -> int:
     return sum(
         1 for uri, _ in fsutil.list_data_files(path) if uri.endswith(".parquet")

@@ -13,6 +13,11 @@ semantics match the reference: re-running on an augmented corpus inserts
 only new keys. The streaming variant wraps the same function in
 ``foreachBatch`` (streaming/jobs.py).
 
+Both appends hold the anti-joined rows in one ``materialized`` scope: the
+count and the append read the same cached rows, so the key read, the
+anti-join and everything upstream run once, and the returned count is taken
+from the very rows that are written, not from a second run of the plan.
+
 Scale notes: the key set is read with only the key columns (column-pruned
 scan); Catalyst broadcasts it when small. When the existing-key side is too
 big to broadcast, the anti-join shuffles both sides on the key — at that
@@ -25,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.operators import fsutil
+from pdf_etl_pipeline_spark.session import materialized
 
 DEFAULT_KEYS = ("invoice_number", "supplier_name")
 
@@ -61,9 +67,13 @@ def insert_dataframe(
     """Anti-join dedup + append to a parquet table; returns inserted count
     (0 = all duplicates — reference db_connection.py:63 semantics)."""
     fresh = dedup_against_existing(df, table_path, keys, spark)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(table_path)
+    with materialized(fresh):
+        n = fresh.count()
+        if n:
+            # AQE does not coalesce a cached plan's partitions, so the cache
+            # keeps one per shuffle partition; the rebalance lets AQE size the
+            # appended files as it does for an uncached write.
+            fresh.hint("rebalance").write.mode("append").parquet(table_path)
     return n
 
 
@@ -107,9 +117,10 @@ def write_jdbc_dedup(
         url, f"(SELECT DISTINCT {', '.join(key_cols)} FROM {table}) t", properties=properties or {}
     )
     fresh = df.join(existing, key_cols, "left_anti").dropDuplicates(key_cols)
-    n = fresh.count()
-    if n:
-        fresh.write.jdbc(url, table, mode="append", properties=properties or {})
+    with materialized(fresh):
+        n = fresh.count()
+        if n:
+            fresh.write.jdbc(url, table, mode="append", properties=properties or {})
     return n
 
 

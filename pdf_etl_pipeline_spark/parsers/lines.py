@@ -53,8 +53,3 @@ def slice_between(lines: Column, start_pattern: str, end_pattern: str) -> Column
     end_rel = index_of_first(after, end_pattern)
     length = F.when((start == 0) | (end_rel == 0), F.lit(0)).otherwise(end_rel - 1)
     return F.slice(after, 1, F.greatest(length, F.lit(0)))
-
-
-def non_blank(lines: Column) -> Column:
-    """P1/P2: drop null/blank elements."""
-    return F.filter(lines, lambda l: l.isNotNull() & (F.trim(l) != ""))

@@ -10,6 +10,11 @@ The whole thing is ONE lazy logical plan: Catalyst prunes the binary
 content column for doc types that don't need it, pushes the extension
 filter into the file listing, and fans the per-file parser work across
 executors. Nothing here loops on the driver.
+
+A sink run materializes the extracted ``(path, lines)`` rows once and
+releases them when it returns: the parser fans them into 7 doc-type
+branches and the sink runs two actions (count, append), and uncached each
+branch of each action would re-scan and re-extract every PDF.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf_etl_pipeline_spark.operators.dedup_sink import insert_dataframe
 from pdf_etl_pipeline_spark.parsers.nc import parse_documents_by_type
+from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.sources.files import scan_corpus
 from pdf_etl_pipeline_spark.sources.pdf import extract_text_lines
 
@@ -30,13 +36,16 @@ def run_extraction_pipeline(
 ) -> DataFrame | int:
     """Extract every supported document under ``root`` into the canonical
     record union; append-dedup into ``sink_path`` when given (returns the
-    inserted count), else return the records DataFrame."""
-    corpus = scan_corpus(spark, root, glob=glob)
-    docs = extract_text_lines(corpus)
-    records = parse_documents_by_type(docs)
+    inserted count), else return the records DataFrame.
+
+    With ``sink_path=None`` the records stay lazy: every action on them
+    re-runs the scan and the extraction once per parser branch, so a caller
+    that runs several actions should hold them in ``session.materialized``."""
+    docs = extract_text_lines(scan_corpus(spark, root, glob=glob))
     if sink_path is None:
-        return records
-    return insert_dataframe(records, sink_path)
+        return run_on_lines(docs)
+    with materialized(docs):
+        return run_on_lines(docs, sink_path)
 
 
 def run_on_lines(docs: DataFrame, sink_path: str | None = None) -> DataFrame | int:

@@ -8,8 +8,10 @@ runtime-settable confs).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Runtime-settable confs applied defensively to any session we run on.
@@ -45,6 +47,23 @@ def tune(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` body and release it on exit, also
+    when the body raises: every action in the body shares one execution of
+    ``df``'s plan instead of re-running it. A plan that is already cached
+    belongs to whoever cached it, so it is yielded as is and left cached."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        yield df
+        return
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def get_spark(app_name: str = "pdf_etl_pipeline_spark", cpus: int | None = None) -> SparkSession:

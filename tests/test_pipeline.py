@@ -3,6 +3,7 @@
 from pdf_etl_pipeline_spark.operators.dedup_sink import insert_dataframe, invoice_exists
 from pdf_etl_pipeline_spark.parsers import fixtures as FX
 from pdf_etl_pipeline_spark.plans.pipeline import run_extraction_pipeline, run_on_lines
+from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.sources.pdf import extract_text_lines, extract_word_boxes
 import pytest
 
@@ -28,6 +29,70 @@ def test_scan_extract_parse_end_to_end(spark, tmp_path):
     assert any("2023-05-03" in p for p in corpus_paths)
 
 
+def _persisted(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_materialized_releases_on_exit(spark):
+    before = _persisted(spark)
+    df = spark.range(50).selectExpr("id * 3 AS materialized_exit")
+    with materialized(df):
+        assert df.count() == 50
+        assert _persisted(spark) == before + 1
+    assert _persisted(spark) == before
+
+
+def test_materialized_releases_when_body_raises(spark):
+    before = _persisted(spark)
+    df = spark.range(50).selectExpr("id * 5 AS materialized_raise")
+    with pytest.raises(RuntimeError, match="body failed"):
+        with materialized(df):
+            df.count()
+            raise RuntimeError("body failed")
+    assert _persisted(spark) == before
+
+
+def test_materialized_leaves_a_callers_cache_cached(spark):
+    df = spark.range(50).selectExpr("id * 7 AS materialized_owned").persist()
+    try:
+        df.count()
+        before = _persisted(spark)
+        with materialized(df):
+            df.count()
+        assert _persisted(spark) == before
+        assert df.storageLevel.useMemory
+    finally:
+        df.unpersist()
+
+
+def test_sink_run_leaves_nothing_persisted(spark, tmp_path):
+    root = _write_stub_corpus(tmp_path / "corpus")
+    sink = str(tmp_path / "invoices")
+    before = _persisted(spark)
+    n = run_extraction_pipeline(spark, root, sink_path=sink)
+    assert n == spark.read.parquet(sink).count() > 0
+    assert _persisted(spark) == before
+
+
+def test_sink_run_extracts_each_document_once(spark, tmp_path, monkeypatch):
+    """The parser's 7 branches and the sink's count and append share one
+    extraction per document instead of running it once per branch per
+    action."""
+    from pdf_etl_pipeline_spark.sources import pdf
+
+    calls = spark.sparkContext.accumulator(0)
+    original = pdf._extract_pdf_lines
+
+    def counted(content):
+        calls.add(1)
+        return original(content)
+
+    monkeypatch.setattr(pdf, "_extract_pdf_lines", counted)
+    root = _write_stub_corpus(tmp_path / "corpus")
+    run_extraction_pipeline(spark, root, sink_path=str(tmp_path / "invoices"))
+    assert calls.value == len(FX.INVOICE_DOCS) + 1
+
+
 def test_extract_word_boxes_stub(spark, tmp_path):
     p = tmp_path / "r.jpg"
     p.write_text("MR. DIY\nTOTAL 45.00")
@@ -47,6 +112,16 @@ def test_dedup_sink_idempotent(spark, tmp_path):
     assert n2 == 0  # re-run inserts nothing (reference db_connection.py:63)
     stored = spark.read.parquet(sink)
     assert stored.count() == 3
+
+
+def test_sink_append_sizes_files_like_an_uncached_write(spark, tmp_path):
+    """The appended rows come from a cache that keeps one partition per
+    shuffle partition; a small batch must still land as one file."""
+    from pdf_etl_pipeline_spark.operators.compaction import data_file_count
+
+    sink = str(tmp_path / "invoices")
+    assert run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS), sink_path=sink) == 3
+    assert data_file_count(sink) == 1
 
 
 def test_merge_upsert_update_else_insert(spark, tmp_path):
