@@ -352,8 +352,9 @@ def _calibrate(spark) -> dict:
 
 
 def _reset_session_memos(spark=None) -> None:
-    """Clear the catalog's session-level memo caches (shared LSH pair index,
-    dd5 pair index, k-means centroids) so every timed run rebuilds from the
+    """Clear the catalog's six session-level memo caches (shared LSH pair
+    index, dd5 pair index, k-means centroids, PQ codebooks, st20 release
+    unroll, leakage pin row counts) so every timed run rebuilds from the
     parquet scan — min-of-N must measure the query, not a memo hit.
 
     Also reap cross-query session state BETWEEN timed windows: discarded
@@ -366,12 +367,15 @@ def _reset_session_memos(spark=None) -> None:
     uniform by construction instead of by luck)."""
     import gc
 
-    from pdf_etl_pipeline_spark.catalog import dedup_q, similarity_q
+    from pdf_etl_pipeline_spark.catalog import dedup_q, multimodal_q, similarity_q
+    from pdf_etl_pipeline_spark.streaming import leakage_guard
 
     dedup_q._PAIRS_CACHE.clear()
     dedup_q._DD5_CACHE.clear()
     similarity_q._CENTROID_CACHE.clear()
     similarity_q._PQ_CACHE.clear()
+    multimodal_q._ST20_MEMO.clear()
+    leakage_guard._PIN_ROWS_MEMO.clear()
     if spark is not None:
         spark.catalog.clearCache()
         gc.collect()  # drop py4j refs so the JVM side becomes collectable
@@ -518,8 +522,8 @@ def main() -> None:
     # The two heaviest LSH-chain queries still show a slow FIRST TIMED run
     # after one warm pass (r11 cc10: [15.6, 27.2, 15.9]; r12 pre-fix:
     # [23.4, 13.3, 14.3] — adjudicated as warm-up/noise, not a plan flip:
-    # tools/cc10_adjudicate.py measured idle spread 1.185 with identical
-    # final adaptive plans). Their multi-stage chains (LSH index -> cluster
+    # idle spread 1.185 with identical final adaptive plans, SCALE.md
+    # "cc10 bench-outlier adjudication"). Their multi-stage chains (LSH index -> cluster
     # -> trim -> pack) need a second execution before tiered JIT and
     # shuffle-path warm-up settle, so they get one extra untimed pass.
     DOUBLE_WARM = {"cc10_trimmed_shard_manifest", "st14_corpus_builder"}

@@ -69,10 +69,7 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple = 
 
 def load_registry() -> dict[str, QuerySpec]:
     for m in _MODULES:
-        try:
-            importlib.import_module(f"pdf_etl_pipeline_spark.catalog.{m}")
-        except ModuleNotFoundError:
-            pass  # module not built yet
+        importlib.import_module(f"pdf_etl_pipeline_spark.catalog.{m}")
     # normalize DATE outputs to naive TIMESTAMP on both engines (idempotent)
     if not REGISTRY.get("_dates_cast"):
         from pdf_etl_pipeline_spark.catalog import _datecast

@@ -291,7 +291,7 @@ def mm4_image_in_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components over the near-dup pair graph (pairs under-delete — near-dup is
 # transitive), one canonical keeper per component, one manifest row per
 # asset. The multimodal twin of dd6's "keep one per group" deliverable.
-from pdf_etl_pipeline_spark.catalog.dedup_q import _label_rounds  # noqa: E402
+from pdf_etl_pipeline_spark.catalog.dedup_q import _label_rounds, _session_key  # noqa: E402
 from pdf_etl_pipeline_spark.llmdata.dedup import label_components  # noqa: E402
 
 _MM5_ROUNDS = 12  # component diameters here are tiny; 12 matches dd6b's oracle bound
@@ -922,7 +922,7 @@ def _st20_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         pin_mm_release_state,
     )
 
-    key = (id(spark), sf_dir)
+    key = (_session_key(spark), sf_dir)
     if key in _ST20_MEMO:
         return _ST20_MEMO[key]
     docs = load_table(spark, sf_dir, "documents")

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.llmdata.dedup import DUP_SPAN_N
+from pdf_etl_pipeline_spark.streaming import driver
 
 NEARDUP_SUBDIR = "neardup"
 SPANIX_SUBDIR = "spans"
@@ -160,52 +161,24 @@ def curation_funnel(verdicts: DataFrame) -> DataFrame:
     )
 
 
-def streaming_curation_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    threshold: float = 0.9,
-    n: int = DUP_SPAN_N,
-    checkpoint_location: str | None = None,
-    span_buckets: int | None = None,
-):
-    """Streaming wrapper: each micro-batch goes through
-    :func:`curation_verdict_batch` (foreachBatch, availableNow) with the
-    checkpointed ``epoch_id`` as its batch id, and the verdict rows
-    (tagged ``batch_id``) append under ``verdicts`` — one growing
-    relation of final curation decisions. ``checkpointLocation`` defaults
-    to ``<index_dir>/_checkpoint`` (st10's restart-resume contract)."""
+def streaming_curation_stream(docs_stream: DataFrame, index_dir: str):
+    """Each micro-batch goes through :func:`curation_verdict_batch`, and
+    its verdict rows append under ``verdicts`` — one growing relation of
+    final curation decisions. A restart resumes from
+    ``<index_dir>/_checkpoint`` (st10's restart-resume contract)."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        v = curation_verdict_batch(
-            batch_df,
-            index_dir,
-            batch_id=int(epoch_id),
-            threshold=threshold,
-            n=n,
-            span_buckets=span_buckets,
-        )
-        v.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(index_dir, VERDICTS_SUBDIR))
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        v = curation_verdict_batch(batch_df, index_dir, batch_id=batch_id)
+        driver.append_batch(v, batch_id, os.path.join(index_dir, VERDICTS_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(index_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(index_dir, "_checkpoint"))
 
 
 def read_curation_verdicts(spark, index_dir: str) -> DataFrame:
     """The final verdicts, one row per document: a recovery replay
     re-appends a batch's rows verbatim (both indexes' probes are
     replay-idempotent), so the (batch_id, doc_id) dedup is exact."""
-    return spark.read.parquet(os.path.join(index_dir, VERDICTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(index_dir, VERDICTS_SUBDIR), "doc_id")
 
 
 def drop_curation_state(spark, index_dir: str) -> None:

@@ -1053,9 +1053,7 @@ def trimmed_from_dup_starts(
     )
 
 
-def trimmed_docs(
-    docs: DataFrame, n: int = DUP_SPAN_N, spans: DataFrame | None = None
-) -> DataFrame:
+def trimmed_docs(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
     """(doc_id, n_tokens, n_kept, trimmed_text): the span-trimmed corpus
     as ACTUAL TEXT — the consumable form of dd11 (which reports the md5
     so the oracle comparison stays size-bounded). This is what a curation
@@ -1068,19 +1066,12 @@ def trimmed_docs(
     Same relational shape as :func:`trim_dup_spans` (corpus-linear
     explodes, doc_id-partitioned interval windows, anti-join, in-array
     re-assembly — no corpus-global window, no Python); fully lazy so a
-    composing plan (cc9) keeps one optimizer scope.
-
-    ``spans`` lets a composing caller inject its own span relation (e.g.
-    a persisted one). The spans feed TWO consumers here (dup_h and the
-    flagged-starts semi-join), so left lazy the explode+Horner chain runs
-    twice — but persisting it was MEASURED A NO-OP for cc10 at sf0.1
-    (14.38 persisted vs 14.11 lazy, interleaved A/B r17,
-    plans/r17/ab_cc10.json: the persist + materialization overhead
-    cancels the saved pass), so the default stays lazy; the hook remains
-    for callers whose span relation is expensive enough to flip that
-    trade (wider n, longer docs)."""
-    if spans is None:
-        spans = span_hashes_df(docs, n)
+    composing plan (cc9) keeps one optimizer scope. The spans feed two
+    consumers (dup_h and the flagged-starts semi-join), so the
+    explode+Horner chain runs twice — persisting it was measured a no-op
+    for cc10 at sf0.1 (14.38 persisted vs 14.11 s lazy, interleaved A/B,
+    plans/r17/ab_cc10.json)."""
+    spans = span_hashes_df(docs, n)
     dup_h = (
         spans.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))

@@ -59,6 +59,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     label_components,
     signatures_from_hashed,
 )
+from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "bands"
 TOKS_SUBDIR = "toks"
@@ -331,35 +332,21 @@ def ingest_batch(
     return kept
 
 
-def near_dup_ingest_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    threshold: float = 0.9,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper: each micro-batch of documents goes through
-    ``ingest_batch`` (foreachBatch, availableNow) — same body as batch,
-    same index on disk. ``checkpointLocation`` defaults to
-    ``<index_dir>/_checkpoint`` so a restarted stream resumes offsets
-    instead of replaying the corpus. A crash-replayed batch (index rows
-    already appended) recomputes a bit-identical admitted set: the
-    admission probe excludes same-doc_id index rows (the replayed
-    batch's own append — see :func:`admission_matches`), and duplicate
-    appends are admission-neutral (candidates dropDuplicates, matches
-    distinct) — the only replay cost is index I/O."""
+def near_dup_ingest_stream(docs_stream: DataFrame, index_dir: str):
+    """Each micro-batch of documents goes through :func:`ingest_batch` —
+    same body as batch, same index on disk; a restart resumes offsets
+    from ``<index_dir>/_checkpoint`` instead of replaying the corpus. A
+    crash-replayed batch (index rows already appended) recomputes a
+    bit-identical admitted set: the admission probe excludes same-doc_id
+    index rows (the replayed batch's own append — see
+    :func:`admission_matches`), and duplicate appends are
+    admission-neutral (candidates dropDuplicates, matches distinct) — the
+    only replay cost is index I/O."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_batch(batch_df, index_dir, threshold)
+    def _batch(batch_df: DataFrame, _batch_id: int) -> None:
+        ingest_batch(batch_df, index_dir)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(index_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(index_dir, "_checkpoint"))
 
 
 def compact_index(

@@ -53,6 +53,7 @@ from pdf_etl_pipeline_spark.llmdata.multimodal import (
     _banded_hash_pairs,
     _require_banding_complete,
 )
+from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "mm_bands"
 DEFAULT_MAX_HAMMING = 3
@@ -298,31 +299,17 @@ def compact_mm_index(
     return compacted
 
 
-def multimodal_ingest_stream(
-    assets_stream: DataFrame,
-    index_dir: str,
-    max_hamming: int = DEFAULT_MAX_HAMMING,
-    hash_col: str = "phash",
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): each micro-batch of
-    hashed assets goes through :func:`mm_ingest_batch` — same body as
-    batch, same index on disk, offsets resumed from the checkpoint so a
-    restart never replays the corpus; a crash-replayed batch recomputes
-    bit-identically (see module docstring)."""
+def multimodal_ingest_stream(assets_stream: DataFrame, index_dir: str):
+    """Each micro-batch of hashed assets goes through
+    :func:`mm_ingest_batch` — same body as batch, same index on disk,
+    offsets resumed from the checkpoint so a restart never replays the
+    corpus; a crash-replayed batch recomputes bit-identically (see module
+    docstring)."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        mm_ingest_batch(batch_df, index_dir, max_hamming, hash_col)
+    def _batch(batch_df: DataFrame, _batch_id: int) -> None:
+        mm_ingest_batch(batch_df, index_dir)
 
-    return (
-        assets_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(index_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(assets_stream, _batch, os.path.join(index_dir, "_checkpoint"))
 
 
 # --- st18: frame-grab admission guard (pinned cross-modal screen) ---------------
@@ -429,37 +416,18 @@ def guard_framegrab_batch(
     ).localCheckpoint()
 
 
-def framegrab_guard_stream(
-    images_stream: DataFrame,
-    state_dir: str,
-    max_hamming: int = DEFAULT_MAX_HAMMING,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): epoch ids tag the
-    verdict rows; the frame index must be pinned before the stream
-    starts."""
+def framegrab_guard_stream(images_stream: DataFrame, state_dir: str):
+    """Epoch ids tag the verdict rows; the frame index must be pinned
+    before the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = guard_framegrab_batch(batch_df, state_dir, int(epoch_id), max_hamming)
-        rows.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(state_dir, REPORTS_SUBDIR))
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        rows = guard_framegrab_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
-    return (
-        images_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(images_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_framegrab_reports(spark, state_dir: str) -> DataFrame:
     """One verdict row per (batch, image): screening is against the
     immutable pin only, so replays are bit-identical and the dedup exact."""
-    return spark.read.parquet(os.path.join(state_dir, REPORTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "asset_id"]
-    )
-
+    return driver.read_batches(spark, os.path.join(state_dir, REPORTS_SUBDIR), "asset_id")

@@ -95,14 +95,16 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     span_hashes_df,
     tokens_col,
 )
+from pdf_etl_pipeline_spark.streaming import driver
 
 SPANS_SUBDIR = "span_counts"
 META_SUBDIR = "span_counts_meta"
 MANIFEST_NAME = "_manifest.json"
 
 # Default bucket count for NEW indexes (recorded in the manifest at
-# creation; pass span_buckets to monitor_batch/span_monitor_stream to
-# size write parallelism for the cluster — at 100 TB you want hundreds).
+# creation; pass span_buckets to the monitor_batch call that creates the
+# index to size write parallelism for the cluster — at 100 TB you want
+# hundreds. span_monitor_stream keeps the count the manifest recorded).
 SPAN_BUCKETS = 8
 
 
@@ -541,43 +543,19 @@ def trim_batch(
 REPORTS_SUBDIR = "span_reports"
 
 
-def span_monitor_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    n: int = DUP_SPAN_N,
-    checkpoint_location: str | None = None,
-    span_buckets: int | None = None,
-):
-    """Streaming wrapper: each micro-batch goes through
-    :func:`monitor_batch` (foreachBatch, availableNow) with the
-    checkpointed ``epoch_id`` as its batch id — same body as batch, same
-    index on disk — and the admission-time report (tagged ``batch_id``)
-    is appended under ``span_reports`` so downstream curation reads one
-    growing relation of final verdicts (via :func:`read_span_reports`,
-    which collapses recovery replays).
+def span_monitor_stream(docs_stream: DataFrame, index_dir: str):
+    """Each micro-batch goes through :func:`monitor_batch` — same body as
+    batch, same index on disk — and its report appends under
+    ``span_reports``, one growing relation of final verdicts. A restart
+    resumes offsets and epoch numbering from ``<index_dir>/_checkpoint``
+    instead of replaying the corpus against a non-empty index under fresh
+    epoch ids."""
 
-    ``checkpointLocation`` defaults to ``<index_dir>/_checkpoint`` so a
-    restarted stream resumes its offsets and epoch numbering instead of
-    replaying the corpus against a non-empty index under fresh epoch ids.
-    """
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        report = monitor_batch(batch_df, index_dir, batch_id=batch_id)
+        driver.append_batch(report, batch_id, os.path.join(index_dir, REPORTS_SUBDIR))
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        report = monitor_batch(
-            batch_df, index_dir, n, batch_id=int(epoch_id), span_buckets=span_buckets
-        )
-        report.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(index_dir, REPORTS_SUBDIR))
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(index_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(index_dir, "_checkpoint"))
 
 
 def read_span_reports(spark, index_dir: str) -> DataFrame:
@@ -586,9 +564,7 @@ def read_span_reports(spark, index_dir: str) -> DataFrame:
     values — the probe suppressed the batch's already-indexed or
     already-merged counts), so the (batch_id, doc_id) dedup is exact,
     not lossy."""
-    return spark.read.parquet(os.path.join(index_dir, REPORTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(index_dir, REPORTS_SUBDIR), "doc_id")
 
 
 MAX_INDEX_FILES_PER_BUCKET = 4

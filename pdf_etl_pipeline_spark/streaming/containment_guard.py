@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_etl_pipeline_spark.streaming import driver
+
 CONT_TOKS_SUBDIR = "cont_toks"
 CONT_POSTS_SUBDIR = "cont_posts"
 CONT_DF_SUBDIR = "cont_df"
@@ -228,32 +230,16 @@ def guard_containment_batch(
     ).localCheckpoint()
 
 
-def containment_guard_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    threshold: float = CONTAINMENT_GUARD_T,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow)."""
+def containment_guard_stream(docs_stream: DataFrame, state_dir: str):
+    """Epoch ids tag the verdict rows; the containment index must be
+    pinned before the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = guard_containment_batch(batch_df, state_dir, int(epoch_id), threshold)
-        rows.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(state_dir, CONT_REPORTS_SUBDIR))
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        rows = guard_containment_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(rows, batch_id, os.path.join(state_dir, CONT_REPORTS_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_containment_reports(spark, state_dir: str) -> DataFrame:
-    return spark.read.parquet(
-        os.path.join(state_dir, CONT_REPORTS_SUBDIR)
-    ).dropDuplicates(["batch_id", "doc_id"])
+    return driver.read_batches(spark, os.path.join(state_dir, CONT_REPORTS_SUBDIR), "doc_id")

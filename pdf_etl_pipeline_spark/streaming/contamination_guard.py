@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.llmdata.corpus import DECON_N, _shingle_hashes
+from pdf_etl_pipeline_spark.streaming import driver
 
 BENCH_SUBDIR = "bench_shingles"
 REPORTS_SUBDIR = "contamination"
@@ -94,36 +95,19 @@ def guard_contamination_batch(
     return guard_batch_df(docs, spark.read.parquet(path), n).localCheckpoint()
 
 
-def contamination_guard_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    n: int = DECON_N,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): epoch ids tag the
-    verdict rows; the benchmark must be pinned before the stream starts."""
+def contamination_guard_stream(docs_stream: DataFrame, state_dir: str):
+    """Epoch ids tag the verdict rows; the benchmark must be pinned before
+    the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = guard_contamination_batch(batch_df, state_dir, int(epoch_id), n)
-        rows.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(state_dir, REPORTS_SUBDIR))
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        rows = guard_contamination_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_contamination_reports(spark, state_dir: str) -> DataFrame:
     """One verdict row per (batch, doc): screening is against the
     immutable pin only, so replays are bit-identical and the dedup is
     exact."""
-    return spark.read.parquet(os.path.join(state_dir, REPORTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, REPORTS_SUBDIR), "doc_id")

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.llmdata.corpus import DECON_N, PACK_BUDGET, pack_counts
 from pdf_etl_pipeline_spark.llmdata.dedup import DUP_SPAN_N, tokens_col
+from pdf_etl_pipeline_spark.streaming import driver
 
 CURATION_SUBDIR = "curation"
 LEAKAGE_SUBDIR = "leakage"
@@ -170,71 +171,31 @@ def build_corpus_batch(
     return verdicts, manifest
 
 
-def corpus_builder_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    threshold: float = 0.9,
-    n: int = DUP_SPAN_N,
-    decon_n: int = DECON_N,
-    checkpoint_location: str | None = None,
-    span_buckets: int | None = None,
-    budget: int = PACK_BUDGET,
-    leakage_guard: bool = False,
-):
-    """Streaming wrapper (foreachBatch, availableNow): each micro-batch
-    runs :func:`build_corpus_batch` with the checkpointed ``epoch_id``;
-    verdict rows append under ``builder_verdicts``, manifest rows under
-    ``builder_manifest``, both tagged ``batch_id``. The benchmark must be
-    pinned (``contamination_guard.pin_benchmark``) before the stream
-    starts — and the held-out index (``leakage_guard.pin_heldout`` under
-    ``<state_dir>/leakage``) when the leakage stage is on."""
+def corpus_builder_stream(docs_stream: DataFrame, state_dir: str):
+    """Each micro-batch runs :func:`build_corpus_batch`; verdict rows
+    append under ``builder_verdicts``, manifest rows under
+    ``builder_manifest``. The benchmark must be pinned
+    (``contamination_guard.pin_benchmark``) before the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts, manifest = build_corpus_batch(
-            batch_df,
-            state_dir,
-            batch_id=int(epoch_id),
-            threshold=threshold,
-            n=n,
-            decon_n=decon_n,
-            span_buckets=span_buckets,
-            budget=budget,
-            leakage_guard=leakage_guard,
-        )
-        tag = F.lit(int(epoch_id)).cast("long")
-        verdicts.withColumn("batch_id", tag).write.mode("append").parquet(
-            os.path.join(state_dir, VERDICTS_SUBDIR)
-        )
-        manifest.withColumn("batch_id", tag).write.mode("append").parquet(
-            os.path.join(state_dir, MANIFEST_SUBDIR)
-        )
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        verdicts, manifest = build_corpus_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(verdicts, batch_id, os.path.join(state_dir, VERDICTS_SUBDIR))
+        driver.append_batch(manifest, batch_id, os.path.join(state_dir, MANIFEST_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_builder_verdicts(spark, state_dir: str) -> DataFrame:
     """One final verdict row per (batch, doc): every stage of the batch
     body replays bit-identically, so the dedup is exact."""
-    return spark.read.parquet(os.path.join(state_dir, VERDICTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, VERDICTS_SUBDIR), "doc_id")
 
 
 def read_builder_manifest(spark, state_dir: str) -> DataFrame:
     """One manifest row per (batch, shard): packing is a deterministic
     function of the batch's replay-stable verdicts, so the dedup is
     exact."""
-    return spark.read.parquet(os.path.join(state_dir, MANIFEST_SUBDIR)).dropDuplicates(
-        ["batch_id", "shard_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, MANIFEST_SUBDIR), "shard_id")
 
 
 def drop_builder_state(spark, state_dir: str) -> None:

@@ -34,6 +34,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_etl_pipeline_spark.streaming import driver
+
 REFERENCE_SUBDIR = "reference"
 DRIFT_SUBDIR = "drift"
 PIN_MARKER = "_pinned_batch_id"
@@ -131,40 +133,21 @@ def monitor_drift_batch(values: DataFrame, state_dir: str, batch_id: int) -> Dat
     return drift_batch_df(ref, values.select("event_type", "value")).localCheckpoint()
 
 
-def drift_monitor_stream(
-    events_stream: DataFrame,
-    state_dir: str,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): epoch ids tag the
-    drift rows; ``checkpointLocation`` defaults inside ``state_dir`` so a
-    restart resumes offsets (and the pinned reference survives — it is
-    written once, ever)."""
+def drift_monitor_stream(events_stream: DataFrame, state_dir: str):
+    """A restart resumes offsets from ``<state_dir>/_checkpoint``, and the
+    pinned reference survives it (it is written once, ever)."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = monitor_drift_batch(
-            batch_df.filter(F.col("value").isNotNull()), state_dir, int(epoch_id)
-        )
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        values = batch_df.filter(F.col("value").isNotNull())
+        rows = monitor_drift_batch(values, state_dir, batch_id)
         if rows is not None:
-            rows.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-                "append"
-            ).parquet(os.path.join(state_dir, DRIFT_SUBDIR))
+            driver.append_batch(rows, batch_id, os.path.join(state_dir, DRIFT_SUBDIR))
 
-    return (
-        events_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(events_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_drift_reports(spark, state_dir: str) -> DataFrame:
     """One drift row per (batch, event_type): replays recompute
     bit-identical rows against the immutable snapshot, so the dedup is
     exact."""
-    return spark.read.parquet(os.path.join(state_dir, DRIFT_SUBDIR)).dropDuplicates(
-        ["batch_id", "event_type"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, DRIFT_SUBDIR), "event_type")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.operators.dedup_sink import insert_dataframe
+from pdf_etl_pipeline_spark.streaming import driver
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -73,21 +74,16 @@ def dedup_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     return events.dropDuplicates(["event_id"])
 
 
-def upsert_stream(
-    events: DataFrame, sink_path: str, keys: tuple[str, ...] = ("event_id",)
-):
-    """foreachBatch dedup-append: each micro-batch goes through the same
-    anti-join insert as the batch sink (reference S7 semantics,
-    db_connection.py:41-47, made incremental)."""
+def upsert_stream(events: DataFrame, sink_path: str):
+    """Dedup-append: each micro-batch goes through the same anti-join
+    insert as the batch sink (reference S7 semantics, db_connection.py:41-47,
+    made incremental). Spark's temporary checkpoint, because a checkpoint
+    inside the sink would make the first anti-join read it as the table."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        insert_dataframe(batch_df, sink_path, keys=keys)
+    def _batch(batch_df: DataFrame, _batch_id: int) -> None:
+        insert_dataframe(batch_df, sink_path, keys=("event_id",))
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(events, _batch, None)
 
 
 def attribution_join(

@@ -46,6 +46,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     hashed_tokens,
     signatures_from_hashed,
 )
+from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "heldout_bands"
 TOKS_SUBDIR = "heldout_toks"
@@ -241,36 +242,18 @@ def guard_leakage_batch(
     )
 
 
-def leakage_guard_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    threshold: float = LEAK_THRESHOLD,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): epoch ids tag the
-    verdict rows; the held-out index must be pinned before the stream
-    starts."""
+def leakage_guard_stream(docs_stream: DataFrame, state_dir: str):
+    """Epoch ids tag the verdict rows; the held-out index must be pinned
+    before the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = guard_leakage_batch(batch_df, state_dir, int(epoch_id), threshold)
-        rows.withColumn("batch_id", F.lit(int(epoch_id)).cast("long")).write.mode(
-            "append"
-        ).parquet(os.path.join(state_dir, REPORTS_SUBDIR))
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        rows = guard_leakage_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_leakage_reports(spark, state_dir: str) -> DataFrame:
     """One verdict row per (batch, doc): screening is against the immutable
     pin only, so replays are bit-identical and the dedup is exact."""
-    return spark.read.parquet(os.path.join(state_dir, REPORTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, REPORTS_SUBDIR), "doc_id")

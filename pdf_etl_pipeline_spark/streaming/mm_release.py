@@ -66,6 +66,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     shingles_col,
     tokens_col,
 )
+from pdf_etl_pipeline_spark.streaming import driver
 
 # The containment screen's set unit is word SHINGLES (order-sensitive
 # n-grams), not bag-of-words tokens: an excerpt is a SPAN of held content,
@@ -260,55 +261,27 @@ def mm_release_batch(
     return verdicts, manifest
 
 
-def mm_release_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    threshold: float = 0.9,
-    max_hamming: int = 3,
-    budget: int = PACK_BUDGET,
-    checkpoint_location: str | None = None,
-):
-    """Streaming wrapper (foreachBatch, availableNow): verdict rows append
-    under ``mmr_verdicts``, manifest rows under ``mmr_manifest``, both
-    tagged ``batch_id``. Both pins (``pin_mm_release_state``) must exist
+def mm_release_stream(docs_stream: DataFrame, state_dir: str):
+    """Verdict rows append under ``mmr_verdicts``, manifest rows under
+    ``mmr_manifest``. Both pins (``pin_mm_release_state``) must exist
     before the stream starts."""
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts, manifest = mm_release_batch(
-            batch_df, state_dir, batch_id=int(epoch_id),
-            threshold=threshold, max_hamming=max_hamming, budget=budget,
-        )
-        tag = F.lit(int(epoch_id)).cast("long")
-        verdicts.withColumn("batch_id", tag).write.mode("append").parquet(
-            os.path.join(state_dir, VERDICTS_SUBDIR)
-        )
-        manifest.withColumn("batch_id", tag).write.mode("append").parquet(
-            os.path.join(state_dir, MANIFEST_SUBDIR)
-        )
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        verdicts, manifest = mm_release_batch(batch_df, state_dir, batch_id)
+        driver.append_batch(verdicts, batch_id, os.path.join(state_dir, VERDICTS_SUBDIR))
+        driver.append_batch(manifest, batch_id, os.path.join(state_dir, MANIFEST_SUBDIR))
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_location or os.path.join(state_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-    )
+    return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))
 
 
 def read_mm_release_verdicts(spark, state_dir: str) -> DataFrame:
     """One final verdict row per (batch, doc): every stage replays
     bit-identically, so the dedup is exact."""
-    return spark.read.parquet(os.path.join(state_dir, VERDICTS_SUBDIR)).dropDuplicates(
-        ["batch_id", "doc_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, VERDICTS_SUBDIR), "doc_id")
 
 
 def read_mm_release_manifest(spark, state_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(state_dir, MANIFEST_SUBDIR)).dropDuplicates(
-        ["batch_id", "shard_id"]
-    )
+    return driver.read_batches(spark, os.path.join(state_dir, MANIFEST_SUBDIR), "shard_id")
 
 
 def drop_mm_release_state(spark, state_dir: str) -> None:

@@ -129,9 +129,9 @@ def test_plain_propagation_converges_past_fixed_rounds(spark):
 @pytest.mark.slow
 def test_session_memo_key_survives_session_recreation(tmp_path):
     """The catalog memos key on applicationId, not id(spark): create a
-    session, warm the shared LSH pair memo, stop it, create a NEW session
-    and show the memo does not serve the dead session's entry (distinct
-    keys, fresh compute, same result). Runs in a subprocess so stopping
+    session, warm the shared LSH pair memo and the st20 release memo, stop
+    it, create a NEW session and show neither memo serves the dead
+    session's entry (distinct keys, fresh compute, same result). Runs in a subprocess so stopping
     sessions cannot disturb the suite's shared session."""
     import subprocess
     import sys as _sys
@@ -141,7 +141,7 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
         """
         import sys
         sys.path.insert(0, %r)
-        from pdf_etl_pipeline_spark.catalog import dedup_q
+        from pdf_etl_pipeline_spark.catalog import dedup_q, multimodal_q
         from pyspark.sql import SparkSession
 
         def fresh(name):
@@ -153,6 +153,9 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
         s1 = fresh("memo1")
         n1 = dedup_q.shared_pairs(s1, sf, 0.9).count()
         k1 = (dedup_q._session_key(s1), sf, 0.9)
+        v1 = multimodal_q._st20_outputs(s1, sf)[0]
+        m1 = v1.count()
+        assert (k1[0], sf) in multimodal_q._ST20_MEMO
         s1.stop()
         s2 = fresh("memo2")
         assert dedup_q._session_key(s2) != k1[0], "applicationId must differ"
@@ -161,6 +164,10 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
         assert k1 in dedup_q._PAIRS_CACHE and k2 in dedup_q._PAIRS_CACHE
         assert k1 != k2, "stale-cache reuse: new session hit the dead session's entry"
         assert n1 == n2
+        v2 = multimodal_q._st20_outputs(s2, sf)[0]
+        assert v2 is not v1, "stale-cache reuse: st20 memo served the dead session"
+        assert set(multimodal_q._ST20_MEMO) == {(k2[0], sf)}
+        assert v2.count() == m1
         s2.stop()
         print("MEMO_OK", n1)
         """
@@ -170,6 +177,18 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
         [_sys.executable, "-c", script], capture_output=True, text=True, timeout=300
     )
     assert "MEMO_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_load_registry_raises_when_a_catalog_module_fails_to_import(monkeypatch):
+    """A catalog module that cannot import fails the registry load instead
+    of silently dropping its query family from the driver."""
+    import sys as _sys
+
+    from pdf_etl_pipeline_spark.catalog import load_registry
+
+    monkeypatch.setitem(_sys.modules, "pdf_etl_pipeline_spark.catalog.windows", None)
+    with pytest.raises(ModuleNotFoundError):
+        load_registry()
 
 
 def test_knn_join_salting_identical_and_bounded(spark):

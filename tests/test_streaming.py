@@ -37,6 +37,25 @@ def _run_to_memory(stream_df, name, mode="append"):
     return q
 
 
+def test_foreach_batch_lives_only_in_the_driver():
+    """streaming/driver.py owns the package's only micro-batch writer: no
+    other module builds its own foreachBatch/availableNow chain."""
+    import pathlib
+
+    import pdf_etl_pipeline_spark
+
+    root = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+    driver = root / "streaming" / "driver.py"
+    marks = (".foreachBatch(", "availableNow=True")
+    assert all(m in driver.read_text() for m in marks)
+    offenders = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != driver and any(m in p.read_text() for m in marks)
+    ]
+    assert offenders == []
+
+
 def test_streaming_windowed_counts_match_batch(spark, sf_dir, event_drop_dir):
     stream = read_event_stream(spark, event_drop_dir)
     _run_to_memory(windowed_counts(stream), "win_counts", mode="complete")
@@ -866,6 +885,103 @@ def test_st20_mm_release_precedence_replay_and_stream(spark, tmp_path):
     assert MR.read_mm_release_manifest(spark, state2).count() == 2
     MR.drop_mm_release_state(spark, state)
     MR.drop_mm_release_state(spark, state2)
+
+
+_MMR_SCHEMA = "doc_id long, text string, phash long"
+
+
+def _mmr_stream_outputs(spark, drop_dir, state):
+    """Run mm_release_stream over ``drop_dir`` to completion and return
+    the (verdicts, manifest) rows the readers serve, in a fixed order."""
+    from pdf_etl_pipeline_spark.streaming import mm_release as MR
+
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(_MMR_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .load(drop_dir)
+    )
+    q = MR.mm_release_stream(stream, state).start()
+    try:
+        assert q.awaitTermination(300), "stream did not finish"
+    finally:
+        q.stop()
+    return (
+        MR.read_mm_release_verdicts(spark, state).orderBy("batch_id", "doc_id").collect(),
+        MR.read_mm_release_manifest(spark, state).orderBy("batch_id", "shard_id").collect(),
+    )
+
+
+@pytest.fixture(scope="module")
+def mmr_crash_inputs(spark, tmp_path_factory):
+    """Pins and two one-file micro-batches for the st20 stream (every
+    verdict kind appears), plus the outputs of an uncrashed run."""
+    import time as _time
+
+    from pdf_etl_pipeline_spark.streaming import mm_release as MR
+
+    held_words = [f"hw{i}" for i in range(20)]
+    held = spark.createDataFrame([(1000, " ".join(held_words))], "doc_id long, text string")
+    H0, P = 1 << 20, 31 << 40
+    frames = spark.createDataFrame([(500, 0, H0)], "asset_id long, frame_idx int, fhash long")
+    fresh = lambda i: " ".join(f"t{i}w{j}" for j in range(12))
+    b1 = [(1, " ".join(held_words[:10]), 7), (2, fresh(2), H0 ^ 1), (3, fresh(3), P),
+          (4, fresh(4), P ^ 1)]
+    b2 = [(5, fresh(5), P ^ 2), (6, fresh(6), (1 << 55) + 9)]
+    root = tmp_path_factory.mktemp("mmr_crash")
+    drop_dir = str(root / "drops")
+    spark.createDataFrame(b1, _MMR_SCHEMA).coalesce(1).write.parquet(drop_dir)
+    _time.sleep(1.1)
+    spark.createDataFrame(b2, _MMR_SCHEMA).coalesce(1).write.mode("append").parquet(drop_dir)
+    state = str(root / "uncrashed")
+    assert MR.pin_mm_release_state(held, frames, state)
+    expected = _mmr_stream_outputs(spark, drop_dir, state)
+    MR.drop_mm_release_state(spark, state)
+    return (held, frames), drop_dir, expected
+
+
+# Two batches make four appends (verdicts, manifest per batch). A crash
+# after write 1 or 3 is the crash before write 2 or 4, so six cases cover
+# every boundary: before each write, and after each batch's last write
+# but before its offset commits.
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "k,after_write",
+    [(1, False), (2, False), (2, True), (3, False), (4, False), (4, True)],
+    ids=["before-1", "before-2", "after-2", "before-3", "before-4", "after-4"],
+)
+def test_st20_stream_crash_at_each_write_replays_bit_identically(
+    spark, tmp_path, monkeypatch, mmr_crash_inputs, k, after_write
+):
+    """D5 write-boundary contract: the st20 stream crashes at its k-th
+    driver append, restarts on the same state and checkpoint, and the
+    readers then serve exactly the rows of an uncrashed run."""
+    from pyspark.errors import StreamingQueryException
+
+    from pdf_etl_pipeline_spark.streaming import driver
+    from pdf_etl_pipeline_spark.streaming import mm_release as MR
+
+    pins, drop_dir, expected = mmr_crash_inputs
+    real_append = driver.append_batch
+    calls = []
+
+    def crashing_append(df, batch_id, path):
+        calls.append(path)
+        if len(calls) == k and not after_write:
+            raise RuntimeError(f"planted crash before write {k}")
+        real_append(df, batch_id, path)
+        if len(calls) == k:
+            raise RuntimeError(f"planted crash after write {k}")
+
+    state = str(tmp_path / "mmr")
+    assert MR.pin_mm_release_state(*pins, state)
+    monkeypatch.setattr(driver, "append_batch", crashing_append)
+    with pytest.raises(StreamingQueryException, match="planted crash"):
+        _mmr_stream_outputs(spark, drop_dir, state)
+    assert len(calls) == k
+    monkeypatch.undo()
+    assert _mmr_stream_outputs(spark, drop_dir, state) == expected
+    MR.drop_mm_release_state(spark, state)
 
 
 def test_st20_pin_half_pinned_retry_succeeds(spark, tmp_path):
