@@ -357,6 +357,11 @@ def _reset_session_memos(spark=None) -> None:
     unroll, leakage pin row counts) so every timed run rebuilds from the
     parquet scan — min-of-N must measure the query, not a memo hit.
 
+    ``session._SCHEMAS`` (the parquet schema memo of ``load_table`` and
+    ``load_events``) is deliberately NOT cleared: it is keyed on the file's
+    identity and checked by ``stat`` on every read, and it holds a schema,
+    never a query result — so a hit is what a repeated query really costs.
+
     Also reap cross-query session state BETWEEN timed windows: discarded
     localCheckpoint/persist blocks from earlier queries are only released
     when their RDDs are garbage-collected on both sides of the py4j

@@ -1,0 +1,119 @@
+"""The parquet schema memo behind ``load_table``/``load_events``: a file's
+schema is inferred once per file identity and schema confs, and a read that
+hits the memo launches no Spark job."""
+
+import itertools
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from pdf_etl_pipeline_spark import session
+from pdf_etl_pipeline_spark.session import load_events, load_table
+
+_GROUPS = itertools.count()
+
+
+def _with_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"test-session-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_of_unchanged_file_launches_no_job(spark, sf_dir, tmp_path):
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), tmp_path / "orders.parquet")
+    first, first_jobs = _with_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    second, second_jobs = _with_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    assert first_jobs >= 1  # the inference job: the counter sees jobs
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def test_rewritten_file_reinfers(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"], "c": [3.5, 4.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b", "c"]
+    assert sorted(r.c for r in df.collect()) == [3.5, 4.5]
+
+
+def test_directory_path_still_infers(spark, tmp_path):
+    spark.createDataFrame([(1, "x")], "a long, b string").write.parquet(
+        str(tmp_path / "d.parquet")
+    )
+    n_schemas = len(session._SCHEMAS)
+    for _ in range(2):
+        df, jobs = _with_jobs(spark, lambda: load_table(spark, str(tmp_path), "d"))
+        assert jobs >= 1
+        assert df.columns == ["a", "b"]
+    assert len(session._SCHEMAS) == n_schemas
+
+
+def _dtypes_or_error(fn):
+    try:
+        return fn().dtypes
+    except Exception as e:  # the un-memoized read's failure is the expectation
+        return type(e).__name__
+
+
+def test_load_table_events_follows_the_nanos_conf(spark, tmp_path):
+    """``events`` with TIMESTAMP(NANOS) ``ts``: inference fails without
+    ``nanosAsLong`` and yields BIGINT with it (``load_events`` sets it). A
+    schema memoized under one value must not be served under the other — a
+    BIGINT schema passed to ``.schema()`` reads the file whatever the conf —
+    so ``load_table`` must match the raw read before and after ``load_events``,
+    also on the second round, when the memo already holds the BIGINT schema."""
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_000_000_001, 2_000_000_999], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), path, version="2.6")
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(conf, None)
+    seen = []
+    try:
+        for _ in range(2):
+            spark.conf.unset(conf)
+            for step in ("before", "after"):
+                if step == "after":
+                    assert dict(load_events(spark, str(tmp_path)).dtypes)["ts_ns"] == "bigint"
+                got = _dtypes_or_error(lambda: load_table(spark, str(tmp_path), "events"))
+                raw = _dtypes_or_error(lambda: spark.read.parquet(path))
+                assert got == raw, step
+                seen.append(got)
+    finally:
+        if saved is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, saved)
+    assert seen[1] == [("event_id", "bigint"), ("ts", "bigint")]
+    assert seen[0] == seen[2] != seen[1]
+
+
+def test_audit_read_schema_parser_keeps_nested_types_whole():
+    """``tools/explain_audit.py`` checks scan pruning on the top-level
+    ReadSchema fields; a comma inside ``decimal(p,s)`` or a nested type is
+    not a field boundary."""
+    import importlib.util
+
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    spec = importlib.util.spec_from_file_location("explain_audit", os.path.join(tools, "explain_audit.py"))
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    plan = (
+        "+- FileScan parquet [b#1,a#2] ReadSchema: struct<b:decimal(12,2),"
+        "a:array<struct<x:int,y:map<string,int>>>>\n"
+        "+- FileScan parquet [ts#3] ReadSchema: struct<ts:timestamp>\n"
+        "+- FileScan parquet [] ReadSchema: struct<>\n"
+    )
+    assert audit.read_schema_fields(plan) == [["a", "b"], ["ts"], []]

@@ -24,6 +24,29 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def read_schema_fields(plan: str) -> list[list[str]]:
+    """The sorted top-level field names of each scan's ``ReadSchema:
+    struct<...>`` in ``plan``, in plan order. Commas count only outside
+    ``<...>`` and ``(...)``, so ``decimal(p,s)``, ``array<...>`` and
+    ``struct<...>`` column types stay inside their field."""
+    out = []
+    for chunk in plan.split("ReadSchema: struct<")[1:]:
+        names, field, depth = [], "", 0
+        for ch in chunk.split("\n", 1)[0]:
+            if depth == 0 and ch in ",>":
+                names.append(field.split(":")[0])
+                field = ""
+                if ch == ">":
+                    break
+                continue
+            depth += (ch in "<(") - (ch in ">)")
+            field += ch
+        else:
+            names.append(field.split(":")[0])  # schema cut at the line end
+        out.append(sorted(n for n in names if n))
+    return out
+
+
 # Physical-plan lines that can legitimately sit BETWEEN a SinglePartition
 # exchange and the tiny per-bucket aggregate feeding it: pure rendering /
 # runtime indirection, never an operator that changes what flows through.
@@ -527,8 +550,7 @@ def _dq3_two_exchanges_pruned_scan(plan: str) -> list[str]:
         problems.append(f"expected exactly 2 non-spread Exchanges, saw {exchanges}")
     if "Exchange SinglePartition" not in plan:
         problems.append("missing: the 1-row rollup's SinglePartition exchange")
-    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-    cols = sorted(c.split(":")[0] for c in m.group(1).split(",")) if m else []
+    cols = (read_schema_fields(plan) or [[]])[0]
     if cols != ["event_type", "ts"]:
         problems.append(f"scan not pruned to the quasi columns: {cols}")
     return problems
@@ -1205,10 +1227,7 @@ CHECKS = {
         "must_not": ["BatchEvalPython", "CartesianProduct", "SortMergeJoin", "Window"],
         "check": lambda plan: [
             f"events scan reads beyond (event_type, ts): {cols}"
-            for cols in (
-                sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                for m in plan.split("ReadSchema: struct<")[1:]
-            )
+            for cols in read_schema_fields(plan)
             if not set(cols) <= {"event_type", "ts"}
         ],
     },
@@ -1275,10 +1294,7 @@ CHECKS = {
         "must_not": ["BatchEvalPython", "CartesianProduct", "SortMergeJoin", "Window"],
         "check": lambda plan: [
             f"events scan reads beyond (event_type, ts, value): {cols}"
-            for cols in (
-                sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                for m in plan.split("ReadSchema: struct<")[1:]
-            )
+            for cols in read_schema_fields(plan)
             if not set(cols) <= {"event_type", "ts", "value"}
         ],
     },
@@ -1297,10 +1313,7 @@ CHECKS = {
             ]
             + [
                 f"events scan reads beyond (event_type, ts, value): {cols}"
-                for cols in (
-                    sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                    for m in plan.split("ReadSchema: struct<")[1:]
-                )
+                for cols in read_schema_fields(plan)
                 if not set(cols) <= {"event_type", "ts", "value"}
             ]
         ),
@@ -1321,10 +1334,7 @@ CHECKS = {
             ]
             + [
                 f"events scan reads beyond (event_type, ts, value): {cols}"
-                for cols in (
-                    sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                    for m in plan.split("ReadSchema: struct<")[1:]
-                )
+                for cols in read_schema_fields(plan)
                 if not set(cols) <= {"event_type", "ts", "value"}
             ]
         ),
@@ -1371,10 +1381,7 @@ CHECKS = {
         "must_not": ["BatchEvalPython", "CartesianProduct", "SortMergeJoin", "Window"],
         "check": lambda plan: [
             f"events scan reads beyond (event_type, ts, value): {cols}"
-            for cols in (
-                sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                for m in plan.split("ReadSchema: struct<")[1:]
-            )
+            for cols in read_schema_fields(plan)
             if not set(cols) <= {"event_type", "ts", "value"}
         ],
     },
@@ -1665,10 +1672,7 @@ CHECKS = {
         # scan-spread is on (OFF at scale)
         "check": lambda plan: [
             f"lineitem scan not pruned to extendedprice+group columns: {cols}"
-            for cols in (
-                sorted(c.split(":")[0] for c in m.split(">")[0].split(","))
-                for m in plan.split("ReadSchema: struct<")[1:]
-            )
+            for cols in read_schema_fields(plan)
             if not set(cols)
             <= {"l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"}
         ],

@@ -368,17 +368,6 @@ def main() -> None:
             )
             print(f"corpus {tag} ready at {dirs[tag]}", file=sys.stderr)
 
-    def _reset_memos():
-        # session-level memo caches (shared LSH pairs etc.) would let a
-        # later query ride an earlier one's build — every timed point
-        # must pay its own full plan (the bench.py discipline)
-        from pdf_etl_pipeline_spark.catalog import dedup_q, similarity_q
-
-        dedup_q._PAIRS_CACHE.clear()
-        dedup_q._DD5_CACHE.clear()
-        similarity_q._CENTROID_CACHE.clear()
-        similarity_q._PQ_CACHE.clear()
-
     # The decade exponents are the repo's load-bearing sublinearity claims,
     # so they get the same measured-clean treatment BENCH_r15 gave the
     # headline (r15 VERDICT finding 1): corpus GENERATION above loads the
@@ -391,7 +380,8 @@ def main() -> None:
     out = {"scales": {t: {} for t in dirs}, "rows": {}, "windows": {}}
     for tag, d in dirs.items():
         for qname, fn in QUERIES.items():
-            _reset_memos()
+            # every timed point pays its own full plan (the bench.py discipline)
+            bench._reset_session_memos(spark)
             w = bench._Window()
             t0 = time.time()
             n = fn(spark, d).count()
