@@ -361,6 +361,10 @@ def _reset_session_memos(spark=None) -> None:
     ``load_events``) is deliberately NOT cleared: it is keyed on the file's
     identity and checked by ``stat`` on every read, and it holds a schema,
     never a query result — so a hit is what a repeated query really costs.
+    ``session._MEMO`` (``session_memo``, which holds the doc-type parsers'
+    unresolved Column trees) is not cleared for the same reason: it holds
+    no query result, only expressions every batch re-plans, and it drops
+    itself when the application id changes.
 
     Also reap cross-query session state BETWEEN timed windows: discarded
     localCheckpoint/persist blocks from earlier queries are only released

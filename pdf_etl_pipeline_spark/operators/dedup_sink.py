@@ -53,7 +53,11 @@ def dedup_against_existing(
     # fsutil.exists, not os.path.isdir: on s3a:// a POSIX probe is always
     # False, which would silently turn dedup-append into blind append.
     if fsutil.exists(table_path, spark):
-        existing = spark.read.parquet(table_path).select(*key_cols).distinct()
+        # The key columns' schema comes from the incoming rows: reading with
+        # it skips the schema-inference job on the sink directory. Parquet
+        # resolves columns by name, so a sink whose key types differ raises.
+        key_schema = df.select(*key_cols).schema
+        existing = spark.read.schema(key_schema).parquet(table_path).distinct()
         df = df.join(existing, key_cols, "left_anti")
     return df.dropDuplicates(key_cols)
 

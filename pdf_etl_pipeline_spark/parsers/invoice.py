@@ -21,6 +21,7 @@ from pdf_etl_pipeline_spark.parsers.lines import (
     cascade,
     first_extract,
     first_matching_line,
+    plan_columns,
     slice_between,
 )
 
@@ -100,28 +101,17 @@ def invoice_line_items(lines: Column) -> Column:
     )
 
 
-def parse_invoices(
-    docs: DataFrame,
-    lines_col: str = "lines",
-    path_col: str = "path",
-    company_id: int = 1,
-    country: str = "USA",
-    processed_date: str | None = None,
-) -> DataFrame:
-    """Full T1+T2+T3 plan: documents (path, lines[]) → canonical invoice rows
-    (one per line item, metadata denormalized — reference
-    lib/pipeline_runner.py:148-164).
-    """
+def _invoice_plan(
+    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None
+) -> tuple[list[Column], ...]:
     lines = F.col(lines_col)
-    with_meta = docs.select(
+    with_meta = [
         F.col(path_col).alias("file"),
         invoice_metadata(lines).alias("m"),
         invoice_line_items(lines).alias("items"),
-    )
-    exploded = with_meta.select(
-        "file", "m", F.posexplode_outer("items").alias("pos", "item")
-    )
-    return exploded.select(
+    ]
+    exploded = [F.col("file"), F.col("m"), F.posexplode_outer("items").alias("pos", "item")]
+    out = [
         F.lit(company_id).alias("company_id"),
         F.lit(country).alias("country"),
         (
@@ -142,4 +132,24 @@ def parse_invoices(
         F.col("m.tax_amount").alias("tax_amount"),
         F.col("m.total_amount").alias("total_amount"),
         F.col("file"),
+    ]
+    return with_meta, exploded, out
+
+
+def parse_invoices(
+    docs: DataFrame,
+    lines_col: str = "lines",
+    path_col: str = "path",
+    company_id: int = 1,
+    country: str = "USA",
+    processed_date: str | None = None,
+) -> DataFrame:
+    """Full T1+T2+T3 plan: documents (path, lines[]) → canonical invoice rows
+    (one per line item, metadata denormalized — reference
+    lib/pipeline_runner.py:148-164). The Columns are built once per Spark
+    application (``lines.plan_columns``).
+    """
+    with_meta, exploded, out = plan_columns(
+        docs, _invoice_plan, lines_col, path_col, company_id, country, processed_date
     )
+    return docs.select(*with_meta).select(*exploded).select(*out)

@@ -11,8 +11,18 @@ at all).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pdf_etl_pipeline_spark.session import session_memo
+
+
+def plan_columns(docs: DataFrame, build, *args):
+    """``build(*args)`` — a parser's unresolved Column lists — built once
+    per Spark application and argument tuple. Unresolved Columns are bound
+    to no DataFrame, so one build serves every batch's ``docs``; building
+    them costs thousands of py4j calls, applying them a few dozen."""
+    return session_memo(docs.sparkSession, (build, *args), lambda: build(*args))
 
 
 def first_matching_line(lines: Column, pattern: str) -> Column:

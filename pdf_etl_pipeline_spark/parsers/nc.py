@@ -14,6 +14,16 @@ Everything below is native Column/array/window expressions. Multi-row
 parsers (T6/T7/T8) are UDTF-shaped: per-document arrays built declaratively
 then ``posexplode``d — one row in, n rows out, no Python, no shuffle except
 T8's per-document block window (partitioned by path, bounded rows).
+
+Built once, run per batch. Each parser is split in two. A ``_*_plan``
+function builds the parser's unresolved Columns: its ``select`` lists, its
+``posexplode`` columns, T8's window and ``agg`` columns and the dispatcher's
+doc-type column and per-type filter predicates. ``lines.plan_columns``
+memoizes them per Spark application and argument tuple, since building
+them costs thousands of py4j calls. The ``parse_*`` function applies them to
+each batch's ``docs`` with a few DataFrame calls (``select``, ``filter``,
+``withColumn(s)``, ``groupBy``, ``drop``, ``unionByName``); those are bound
+to the batch, so they run on every call.
 """
 
 from __future__ import annotations
@@ -26,6 +36,7 @@ from pdf_etl_pipeline_spark.parsers.lines import (
     first_extract,
     first_matching_line,
     index_of_first,
+    plan_columns,
     slice_between,
 )
 
@@ -60,13 +71,19 @@ def detect_doc_type(path: Column, lines: Column) -> Column:
     )
 
 
+
+
+def _cols(*names: str) -> list[Column]:
+    return [F.col(n) for n in names]
+
+
 # --- T5: award letter → 1 row ----------------------------------------------
-def parse_award_letter(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+def _award_plan(lines_col: str) -> list[Column]:
     lines = F.col(lines_col)
     amount_idx = index_of_first(lines, r"in the amount of")
     same_line_amt = first_extract(lines, r"in the amount of\s*\$(" + MONEY + ")")
     next_line_amt = F.regexp_extract(F.try_element_at(lines, amount_idx + 1), r"\$(" + MONEY + ")", 1)
-    return docs.select(
+    return [
         F.lit("nc_award_letter").alias("doc_type"),
         F.col("path").alias("file"),
         state_header(lines).alias("state"),
@@ -82,14 +99,18 @@ def parse_award_letter(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         S.parse_float(F.coalesce(same_line_amt, F.nullif(next_line_amt, F.lit("")))).alias(
             "award_value"
         ),
-    )
+    ]
+
+
+def parse_award_letter(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+    return docs.select(*plan_columns(docs, _award_plan, lines_col))
 
 
 # --- T9: invitation to bid → 1 row -----------------------------------------
-def parse_invitation(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+def _invitation_plan(lines_col: str) -> list[Column]:
     lines = F.col(lines_col)
     combo = r"^(DA\d{5,})\s*[–-]\s*(.+?), in (.+?) County"
-    return docs.select(
+    return [
         F.lit("nc_invitation_to_bid").alias("doc_type"),
         F.col("path").alias("file"),
         state_header(lines).alias("state"),
@@ -107,18 +128,22 @@ def parse_invitation(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         S.parse_date(first_extract(lines, r"Bid Opening will be held on (.+?)\s*$")).alias(
             "letting_date"
         ),
-    )
+    ]
+
+
+def parse_invitation(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+    return docs.select(*plan_columns(docs, _invitation_plan, lines_col))
 
 
 # --- T6: bids-as-read → n contractor rows (all-null fallback) --------------
-def parse_bids_as_read(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+def _bids_as_read_plan(lines_col: str) -> tuple[list[Column], ...]:
     lines = F.col(lines_col)
     bidder_line = r"^([A-Z][A-Za-z .&-]+?)\s+(" + MONEY + r")\s*$"
     bidders = F.filter(
         lines,
         lambda l: l.rlike(bidder_line) & ~l.rlike("ESTIMATE|TOTAL BIDS"),
     )
-    header = docs.select(
+    header = [
         F.lit("nc_bids_as_read").alias("doc_type"),
         F.col("path").alias("file"),
         S.parse_date(first_extract(lines, r"Bid Opening\s+(\d{1,2}/\d{1,2}/\d{4})")).alias(
@@ -134,13 +159,11 @@ def parse_bids_as_read(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
             "total_bids_received"
         ),
         bidders.alias("_bidders"),
-    )
+    ]
     # posexplode_outer keeps the reference's all-null fallback row when no
     # contractor line parsed (lib/parse_utils.py:1085-1092)
-    exploded = header.select(
-        "*", F.posexplode_outer("_bidders").alias("pos", "_b")
-    ).drop("_bidders")
-    return exploded.select(
+    exploded = [F.col("*"), F.posexplode_outer("_bidders").alias("pos", "_b")]
+    out = _cols(
         "doc_type",
         "file",
         "letting_date",
@@ -149,16 +172,23 @@ def parse_bids_as_read(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         "description",
         "engineers_estimate",
         "total_bids_received",
+    ) + [
         F.regexp_extract("_b", bidder_line, 1).alias("contractor_name"),
         S.parse_float(F.regexp_extract("_b", bidder_line, 2)).alias("amount_bid"),
-    ).drop("pos", "_b")
+    ]
+    return header, exploded, out
+
+
+def parse_bids_as_read(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+    header, exploded, out = plan_columns(docs, _bids_as_read_plan, lines_col)
+    return docs.select(*header).select(*exploded).drop("_bidders").select(*out)
 
 
 # --- T7: bid tabs → items × bidders (positional join J3) -------------------
 ITEM_LINE_T7 = r"^\d{3,4}\s+\S+"
 
 
-def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+def _bid_tabs_plan(lines_col: str) -> tuple[list[Column], ...]:
     lines = F.col(lines_col)
     first_item = index_of_first(lines, ITEM_LINE_T7)
     header_block = F.slice(lines, 1, F.greatest(first_item - 1, F.lit(0)))
@@ -168,7 +198,7 @@ def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
     )
     items = F.filter(lines, lambda l: l.rlike(ITEM_LINE_T7))
 
-    base = docs.select(
+    base = [
         F.lit("nc_bid_tabs").alias("doc_type"),
         F.col("path").alias("file"),
         S.parse_date(
@@ -180,8 +210,8 @@ def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         first_extract(lines, r"Counties:?\s*(.+?)\s*$").alias("counties"),
         vendors.alias("_vendors"),
         items.alias("_items"),
-    )
-    per_item = base.select("*", F.posexplode("_items").alias("item_pos", "_line")).drop("_items")
+    ]
+    per_item = [F.col("*"), F.posexplode("_items").alias("item_pos", "_line")]
 
     money_toks = F.filter(F.split(F.col("_line"), r"\s+"), S.is_money_token)
     n_vendors = F.size("_vendors")
@@ -192,8 +222,8 @@ def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         F.greatest(F.size(money_toks) - 2 * n_vendors + 1, F.lit(1)),
         2 * n_vendors,
     )
-    with_item = per_item.select(
-        "*",
+    with_item = [
+        F.col("*"),
         F.regexp_extract("_line", r"^(\d{3,4})\s", 1).alias("line_no"),
         F.regexp_extract("_line", r"^\d{3,4}\s+(\S+)", 1).alias("item_no"),
         F.nullif(
@@ -204,11 +234,9 @@ def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
             S.parse_float(F.nullif(F.regexp_extract("_line", r"\)\s+([\d,]+)\s", 1), F.lit("")))
         ).alias("qty"),
         pairs.alias("_pairs"),
-    )
-    per_vendor = with_item.select(
-        "*", F.posexplode("_vendors").alias("vendor_pos", "vendor_name")
-    ).drop("_vendors")
-    return per_vendor.select(
+    ]
+    per_vendor = [F.col("*"), F.posexplode("_vendors").alias("vendor_pos", "vendor_name")]
+    out = _cols(
         "doc_type",
         "file",
         "letting_date",
@@ -222,8 +250,23 @@ def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         "unit",
         "qty",
         "vendor_name",
+    ) + [
         S.parse_float(F.try_element_at(F.col("_pairs"), F.col("vendor_pos") * 2 + 1)).alias("unit_price"),
         S.parse_float(F.try_element_at(F.col("_pairs"), F.col("vendor_pos") * 2 + 2)).alias("amount_bid"),
+    ]
+    return base, per_item, with_item, per_vendor, out
+
+
+def parse_bid_tabs(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+    base, per_item, with_item, per_vendor, out = plan_columns(docs, _bid_tabs_plan, lines_col)
+    return (
+        docs.select(*base)
+        .select(*per_item)
+        .drop("_items")
+        .select(*with_item)
+        .select(*per_vendor)
+        .drop("_vendors")
+        .select(*out)
     )
 
 
@@ -241,26 +284,21 @@ BLOCK_SENTINEL = r"^DA\d{5}\s*$"
 VENDOR_LINE_T8 = r"^(.+?)\s\s+(.+?)\s+(" + MONEY + r")\s+(-?\d+(?:\.\d+)?)\s*$"
 
 
-def parse_item_c(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+def _item_c_plan(lines_col: str) -> tuple:
     # W4: per-document running count of DA##### sentinels = block id
-    exploded = docs.select("path", F.posexplode(F.col(lines_col)).alias("pos", "line"))
+    exploded = [F.col("path"), F.posexplode(F.col(lines_col)).alias("pos", "line")]
     w = Window.partitionBy("path").orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    blocks = (
-        exploded.withColumn(
-            "block_id", F.sum(F.when(F.col("line").rlike(BLOCK_SENTINEL), 1).otherwise(0)).over(w)
-        )
-        .filter(F.col("block_id") > 0)
-        .groupBy("path", "block_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))), lambda s: s["line"]
-            ).alias("lines")
-        )
-    )
+    block_id = F.sum(F.when(F.col("line").rlike(BLOCK_SENTINEL), 1).otherwise(0)).over(w)
+    in_block = F.col("block_id") > 0
+    group = _cols("path", "block_id")
+    block_lines = F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", "line"))), lambda s: s["line"]
+    ).alias("lines")
+
     lines = F.col("lines")
     vendor_section = slice_between(lines, r"^\$ TOTALS", r"^(ESTIMATE|LETTING) TOTAL")
     vendor_lines = F.filter(vendor_section, lambda l: l.rlike(VENDOR_LINE_T8))
-    base = blocks.select(
+    base = [
         F.lit("nc_item_c").alias("doc_type"),
         F.col("path").alias("file"),
         F.col("block_id"),
@@ -281,11 +319,9 @@ def parse_item_c(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
             "estimate_total"
         ),
         vendor_lines.alias("_vendors"),
-    )
-    per_vendor = base.select("*", F.posexplode_outer("_vendors").alias("vpos", "_v")).drop(
-        "_vendors"
-    )
-    return per_vendor.select(
+    ]
+    per_vendor = [F.col("*"), F.posexplode_outer("_vendors").alias("vpos", "_v")]
+    out = _cols(
         "doc_type",
         "file",
         "block_id",
@@ -297,14 +333,54 @@ def parse_item_c(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
         "date_available",
         "final_completion",
         "estimate_total",
+    ) + [
         F.regexp_extract("_v", VENDOR_LINE_T8, 1).alias("vendor_name"),
         F.regexp_extract("_v", VENDOR_LINE_T8, 2).alias("vendor_city"),
         S.parse_float(F.regexp_extract("_v", VENDOR_LINE_T8, 3)).alias("vendor_total"),
         S.parse_float(F.regexp_extract("_v", VENDOR_LINE_T8, 4)).alias("pct_diff"),
-    ).drop("vpos", "_v")
+    ]
+    return exploded, block_id, in_block, group, block_lines, base, per_vendor, out
+
+
+def parse_item_c(docs: DataFrame, lines_col: str = "lines") -> DataFrame:
+    exploded, block_id, in_block, group, block_lines, base, per_vendor, out = plan_columns(
+        docs, _item_c_plan, lines_col
+    )
+    return (
+        docs.select(*exploded)
+        .withColumn("block_id", block_id)
+        .filter(in_block)
+        .groupBy(*group)
+        .agg(block_lines)
+        .select(*base)
+        .select(*per_vendor)
+        .drop("_vendors")
+        .select(*out)
+    )
 
 
 # --- T11: dispatcher ---------------------------------------------------------
+_DOC_TYPES = (
+    "receipt",
+    "nc_award_letter",
+    "nc_invitation_to_bid",
+    "nc_bids_as_read",
+    "nc_bid_tabs",
+    "nc_item_c",
+    "invoice",
+)
+
+
+def _dispatch_plan(lines_col: str) -> tuple[Column, dict[str, Column]]:
+    # P4 extension dispatch (reference lib/pipeline_runner.py:57,68): images
+    # go through the OCR/receipt path, everything else through text parsers
+    is_image = F.lower(F.col("path")).rlike(r"\.(jpg|jpeg|png)$")
+    doc_type = F.when(is_image, "receipt").otherwise(
+        detect_doc_type(F.col("path"), F.col(lines_col))
+    )
+    return doc_type, {t: F.col("doc_type") == t for t in _DOC_TYPES}
+
+
 def parse_documents_by_type(
     docs: DataFrame, lines_col: str = "lines", processed_date: str | None = None
 ) -> DataFrame:
@@ -314,27 +390,24 @@ def parse_documents_by_type(
     from pdf_etl_pipeline_spark.parsers.invoice import parse_invoices
     from pdf_etl_pipeline_spark.parsers.receipt import parse_receipts
 
-    # P4 extension dispatch (reference lib/pipeline_runner.py:57,68): images
-    # go through the OCR/receipt path, everything else through text parsers
-    is_image = F.lower(F.col("path")).rlike(r"\.(jpg|jpeg|png)$")
-    typed = docs.withColumn(
-        "doc_type",
-        F.when(is_image, "receipt").otherwise(
-            detect_doc_type(F.col("path"), F.col(lines_col))
-        ),
-    )
+    doc_type, is_type = plan_columns(docs, _dispatch_plan, lines_col)
+    typed = docs.withColumn("doc_type", doc_type)
+
+    def of(t: str) -> DataFrame:
+        return typed.filter(is_type[t])
+
     branches = [
-        parse_receipts(
-            typed.filter(F.col("doc_type") == "receipt"), processed_date=processed_date
-        ).withColumn("doc_type", F.lit("receipt")),
-        parse_award_letter(typed.filter(F.col("doc_type") == "nc_award_letter")),
-        parse_invitation(typed.filter(F.col("doc_type") == "nc_invitation_to_bid")),
-        parse_bids_as_read(typed.filter(F.col("doc_type") == "nc_bids_as_read")),
-        parse_bid_tabs(typed.filter(F.col("doc_type") == "nc_bid_tabs")),
-        parse_item_c(typed.filter(F.col("doc_type") == "nc_item_c")),
-        parse_invoices(
-            typed.filter(F.col("doc_type") == "invoice"), processed_date=processed_date
-        ).withColumn("doc_type", F.lit("invoice")),
+        parse_receipts(of("receipt"), processed_date=processed_date).withColumn(
+            "doc_type", F.lit("receipt")
+        ),
+        parse_award_letter(of("nc_award_letter")),
+        parse_invitation(of("nc_invitation_to_bid")),
+        parse_bids_as_read(of("nc_bids_as_read")),
+        parse_bid_tabs(of("nc_bid_tabs")),
+        parse_item_c(of("nc_item_c")),
+        parse_invoices(of("invoice"), processed_date=processed_date).withColumn(
+            "doc_type", F.lit("invoice")
+        ),
     ]
     out = branches[0]
     for b in branches[1:]:

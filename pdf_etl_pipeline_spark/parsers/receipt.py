@@ -19,7 +19,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions import scalars as S
-from pdf_etl_pipeline_spark.parsers.lines import cascade, first_extract, first_matching_line
+from pdf_etl_pipeline_spark.parsers.lines import (
+    cascade,
+    first_extract,
+    first_matching_line,
+    plan_columns,
+)
 
 M = r"[\d,]+\.\d{2}"
 # Grammar number token (reference lib/parse_utils.py:366-383): digits with a
@@ -112,14 +117,9 @@ def _item_struct(s: Column, lines: Column) -> Column:
     )
 
 
-def parse_receipts(
-    docs: DataFrame,
-    lines_col: str = "lines",
-    path_col: str = "path",
-    company_id: int = 1,
-    country: str = "USA",
-    processed_date: str | None = None,
-) -> DataFrame:
+def _receipt_plan(
+    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None
+) -> tuple:
     lines = F.col(lines_col)
     tax_line = first_matching_line(lines, TAX_LINE)
     n1 = S.parse_float(F.regexp_extract(tax_line, TAX_LINE, 1))
@@ -137,7 +137,7 @@ def parse_receipts(
         lambda s: s["line"].rlike(ANY_ITEM) & ~F.upper(s["line"]).rlike(NOT_ITEM_WORDS),
     )
 
-    base = docs.select(
+    base = [
         F.col(path_col).alias("file"),
         F.coalesce(
             first_matching_line(lines, SUPPLIER_SUFFIX), F.try_element_at(lines, F.lit(1))
@@ -154,21 +154,20 @@ def parse_receipts(
             first_extract(lines, rf"^TOTAL\b.*?({M})\s*$")
         ).alias("_total_line"),
         F.transform(item_lines, lambda s: _item_struct(s, lines)).alias("_items"),
-    )
+    ]
     # A6: per-receipt subtotal = sum of item totals (fallback when no tax line)
     items_sum = F.aggregate(
         F.col("_items"), F.lit(0.0), lambda acc, it: acc + F.coalesce(it["total"], F.lit(0.0))
     )
-    enriched = base.withColumn(
-        "total_amount",
-        S.fix_null_total(F.col("_total_line"), F.col("subtotal_amount"), F.col("tax_amount")),
-    ).withColumn("_items_sum", items_sum)
-
-    exploded = enriched.select("*", F.posexplode_outer("_items").alias("pos", "item")).drop(
-        "_items"
-    )
+    enriched = {
+        "total_amount": S.fix_null_total(
+            F.col("_total_line"), F.col("subtotal_amount"), F.col("tax_amount")
+        ),
+        "_items_sum": items_sum,
+    }
+    exploded = [F.col("*"), F.posexplode_outer("_items").alias("pos", "item")]
     qty_fixed = S.infer_qty(F.col("item.qty"), F.col("item.price"), F.col("item.total"))
-    return exploded.select(
+    out = [
         F.lit(company_id).alias("company_id"),
         F.lit(country).alias("country"),
         (
@@ -189,4 +188,25 @@ def parse_receipts(
         F.col("total_amount"),
         F.col("_items_sum").alias("items_total"),
         F.col("file"),
+    ]
+    return base, enriched, exploded, out
+
+
+def parse_receipts(
+    docs: DataFrame,
+    lines_col: str = "lines",
+    path_col: str = "path",
+    company_id: int = 1,
+    country: str = "USA",
+    processed_date: str | None = None,
+) -> DataFrame:
+    base, enriched, exploded, out = plan_columns(
+        docs, _receipt_plan, lines_col, path_col, company_id, country, processed_date
+    )
+    return (
+        docs.select(*base)
+        .withColumns(enriched)
+        .select(*exploded)
+        .drop("_items")
+        .select(*out)
     )

@@ -78,6 +78,29 @@ def materialized(df: DataFrame) -> Iterator[DataFrame]:
         df.unpersist()
 
 
+# application id -> {key: value}; holds at most the current application
+_MEMO: dict[str, dict] = {}
+
+
+def session_memo(spark: SparkSession, key, build):
+    """``build()``, called once per Spark application and ``key``.
+
+    The memo is keyed on ``spark.sparkContext.applicationId``, unique per
+    SparkContext (``id(spark)`` is not: CPython reuses addresses). The first
+    call under a new application id drops every entry of the old one, so a
+    value is never served to a SparkContext it was not built for. Meant for
+    values that hold no query result and cost driver time to build, such as
+    unresolved Column trees."""
+    app = spark.sparkContext.applicationId
+    memo = _MEMO.get(app)
+    if memo is None:
+        _MEMO.clear()
+        memo = _MEMO[app] = {}
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
 def get_spark(app_name: str = "pdf_etl_pipeline_spark", cpus: int | None = None) -> SparkSession:
     """Build a local session sized for this machine.
 

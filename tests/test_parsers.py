@@ -157,6 +157,86 @@ def test_dispatch_union_schema(spark):
     assert inv.award_value is None
 
 
+def _py4j_calls(monkeypatch, fn):
+    """``fn()`` and the number of commands it sent to the JVM over py4j."""
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+    calls = 0
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    try:
+        out = fn()
+    finally:
+        monkeypatch.undo()
+    return out, calls
+
+
+def test_parser_plan_is_built_once_per_session(spark, monkeypatch):
+    parse_documents_by_type(FX.corpus_df(spark, FX.ALL_DOCS))
+    docs = FX.corpus_df(spark, FX.ALL_DOCS)
+    out, calls = _py4j_calls(monkeypatch, lambda: parse_documents_by_type(docs))
+    # a cold build sends ~13k commands; applying the memoized Columns ~500
+    assert calls <= 1000
+    assert out.count() == 22
+
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_memoized_parser_plan_matches_a_cold_build(spark):
+    from pdf_etl_pipeline_spark import session
+
+    def parse():
+        return parse_documents_by_type(
+            FX.corpus_df(spark, FX.ALL_DOCS), processed_date="2023-06-01"
+        )
+
+    parse()
+    warm = parse()
+    warm_rows = _sorted_rows(warm)
+    session._MEMO.clear()
+    cold = parse()
+    assert cold.schema == warm.schema
+    assert _sorted_rows(cold) == warm_rows
+    assert len({r.doc_type for r in cold.collect()}) == 7
+
+
+def test_session_memo_keeps_only_the_current_application():
+    from types import SimpleNamespace
+
+    from pdf_etl_pipeline_spark import session
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    saved = dict(session._MEMO)
+    session._MEMO.clear()
+    try:
+        builds = []
+
+        def build(v):
+            builds.append(v)
+            return v
+
+        assert session.session_memo(app("app-1"), "k", lambda: build("one")) == "one"
+        assert session.session_memo(app("app-1"), "k", lambda: build("again")) == "one"
+        assert session.session_memo(app("app-2"), "k", lambda: build("two")) == "two"
+        assert list(session._MEMO) == ["app-2"]
+        assert session.session_memo(app("app-1"), "k", lambda: build("three")) == "three"
+        assert list(session._MEMO) == ["app-1"]
+        assert builds == ["one", "two", "three"]
+    finally:
+        session._MEMO.clear()
+        session._MEMO.update(saved)
+
+
 def test_receipt_parser(spark):
     from pdf_etl_pipeline_spark.parsers.receipt import parse_receipts
     import datetime

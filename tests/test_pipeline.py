@@ -193,6 +193,26 @@ def test_dedup_sink_broadcast_is_size_gated(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
 
 
+def test_dedup_plan_over_an_existing_sink_launches_no_job(spark, tmp_path):
+    """The sink's key read takes its schema from the incoming rows, so
+    building the next batch's dedup plan runs no parquet schema inference."""
+    from pdf_etl_pipeline_spark.operators.dedup_sink import dedup_against_existing
+
+    sink = str(tmp_path / "invoices")
+    assert insert_dataframe(run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS)), sink) > 0
+    incoming = run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS))
+    sc = spark.sparkContext
+    group = f"dedup-plan-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        fresh = dedup_against_existing(incoming, sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert fresh.count() == 0
+
+
 def test_invoice_exists_probe(spark, tmp_path):
     sink = str(tmp_path / "invoices")
     run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS), sink_path=sink)
