@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdf_etl_pipeline_spark.catalog import load_registry
-from pdf_etl_pipeline_spark.session import get_spark
+from pdf_etl_pipeline_spark.session import forget, get_spark
 
 BENCH_QUERIES = [
     "a8_pricing_summary",
@@ -352,39 +352,23 @@ def _calibrate(spark) -> dict:
 
 
 def _reset_session_memos(spark=None) -> None:
-    """Clear the catalog's six session-level memo caches (shared LSH pair
-    index, dd5 pair index, k-means centroids, PQ codebooks, st20 release
-    unroll, leakage pin row counts) so every timed run rebuilds from the
-    parquet scan — min-of-N must measure the query, not a memo hit.
-
-    ``session._SCHEMAS`` (the parquet schema memo of ``load_table`` and
-    ``load_events``) is deliberately NOT cleared: it is keyed on the file's
-    identity and checked by ``stat`` on every read, and it holds a schema,
-    never a query result — so a hit is what a repeated query really costs.
-    ``session._MEMO`` (``session_memo``, which holds the doc-type parsers'
-    unresolved Column trees) is not cleared for the same reason: it holds
-    no query result, only expressions every batch re-plans, and it drops
-    itself when the application id changes.
+    """Drop every ``session_memo`` entry (``forget()``) so each timed
+    run rebuilds the catalog's shared relations from the parquet scan —
+    min-of-N must measure the query, not a memo hit. This also drops the
+    doc-type parsers' Column trees, so a timed parser query (``t*``) pays a
+    cold parser build; no bench query calls a parser. ``session._SCHEMAS``
+    (the parquet schema memo) is kept: it holds a schema, never a query
+    result, so a hit is what a repeated query really costs.
 
     Also reap cross-query session state BETWEEN timed windows: discarded
     localCheckpoint/persist blocks from earlier queries are only released
     when their RDDs are garbage-collected on both sides of the py4j
     bridge, so without an explicit gc the block manager's storage pool
     fills monotonically over a 35-query bench and squeezes whichever
-    shuffle-heavy query runs late (r10's g2 8.6→18.6→28.6 s reading —
-    not reproducible in isolation, but this makes run-to-run conditions
-    uniform by construction instead of by luck)."""
+    shuffle-heavy query runs late (r10's g2 8.6→18.6→28.6 s reading)."""
     import gc
 
-    from pdf_etl_pipeline_spark.catalog import dedup_q, multimodal_q, similarity_q
-    from pdf_etl_pipeline_spark.streaming import leakage_guard
-
-    dedup_q._PAIRS_CACHE.clear()
-    dedup_q._DD5_CACHE.clear()
-    similarity_q._CENTROID_CACHE.clear()
-    similarity_q._PQ_CACHE.clear()
-    multimodal_q._ST20_MEMO.clear()
-    leakage_guard._PIN_ROWS_MEMO.clear()
+    forget()
     if spark is not None:
         spark.catalog.clearCache()
         gc.collect()  # drop py4j refs so the JVM side becomes collectable

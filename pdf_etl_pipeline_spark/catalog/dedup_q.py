@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.catalog import register, require_pin
 from pdf_etl_pipeline_spark.llmdata import dedup as DD
 from pdf_etl_pipeline_spark.llmdata import similarity as SIM
-from pdf_etl_pipeline_spark.session import load_table, tune
+from pdf_etl_pipeline_spark.session import load_table, session_memo, tune
 
 _TOKS = DD.tokens_sql("text")
 _TOKSH = DD.token_hashes_sql("text")
@@ -72,28 +72,18 @@ def dd2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Shared LSH pair index ----------------------------------------------------
 # The near-dup pair relation feeds SIX catalog queries (dd3, dd6, dd6b, cc1,
 # cc2, cc4). A real system builds the LSH index ONCE and every consumer reads
-# it; the session-level memo below is that pattern — ``materialize=True``
-# checkpoints the pairs eagerly on first use (and unpersists the build-time
-# intermediates), later queries reuse the materialized RDD instead of
-# re-hashing the corpus.
-_PAIRS_CACHE: dict = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable per-session memo key. ``id(spark)`` is NOT usable: CPython
-    reuses addresses after GC, so a stopped session's cache entry could be
-    served to a brand-new session (stale checkpointed RDDs bound to a dead
-    context). ``applicationId`` is unique per SparkContext."""
-    return spark.sparkContext.applicationId
-
-
+# it; ``session_memo`` is that pattern — ``materialize=True`` checkpoints
+# the pairs eagerly on first use (and unpersists the build-time
+# intermediates), later queries in the same Spark application reuse the
+# materialized RDD instead of re-hashing the corpus.
 def shared_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> DataFrame:
-    key = (_session_key(spark), sf_dir, threshold)
-    if key not in _PAIRS_CACHE:
-        _PAIRS_CACHE[key] = DD.minhash_lsh_pairs(
+    return session_memo(
+        spark,
+        (shared_pairs, sf_dir, threshold),
+        lambda: DD.minhash_lsh_pairs(
             load_table(spark, sf_dir, "documents", spread=True), threshold, materialize=True
-        )
-    return _PAIRS_CACHE[key]
+        ),
+    )
 
 
 # --- DD3: MinHash + LSH -----------------------------------------------------
@@ -273,9 +263,6 @@ _BANDED_ARMS = "\nUNION ALL\n".join(
 )
 
 
-_DD5_CACHE: dict = {}
-
-
 def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
@@ -312,16 +299,18 @@ ORDER BY id_a, id_b""",
 )
 def dd5_embedding_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    # session-level memo (same pattern as shared_pairs): the banded join +
-    # verify runs once per (session, sf_dir); materialize=True checkpoints
-    # the result and unpersists the build-time band/candidate caches so a
+    # session memo (same pattern as shared_pairs): the banded join + verify
+    # runs once per (application, sf_dir); materialize=True checkpoints the
+    # result and unpersists the build-time band/candidate caches so a
     # long-lived session accumulates no cached blocks per invocation.
-    key = (_session_key(spark), sf_dir)
-    if key not in _DD5_CACHE:
-        _DD5_CACHE[key] = SIM.embedding_dup_pairs_lsh(
+    pairs = session_memo(
+        spark,
+        (dd5_embedding_dups, sf_dir),
+        lambda: SIM.embedding_dup_pairs_lsh(
             _augmented_embeddings(spark, sf_dir), threshold=0.9, materialize=True
-        )
-    return _DD5_CACHE[key].orderBy("id_a", "id_b")
+        ),
+    )
+    return pairs.orderBy("id_a", "id_b")
 
 
 # --- DD2b: word-shingle Jaccard (order-sensitive n-gram dedup) ----------------

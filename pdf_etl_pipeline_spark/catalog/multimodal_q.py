@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.catalog import register, require_pin
 from pdf_etl_pipeline_spark.functions.scalars import portable_hash32, portable_hash32_sql
 from pdf_etl_pipeline_spark.llmdata import multimodal as MM
-from pdf_etl_pipeline_spark.session import load_table, tune
+from pdf_etl_pipeline_spark.session import load_table, session_memo, tune
 
 
 def _h64(seed: Column) -> Column:
@@ -291,7 +291,7 @@ def mm4_image_in_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components over the near-dup pair graph (pairs under-delete — near-dup is
 # transitive), one canonical keeper per component, one manifest row per
 # asset. The multimodal twin of dd6's "keep one per group" deliverable.
-from pdf_etl_pipeline_spark.catalog.dedup_q import _label_rounds, _session_key  # noqa: E402
+from pdf_etl_pipeline_spark.catalog.dedup_q import _label_rounds  # noqa: E402
 from pdf_etl_pipeline_spark.llmdata.dedup import label_components  # noqa: E402
 
 _MM5_ROUNDS = 12  # component diameters here are tiny; 12 matches dd6b's oracle bound
@@ -906,14 +906,17 @@ SELECT batch_id, shard_id, COUNT(*) AS n_docs,
        MIN(doc_id) AS first_doc_id, MAX(doc_id) AS last_doc_id
 FROM packed20 GROUP BY 1, 2 ORDER BY 1, 2"""
 
-_ST20_MEMO: dict = {}
-
 
 def _st20_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``_st20_unroll``, once per (Spark application, sf_dir): the verdict
+    and manifest registrations share one unroll."""
+    return session_memo(spark, (_st20_outputs, sf_dir), lambda: _st20_unroll(spark, sf_dir))
+
+
+def _st20_unroll(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Two real multimodal ingest batches through the composed release body
     (fresh pins + fresh asset index), verdicts and manifests materialized
-    before the temp state disappears. Memoized per (session, sf_dir): the
-    verdict and manifest registrations share one unroll."""
+    before the temp state disappears."""
     import tempfile
 
     from pdf_etl_pipeline_spark.streaming.mm_release import (
@@ -922,9 +925,6 @@ def _st20_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         pin_mm_release_state,
     )
 
-    key = (_session_key(spark), sf_dir)
-    if key in _ST20_MEMO:
-        return _ST20_MEMO[key]
     docs = load_table(spark, sf_dir, "documents")
     stage = _CPm.split_stage(F.col("doc_id"))
     held = docs.filter(stage >= 1)
@@ -945,8 +945,6 @@ def _st20_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         )
     finally:
         drop_mm_release_state(spark, tmp)
-    _ST20_MEMO.clear()
-    _ST20_MEMO[key] = out
     return out
 
 

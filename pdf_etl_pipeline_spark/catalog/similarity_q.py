@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pdf_etl_pipeline_spark.catalog import register
 from pdf_etl_pipeline_spark.llmdata import similarity as SS
 from pdf_etl_pipeline_spark.llmdata.dedup import cosine_sql
-from pdf_etl_pipeline_spark.session import load_table, tune
+from pdf_etl_pipeline_spark.session import load_table, session_memo, tune
 
 _QUERY_IDS = [0, 1, 2, 3, 4]
 _COS = cosine_sql("qv", "cv")
@@ -104,26 +104,19 @@ _COS_C = cosine_sql("embedding", "centroid")
 # the 5 k-means iterations, localCheckpoint materializes the 16-row centroid
 # relation, later callers reuse it (measured: the two slowest similarity
 # queries at sf0.01 collapse from ~9.3 s + 7.5 s to one learn).
-_CENTROID_CACHE: dict = {}
-
-
 def shared_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(spark): CPython reuses addresses after GC, so an
-    # id() key could serve a dead session's checkpointed centroids to a new
-    # session at the same address (see dedup_q._session_key).
-    from pdf_etl_pipeline_spark.catalog.dedup_q import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    if key not in _CENTROID_CACHE:
-        # spread=True (r17): k-means iterates heavy vector arithmetic over
-        # the embeddings scan; with the scan serialized on one row group
-        # the training dominated every consumer (ss8 10.2 -> 18.7 s when
-        # the r17 consumer-gating first left this loader raw — bench pair
-        # in OPTIMIZATION_r17.md §1)
-        _CENTROID_CACHE[key] = SS.kmeans_centroids(
+    # spread=True (r17): k-means iterates heavy vector arithmetic over the
+    # embeddings scan; with the scan serialized on one row group the
+    # training dominated every consumer (ss8 10.2 -> 18.7 s when the r17
+    # consumer-gating first left this loader raw — bench pair in
+    # OPTIMIZATION_r17.md §1)
+    return session_memo(
+        spark,
+        (shared_centroids, sf_dir),
+        lambda: SS.kmeans_centroids(
             load_table(spark, sf_dir, "embeddings", spread=True)
-        ).localCheckpoint()
-    return _CENTROID_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 def _kmeans_ctes(n_cells: int, iters: int, table: str = "embeddings", prefix: str = "") -> str:
@@ -215,20 +208,16 @@ def ss3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8 subspace codebooks learned by the SAME deterministic k-means as ss3
 # (8-dim slices, PQ_K=8 cells, 3 iterations); corpus stored as codes; ADC
 # scores = per-query (m, cell) dot-product table joined to the codes.
-_PQ_CACHE: dict = {}
-
-
 def shared_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_etl_pipeline_spark.catalog.dedup_q import _session_key
-
-    key = (_session_key(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        # spread=True: same rationale as shared_centroids (8 subspace
-        # k-means trainings over the same scan)
-        _PQ_CACHE[key] = SS.pq_codebooks(
+    # spread=True: same rationale as shared_centroids (8 subspace k-means
+    # trainings over the same scan)
+    return session_memo(
+        spark,
+        (shared_pq_codebooks, sf_dir),
+        lambda: SS.pq_codebooks(
             load_table(spark, sf_dir, "embeddings", spread=True)
-        ).localCheckpoint()
-    return _PQ_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 def _pq_ctes() -> str:

@@ -95,6 +95,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     span_hashes_df,
     tokens_col,
 )
+from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.streaming import driver
 
 SPANS_SUBDIR = "span_counts"
@@ -467,17 +468,14 @@ def monitor_batch(
     n_buckets = int(manifest["span_buckets"])
     if batch_id is None:
         batch_id = _derived_batch_id(docs)
-    spans = span_hashes_df(docs, n).persist()
-    try:
+    # unpersisted even when the report or append raises — a long-running
+    # foreachBatch monitor must not accrue storage-pool pressure from
+    # failed batches
+    with materialized(span_hashes_df(docs, n)) as spans:
         report = batch_report_df(
             docs, index_dir, n, batch_id=batch_id, spans=spans
         ).localCheckpoint()
         _append_batch_counts(spans, index_dir, batch_id, n_buckets)
-    finally:
-        # unpersist even when the report or append raises — a long-running
-        # foreachBatch monitor must not accrue storage-pool pressure from
-        # failed batches
-        spans.unpersist()
     return report
 
 
@@ -529,14 +527,11 @@ def trim_batch(
     n_buckets = int(manifest["span_buckets"])
     if batch_id is None:
         batch_id = _derived_batch_id(docs)
-    spans = span_hashes_df(docs, n).persist()
-    try:
+    with materialized(span_hashes_df(docs, n)) as spans:
         trimmed = batch_trimmed_df(
             docs, index_dir, n, batch_id=batch_id, spans=spans
         ).localCheckpoint()
         _append_batch_counts(spans, index_dir, batch_id, n_buckets)
-    finally:
-        spans.unpersist()
     return trimmed
 
 

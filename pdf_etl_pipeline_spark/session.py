@@ -13,6 +13,16 @@ st_mtime_ns)`` plus the session confs that change what inference returns
 file or a changed conf is a new key, so it re-infers. Directories and paths
 that cannot be ``stat``ed (growing sink and state dirs, object stores) keep
 the inferring read.
+
+Values that are costly to build and tied to one Spark application live in
+one memo registry, ``session_memo(spark, key, build)``: the doc-type
+parsers' Column trees, the catalog's shared relations (LSH pairs, dd5
+pairs, k-means centroids, PQ codebooks, the st20 release unroll, most of
+them checkpointed) and the leakage guard's pin row counts. Entries live as
+long as their Spark application: the first call under a new
+``applicationId`` drops the old one's, which releases its checkpoints.
+``forget(key)`` drops one entry (a fresh pin at a reused path), ``forget()``
+every entry (a timed run that must rebuild).
 """
 
 from __future__ import annotations
@@ -88,9 +98,11 @@ def session_memo(spark: SparkSession, key, build):
     The memo is keyed on ``spark.sparkContext.applicationId``, unique per
     SparkContext (``id(spark)`` is not: CPython reuses addresses). The first
     call under a new application id drops every entry of the old one, so a
-    value is never served to a SparkContext it was not built for. Meant for
-    values that hold no query result and cost driver time to build, such as
-    unresolved Column trees."""
+    value is never served to a SparkContext it was not built for, and a
+    dead application's checkpointed relations become collectable. Meant for
+    values that cost driver time or Spark jobs to build: unresolved Column
+    trees, checkpointed relations shared by several queries, pin metadata.
+    ``key`` is by convention the builder plus its arguments."""
     app = spark.sparkContext.applicationId
     memo = _MEMO.get(app)
     if memo is None:
@@ -99,6 +111,17 @@ def session_memo(spark: SparkSession, key, build):
     if key not in memo:
         memo[key] = build()
     return memo[key]
+
+
+def forget(key=None) -> None:
+    """Drop ``key``'s ``session_memo`` entry, or every entry when ``key`` is
+    None, so the next call rebuilds it. ``_MEMO`` holds only the current
+    application, so no session is needed."""
+    if key is None:
+        _MEMO.clear()
+        return
+    for memo in _MEMO.values():
+        memo.pop(key, None)
 
 
 def get_spark(app_name: str = "pdf_etl_pipeline_spark", cpus: int | None = None) -> SparkSession:

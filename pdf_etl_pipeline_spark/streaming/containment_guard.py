@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.streaming import driver
 
 CONT_TOKS_SUBDIR = "cont_toks"
@@ -113,10 +114,9 @@ def pin_containment_index(held_docs: DataFrame, state_dir: str,
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    hashed = _hashed_units(
-        held_docs.join(reps, "doc_id", "left_semi"), unit_col
-    ).persist()
-    try:
+    with materialized(
+        _hashed_units(held_docs.join(reps, "doc_id", "left_semi"), unit_col)
+    ) as hashed:
         dfreq = hashed.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
         dfreq.write.mode("append").parquet(df_p)
         dfreq = spark.read.parquet(df_p)
@@ -130,8 +130,6 @@ def pin_containment_index(held_docs: DataFrame, state_dir: str,
             .write.mode("append")
             .parquet(toks_p)
         )
-    finally:
-        hashed.unpersist()
     return True
 
 

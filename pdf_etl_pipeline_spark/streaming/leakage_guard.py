@@ -46,6 +46,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     hashed_tokens,
     signatures_from_hashed,
 )
+from pdf_etl_pipeline_spark.session import forget, materialized, session_memo
 from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "heldout_bands"
@@ -75,25 +76,26 @@ def _meta_path(state_dir: str) -> str:
     return os.path.join(state_dir, META_SUBDIR)
 
 
-# Pin row counts memoized per state_dir: the pin is write-once by contract,
-# so the count can never change under a live guard — without this, a pin
-# created before the meta relation existed (or a torn meta) made EVERY
-# micro-batch pay a full scan of the band index just to decide
-# broadcastability (r14 ADVICE). pin_heldout invalidates its entry when it
-# creates a fresh pin at a reused path.
-_PIN_ROWS_MEMO: dict[str, int] = {}
-
-
 def _pin_band_rows(spark, state_dir: str) -> int:
     """The pinned band index's row count, from the meta relation written at
     pin time (LAST, after BANDS). A torn/missing meta degrades to ONE count
-    of the bands parquet, after which the meta is backfilled and the result
-    memoized — same answer, paid once instead of per batch."""
+    of the bands parquet, after which the meta is backfilled. The count is
+    memoized per Spark application and state dir: the pin is write-once by
+    contract, so it can never change under a live guard — without the memo
+    a pin created before the meta relation existed (or a torn meta) made
+    EVERY micro-batch pay a full scan of the band index just to decide
+    broadcastability (r14 ADVICE). pin_heldout forgets the entry when it
+    creates a fresh pin at a reused path."""
+    return session_memo(
+        spark,
+        (_pin_band_rows, os.path.abspath(state_dir)),
+        lambda: _read_pin_band_rows(spark, state_dir),
+    )
+
+
+def _read_pin_band_rows(spark, state_dir: str) -> int:
     from pdf_etl_pipeline_spark.operators import fsutil
 
-    key = os.path.abspath(state_dir)
-    if key in _PIN_ROWS_MEMO:
-        return _PIN_ROWS_MEMO[key]
     if fsutil.list_data_files(_meta_path(state_dir), spark):
         n = int(spark.read.parquet(_meta_path(state_dir)).agg(
             F.max("n_band_rows")
@@ -113,7 +115,6 @@ def _pin_band_rows(spark, state_dir: str) -> int:
             ).write.mode("append").parquet(_meta_path(state_dir))
         except Exception:
             pass
-    _PIN_ROWS_MEMO[key] = n
     return n
 
 
@@ -130,9 +131,8 @@ def pin_heldout(heldout_docs: DataFrame, state_dir: str) -> bool:
     if fsutil.list_data_files(_bands_path(state_dir), spark):
         return False
     # a fresh pin at a reused path must not read a stale memoized count
-    _PIN_ROWS_MEMO.pop(os.path.abspath(state_dir), None)
-    hashed = hashed_tokens(heldout_docs).dropDuplicates(["doc_id", "h"]).persist()
-    try:
+    forget((_pin_band_rows, os.path.abspath(state_dir)))
+    with materialized(hashed_tokens(heldout_docs).dropDuplicates(["doc_id", "h"])) as hashed:
         (
             hashed.groupBy("doc_id")
             .agg(F.collect_set("h").alias("th"))
@@ -152,8 +152,6 @@ def pin_heldout(heldout_docs: DataFrame, state_dir: str) -> bool:
         spark.createDataFrame(
             [(n_rows,)], "n_band_rows long"
         ).write.mode("append").parquet(_meta_path(state_dir))
-    finally:
-        hashed.unpersist()
     return True
 
 

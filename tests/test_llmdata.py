@@ -131,7 +131,8 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
     """The catalog memos key on applicationId, not id(spark): create a
     session, warm the shared LSH pair memo and the st20 release memo, stop
     it, create a NEW session and show neither memo serves the dead
-    session's entry (distinct keys, fresh compute, same result). Runs in a subprocess so stopping
+    session's entry (fresh compute, same result) and the registry keeps
+    only the new application's entries. Runs in a subprocess so stopping
     sessions cannot disturb the suite's shared session."""
     import subprocess
     import sys as _sys
@@ -141,6 +142,7 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
         """
         import sys
         sys.path.insert(0, %r)
+        from pdf_etl_pipeline_spark import session
         from pdf_etl_pipeline_spark.catalog import dedup_q, multimodal_q
         from pyspark.sql import SparkSession
 
@@ -151,22 +153,22 @@ def test_session_memo_key_survives_session_recreation(tmp_path):
 
         sf = "/root/testdata/sf0.001"
         s1 = fresh("memo1")
+        app1 = s1.sparkContext.applicationId
         n1 = dedup_q.shared_pairs(s1, sf, 0.9).count()
-        k1 = (dedup_q._session_key(s1), sf, 0.9)
         v1 = multimodal_q._st20_outputs(s1, sf)[0]
         m1 = v1.count()
-        assert (k1[0], sf) in multimodal_q._ST20_MEMO
+        assert (multimodal_q._st20_outputs, sf) in session._MEMO[app1]
         s1.stop()
         s2 = fresh("memo2")
-        assert dedup_q._session_key(s2) != k1[0], "applicationId must differ"
+        app2 = s2.sparkContext.applicationId
+        assert app2 != app1, "applicationId must differ"
         n2 = dedup_q.shared_pairs(s2, sf, 0.9).count()
-        k2 = (dedup_q._session_key(s2), sf, 0.9)
-        assert k1 in dedup_q._PAIRS_CACHE and k2 in dedup_q._PAIRS_CACHE
-        assert k1 != k2, "stale-cache reuse: new session hit the dead session's entry"
+        assert list(session._MEMO) == [app2], "dead application's entries kept"
         assert n1 == n2
         v2 = multimodal_q._st20_outputs(s2, sf)[0]
         assert v2 is not v1, "stale-cache reuse: st20 memo served the dead session"
-        assert set(multimodal_q._ST20_MEMO) == {(k2[0], sf)}
+        assert list(session._MEMO) == [app2]
+        assert (multimodal_q._st20_outputs, sf) in session._MEMO[app2]
         assert v2.count() == m1
         s2.stop()
         print("MEMO_OK", n1)

@@ -1,9 +1,12 @@
-"""The parquet schema memo behind ``load_table``/``load_events``: a file's
-schema is inferred once per file identity and schema confs, and a read that
-hits the memo launches no Spark job."""
+"""Session state: the parquet schema memo behind ``load_table``/``load_events``
+(a file's schema is inferred once per file identity and schema confs, and a
+read that hits the memo launches no Spark job) and the ``session_memo``
+registry that owns every other memo."""
 
+import ast
 import itertools
 import os
+import pathlib
 import shutil
 
 import pyarrow as pa
@@ -117,3 +120,62 @@ def test_audit_read_schema_parser_keeps_nested_types_whole():
         "+- FileScan parquet [] ReadSchema: struct<>\n"
     )
     assert audit.read_schema_fields(plan) == [["a", "b"], ["ts"], []]
+
+
+def test_module_level_memo_dicts_live_only_in_session():
+    """``session.py`` owns the package's memos (``session_memo``): no other
+    module binds an empty dict at module level for a private cache. The
+    query registry, filled by ``@register`` at import, is not a memo."""
+    import pdf_etl_pipeline_spark
+
+    root = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+    allowed = {("catalog/__init__.py", "REGISTRY")}
+
+    def empty_dict(v):
+        if isinstance(v, ast.Dict):
+            return not v.keys
+        return (
+            isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+            and v.func.id == "dict" and not v.args and not v.keywords
+        )
+
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        if p == root / "session.py":
+            continue
+        rel = str(p.relative_to(root))
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            if node.value is None or not empty_dict(node.value):
+                continue
+            for t in targets:
+                name = t.id if isinstance(t, ast.Name) else ast.unparse(t)
+                if (rel, name) not in allowed:
+                    offenders.append(f"{rel}:{node.lineno} {name}")
+    assert offenders == []
+
+
+def test_fresh_pin_at_reused_path_rereads_the_row_count(spark, tmp_path):
+    """``pin_heldout`` forgets the memoized pin row count when it writes a
+    fresh pin where a deleted one was, so the guard sizes its broadcast
+    decision on the new pin, not the old one."""
+    from pdf_etl_pipeline_spark.operators import fsutil
+    from pdf_etl_pipeline_spark.streaming import leakage_guard as LG
+
+    def docs(n):
+        return spark.createDataFrame(
+            [(i, " ".join(f"pin{i}w{j}" for j in range(20))) for i in range(n)],
+            "doc_id long, text string",
+        )
+
+    state = str(tmp_path / "pin")
+    assert LG.pin_heldout(docs(1), state)
+    assert LG._pin_band_rows(spark, state) == 4
+    fsutil.delete(state, recursive=True, spark=spark)
+    assert LG.pin_heldout(docs(3), state)
+    assert LG._pin_band_rows(spark, state) == 12

@@ -1031,6 +1031,7 @@ def test_leakage_pin_meta_backfill_readonly_storage(spark, tmp_path):
     pin storage refuses the write (read-only immutable artifact), the
     count still comes back from the bands scan and is memoized in-session
     instead of the backfill turning every batch into a hard crash."""
+    from pdf_etl_pipeline_spark import session
     from pdf_etl_pipeline_spark.operators import fsutil
     from pdf_etl_pipeline_spark.streaming import leakage_guard as LG
 
@@ -1056,7 +1057,7 @@ def test_leakage_pin_meta_backfill_readonly_storage(spark, tmp_path):
         def __getattr__(self, name):
             return getattr(self._real, name)
 
-    LG._PIN_ROWS_MEMO.clear()
+    session.forget()
     assert LG._pin_band_rows(ROSpark(spark), state) == n  # fallback, no crash
     assert LG._pin_band_rows(ROSpark(spark), state) == n  # memoized
 
