@@ -251,7 +251,7 @@ ORDER BY cands.doc_id, cands.bench_id""",
 )
 def dc2_near_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return CP.near_decontaminate(load_table(spark, sf_dir, "documents"), materialize=True)
+    return CP.near_decontaminate(load_table(spark, sf_dir, "documents"))
 
 
 # --- SP5: T5 span corruption -----------------------------------------------------

@@ -1295,7 +1295,7 @@ def cc16_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
     docs1 = docs.filter(F.col("doc_id") < cut)
-    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True))
+    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
     v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
     return release_diff_df(v1, v2)
 
@@ -1376,7 +1376,7 @@ def cc17_stored_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
     docs1 = docs.filter(F.col("doc_id") < cut)
-    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True))
+    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
     tmp = tempfile.mkdtemp(prefix="cc17_v1_")
     try:
         release_write(v1, tmp)
@@ -1598,7 +1598,7 @@ def cc18_release_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
     docs1 = docs.filter(F.col("doc_id") < cut)
-    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True))
+    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
     tmp = tempfile.mkdtemp(prefix="cc18_v1_")
     try:
         release_write(v1, tmp)

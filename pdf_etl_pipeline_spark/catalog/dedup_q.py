@@ -72,16 +72,16 @@ def dd2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Shared LSH pair index ----------------------------------------------------
 # The near-dup pair relation feeds SIX catalog queries (dd3, dd6, dd6b, cc1,
 # cc2, cc4). A real system builds the LSH index ONCE and every consumer reads
-# it; ``session_memo`` is that pattern — ``materialize=True`` checkpoints
-# the pairs eagerly on first use (and unpersists the build-time
-# intermediates), later queries in the same Spark application reuse the
-# materialized RDD instead of re-hashing the corpus.
+# it; ``session_memo`` is that pattern — ``minhash_lsh_pairs`` checkpoints
+# the pairs eagerly on first use (and releases its build-time caches),
+# later queries in the same Spark application reuse the checkpointed RDD
+# instead of re-hashing the corpus.
 def shared_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> DataFrame:
     return session_memo(
         spark,
         (shared_pairs, sf_dir, threshold),
         lambda: DD.minhash_lsh_pairs(
-            load_table(spark, sf_dir, "documents", spread=True), threshold, materialize=True
+            load_table(spark, sf_dir, "documents", spread=True), threshold
         ),
     )
 
@@ -300,14 +300,14 @@ ORDER BY id_a, id_b""",
 def dd5_embedding_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     # session memo (same pattern as shared_pairs): the banded join + verify
-    # runs once per (application, sf_dir); materialize=True checkpoints the
-    # result and unpersists the build-time band/candidate caches so a
-    # long-lived session accumulates no cached blocks per invocation.
+    # runs once per (application, sf_dir); embedding_dup_pairs_lsh
+    # checkpoints the result and releases its build-time band/candidate
+    # caches, so a long-lived session accumulates no cached blocks.
     pairs = session_memo(
         spark,
         (dd5_embedding_dups, sf_dir),
         lambda: SIM.embedding_dup_pairs_lsh(
-            _augmented_embeddings(spark, sf_dir), threshold=0.9, materialize=True
+            _augmented_embeddings(spark, sf_dir), threshold=0.9
         ),
     )
     return pairs.orderBy("id_a", "id_b")
@@ -400,7 +400,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import dup_span_stats, dup_span_stats_
 )
 def dd8_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return dup_span_stats(load_table(spark, sf_dir, "documents", spread=True), materialize=True)
+    return dup_span_stats(load_table(spark, sf_dir, "documents", spread=True))
 
 
 # --- DD10: duplicated-token coverage --------------------------------------------
@@ -422,7 +422,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (  # noqa: E402
 )
 def dd10_dup_token_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return dup_token_coverage(load_table(spark, sf_dir, "documents", spread=True), materialize=True)
+    return dup_token_coverage(load_table(spark, sf_dir, "documents", spread=True))
 
 
 # --- DD11: duplicated-span TRIM (the actionable transform) ----------------------
@@ -441,7 +441,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import trim_dup_spans, trim_dup_spans_
 )
 def dd11_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return trim_dup_spans(load_table(spark, sf_dir, "documents", spread=True), materialize=True)
+    return trim_dup_spans(load_table(spark, sf_dir, "documents", spread=True))
 
 
 # --- DD13: near-dup cluster-size histogram ---------------------------------------

@@ -839,7 +839,7 @@ from pdf_etl_pipeline_spark.operators.sketches import kmv_overlap, kmv_overlap_s
 )
 def sk4_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return kmv_overlap(load_events(spark, sf_dir), "event_type", "user_id", materialize=True)
+    return kmv_overlap(load_events(spark, sf_dir), "event_type", "user_id")
 
 
 # --- EV2: RFM segmentation ------------------------------------------------------

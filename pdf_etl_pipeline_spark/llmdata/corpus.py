@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions.scalars import portable_hash32, portable_hash32_sql
 from pdf_etl_pipeline_spark.llmdata.dedup import P31, tokens_col, tokens_sql
+from pdf_etl_pipeline_spark.session import materialized
 
 # ---------------------------------------------------------------------------
 # Deterministic train/val/test split
@@ -608,9 +609,7 @@ def pii_scrub(docs: DataFrame, text: Column | str = "text") -> DataFrame:
     )
 
 
-def near_decontaminate(
-    docs: DataFrame, threshold: float = 0.9, materialize: bool = True
-) -> DataFrame:
+def near_decontaminate(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
     """DC2: NEAR-duplicate benchmark contamination — MinHash-LSH banding
     between the corpus and the benchmark set (``doc_id % BENCH_MOD == 0``),
     catching the paraphrased/lightly-edited leakage that exact-shingle
@@ -623,13 +622,22 @@ def near_decontaminate(
     Jaccard verify touches only banding survivors.
 
     Output: (doc_id, bench_id, jaccard) for corpus docs within
-    ``threshold`` of any benchmark doc.
-
-    ``materialize=False`` returns the lazy plan (for .explain auditing)
-    but leaves the hashed-token cache persisted with no handle for the
-    caller to release — library callers in long-lived sessions should
-    keep the default.
+    ``threshold`` of any benchmark doc, checkpointed eagerly (the
+    contamination pairs are small). The hashed-token relation feeds the
+    signatures AND both sides' verify sets, so it is cached for this one
+    run — uncached, Catalyst replicates the tokenize+md5 explode per
+    consumer (the dd3 lesson) — and released before returning.
     """
+    result, hashed = _near_decontaminate_plan(docs, threshold)
+    with materialized(hashed):
+        return result.localCheckpoint()
+
+
+def _near_decontaminate_plan(
+    docs: DataFrame, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`near_decontaminate`'s lazy plan and the hashed tokens it
+    caches (see ``dedup._minhash_lsh_plan``)."""
     from pdf_etl_pipeline_spark.llmdata.dedup import (
         bands_from_signatures,
         hashed_tokens,
@@ -637,10 +645,7 @@ def near_decontaminate(
     )
 
     is_bench = F.col("doc_id") % BENCH_MOD == 0
-    # persist: hashed feeds the signatures AND both sides' verify sets —
-    # unpersisted, Catalyst replicates the tokenize+md5 explode per
-    # consumer (the dd3 lesson, llmdata/dedup.py minhash_lsh_pairs)
-    hashed = hashed_tokens(docs).dropDuplicates(["doc_id", "h"]).persist()
+    hashed = hashed_tokens(docs).dropDuplicates(["doc_id", "h"])
     bands = bands_from_signatures(signatures_from_hashed(hashed))
     corpus_bands = bands.filter(~is_bench)
     bench_bands = bands.filter(is_bench).select(
@@ -666,12 +671,7 @@ def near_decontaminate(
         .select("doc_id", "bench_id", F.round("jac_raw", 6).alias("jaccard"))
         .orderBy("doc_id", "bench_id")
     )
-    if materialize:
-        # contamination pairs are small — checkpoint and release the
-        # hashed-token cache (see dup_span_stats)
-        result = result.localCheckpoint()
-        hashed.unpersist()
-    return result
+    return result, hashed
 
 
 # --- T5-style deterministic span corruption (sp5) ---------------------------------

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions.scalars import portable_hash32, portable_hash32_sql
+from pdf_etl_pipeline_spark.session import materialized
 
 P31 = 2_147_483_647  # Mersenne prime 2^31-1
 # 64 perms in 4 bands of 16: the synthetic corpus (and real web crawls) are
@@ -294,20 +295,11 @@ def bands_from_signatures(sigs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    persist: bool = True,
-    materialize: bool = False,
-) -> DataFrame:
-    """Candidate pairs sharing ≥1 LSH band, verified with true Jaccard.
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Candidate pairs sharing ≥1 LSH band, verified with true Jaccard,
+    returned as an eager ``localCheckpoint`` (the pair relation is small).
     Measured candidate growth across scale factors is tabulated in
     SCALE.md §"Measured scale curve".
-
-    ``materialize=True`` checkpoints the (small) verified-pair result and
-    unpersists every build-time cache (hashed tokens, signatures,
-    candidates) — long-lived sessions leak no cached blocks per call; the
-    session-level memo in ``catalog.dedup_q.shared_pairs`` builds on this.
 
     Single-hash-pass design: tokens are exploded and md5-hashed ONCE into a
     ``(doc_id, h)`` relation; both the 64 MinHash signature aggregates and
@@ -315,22 +307,32 @@ def minhash_lsh_pairs(
     Jaccard is therefore over hashes mod p (the oracle mirrors the mod) —
     identical results modulo hash collisions, at half the hashing cost.
 
-    ``persist`` caches the intermediates referenced more than once: the
-    hashed-token relation (2 longs/row, ~corpus-token cardinality —
-    MEMORY_AND_DISK so it spills rather than OOMs; at cluster scale this is
-    the standard cache-or-recompute tradeoff), the per-doc signatures
-    (64 longs/doc) and the candidate pairs (2 ints/pair). Without it
-    Catalyst replicates the explode+hash subtree ~4× across the band
-    self-join sides (no exchange reuse).
+    The intermediates referenced more than once are cached for this one
+    run and released before it returns, so a long-lived session keeps no
+    cached blocks per call: the hashed-token relation (2 longs/row,
+    ~corpus-token cardinality; it spills rather than OOMs), the per-doc
+    signatures (64 longs/doc) and the candidate pairs (2 ints/pair).
+    Uncached, Catalyst replicates the explode+hash subtree ~4× across the
+    band self-join sides (no exchange reuse). ``catalog.dedup_q.shared_pairs``
+    memoizes the result per session.
     """
-    from pyspark import StorageLevel
+    result, hashed, sigs, cands = _minhash_lsh_plan(docs, threshold)
+    with materialized(hashed), materialized(sigs), materialized(cands):
+        # fill the caches now: AQE then plans the verify join against REAL
+        # cached sizes instead of guesses — measured ~6 s faster at sf0.1
+        # than one fused lazy job
+        cands.count()
+        return result.localCheckpoint()
 
+
+def _minhash_lsh_plan(docs: DataFrame, threshold: float) -> tuple[DataFrame, ...]:
+    """:func:`minhash_lsh_pairs`' lazy plan, then the relations it reads
+    more than once (hashed tokens, signatures, candidates), in the order
+    they are cached. A relation cached after the plan is built still
+    serves it: Spark substitutes cached plans when the plan first runs.
+    The plan audit reads the lazy plan from here."""
     hashed = hashed_tokens(docs)
-    if persist:
-        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
     sigs = signatures_from_hashed(hashed)
-    if persist:
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     bands = bands_from_signatures(sigs)
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
@@ -343,12 +345,6 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if persist:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the cache now (also fills hashed/sigs upstream): AQE
-        # then plans the verify join against REAL cached sizes instead of
-        # guesses — measured ~6 s faster at sf0.1 than one fused lazy job
-        cands.count()
     # verify on distinct token-HASH sets: intersecting 64-bit ints is far
     # cheaper than strings at 1M+ candidate pairs (same Jaccard modulo hash
     # collisions; the oracle hashes identically so results match exactly).
@@ -373,12 +369,7 @@ def minhash_lsh_pairs(
         verified.filter((inter / union) >= threshold)
         .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
     )
-    if materialize:
-        result = result.localCheckpoint()  # eager; pair relation is small
-        if persist:
-            for cached in (cands, sigs, hashed):
-                cached.unpersist()
-    return result
+    return result, hashed, sigs, cands
 
 
 # ---------------------------------------------------------------------------
@@ -661,38 +652,19 @@ DUP_SPAN_N = 10  # tokens per span (Lee et al. 2021 use 50-token chars; 10 fits 
 ROLL_B = 131  # polynomial rolling-hash base; acc*B + t < P31*131 + P31 << 2^63
 
 
-def dup_span_stats(
-    docs: DataFrame, n: int = DUP_SPAN_N, materialize: bool = True
-) -> DataFrame:
-    """Per-document exact-substring duplication accounting (the signal
-    behind Lee et al. 2021's 'Deduplicating Training Data Makes Language
-    Models Better'): every ``n``-token window is hashed, a span is
-    DUPLICATED if its hash occurs in ≥ 2 distinct documents, and each doc
-    reports what fraction of its windows are duplicated — the trim/drop
-    signal for boilerplate and cross-site syndication that whole-doc
-    dedup (dd1/dd3) cannot see.
-
-    Shape for scale: windows explode to (doc_id, h) WITH multiplicity —
-    linear in corpus tokens; the cross-doc test is one map-side-combined
-    aggregation on the hash; flagging is a semi-join of spans to the
-    duplicated-hash relation (the dc1 shape, turned inward on the corpus
-    itself). No pairwise doc comparison anywhere — the hash groupBy does
-    the all-pairs work implicitly.
+def span_hashes_df(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
+    """(doc_id, pos, h): every ``n``-token window's rolling hash with its
+    0-based start position — the shared front end of the span-dedup
+    family (dd8/dd10/dd11/st10).
 
     Window hashing is a POLYNOMIAL ROLLING combine: each token is md5'd
     exactly once (O(tokens) md5s), and every n-token window hash is a
     Horner fold acc = (acc*B + t_hash) mod P over the per-token hashes —
     pure codegen integer arithmetic, no per-window string materialization.
-    The previous shape concat_ws'd every window then md5'd it: O(tokens·n)
-    bytes allocated and hashed. The DuckDB oracle applies the identical
-    fold (list_reduce seeds with the first element, which equals a 0-seeded
-    Horner step since t_hash < P), so results stay bit-identical.
-
-    ``materialize=False`` returns the lazy plan (for .explain auditing /
-    composition) but leaves the spans relation persisted with no handle
-    for the caller to release — library callers in long-lived sessions
-    should keep the default.
-    """
+    The DuckDB oracles apply the identical fold (list_reduce seeds with the
+    first element, which equals a 0-seeded Horner step since t_hash < P),
+    so results stay bit-identical. Windows explode WITH multiplicity —
+    linear in corpus tokens."""
     toks = tokens_col("text", distinct=False)
     # one md5 per TOKEN, computed in its own projection so the window
     # folds below reuse it instead of re-hashing per window
@@ -707,18 +679,48 @@ def dup_span_stats(
     hashes = F.when(F.size("th") >= n, F.transform(starts, roll)).otherwise(
         F.array().cast("array<bigint>")
     )
-    # persist: spans (the heaviest relation here) feeds THREE consumers —
-    # dup_h, the flagged semi-join, and totals; unpersisted it would be
-    # evaluated three times
-    spans = base.select("doc_id", F.explode(hashes).alias("h")).persist()
+    return base.select("doc_id", F.posexplode(hashes).alias("pos", "h"))
+
+
+def duplicated_starts(spans: DataFrame) -> DataFrame:
+    """(doc_id, pos) of the windows in ``spans`` whose hash occurs in ≥ 2
+    distinct documents: one map-side-combined aggregation on the hash,
+    then a semi-join of the spans back to it — the hash groupBy does the
+    all-pairs work implicitly, with no pairwise doc comparison."""
     dup_h = (
         spans.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    flagged = spans.join(dup_h, "h", "left_semi").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_dup_spans")
+    return spans.join(dup_h, "h", "left_semi").select("doc_id", "pos")
+
+
+def dup_span_stats(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
+    """Per-document exact-substring duplication accounting (the signal
+    behind Lee et al. 2021's 'Deduplicating Training Data Makes Language
+    Models Better'): every ``n``-token window is hashed, a span is
+    DUPLICATED if its hash occurs in ≥ 2 distinct documents, and each doc
+    reports what fraction of its windows are duplicated — the trim/drop
+    signal for boilerplate and cross-site syndication that whole-doc
+    dedup (dd1/dd3) cannot see.
+
+    Shape for scale: :func:`span_hashes_df` then :func:`duplicated_starts`
+    (the dc1 shape, turned inward on the corpus itself). The spans feed the
+    duplicated-hash aggregate, the flagging semi-join and the per-doc
+    totals, so they are cached for this one run; the small per-doc result
+    is checkpointed eagerly and the cache released before returning."""
+    result, spans = _dup_span_stats_plan(docs, n)
+    with materialized(spans):
+        return result.localCheckpoint()
+
+
+def _dup_span_stats_plan(docs: DataFrame, n: int = DUP_SPAN_N) -> tuple[DataFrame, DataFrame]:
+    """:func:`dup_span_stats`' lazy plan and the spans it reads three
+    times (see :func:`_minhash_lsh_plan` on caching after the build)."""
+    spans = span_hashes_df(docs, n)
+    flagged = (
+        duplicated_starts(spans).groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_dup_spans"))
     )
     totals = spans.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_spans"))
     result = (
@@ -737,41 +739,15 @@ def dup_span_stats(
         )
         .orderBy("doc_id")
     )
-    if materialize:
-        # eager checkpoint of the small per-doc result, then release the
-        # heavy spans cache — repeated invocations in one session (bench
-        # min-of-N, the oracle sweep) must not accumulate cached blocks
-        # (the minhash_lsh_pairs materialize discipline)
-        result = result.localCheckpoint()
-        spans.unpersist()
-    return result
+    return result, spans
 
 
-def span_hashes_df(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
-    """(doc_id, pos, h): every ``n``-token window's rolling hash with its
-    0-based start position — the shared front end of the span-dedup
-    family (dd8/dd10/dd11/st10). One md5 per token, Horner fold per
-    window, corpus-linear."""
-    toks = tokens_col("text", distinct=False)
-    tok_hash = F.transform(toks, lambda t: portable_hash32(t) % P31)
-    base = docs.select("doc_id", tok_hash.alias("th"))
-    starts = F.sequence(F.lit(1), F.greatest(F.size("th") - (n - 1), F.lit(0)))
-    roll = lambda i: F.aggregate(
-        F.slice("th", i, n),
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * ROLL_B + t) % P31,
-    )
-    hashes = F.when(F.size("th") >= n, F.transform(starts, roll)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-    return base.select("doc_id", F.posexplode(hashes).alias("pos", "h"))
-
-
-def coverage_from_dup_starts(dup_starts: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
-    """(doc_id, n_dup_tokens): merged length of the fixed-width intervals
-    [pos, pos+n-1] over duplicated window starts — gaps-and-islands per
-    doc (start gap < n merges), windows doc_id-partitioned over the
-    duplicated-starts relation only."""
+def dup_intervals(dup_starts: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
+    """(doc_id, s, e): the merged token intervals [s, e] covered by the
+    fixed-width windows [pos, pos+n-1] of a (doc_id, pos) relation of
+    duplicated window starts — gaps-and-islands per doc (start gap < n
+    merges), windows doc_id-partitioned over the duplicated-starts
+    relation only."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -784,17 +760,39 @@ def coverage_from_dup_starts(dup_starts: DataFrame, n: int = DUP_SPAN_N) -> Data
         .over(w.rowsBetween(Window.unboundedPreceding, 0))
         .alias("island"),
     )
-    return (
-        islands.groupBy("doc_id", "island")
-        .agg((F.max("pos") - F.min("pos") + n).alias("ilen"))
-        .groupBy("doc_id")
-        .agg(F.sum("ilen").alias("n_dup_tokens"))
+    return islands.groupBy("doc_id", "island").agg(
+        F.min("pos").alias("s"), (F.max("pos") + (n - 1)).alias("e")
     )
 
 
-def dup_token_coverage(
-    docs: DataFrame, n: int = DUP_SPAN_N, materialize: bool = True
+def coverage_from_dup_starts(
+    docs: DataFrame, dup_starts: DataFrame, n: int = DUP_SPAN_N
 ) -> DataFrame:
+    """(doc_id, n_tokens, n_dup_tokens, dup_token_frac), unordered: each
+    doc's tokens covered by the merged :func:`dup_intervals` — the report
+    shared by dd10 (corpus-wide dup set) and the streaming batch report
+    (dup set vs index ∪ batch, ``span_ingest.batch_report_df``)."""
+    covered = (
+        dup_intervals(dup_starts, n)
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("e") - F.col("s") + 1).alias("n_dup_tokens"))
+    )
+    totals = docs.select(
+        "doc_id",
+        F.size(tokens_col("text", distinct=False)).cast("long").alias("n_tokens"),
+    )
+    return totals.join(covered, "doc_id", "left").select(
+        "doc_id",
+        "n_tokens",
+        F.coalesce("n_dup_tokens", F.lit(0)).cast("long").alias("n_dup_tokens"),
+        F.round(
+            F.coalesce("n_dup_tokens", F.lit(0)) / F.nullif(F.col("n_tokens"), F.lit(0)),
+            6,
+        ).alias("dup_token_frac"),
+    )
+
+
+def dup_token_coverage(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
     """Per-document fraction of TOKENS inside a cross-doc-duplicated
     ``n``-token window — the number Lee et al. 2022 actually report
     ('X% of tokens are part of a duplicated 50-gram') and the trim
@@ -804,54 +802,30 @@ def dup_token_coverage(
     the merged length of the intervals [p, p+n-1] over duplicated
     window starts p.
 
-    Shape for scale: the span hashing and the duplicated-hash relation
-    are dd8's (one corpus-linear posexplode, one map-side-combined
-    aggregation, one semi-join). The NEW work — interval merging — runs
-    only on the duplicated STARTS, a per-doc windowed gaps-and-islands
-    (fixed width n means intervals merge iff the start gap < n, so an
-    island's covered length is last_start − first_start + n). The
-    window partitions by doc_id over the duplicated-starts relation,
-    which is at most spans-sized and usually far smaller — never a
-    corpus-wide unpartitioned window. Pure integer arithmetic, so the
-    DuckDB twin is bit-identical.
+    Shape for scale: the span hashing and the duplicated starts are dd8's
+    (one corpus-linear posexplode, one map-side-combined aggregation, one
+    semi-join); the spans are cached for this one run. The NEW work —
+    interval merging (:func:`dup_intervals`) — runs only on
+    the duplicated STARTS, a per-doc windowed gaps-and-islands (fixed
+    width n means intervals merge iff the start gap < n, so an island's
+    covered length is last_start − first_start + n). The window
+    partitions by doc_id over the duplicated-starts relation, which is at
+    most spans-sized and usually far smaller — never a corpus-wide
+    unpartitioned window. Pure integer arithmetic, so the DuckDB twin is
+    bit-identical.
     """
-    # spans WITH positions; persisted: feeds dup_h and the flagged starts
-    spans = span_hashes_df(docs, n).persist()
-    dup_h = (
-        spans.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    dup_starts = spans.join(dup_h, "h", "left_semi").select("doc_id", "pos")
-    covered = coverage_from_dup_starts(dup_starts, n)
-    totals = docs.select(
-        "doc_id",
-        F.size(tokens_col("text", distinct=False)).cast("long").alias("n_tokens"),
-    )
-    result = (
-        totals.join(covered, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce("n_dup_tokens", F.lit(0)).cast("long").alias("n_dup_tokens"),
-            F.round(
-                F.coalesce("n_dup_tokens", F.lit(0))
-                / F.nullif(F.col("n_tokens"), F.lit(0)),
-                6,
-            ).alias("dup_token_frac"),
-        )
-        .orderBy("doc_id")
-    )
-    if materialize:
-        result = result.localCheckpoint()
-        spans.unpersist()
-    return result
+    result, spans = _dup_token_coverage_plan(docs, n)
+    with materialized(spans):
+        return result.localCheckpoint()
 
 
-def trim_dup_spans(
-    docs: DataFrame, n: int = DUP_SPAN_N, materialize: bool = True
-) -> DataFrame:
+def _dup_token_coverage_plan(docs: DataFrame, n: int = DUP_SPAN_N) -> tuple[DataFrame, DataFrame]:
+    """:func:`dup_token_coverage`' lazy plan and the spans it reads twice."""
+    spans = span_hashes_df(docs, n)
+    return coverage_from_dup_starts(docs, duplicated_starts(spans), n).orderBy("doc_id"), spans
+
+
+def trim_dup_spans(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
     """The ACTIONABLE form of span dedup (Lee et al. 2022 §4: remove one
     occurrence is optional, remove the span everywhere is what they
     train on): drop every token that lies inside a cross-doc-duplicated
@@ -859,84 +833,24 @@ def trim_dup_spans(
     duplicated windows, dd10 measures covered tokens; this produces the
     training corpus those numbers argue for.
 
-    Relational shape: dd10's pipeline up to the merged intervals, then
-    covered token POSITIONS are exploded from each interval (output is
-    bounded by the coverage, not the corpus), kept tokens are a
-    doc+position anti-join, and the trimmed text is re-assembled
-    in-plan by an array_sort over (pos, tok) structs — no window, no
-    Python, order restored per doc without a sort shuffle. The result
-    reports the trimmed text's md5 rather than shipping the full string
-    through the oracle comparison (hash-checkable, size-bounded).
-    """
-    toks = tokens_col("text", distinct=False)
-    tok_hash = F.transform(toks, lambda t: portable_hash32(t) % P31)
-    base = docs.select("doc_id", toks.alias("tk"), tok_hash.alias("th"))
-    starts = F.sequence(F.lit(1), F.greatest(F.size("th") - (n - 1), F.lit(0)))
-    roll = lambda i: F.aggregate(
-        F.slice("th", i, n),
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * ROLL_B + t) % P31,
-    )
-    hashes = F.when(F.size("th") >= n, F.transform(starts, roll)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-    spans = base.select("doc_id", F.posexplode(hashes).alias("pos", "h")).persist()
-    dup_h = (
-        spans.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    from pyspark.sql.window import Window
+    It is :func:`trimmed_docs` reported as (doc_id, n_tokens, n_kept,
+    trimmed_md5): the md5 of the trimmed text rather than the full string
+    keeps the oracle comparison hash-checkable and size-bounded. The
+    spans are cached for this one run and the result checkpointed."""
+    result, spans = _trim_dup_spans_plan(docs, n)
+    with materialized(spans):
+        return result.localCheckpoint()
 
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    islands = (
-        spans.join(dup_h, "h", "left_semi")
-        .select("doc_id", "pos")
-        .select(
-            "doc_id",
-            "pos",
-            F.sum(
-                F.when(F.col("pos") - F.lag("pos").over(w) >= n, 1).otherwise(0)
-            )
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("island"),
-        )
-    )
-    covered = (
-        islands.groupBy("doc_id", "island")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + (n - 1)).alias("e"))
-        .select("doc_id", F.explode(F.sequence("s", "e")).alias("pos"))
-    )
-    tokens = base.select("doc_id", F.posexplode("tk").alias("pos", "tok"))
-    kept = tokens.join(covered, ["doc_id", "pos"], "left_anti")
-    trimmed = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-            )
-        ).alias("trimmed_md5"),
-    )
+
+def _trim_dup_spans_plan(docs: DataFrame, n: int = DUP_SPAN_N) -> tuple[DataFrame, DataFrame]:
+    """:func:`trim_dup_spans`' lazy plan and the spans it reads twice."""
+    spans = span_hashes_df(docs, n)
     result = (
-        docs.select("doc_id", F.size(toks).cast("long").alias("n_tokens"))
-        .join(trimmed, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            F.coalesce("trimmed_md5", F.md5(F.lit(""))).alias("trimmed_md5"),
-        )
+        trimmed_from_dup_starts(docs, duplicated_starts(spans), n)
+        .select("doc_id", "n_tokens", "n_kept", F.md5("trimmed_text").alias("trimmed_md5"))
         .orderBy("doc_id")
     )
-    if materialize:
-        result = result.localCheckpoint()
-        spans.unpersist()
-    return result
+    return result, spans
 
 
 def trim_dup_spans_sql(table: str, n: int = DUP_SPAN_N) -> str:
@@ -1011,23 +925,9 @@ def trimmed_from_dup_starts(
     interval-merge the starts, explode covered positions (bounded by the
     coverage), anti-join kept tokens, re-assemble in-array (no sort
     shuffle, no Python)."""
-    from pyspark.sql.window import Window
-
     toks = tokens_col("text", distinct=False)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    islands = dup_starts.select(
-        "doc_id",
-        "pos",
-        F.sum(
-            F.when(F.col("pos") - F.lag("pos").over(w) >= n, 1).otherwise(0)
-        )
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
-    covered = (
-        islands.groupBy("doc_id", "island")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + (n - 1)).alias("e"))
-        .select("doc_id", F.explode(F.sequence("s", "e")).alias("pos"))
+    covered = dup_intervals(dup_starts, n).select(
+        "doc_id", F.explode(F.sequence("s", "e")).alias("pos")
     )
     tokens = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     kept = tokens.join(covered, ["doc_id", "pos"], "left_anti")
@@ -1071,15 +971,7 @@ def trimmed_docs(docs: DataFrame, n: int = DUP_SPAN_N) -> DataFrame:
     explode+Horner chain runs twice — persisting it was measured a no-op
     for cc10 at sf0.1 (14.38 persisted vs 14.11 s lazy, interleaved A/B,
     plans/r17/ab_cc10.json)."""
-    spans = span_hashes_df(docs, n)
-    dup_h = (
-        spans.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    dup_starts = spans.join(dup_h, "h", "left_semi").select("doc_id", "pos")
-    return trimmed_from_dup_starts(docs, dup_starts, n)
+    return trimmed_from_dup_starts(docs, duplicated_starts(span_hashes_df(docs, n)), n)
 
 
 def trimmed_docs_ctes(table: str, n: int = DUP_SPAN_N, prefix: str = "tt") -> str:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.llmdata.dedup import cosine, cosine_sql
 from pdf_etl_pipeline_spark.llmdata.dedup import dot as dedup_dot
+from pdf_etl_pipeline_spark.session import materialized
 
 N_PLANES = 8
 N_BANDS = 4
@@ -262,12 +263,7 @@ def knn_join(embeddings: DataFrame, k: int = 3, bucket_cap: int | None = None) -
     )
 
 
-def embedding_dup_pairs_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    persist: bool = True,
-    materialize: bool = False,
-) -> DataFrame:
+def embedding_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding near-dup pairs via banded sign-LSH — the scale path that
     replaces the brute all-pairs verifier (``dedup.embedding_dup_pairs``,
     now test-only).
@@ -281,13 +277,20 @@ def embedding_dup_pairs_lsh(
     comment). Measured candidate growth across scale factors is tabulated
     in SCALE.md §"Measured scale curve".
 
-    ``materialize=True`` checkpoints the (small) verified-pair result and
-    unpersists the build-time caches — the bands relation and the candidate
-    pairs — so repeated calls in a long-lived session leak no cached
-    blocks. Callers wanting a lazy plan pass ``persist=False``.
+    The (small) verified-pair result is checkpointed eagerly; the bands
+    relation and the candidate pairs are cached only for this run, so
+    repeated calls in a long-lived session leak no cached blocks.
     """
-    from pyspark import StorageLevel
+    result, bands, cands = _embedding_lsh_plan(embeddings, threshold)
+    with materialized(bands), materialized(cands):
+        # fill the caches now so AQE plans the verify joins against real sizes
+        cands.count()
+        return result.localCheckpoint()
 
+
+def _embedding_lsh_plan(embeddings: DataFrame, threshold: float) -> tuple[DataFrame, ...]:
+    """:func:`embedding_dup_pairs_lsh`' lazy plan, then the bands and the
+    candidate pairs it caches (see ``dedup._minhash_lsh_plan``)."""
     e = embeddings.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -298,8 +301,6 @@ def embedding_dup_pairs_lsh(
     bands = e.select("vec_id", F.explode(F.array(*band_structs)).alias("bk")).select(
         "vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    if persist:
-        bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
         a.join(
@@ -311,12 +312,6 @@ def embedding_dup_pairs_lsh(
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if persist:
-        # materialize so AQE plans the verify joins against real sizes
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-        cands.count()
-        # bands only feeds cands — with cands materialized it can go now
-        bands.unpersist()
     # verify join pulls vectors ONLY for ids that survived banding
     cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("vec_id")).distinct()
     vecs = e.join(cand_ids, "vec_id", "left_semi")
@@ -329,11 +324,7 @@ def embedding_dup_pairs_lsh(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cosine"))
     )
-    if materialize:
-        result = result.localCheckpoint()  # eager; pairs relation is small
-        if persist:
-            cands.unpersist()
-    return result
+    return result, bands, cands
 
 
 # ---------------------------------------------------------------------------

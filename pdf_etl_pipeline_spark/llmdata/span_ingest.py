@@ -93,7 +93,6 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     DUP_SPAN_N,
     coverage_from_dup_starts,
     span_hashes_df,
-    tokens_col,
 )
 from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.streaming import driver
@@ -394,21 +393,7 @@ def batch_report_df(
     the pre-aggregated index, doc_id-partitioned coverage windows only,
     no global sort) without triggering the side-effecting append."""
     dup_starts = batch_dup_starts(docs, index_dir, n, batch_id=batch_id, spans=spans)
-    covered = coverage_from_dup_starts(dup_starts, n)
-    totals = docs.select(
-        "doc_id",
-        F.size(tokens_col("text", distinct=False)).cast("long").alias("n_tokens"),
-    )
-    return totals.join(covered, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("n_dup_tokens", F.lit(0)).cast("long").alias("n_dup_tokens"),
-        F.round(
-            F.coalesce("n_dup_tokens", F.lit(0))
-            / F.nullif(F.col("n_tokens"), F.lit(0)),
-            6,
-        ).alias("dup_token_frac"),
-    )
+    return coverage_from_dup_starts(docs, dup_starts, n)
 
 
 def batch_trimmed_df(

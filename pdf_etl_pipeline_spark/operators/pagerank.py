@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_etl_pipeline_spark.session import materialized
+
 _DEC = "decimal(38,12)"
 
 
@@ -44,30 +46,29 @@ def pagerank(
     (deduplicated here). Ranks sum to N over nodes reachable by the
     teleport-only recurrence; rounded to 9 places for a stable oracle
     hash."""
-    e = edges.select("src", "dst").dropDuplicates().persist()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ranks = nodes.select("node_id", F.lit(1.0).alias("rank"))
-    teleport = (1.0 - damping) * 1.0  # uniform prior of 1 per node
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node_id", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-        )
-        recv = contrib.groupBy("dst").agg(
-            F.sum(F.col("c").cast(_DEC)).cast("double").alias("mass")
-        )
-        ranks = (
-            nodes.join(recv.withColumnRenamed("dst", "node_id"), "node_id", "left")
-            .select(
-                "node_id",
-                (F.lit(teleport) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "rank"
-                ),
+    with materialized(edges.select("src", "dst").dropDuplicates()) as e:
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        ranks = nodes.select("node_id", F.lit(1.0).alias("rank"))
+        teleport = (1.0 - damping) * 1.0  # uniform prior of 1 per node
+        for _ in range(iters):
+            contrib = (
+                e.join(ranks.withColumnRenamed("node_id", "src"), "src")
+                .join(outdeg, "src")
+                .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
             )
-            .localCheckpoint()
-        )
-    e.unpersist()
+            recv = contrib.groupBy("dst").agg(
+                F.sum(F.col("c").cast(_DEC)).cast("double").alias("mass")
+            )
+            ranks = (
+                nodes.join(recv.withColumnRenamed("dst", "node_id"), "node_id", "left")
+                .select(
+                    "node_id",
+                    (F.lit(teleport) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
+                        "rank"
+                    ),
+                )
+                .localCheckpoint()
+            )
     return ranks.select("node_id", F.round("rank", 9).alias("rank"))
 
 

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions.scalars import portable_hash32
+from pdf_etl_pipeline_spark.session import materialized
 
 M_SPACE = 1 << 32  # portable_hash32 range [0, 2^32)
 KMV_K = 64
@@ -150,7 +151,6 @@ def kmv_overlap(
     group_col: str,
     value_col: str,
     k: int = KMV_K,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairwise union/intersection/Jaccard ESTIMATES between every two
     groups' value sets, from their KMV sketches alone — sketch set
@@ -166,24 +166,28 @@ def kmv_overlap(
     the union/intersection are EXACT (the estimate degrades to truth).
 
     Output: (grp_a, grp_b, est_union, est_intersection, est_jaccard,
-    merged_size) rounded to 6, grp_a < grp_b.
-
-    ``materialize=False`` returns the lazy plan (for .explain auditing)
-    but leaves the sketch relation persisted with no handle for the
-    caller to release — library callers in long-lived sessions should
-    keep the default.
+    merged_size) rounded to 6, grp_a < grp_b, checkpointed eagerly (the
+    pair output is tiny). The sketch relation (hash + dedup + per-group
+    top-k) is read four times (a, b, and twice inside pairs); caching it
+    for this one run is what makes "ONE corpus pass builds the sketch
+    rows" true, and it is released before returning.
     """
+    result, sketch = _kmv_overlap_plan(df, group_col, value_col, k)
+    with materialized(sketch):
+        return result.localCheckpoint()
+
+
+def _kmv_overlap_plan(
+    df: DataFrame, group_col: str, value_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`kmv_overlap`'s lazy plan and the sketch relation it caches
+    (see ``llmdata.dedup._minhash_lsh_plan``)."""
     hashed = df.select(
         F.col(group_col).alias("grp"),
         portable_hash32(F.col(value_col).cast("string")).alias("h"),
     ).dropDuplicates(["grp", "h"])
     w = Window.partitionBy("grp").orderBy("h")
-    # persist: the sketch relation (hash + dedup + per-group top-k) is
-    # consumed four times (a, b, and twice inside pairs) — persisting it
-    # is what makes "ONE corpus pass builds the sketch rows" true
-    sketch = (
-        hashed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).persist()
-    )
+    sketch = hashed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
     a = sketch.select(F.col("grp").alias("grp_a"), F.col("h").alias("h"))
     b = sketch.select(F.col("grp").alias("grp_b"), F.col("h").alias("h"))
     pairs = (
@@ -221,12 +225,7 @@ def kmv_overlap(
         F.round(rho, 6).alias("est_jaccard"),
         F.col("merged_size").cast("long").alias("merged_size"),
     ).orderBy("grp_a", "grp_b")
-    if materialize:
-        # pair output is tiny — checkpoint eagerly and release the sketch
-        # cache so repeated calls in one session do not accumulate blocks
-        result = result.localCheckpoint()
-        sketch.unpersist()
-    return result
+    return result, sketch
 
 
 def kmv_overlap_sql(table: str, group_col: str, value_col: str, k: int = KMV_K) -> str:

@@ -160,22 +160,32 @@ def leakage_batch_df(
     heldout_bands: DataFrame,
     heldout_toks: DataFrame,
     threshold: float = LEAK_THRESHOLD,
-    materialize: bool = False,
     broadcast_pin: bool = True,
 ) -> DataFrame:
     """The guard plan: one verdict row per incoming train doc —
-    (doc_id, n_heldout_dups, max_jaccard, leaks). dc2's bipartite join
-    shape with the pin as the build side. ``materialize=False`` returns the
-    lazy plan (for the .explain audit — no cache is taken on this path, so
-    nothing leaks into the session); ``materialize=True`` persists the
-    hashed-token relation across its two uses, checkpoints the (small)
-    verdict relation and releases the cache (near_decontaminate's
-    convention). ``broadcast_pin=False`` drops the broadcast hint for an
-    oversized pin (see ``PIN_BROADCAST_MAX_ROWS``) — Catalyst then plans a
-    shuffle join with identical semantics."""
+    (doc_id, n_heldout_dups, max_jaccard, leaks), checkpointed eagerly.
+    dc2's bipartite join shape with the pin as the build side; the
+    hashed-token relation is cached across its two uses for this one run.
+    ``broadcast_pin=False`` drops the broadcast hint for an oversized pin
+    (see ``PIN_BROADCAST_MAX_ROWS``) — Catalyst then plans a shuffle join
+    with identical semantics."""
+    out, hashed = _leakage_plan(
+        train_docs, heldout_bands, heldout_toks, threshold, broadcast_pin
+    )
+    with materialized(hashed):
+        return out.localCheckpoint()
+
+
+def _leakage_plan(
+    train_docs: DataFrame,
+    heldout_bands: DataFrame,
+    heldout_toks: DataFrame,
+    threshold: float = LEAK_THRESHOLD,
+    broadcast_pin: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`leakage_batch_df`'s lazy plan and the hashed tokens it
+    caches (see ``llmdata.dedup._minhash_lsh_plan``)."""
     hashed = hashed_tokens(train_docs).dropDuplicates(["doc_id", "h"])
-    if materialize:
-        hashed = hashed.persist()
     my_bands = bands_from_signatures(signatures_from_hashed(hashed))
     pin = F.broadcast(heldout_bands) if broadcast_pin else heldout_bands
     cands = (
@@ -205,10 +215,7 @@ def leakage_batch_df(
         F.round("mx", 6).alias("max_jaccard"),
         (F.coalesce("nh", F.lit(0)) > 0).alias("leaks"),
     )
-    if materialize:
-        out = out.localCheckpoint()
-        hashed.unpersist()
-    return out
+    return out, hashed
 
 
 def guard_leakage_batch(
@@ -235,7 +242,6 @@ def guard_leakage_batch(
         spark.read.parquet(_bands_path(state_dir)),
         spark.read.parquet(_toks_path(state_dir)),
         threshold,
-        materialize=True,
         broadcast_pin=_pin_band_rows(spark, state_dir) <= PIN_BROADCAST_MAX_ROWS,
     )
 

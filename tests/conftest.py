@@ -16,6 +16,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 
 
+def _host_driver_memory() -> str:
+    """Half the host's RAM in whole GiB (at least 1), capped at the 48g that
+    ``get_spark`` defaults to: a ``local[N]`` session is one JVM whose heap
+    grows toward ``spark.driver.memory`` before it collects, so a heap cap
+    above physical memory gets the whole test process OOM-killed on a
+    smaller host."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1, min(48, kib // (2 * 1024 * 1024)))}g"
+
+
+# An explicit SPARK_DRIVER_MEMORY still wins.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", _host_driver_memory())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=8)

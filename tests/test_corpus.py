@@ -803,7 +803,7 @@ def test_split_leakage_accounts_every_pair(spark, docs):
     and cross-split rows are exactly the is_leak ones."""
     from pdf_etl_pipeline_spark.llmdata.dedup import minhash_lsh_pairs
 
-    pairs = minhash_lsh_pairs(docs, 0.9, persist=False)
+    pairs = minhash_lsh_pairs(docs, 0.9)
     out = CP.split_leakage(docs, pairs).collect()
     assert sum(r.n_pairs for r in out) == pairs.count()
     for r in out:
@@ -963,7 +963,7 @@ def test_cc16_release_diff_statuses_consistent(spark, sf_dir):
     v1 = {
         r.doc_id: (r.split, r.position, r.shard_id)
         for r in release_manifest_df(
-            docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True)
+            docs1, minhash_lsh_pairs(docs1, 0.9)
         ).collect()
     }
     v2 = {
@@ -1005,7 +1005,7 @@ def test_cc17_stored_diff_equals_rebuild_diff(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
     docs1 = docs.filter(F.col("doc_id") < cut)
-    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True))
+    v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
     v1_rows = sorted(map(tuple, v1.collect()))
     path = str(tmp_path / "release_v1")
     release_write(v1, path)

@@ -1079,7 +1079,7 @@ def test_phash_max_hamming_guard():
 
 
 def test_materialized_queries_leave_no_cached_blocks(spark, sf_dir):
-    """The materialize discipline (dd8/sk4/dc2): after the registered
+    """The eager-checkpoint discipline (dd8/sk4/dc2): after the registered
     query runs, the HEAVY build caches (span explodes, hashed tokens,
     sketches) are released — only the tiny localCheckpoint'ed results may
     remain (ContextCleaner GCs those when their refs drop), so cached

@@ -1,7 +1,8 @@
 """Session state: the parquet schema memo behind ``load_table``/``load_events``
 (a file's schema is inferred once per file identity and schema confs, and a
-read that hits the memo launches no Spark job) and the ``session_memo``
-registry that owns every other memo."""
+read that hits the memo launches no Spark job), the ``session_memo``
+registry that owns every other memo, and ``materialized``, the one owner of
+cache lifetimes."""
 
 import ast
 import itertools
@@ -179,3 +180,93 @@ def test_fresh_pin_at_reused_path_rereads_the_row_count(spark, tmp_path):
     fsutil.delete(state, recursive=True, spark=spark)
     assert LG.pin_heldout(docs(3), state)
     assert LG._pin_band_rows(spark, state) == 12
+
+
+def test_library_plans_leave_the_cache_manager_empty(spark, sf_dir, tmp_path):
+    """Every library plan that caches an intermediate does so only for its
+    own run and returns an eagerly checkpointed result: after ``.collect()``
+    the session's CacheManager is empty again. No pair relation is
+    injected, so the clustering and curation paths build their own."""
+    from pyspark.sql import functions as F
+
+    from pdf_etl_pipeline_spark.llmdata import dedup as DD
+    from pdf_etl_pipeline_spark.llmdata.corpus import near_decontaminate, split_stage
+    from pdf_etl_pipeline_spark.llmdata.curation import curate_corpus
+    from pdf_etl_pipeline_spark.llmdata.similarity import embedding_dup_pairs_lsh
+    from pdf_etl_pipeline_spark.operators.sketches import kmv_overlap
+    from pdf_etl_pipeline_spark.streaming import leakage_guard as LG
+
+    docs = load_table(spark, sf_dir, "documents")
+    state = str(tmp_path / "pin")
+    LG.pin_heldout(docs.filter(split_stage(F.col("doc_id")) >= 1), state)
+    calls = {
+        "minhash_lsh_pairs": lambda: DD.minhash_lsh_pairs(docs),
+        "embedding_dup_pairs_lsh": lambda: embedding_dup_pairs_lsh(
+            load_table(spark, sf_dir, "embeddings")
+        ),
+        "near_dup_clusters": lambda: DD.near_dup_clusters(docs),
+        "curate_corpus": lambda: curate_corpus(docs),
+        "dup_span_stats": lambda: DD.dup_span_stats(docs),
+        "dup_token_coverage": lambda: DD.dup_token_coverage(docs),
+        "trim_dup_spans": lambda: DD.trim_dup_spans(docs),
+        "near_decontaminate": lambda: near_decontaminate(docs),
+        "kmv_overlap": lambda: kmv_overlap(load_events(spark, sf_dir), "event_type", "user_id"),
+        "leakage_batch_df": lambda: LG.leakage_batch_df(
+            docs.filter(split_stage(F.col("doc_id")) == 0),
+            spark.read.parquet(LG._bands_path(state)),
+            spark.read.parquet(LG._toks_path(state)),
+        ),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    leaked = []
+    for name, call in calls.items():
+        call().collect()
+        if not cache.isEmpty():
+            leaked.append(name)
+            spark.catalog.clearCache()
+    assert leaked == []
+
+
+def test_cache_lifetimes_have_one_owner():
+    """Caching has one owner: ``session.materialized`` scopes. No package
+    function takes a ``materialize``/``persist`` switch that would let a
+    caller keep a cache nobody releases, and no module outside
+    ``session.py`` calls ``.persist(``.
+
+    Allowlisted, each with its reason:
+    - ``triangle_count(materialize=)``: g2 checkpoints its three shared
+      relations, while g2a needs one plan so its audit sees the sample
+      filter under the join — two production callers, two values;
+    - ``ingest_batch``'s three persists: the corpus-stream batch relations,
+      which ROADMAP D1(b) moves to one materialization per batch."""
+    import pdf_etl_pipeline_spark
+
+    root = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+    knob_ok = {("operators/triangles.py", "triangle_count")}
+    persist_ok = {("llmdata/ingest.py", "ingest_batch")}
+    knobs, persists = [], []
+    for p in sorted(root.rglob("*.py")):
+        rel = str(p.relative_to(root))
+        tree = ast.parse(p.read_text())
+        exempt = set()
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+            if {a.arg for a in args} & {"materialize", "persist"} and (rel, fn.name) not in knob_ok:
+                knobs.append(f"{rel}:{fn.lineno} {fn.name}")
+            if (rel, fn.name) in persist_ok:
+                exempt.update(id(n) for n in ast.walk(fn))
+        if rel == "session.py":
+            continue
+        persists += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "persist"
+            and id(node) not in exempt
+        ]
+    assert knobs == []
+    assert persists == []

@@ -326,7 +326,7 @@ def test_ingest_multi_batch_invariants(spark, sf_dir, tmp_path):
     offline = {r.doc_id for r in near_dup_clusters_star(docs).filter("is_keeper").collect()}
     assert offline <= kept  # online never drops a canonical doc
     surviving = docs.filter(F2.col("doc_id").isin(list(kept)))
-    n_pairs = minhash_lsh_pairs(surviving, 0.9, materialize=True).count()
+    n_pairs = minhash_lsh_pairs(surviving, 0.9).count()
     assert n_pairs == 0  # admitted corpus is near-dup-free
 
 
@@ -416,7 +416,7 @@ def test_ingest_streaming_foreachbatch(spark, sf_dir, tmp_path):
     assert len(kept) >= n_components
     assert len(kept) <= docs.count()
     surviving = docs.filter(F2.col("doc_id").isin(list(kept)))
-    assert minhash_lsh_pairs(surviving, 0.9, materialize=True).count() == 0
+    assert minhash_lsh_pairs(surviving, 0.9).count() == 0
 
 
 @pytest.mark.slow
@@ -2810,7 +2810,7 @@ def test_st15_oversized_pin_drops_broadcast_and_matches(spark, tmp_path, monkeyp
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        lazy = LG.leakage_batch_df(
+        lazy, _ = LG._leakage_plan(
             batch,
             spark.read.parquet(LG._bands_path(state)),
             spark.read.parquet(LG._toks_path(state)),

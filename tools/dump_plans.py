@@ -37,16 +37,15 @@ def main() -> None:
 
     # dd3/dd11 return a localCheckpoint'ed relation, so the registered
     # query's plan is 8 lines of `Scan ExistingRDD` — zero evidence value
-    # (r16 VERDICT). Dump the same pipeline with materialize=False so the
-    # full pre-checkpoint plan (exchanges, join strategy, scan pruning)
-    # is on the record; the registered query computes identically.
+    # (r16 VERDICT). Dump the library function's lazy plan (its private
+    # ``_*_plan`` builder, which the function itself runs) so the full
+    # pre-checkpoint plan (exchanges, join strategy, scan pruning) is on
+    # the record; the registered query computes identically.
     def _dd3_evidence(spark, sf_dir):
         from pdf_etl_pipeline_spark.llmdata import dedup as DD
         from pdf_etl_pipeline_spark.session import load_table
 
-        return DD.minhash_lsh_pairs(
-            _load_docs_like(DD, spark, sf_dir), 0.9, persist=True, materialize=False
-        )
+        return DD._minhash_lsh_plan(_load_docs_like(DD, spark, sf_dir), 0.9)[0]
 
     def _load_docs_like(DD, spark, sf_dir):
         # match the registered query's loader signature across rounds:
@@ -62,9 +61,7 @@ def main() -> None:
     def _dd11_evidence(spark, sf_dir):
         from pdf_etl_pipeline_spark.llmdata import dedup as DD
 
-        return DD.trim_dup_spans(
-            _load_docs_like(DD, spark, sf_dir), materialize=False
-        )
+        return DD._trim_dup_spans_plan(_load_docs_like(DD, spark, sf_dir))[0]
 
     def _st10_evidence(spark, sf_dir):
         # the registered st10 runs two side-effecting monitor batches and

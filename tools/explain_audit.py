@@ -308,7 +308,7 @@ def _st15_guard_body_df(spark, sf_dir):
     from pdf_etl_pipeline_spark.streaming.leakage_guard import (
         _bands_path,
         _toks_path,
-        leakage_batch_df,
+        _leakage_plan,
         pin_heldout,
     )
 
@@ -322,11 +322,11 @@ def _st15_guard_body_df(spark, sf_dir):
     if "pinned" not in _ST15_AUDIT_TMP:
         pin_heldout(docs.filter(stage >= 1), state)
         _ST15_AUDIT_TMP["pinned"] = True
-    return leakage_batch_df(
+    return _leakage_plan(
         docs.filter(stage == 0),
         spark.read.parquet(_bands_path(state)),
         spark.read.parquet(_toks_path(state)),
-    )
+    )[0]
 
 
 _ST7_AUDIT_TMP: dict = {}
@@ -599,7 +599,7 @@ def _cc17_diff_body_df(spark, sf_dir):
         docs1 = docs.filter(F.col("doc_id") < cut)
         path = tempfile.mkdtemp(prefix="cc17_audit_v1_")
         release_write(
-            release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True)),
+            release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9)),
             path,
         )
         v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
@@ -653,7 +653,7 @@ def _cc18_patch_body_df(spark, sf_dir):
         docs1 = docs.filter(F.col("doc_id") < cut)
         path = tempfile.mkdtemp(prefix="cc18_audit_v1_")
         release_write(
-            release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9, materialize=True)),
+            release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9)),
             path,
         )
         v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
@@ -791,14 +791,13 @@ CHECKS = {
         # just a checkpoint scan — audit the UN-memoized library plan, which
         # is what actually runs on first build (and at scale)
         "build": lambda spark, sf_dir: __import__(
-            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["minhash_lsh_pairs"]
-        ).minhash_lsh_pairs(
+            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["_minhash_lsh_plan"]
+        )._minhash_lsh_plan(
             __import__(
                 "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
             ).load_table(spark, sf_dir, "documents"),
             0.9,
-            persist=False,
-        ),
+        )[0],
         "must": ["HashAggregate"],
         "must_not": ["BatchEvalPython", "CartesianProduct"],
     },
@@ -807,13 +806,12 @@ CHECKS = {
         # never an all-pairs product (the pre-round-4 shape this replaced)
         "build": lambda spark, sf_dir: __import__(
             "pdf_etl_pipeline_spark.llmdata.similarity", fromlist=["embedding_dup_pairs_lsh"]
-        ).embedding_dup_pairs_lsh(
+        )._embedding_lsh_plan(
             __import__(
                 "pdf_etl_pipeline_spark.catalog.dedup_q", fromlist=["_augmented_embeddings"]
             )._augmented_embeddings(spark, sf_dir),
             0.9,
-            persist=False,
-        ),
+        )[0],
         "must": ["HashAggregate"],
         "must_not": ["BatchEvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
     },
@@ -864,14 +862,13 @@ CHECKS = {
                 "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
             ).load_table(spark, sf_dir, "documents"),
             __import__(
-                "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["minhash_lsh_pairs"]
-            ).minhash_lsh_pairs(
+                "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["_minhash_lsh_plan"]
+            )._minhash_lsh_plan(
                 __import__(
                     "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
                 ).load_table(spark, sf_dir, "documents"),
                 0.9,
-                persist=False,
-            ),
+            )[0],
         ),
         # (no SortMergeJoin ban: the embedded dd3 pair build's band
         # self-join is corpus x corpus and may legitimately sort-merge)
@@ -1540,13 +1537,12 @@ CHECKS = {
         # semi-join back — never a pairwise doc comparison. The registered
         # query materializes (checkpoint scan), so audit the library plan.
         "build": lambda spark, sf_dir: __import__(
-            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["dup_span_stats"]
-        ).dup_span_stats(
+            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["_dup_span_stats_plan"]
+        )._dup_span_stats_plan(
             __import__(
                 "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
             ).load_table(spark, sf_dir, "documents"),
-            materialize=False,
-        ),
+        )[0],
         "must": ["HashAggregate"],
         "must_not": ["BatchEvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
     },
@@ -1781,13 +1777,12 @@ CHECKS = {
         # semi-join flagging, and the interval merge as doc_id-partitioned
         # windows ONLY (the custom check); no Python, no cartesian
         "build": lambda spark, sf_dir: __import__(
-            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["dup_token_coverage"]
-        ).dup_token_coverage(
+            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["_dup_token_coverage_plan"]
+        )._dup_token_coverage_plan(
             __import__(
                 "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
             ).load_table(spark, sf_dir, "documents"),
-            materialize=False,
-        ),
+        )[0],
         "must": ["Generate", "HashAggregate", "Window"],
         "must_not": ["BatchEvalPython", "ArrowEvalPython", "CartesianProduct"],
         "check": _dd10_windows_doc_partitioned,
@@ -1798,13 +1793,12 @@ CHECKS = {
         # a collect_list aggregate whose result expression sorts in-array
         # (ObjectHashAggregate — no extra sort shuffle), no Python
         "build": lambda spark, sf_dir: __import__(
-            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["trim_dup_spans"]
-        ).trim_dup_spans(
+            "pdf_etl_pipeline_spark.llmdata.dedup", fromlist=["_trim_dup_spans_plan"]
+        )._trim_dup_spans_plan(
             __import__(
                 "pdf_etl_pipeline_spark.session", fromlist=["load_table"]
             ).load_table(spark, sf_dir, "documents"),
-            materialize=False,
-        ),
+        )[0],
         "must": ["Generate", "HashAggregate", "Window", "collect_list"],
         "must_not": ["BatchEvalPython", "ArrowEvalPython", "CartesianProduct"],
         "check": _dd10_windows_doc_partitioned,

@@ -174,7 +174,7 @@ def measure_dd3(label: str, docs: DataFrame) -> dict:
     n = docs.count()
     cands = dd3_candidates(docs)
     t0 = time.time()
-    verified = DD.minhash_lsh_pairs(docs, 0.9, materialize=True).count()
+    verified = DD.minhash_lsh_pairs(docs, 0.9).count()
     wall = round(time.time() - t0, 2)
     docs.unpersist()
     return {
@@ -192,7 +192,7 @@ def measure_dd5(label: str, emb: DataFrame) -> dict:
     n = aug.count()
     cands = dd5_candidates(aug)
     t0 = time.time()
-    verified = SIM.embedding_dup_pairs_lsh(aug, 0.9, materialize=True).count()
+    verified = SIM.embedding_dup_pairs_lsh(aug, 0.9).count()
     wall = round(time.time() - t0, 2)
     aug.unpersist()
     return {
