@@ -15,6 +15,12 @@ Execution is forced with the noop sink (full pipeline runs, no driver-side
 collect cost). Query set spans the engine's surface: scan-agg (A8), joins
 (A3/J1), windows (W2/W5), streaming-shape (ST2), and the LLM-data ops
 (MinHash-LSH, ANN, text stats).
+
+The st16/st20 steady batches run the registered queries' own two-batch
+stages (``catalog.TwoBatch``: ``ingest_q.ST16``, ``multimodal_q.ST20``)
+inside the same scratch-state scope the queries use; the bench builds no
+pipeline of its own, so a loader or body change in the catalog moves the
+steady numbers with it.
 """
 
 from __future__ import annotations
@@ -27,7 +33,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pdf_etl_pipeline_spark.catalog import load_registry
+from pdf_etl_pipeline_spark.catalog import load_registry, scratch_state
+from pdf_etl_pipeline_spark.catalog.ingest_q import ST16
+from pdf_etl_pipeline_spark.catalog.multimodal_q import ST20
 from pdf_etl_pipeline_spark.session import forget, get_spark
 
 BENCH_QUERIES = [
@@ -375,118 +383,27 @@ def _reset_session_memos(spark=None) -> None:
         spark._jvm.System.gc()
 
 
-def _st16_steady_state(spark, sf_dir: str, windows: dict) -> dict:
-    """st16 STEADY-STATE: per-batch admission latency with the pins and
-    curation indexes already built OUTSIDE the timed window — the number a
-    100 TB deployment actually cares about (the full-lifecycle st16 tier
-    entry pays two pin builds + two index lifecycles per measurement and
-    is the most host-exposed query in the tier; its 44-109 s idle spread
-    is all lifecycle). Batch 1 runs untimed (builds the indexes and warms
-    the probe paths); batch 2's full guarded body is then timed min-of-N.
-    Timed replays append duplicate index rows — admission-neutral by the
-    replay contract (verdicts bit-identical), and min-of-N lands on the
-    first rep before the file-count growth matters."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from pdf_etl_pipeline_spark.llmdata import corpus as CP
-    from pdf_etl_pipeline_spark.session import load_table
-    from pdf_etl_pipeline_spark.streaming.contamination_guard import pin_benchmark
-    from pdf_etl_pipeline_spark.streaming.corpus_builder import (
-        LEAKAGE_SUBDIR,
-        build_corpus_batch,
-        drop_builder_state,
-    )
-    from pdf_etl_pipeline_spark.streaming.leakage_guard import pin_heldout
-
-    # spread=True matches the registered st16 query's loader (measured
-    # interleaved A/B r17: guarded lifecycle 32.9 s spread vs 43.2 s raw
-    # on a clean window) and the r16 shape these steady numbers have been
-    # tracked under (r16's loader spread every documents consumer)
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    stage = CP.split_stage(F.col("doc_id"))
-    bench_docs = docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0)
-    heldout = docs.filter(stage >= 1)
-    corpus = docs.filter((F.col("doc_id") % CP.BENCH_MOD != 0) & (stage == 0))
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    b1 = corpus.filter(F.col("doc_id") < split)
-    b2 = corpus.filter(F.col("doc_id") >= split)
-    tmp = tempfile.mkdtemp(prefix="st16_steady_")
-    try:
-        # unconditional calls, then raise on failure: under `python -O`
-        # an assert BODY is never evaluated, so pins created inside an
-        # assert would silently not exist (r15 ADVICE)
-        if not pin_benchmark(bench_docs, tmp):
-            raise RuntimeError("st16 steady-state: benchmark pin not created")
-        if not pin_heldout(heldout, os.path.join(tmp, LEAKAGE_SUBDIR)):
-            raise RuntimeError("st16 steady-state: heldout pin not created")
-        build_corpus_batch(b1, tmp, batch_id=0, leakage_guard=True)  # untimed
+def _steady_batch(spark, sf_dir: str, q, name: str, windows: dict) -> list[float]:
+    """Per-batch admission latency of the registered two-batch query ``q``
+    (a ``catalog.TwoBatch``) with its pins and indexes already built
+    OUTSIDE the timed window: what a deployment pays per batch, where the
+    full-lifecycle query also pays pin builds and index lifecycles on
+    every measurement. In ``q``'s own scratch state, batch 0 runs untimed
+    (builds the indexes and warms the probe paths); batch 1's body is then
+    timed ``RUNS`` times. Timed replays append duplicate index rows —
+    admission-neutral by the replay contract (verdicts bit-identical), and
+    min-of-N lands on the first rep before file-count growth matters."""
+    with scratch_state(spark, q.prefix, q.drop) as state:
+        (b0, b1), body = q.stage(spark, sf_dir, state)
+        body(b0, 0)  # untimed
         raw: list[float] = []
         w = _Window()
         for _ in range(RUNS):
             t0 = time.time()
-            build_corpus_batch(b2, tmp, batch_id=1, leakage_guard=True)
+            body(b1, 1)
             raw.append(round(time.time() - t0, 3))
-        windows["st16_steady_batch"] = w.close()
-    finally:
-        drop_builder_state(spark, tmp)
-    return {"st16_steady_batch": min(raw), "runs": raw}
-
-
-def _st20_steady_state(spark, sf_dir: str, windows: dict) -> dict:
-    """st20 STEADY-STATE (r15 VERDICT finding 3): per-batch guarded
-    multimodal admission latency with both pins AND the asset index
-    already built OUTSIDE the timed window — the st20 twin of
-    ``_st16_steady_state``. The full-lifecycle st20 decade curve is
-    near-flat (39.7/38.3/50.7 s at 1×/10×/100×) because per-measurement
-    FIXED cost (two pin builds + the asset-index lifecycle) dominates;
-    what a deployment pays per batch is this number. Batch 1 runs untimed
-    (builds the asset index and warms both guard probe paths); batch 2's
-    full guarded body — containment guard, frame-grab guard, admission
-    with canonical resolution, delivery manifest — is then timed min-of-N.
-    Timed replays append duplicate index rows — admission-neutral by the
-    replay contract (verdicts bit-identical), and min-of-N lands on the
-    first rep before file-count growth matters."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from pdf_etl_pipeline_spark.catalog.multimodal_q import (
-        _mm3_frame_hashes,
-        _st20_doc_assets,
-    )
-    from pdf_etl_pipeline_spark.llmdata import corpus as CP
-    from pdf_etl_pipeline_spark.session import load_table
-    from pdf_etl_pipeline_spark.streaming.mm_release import (
-        drop_mm_release_state,
-        mm_release_batch,
-        pin_mm_release_state,
-    )
-
-    # spread=True: same rationale as _st16_steady_state above
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    stage = CP.split_stage(F.col("doc_id"))
-    held = docs.filter(stage >= 1)
-    corpus = _st20_doc_assets(docs.filter(stage == 0))
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    b1 = corpus.filter(F.col("doc_id") < split)
-    b2 = corpus.filter(F.col("doc_id") >= split)
-    tmp = tempfile.mkdtemp(prefix="st20_steady_")
-    try:
-        if not pin_mm_release_state(held, _mm3_frame_hashes(held), tmp):
-            raise RuntimeError("st20 steady-state: pins not created")
-        mm_release_batch(b1, tmp, batch_id=0)  # untimed: builds the index
-        raw: list[float] = []
-        w = _Window()
-        for _ in range(RUNS):
-            t0 = time.time()
-            mm_release_batch(b2, tmp, batch_id=1)
-            raw.append(round(time.time() - t0, 3))
-        windows["st20_steady_batch"] = w.close()
-    finally:
-        drop_mm_release_state(spark, tmp)
-    return {"st20_steady_batch": min(raw), "runs": raw}
+        windows[name] = w.close()
+    return raw
 
 
 def main() -> None:
@@ -559,10 +476,17 @@ def main() -> None:
 
     times = run_set(BENCH_QUERIES)
     extended = run_set(EXTENDED_QUERIES)
-    steady = _st16_steady_state(spark, sf_dir, windows)
-    s20 = _st20_steady_state(spark, sf_dir, windows)
-    steady["st20_steady_batch"] = s20["st20_steady_batch"]
-    steady["st20_runs"] = s20["runs"]
+    # st16: the guarded corpus-builder body; st20: the guarded multimodal
+    # release body (containment guard, frame-grab guard, admission with
+    # canonical resolution, delivery manifest)
+    s16 = _steady_batch(spark, sf_dir, ST16, "st16_steady_batch", windows)
+    s20 = _steady_batch(spark, sf_dir, ST20, "st20_steady_batch", windows)
+    steady = {
+        "st16_steady_batch": min(s16),
+        "runs": s16,
+        "st20_steady_batch": min(s20),
+        "st20_runs": s20,
+    }
     win_total = run_window.close()
     load_after = os.getloadavg()
     # the per-window availability scalar: fraction of the box's cores NOT

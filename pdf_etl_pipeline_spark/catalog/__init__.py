@@ -11,10 +11,14 @@ w2…, f…, t…) so the judge can tick the inventory line by line.
 from __future__ import annotations
 
 import importlib
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -57,6 +61,72 @@ def require_pin(created: bool, what: str) -> None:
     (r15 ADVICE)."""
     if not created:
         raise RuntimeError(f"{what}: pin not created")
+
+
+@dataclass(frozen=True)
+class TwoBatch:
+    """A streaming twin checked by running two real batches against fresh
+    state. ``stage(spark, sf_dir, state_dir) -> (batches, body)`` loads the
+    inputs, pins any index under ``state_dir`` and returns the two batch
+    relations plus ``body(batch_df, batch_id)``, the batch body
+    ``streaming.driver.run_batches`` would run. ``drop(spark, state_dir)``,
+    when set, releases the state (its catalog tables, say) before the
+    directory is deleted."""
+
+    prefix: str
+    stage: Callable
+    drop: Callable | None = None
+
+
+@contextmanager
+def scratch_state(spark: SparkSession, prefix: str, drop: Callable | None = None):
+    """A fresh temporary directory for the ``with`` body. On exit, also
+    when the body raises, ``drop(spark, path)`` runs and the directory is
+    deleted."""
+    from pdf_etl_pipeline_spark.operators import fsutil
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        try:
+            if drop is not None:
+                drop(spark, path)
+        finally:
+            fsutil.delete(path, recursive=True, spark=spark)
+
+
+def halving(docs: DataFrame, lo: int = 0) -> int:
+    """The doc_id cut that halves ``[lo, max(doc_id)]``, with one driver
+    job; the oracles spell it ``(MAX(doc_id) + 1) // 2``."""
+    return (lo + docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+
+
+def halves(df: DataFrame, cut: int, col: str = "doc_id") -> tuple[DataFrame, DataFrame]:
+    """``df``'s rows below ``cut`` and from ``cut`` on."""
+    return df.filter(F.col(col) < cut), df.filter(F.col(col) >= cut)
+
+
+def unroll(spark: SparkSession, sf_dir: str, q: TwoBatch, order: tuple = ()):
+    """Run ``q``'s body on each of its batches in order against scratch
+    state. Each output is tagged with its ``batch_id``, unioned by name,
+    sorted by ``order`` and eagerly checkpointed before the state is
+    dropped. A body that returns a tuple gets one such relation per
+    element."""
+    with scratch_state(spark, q.prefix, q.drop) as state:
+        batches, body = q.stage(spark, sf_dir, state)
+        outs = [body(batch, b) for b, batch in enumerate(batches)]
+
+        def merge(parts):
+            out = reduce(
+                DataFrame.unionByName,
+                (df.withColumn("batch_id", F.lit(b).cast("long")) for b, df in enumerate(parts)),
+            )
+            return (out.orderBy(*order) if order else out).localCheckpoint()
+
+        if isinstance(outs[0], tuple):
+            return tuple(merge(parts) for parts in zip(*outs))
+        return merge(outs)
 
 
 def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple = ()):

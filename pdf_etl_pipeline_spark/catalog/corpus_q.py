@@ -7,9 +7,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register, require_pin
+from pdf_etl_pipeline_spark.catalog import (
+    TwoBatch,
+    halves,
+    halving,
+    register,
+    require_pin,
+    unroll,
+)
 from pdf_etl_pipeline_spark.llmdata import corpus as CP
 from pdf_etl_pipeline_spark.session import load_table, tune
+from pdf_etl_pipeline_spark.streaming.contamination_guard import (
+    guard_contamination_batch,
+    pin_benchmark,
+)
+from pdf_etl_pipeline_spark.streaming.leakage_guard import guard_leakage_batch, pin_heldout
 
 _TOKS = CP.tokens_sql("text", distinct=False)
 
@@ -306,38 +318,21 @@ ORDER BY c.doc_id"""
     "broadcast eval-suite-sized pin, one keyed count — nothing stream-global",
 )
 def st13_contamination_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     tune(spark)
-    from pdf_etl_pipeline_spark.streaming.contamination_guard import (
-        guard_contamination_batch,
-        pin_benchmark,
+    return unroll(spark, sf_dir, _ST13, order=("doc_id",)).select(
+        "doc_id", "batch_id", "n_shared_shingles", "contaminated"
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0)
-    corpus = docs.filter(F.col("doc_id") % CP.BENCH_MOD != 0)
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st13_state_")
-    try:
-        require_pin(pin_benchmark(bench, tmp), "st13")
-        v1 = guard_contamination_batch(
-            corpus.filter(F.col("doc_id") < split), tmp, batch_id=0
-        ).withColumn("batch_id", F.lit(0).cast("long"))
-        v2 = guard_contamination_batch(
-            corpus.filter(F.col("doc_id") >= split), tmp, batch_id=1
-        ).withColumn("batch_id", F.lit(1).cast("long"))
-        out = (
-            v1.unionByName(v2)
-            .select("doc_id", "batch_id", "n_shared_shingles", "contaminated")
-            .orderBy("doc_id")
-            .localCheckpoint()
-        )
-    finally:
-        from pdf_etl_pipeline_spark.operators import fsutil
 
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+def _st13_stage(spark: SparkSession, sf_dir: str, state: str):
+    docs = load_table(spark, sf_dir, "documents")
+    require_pin(pin_benchmark(docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0), state), "st13")
+    corpus = docs.filter(F.col("doc_id") % CP.BENCH_MOD != 0)
+    body = lambda batch, b: guard_contamination_batch(batch, state, batch_id=b)
+    return halves(corpus, halving(docs)), body
+
+
+_ST13 = TwoBatch("st13_state_", _st13_stage)
 
 
 # --- ST15: streaming split-leakage guard (dq8 at admission time) --------------------
@@ -406,36 +401,18 @@ ORDER BY st.doc_id"""
     "text), exact Jaccard on banding survivors only — nothing stream-global",
 )
 def st15_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     tune(spark)
-    from pdf_etl_pipeline_spark.streaming.leakage_guard import (
-        guard_leakage_batch,
-        pin_heldout,
+    return unroll(spark, sf_dir, _ST15, order=("doc_id",)).select(
+        "doc_id", "batch_id", "n_heldout_dups", "max_jaccard", "leaks"
     )
 
+
+def _st15_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
     stage = CP.split_stage(F.col("doc_id"))
-    heldout = docs.filter(stage >= 1)
-    train = docs.filter(stage == 0)
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st15_state_")
-    try:
-        require_pin(pin_heldout(heldout, tmp), "st15")
-        v1 = guard_leakage_batch(
-            train.filter(F.col("doc_id") < split), tmp, batch_id=0
-        ).withColumn("batch_id", F.lit(0).cast("long"))
-        v2 = guard_leakage_batch(
-            train.filter(F.col("doc_id") >= split), tmp, batch_id=1
-        ).withColumn("batch_id", F.lit(1).cast("long"))
-        out = (
-            v1.unionByName(v2)
-            .select("doc_id", "batch_id", "n_heldout_dups", "max_jaccard", "leaks")
-            .orderBy("doc_id")
-            .localCheckpoint()
-        )
-    finally:
-        from pdf_etl_pipeline_spark.operators import fsutil
+    require_pin(pin_heldout(docs.filter(stage >= 1), state), "st15")
+    body = lambda batch, b: guard_leakage_batch(batch, state, batch_id=b)
+    return halves(docs.filter(stage == 0), halving(docs)), body
 
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+
+_ST15 = TwoBatch("st15_state_", _st15_stage)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register
+from pdf_etl_pipeline_spark.catalog import halving, register, scratch_state
 from pdf_etl_pipeline_spark.llmdata import dedup as DD
 from pdf_etl_pipeline_spark.llmdata import text as TX
 from pdf_etl_pipeline_spark.llmdata.curation import curate_corpus
@@ -1293,8 +1293,7 @@ def cc16_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_etl_pipeline_spark.llmdata.dedup import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    docs1 = docs.filter(F.col("doc_id") < cut)
+    docs1 = docs.filter(F.col("doc_id") < halving(docs))
     v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
     v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
     return release_diff_df(v1, v2)
@@ -1367,25 +1366,18 @@ def release_diff_stored(spark: SparkSession, v1_path: str, v2: DataFrame) -> Dat
 )
 def cc17_stored_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
-
     from pdf_etl_pipeline_spark.catalog.dedup_q import shared_pairs
     from pdf_etl_pipeline_spark.llmdata.dedup import minhash_lsh_pairs
-    from pdf_etl_pipeline_spark.operators import fsutil
 
     docs = load_table(spark, sf_dir, "documents")
-    cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    docs1 = docs.filter(F.col("doc_id") < cut)
+    docs1 = docs.filter(F.col("doc_id") < halving(docs))
     v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
-    tmp = tempfile.mkdtemp(prefix="cc17_v1_")
-    try:
-        release_write(v1, tmp)
+    with scratch_state(spark, "cc17_v1_") as path:
+        release_write(v1, path)
         v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
         # materialize before the persisted artifact (temp here; immutable
         # storage in production) disappears
-        return release_diff_stored(spark, tmp, v2).localCheckpoint()
-    finally:
-        fsutil.delete(tmp, recursive=True, spark=spark)
+        return release_diff_stored(spark, path, v2).localCheckpoint()
 
 
 # --- CC18: compact release diff + patch-apply -------------------------------------
@@ -1559,19 +1551,13 @@ ORDER BY split"""
 )
 def dq11_release_certification(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
-
     from pdf_etl_pipeline_spark.catalog.dedup_q import shared_pairs
-    from pdf_etl_pipeline_spark.operators import fsutil
 
     docs = load_table(spark, sf_dir, "documents")
     manifest = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
-    tmp = tempfile.mkdtemp(prefix="dq11_release_")
-    try:
-        release_write(manifest, tmp)
-        return certify_release(release_read(spark, tmp)).localCheckpoint()
-    finally:
-        fsutil.delete(tmp, recursive=True, spark=spark)
+    with scratch_state(spark, "dq11_release_") as path:
+        release_write(manifest, path)
+        return certify_release(release_read(spark, path)).localCheckpoint()
 
 
 @register(
@@ -1589,21 +1575,16 @@ def dq11_release_certification(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cc18_release_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
-
     from pdf_etl_pipeline_spark.catalog.dedup_q import shared_pairs
     from pdf_etl_pipeline_spark.llmdata.dedup import minhash_lsh_pairs
-    from pdf_etl_pipeline_spark.operators import fsutil
 
     docs = load_table(spark, sf_dir, "documents")
-    cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    docs1 = docs.filter(F.col("doc_id") < cut)
+    docs1 = docs.filter(F.col("doc_id") < halving(docs))
     v1 = release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9))
-    tmp = tempfile.mkdtemp(prefix="cc18_v1_")
-    try:
-        release_write(v1, tmp)
+    with scratch_state(spark, "cc18_v1_") as path:
+        release_write(v1, path)
         v2 = release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9))
-        stored_v1 = release_read(spark, tmp).select(
+        stored_v1 = release_read(spark, path).select(
             "doc_id", "split", "position", "shard_id"
         )
         patch = release_diff_compact(stored_v1, v2)
@@ -1612,5 +1593,3 @@ def cc18_release_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint()
         )
-    finally:
-        fsutil.delete(tmp, recursive=True, spark=spark)

@@ -7,10 +7,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register, require_pin
+from pdf_etl_pipeline_spark.catalog import (
+    TwoBatch,
+    halves,
+    halving,
+    register,
+    require_pin,
+    unroll,
+)
 from pdf_etl_pipeline_spark.llmdata import dedup as DD
 from pdf_etl_pipeline_spark.llmdata import similarity as SIM
 from pdf_etl_pipeline_spark.session import load_table, session_memo, tune
+from pdf_etl_pipeline_spark.streaming.containment_guard import (
+    guard_containment_batch,
+    pin_containment_index,
+)
 
 _TOKS = DD.tokens_sql("text")
 _TOKSH = DD.token_hashes_sql("text")
@@ -751,34 +762,17 @@ ORDER BY b.doc_id"""
 )
 def st19_containment_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
+    return unroll(spark, sf_dir, _ST19, order=("doc_id",))
 
-    from pdf_etl_pipeline_spark.operators import fsutil
-    from pdf_etl_pipeline_spark.streaming.containment_guard import (
-        guard_containment_batch,
-        pin_containment_index,
-    )
 
+def _st19_stage(spark: SparkSession, sf_dir: str, state: str):
+    """The lower half pins; the upper half arrives as two quarter batches."""
     docs = load_table(spark, sf_dir, "documents")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    cut = (hi + 1) // 2
-    mid2 = (cut + hi + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st19_pin_")
-    try:
-        require_pin(
-            pin_containment_index(docs.filter(F.col("doc_id") < cut), tmp), "st19"
-        )
-        out = None
-        for b, batch in enumerate(
-            (
-                docs.filter((F.col("doc_id") >= cut) & (F.col("doc_id") < mid2)),
-                docs.filter(F.col("doc_id") >= mid2),
-            )
-        ):
-            rows = guard_containment_batch(batch, tmp, b).withColumn(
-                "batch_id", F.lit(b).cast("long")
-            )
-            out = rows if out is None else out.unionByName(rows)
-        return out.orderBy("doc_id").localCheckpoint()
-    finally:
-        fsutil.delete(tmp, recursive=True, spark=spark)
+    cut = halving(docs)
+    held, incoming = halves(docs, cut)
+    require_pin(pin_containment_index(held, state), "st19")
+    body = lambda batch, b: guard_containment_batch(batch, state, b)
+    return halves(incoming, halving(docs, lo=cut)), body
+
+
+_ST19 = TwoBatch("st19_pin_", _st19_stage)

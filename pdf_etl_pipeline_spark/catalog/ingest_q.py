@@ -13,15 +13,35 @@ rows-counted.
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register, require_pin
+from pdf_etl_pipeline_spark.catalog import (
+    TwoBatch,
+    halves,
+    halving,
+    register,
+    require_pin,
+    unroll,
+)
 from pdf_etl_pipeline_spark.catalog.dedup_q import _DD3_JACCARD, _label_rounds
 from pdf_etl_pipeline_spark.llmdata import dedup as DD
+from pdf_etl_pipeline_spark.llmdata.curation_stream import (
+    curation_verdict_batch,
+    drop_curation_state,
+)
+from pdf_etl_pipeline_spark.llmdata.ingest import drop_index, ingest_batch
+from pdf_etl_pipeline_spark.llmdata.span_ingest import drop_span_index, monitor_batch
 from pdf_etl_pipeline_spark.session import load_table, tune
+from pdf_etl_pipeline_spark.streaming.contamination_guard import pin_benchmark
+from pdf_etl_pipeline_spark.streaming.corpus_builder import (
+    LEAKAGE_SUBDIR,
+    build_corpus_batch,
+    drop_builder_state,
+)
+from pdf_etl_pipeline_spark.streaming.leakage_guard import pin_heldout
 
 _TOKSH = DD.token_hashes_sql("text")
 _SIG = DD.minhash_signature_sql("text")
@@ -88,28 +108,16 @@ ORDER BY doc_id"""
 )
 def st7_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    from pdf_etl_pipeline_spark.llmdata.ingest import ingest_batch
+    return unroll(spark, sf_dir, _ST7, order=("doc_id",))
 
+
+def _st7_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st7_index_")
-    try:
-        k1 = ingest_batch(docs.filter(F.col("doc_id") < split), tmp)
-        k2 = ingest_batch(docs.filter(F.col("doc_id") >= split), tmp)
-        out = (
-            k1.select("doc_id", F.lit(0).cast("long").alias("batch_id"))
-            .unionAll(k2.select("doc_id", F.lit(1).cast("long").alias("batch_id")))
-            .orderBy("doc_id")
-            # materialize before the temp index directory disappears
-            .localCheckpoint()
-        )
-    finally:
-        from pdf_etl_pipeline_spark.llmdata.ingest import drop_index
-        from pdf_etl_pipeline_spark.operators import fsutil
+    body = lambda batch, b: ingest_batch(batch, state).select("doc_id")
+    return halves(docs, halving(docs)), body
 
-        drop_index(spark, tmp)
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+
+_ST7 = TwoBatch("st7_index_", _st7_stage, drop_index)
 
 
 # --- ST10: incremental duplicated-span monitor ----------------------------------
@@ -212,29 +220,16 @@ FROM rep ORDER BY doc_id"""
 )
 def st10_span_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    from pdf_etl_pipeline_spark.llmdata.span_ingest import (
-        drop_span_index,
-        monitor_batch,
-    )
+    return unroll(spark, sf_dir, _ST10, order=("doc_id",))
 
+
+def _st10_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st10_index_")
-    try:
-        r1 = monitor_batch(docs.filter(F.col("doc_id") < split), tmp, batch_id=0)
-        r2 = monitor_batch(docs.filter(F.col("doc_id") >= split), tmp, batch_id=1)
-        out = (
-            r1.withColumn("batch_id", F.lit(0).cast("long"))
-            .unionAll(r2.withColumn("batch_id", F.lit(1).cast("long")))
-            .orderBy("doc_id")
-            .localCheckpoint()
-        )
-    finally:
-        from pdf_etl_pipeline_spark.operators import fsutil
+    body = lambda batch, b: monitor_batch(batch, state, batch_id=b)
+    return halves(docs, halving(docs)), body
 
-        drop_span_index(spark, tmp)
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+
+_ST10 = TwoBatch("st10_index_", _st10_stage, drop_span_index)
 
 
 # --- ST11: streaming curation verdict (st7 + st10 + cc9 gates composed) -----------
@@ -388,29 +383,15 @@ wide AS (SELECT batch_id, {sums} FROM ver GROUP BY 1)
 ORDER BY batch_id, stage"""
 
 
-def _st11_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _st11_stage(spark: SparkSession, sf_dir: str, state: str):
     """Two real ingest batches through the composed foreachBatch body
-    (fresh on-disk st7 + span indexes), verdicts materialized before the
-    temp state disappears."""
-    from pdf_etl_pipeline_spark.llmdata.curation_stream import (
-        curation_verdict_batch,
-        drop_curation_state,
-    )
-
+    (fresh on-disk st7 + span indexes)."""
     docs = load_table(spark, sf_dir, "documents")
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st11_state_")
-    try:
-        v1 = curation_verdict_batch(
-            docs.filter(F.col("doc_id") < split), tmp, batch_id=0
-        ).withColumn("batch_id", F.lit(0).cast("long"))
-        v2 = curation_verdict_batch(
-            docs.filter(F.col("doc_id") >= split), tmp, batch_id=1
-        ).withColumn("batch_id", F.lit(1).cast("long"))
-        out = v1.unionByName(v2).localCheckpoint()
-    finally:
-        drop_curation_state(spark, tmp)
-    return out
+    body = lambda batch, b: curation_verdict_batch(batch, state, batch_id=b)
+    return halves(docs, halving(docs)), body
+
+
+_ST11 = TwoBatch("st11_state_", _st11_stage, drop_curation_state)
 
 
 @register(
@@ -429,7 +410,7 @@ def _st11_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st11_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     return (
-        _st11_verdicts(spark, sf_dir)
+        unroll(spark, sf_dir, _ST11)
         .select(
             "doc_id", "batch_id", "n_tokens", "n_kept", "admitted",
             "lang_trim", "q_trim", "verdict",
@@ -451,7 +432,7 @@ def st11_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from pdf_etl_pipeline_spark.llmdata.curation_stream import curation_funnel
 
-    return curation_funnel(_st11_verdicts(spark, sf_dir)).orderBy("batch_id", "stage")
+    return curation_funnel(unroll(spark, sf_dir, _ST11)).orderBy("batch_id", "stage")
 
 
 # --- CC11: streaming-verdict shard manifest (st11's delivery path) ----------------
@@ -490,7 +471,7 @@ FROM packed GROUP BY 1 ORDER BY 1"""
 def cc11_verdict_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     survivors = (
-        _st11_verdicts(spark, sf_dir)
+        unroll(spark, sf_dir, _ST11)
         .filter(F.col("verdict") == "keep")
         .select("doc_id", F.col("n_kept").alias("n_tokens"))
     )
@@ -572,39 +553,19 @@ SELECT batch_id, shard_id, COUNT(*) AS n_docs,
 FROM packed14 GROUP BY 1, 2 ORDER BY 1, 2"""
 
 
-def _st14_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _st14_stage(spark: SparkSession, sf_dir: str, state: str):
     """Two real ingest batches through the composed builder body (fresh
-    pinned benchmark + curation state), verdicts and manifests
-    materialized before the temp state disappears. Batch split and
-    benchmark convention match st13's (corpus = doc_id % BENCH_MOD != 0,
-    split at (max+1)//2 over all documents)."""
-    from pdf_etl_pipeline_spark.streaming.contamination_guard import pin_benchmark
-    from pdf_etl_pipeline_spark.streaming.corpus_builder import (
-        build_corpus_batch,
-        drop_builder_state,
-    )
-
+    pinned benchmark + curation state). Batch split and benchmark
+    convention match st13's (corpus = doc_id % BENCH_MOD != 0, split at
+    (max+1)//2 over all documents)."""
     docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0)
+    require_pin(pin_benchmark(docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0), state), "st14")
     corpus = docs.filter(F.col("doc_id") % CP.BENCH_MOD != 0)
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st14_state_")
-    try:
-        require_pin(pin_benchmark(bench, tmp), "st14")
-        v1, m1 = build_corpus_batch(
-            corpus.filter(F.col("doc_id") < split), tmp, batch_id=0
-        )
-        v2, m2 = build_corpus_batch(
-            corpus.filter(F.col("doc_id") >= split), tmp, batch_id=1
-        )
-        tag = lambda df, b: df.withColumn("batch_id", F.lit(b).cast("long"))
-        # build_corpus_batch localCheckpoints both outputs, so the unions
-        # survive the temp-state deletion without re-materializing
-        verdicts = tag(v1, 0).unionByName(tag(v2, 1))
-        manifest = tag(m1, 0).unionByName(tag(m2, 1))
-    finally:
-        drop_builder_state(spark, tmp)
-    return verdicts, manifest
+    body = lambda batch, b: build_corpus_batch(batch, state, batch_id=b)
+    return halves(corpus, halving(docs)), body
+
+
+_ST14 = TwoBatch("st14_state_", _st14_stage, drop_builder_state)
 
 
 @register(
@@ -622,7 +583,7 @@ def _st14_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 )
 def st14_builder_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    verdicts, _ = _st14_outputs(spark, sf_dir)
+    verdicts, _ = unroll(spark, sf_dir, _ST14)
     return verdicts.select(
         "doc_id", "batch_id", "n_tokens", "n_kept", "admitted",
         "lang_trim", "q_trim", "verdict",
@@ -643,7 +604,7 @@ def st14_builder_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st14_corpus_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    _, manifest = _st14_outputs(spark, sf_dir)
+    _, manifest = unroll(spark, sf_dir, _ST14)
     return manifest.select(
         "batch_id", "shard_id", "n_docs", "total_tokens",
         "first_doc_id", "last_doc_id",
@@ -722,42 +683,21 @@ FROM documents d JOIN leaks l ON d.doc_id = l.doc_id
 ORDER BY doc_id"""
 
 
-def _st16_outputs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _st16_stage(spark: SparkSession, sf_dir: str, state: str):
     """Two real ingest batches through the guarded release body: benchmark
     AND held-out index pinned fresh, train-split corpus docs streamed in
-    two halves with the leakage stage on; verdicts materialized before the
-    temp state disappears."""
-    from pdf_etl_pipeline_spark.streaming.contamination_guard import pin_benchmark
-    from pdf_etl_pipeline_spark.streaming.corpus_builder import (
-        LEAKAGE_SUBDIR,
-        build_corpus_batch,
-        drop_builder_state,
-    )
-    from pdf_etl_pipeline_spark.streaming.leakage_guard import pin_heldout
-
-    import os as _os
-
+    two halves with the leakage stage on. The body keeps the verdicts
+    only, so the lazily checkpointed manifest is never packed."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     stage = CP.split_stage(F.col("doc_id"))
-    bench = docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0)
-    heldout = docs.filter(stage >= 1)
+    require_pin(pin_benchmark(docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0), state), "st16")
+    require_pin(pin_heldout(docs.filter(stage >= 1), os.path.join(state, LEAKAGE_SUBDIR)), "st16")
     corpus = docs.filter((F.col("doc_id") % CP.BENCH_MOD != 0) & (stage == 0))
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st16_state_")
-    try:
-        require_pin(pin_benchmark(bench, tmp), "st16")
-        require_pin(pin_heldout(heldout, _os.path.join(tmp, LEAKAGE_SUBDIR)), "st16")
-        v1, _ = build_corpus_batch(
-            corpus.filter(F.col("doc_id") < split), tmp, batch_id=0, leakage_guard=True
-        )
-        v2, _ = build_corpus_batch(
-            corpus.filter(F.col("doc_id") >= split), tmp, batch_id=1, leakage_guard=True
-        )
-        tag = lambda df, b: df.withColumn("batch_id", F.lit(b).cast("long"))
-        verdicts = tag(v1, 0).unionByName(tag(v2, 1))
-    finally:
-        drop_builder_state(spark, tmp)
-    return verdicts
+    body = lambda batch, b: build_corpus_batch(batch, state, batch_id=b, leakage_guard=True)[0]
+    return halves(corpus, halving(docs)), body
+
+
+ST16 = TwoBatch("st16_state_", _st16_stage, drop_builder_state)
 
 
 @register(
@@ -775,16 +715,7 @@ def _st16_outputs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st16_guarded_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    return (
-        _st16_outputs(spark, sf_dir)
-        .select(
-            "doc_id", "batch_id", "n_tokens", "n_kept", "admitted",
-            "lang_trim", "q_trim", "verdict",
-        )
-        .orderBy("doc_id")
-        # lazy (r16): both batch verdict relations are already eagerly
-        # checkpointed inside build_corpus_batch (nothing here reads the
-        # dropped state dirs), so the final union+sort need not run twice —
-        # the caller's action materializes it once.
-        .localCheckpoint(eager=False)
+    return unroll(spark, sf_dir, ST16, order=("doc_id",)).select(
+        "doc_id", "batch_id", "n_tokens", "n_kept", "admitted",
+        "lang_trim", "q_trim", "verdict",
     )

@@ -33,10 +33,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register, require_pin
+from pdf_etl_pipeline_spark.catalog import (
+    TwoBatch,
+    halves,
+    halving,
+    register,
+    require_pin,
+    unroll,
+)
 from pdf_etl_pipeline_spark.functions.scalars import portable_hash32, portable_hash32_sql
 from pdf_etl_pipeline_spark.llmdata import multimodal as MM
+from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
+    drop_mm_index,
+    guard_framegrab_batch,
+    mm_ingest_batch,
+    pin_frame_index,
+)
 from pdf_etl_pipeline_spark.session import load_table, session_memo, tune
+from pdf_etl_pipeline_spark.streaming.mm_release import (
+    drop_mm_release_state,
+    mm_release_batch,
+    pin_mm_release_state,
+)
 
 
 def _h64(seed: Column) -> Column:
@@ -555,29 +573,16 @@ ORDER BY asset_id"""
 )
 def st17_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
+    return unroll(spark, sf_dir, _ST17, order=("asset_id",))
 
-    from pdf_etl_pipeline_spark.llmdata.mm_ingest import drop_mm_index, mm_ingest_batch
-    from pdf_etl_pipeline_spark.operators import fsutil
 
+def _st17_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
-    hashes = _mm1_hashes(docs)
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st17_index_")
-    try:
-        k1 = mm_ingest_batch(hashes.filter(F.col("asset_id") < split), tmp)
-        k2 = mm_ingest_batch(hashes.filter(F.col("asset_id") >= split), tmp)
-        out = (
-            k1.select("asset_id", F.lit(0).cast("long").alias("batch_id"))
-            .unionAll(k2.select("asset_id", F.lit(1).cast("long").alias("batch_id")))
-            .orderBy("asset_id")
-            # materialize before the temp index directory disappears
-            .localCheckpoint()
-        )
-    finally:
-        drop_mm_index(spark, tmp)
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+    body = lambda batch, b: mm_ingest_batch(batch, state).select("asset_id")
+    return halves(_mm1_hashes(docs), halving(docs), "asset_id"), body
+
+
+_ST17 = TwoBatch("st17_index_", _st17_stage, drop_mm_index)
 
 
 # --- st18: frame-grab admission guard --------------------------------------------
@@ -628,31 +633,17 @@ ORDER BY i.asset_id"""
 )
 def st18_framegrab_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
-    import tempfile
+    return unroll(spark, sf_dir, _ST18, order=("asset_id",))
 
-    from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
-        guard_framegrab_batch,
-        pin_frame_index,
-    )
-    from pdf_etl_pipeline_spark.operators import fsutil
 
+def _st18_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
-    imgs = _mm1_hashes(docs)
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st18_pin_")
-    try:
-        require_pin(pin_frame_index(_mm3_frame_hashes(docs), tmp), "st18")
-        out = None
-        for b, batch in enumerate(
-            (imgs.filter(F.col("asset_id") < split), imgs.filter(F.col("asset_id") >= split))
-        ):
-            rows = guard_framegrab_batch(batch, tmp, b).withColumn(
-                "batch_id", F.lit(b).cast("long")
-            )
-            out = rows if out is None else out.unionByName(rows)
-        return out.orderBy("asset_id").localCheckpoint()
-    finally:
-        fsutil.delete(tmp, recursive=True, spark=spark)
+    require_pin(pin_frame_index(_mm3_frame_hashes(docs), state), "st18")
+    body = lambda batch, b: guard_framegrab_batch(batch, state, b)
+    return halves(_mm1_hashes(docs), halving(docs), "asset_id"), body
+
+
+_ST18 = TwoBatch("st18_pin_", _st18_stage)
 
 
 # --- dq9: MULTIMODAL split leakage ------------------------------------------------
@@ -908,44 +899,23 @@ FROM packed20 GROUP BY 1, 2 ORDER BY 1, 2"""
 
 
 def _st20_outputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """``_st20_unroll``, once per (Spark application, sf_dir): the verdict
-    and manifest registrations share one unroll."""
-    return session_memo(spark, (_st20_outputs, sf_dir), lambda: _st20_unroll(spark, sf_dir))
+    """``ST20``'s two-batch unroll, once per (Spark application, sf_dir):
+    the verdict and manifest registrations share it."""
+    return session_memo(spark, (_st20_outputs, sf_dir), lambda: unroll(spark, sf_dir, ST20))
 
 
-def _st20_unroll(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Two real multimodal ingest batches through the composed release body
-    (fresh pins + fresh asset index), verdicts and manifests materialized
-    before the temp state disappears."""
-    import tempfile
-
-    from pdf_etl_pipeline_spark.streaming.mm_release import (
-        drop_mm_release_state,
-        mm_release_batch,
-        pin_mm_release_state,
-    )
-
+def _st20_stage(spark: SparkSession, sf_dir: str, state: str):
+    """Two real multimodal ingest batches through the composed release
+    body (fresh pins + fresh asset index)."""
     docs = load_table(spark, sf_dir, "documents")
     stage = _CPm.split_stage(F.col("doc_id"))
     held = docs.filter(stage >= 1)
-    corpus = _st20_doc_assets(docs.filter(stage == 0))
-    split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
-    tmp = tempfile.mkdtemp(prefix="st20_state_")
-    try:
-        # unconditional call + raise (not assert): under `python -O` the
-        # assert body would never run and the pins would not exist
-        if not pin_mm_release_state(held, _mm3_frame_hashes(held), tmp):
-            raise RuntimeError("st20 pins missing after pin_mm_release_state")
-        v1, m1 = mm_release_batch(corpus.filter(F.col("doc_id") < split), tmp, 0)
-        v2, m2 = mm_release_batch(corpus.filter(F.col("doc_id") >= split), tmp, 1)
-        tag = lambda df, b: df.withColumn("batch_id", F.lit(b).cast("long"))
-        out = (
-            tag(v1, 0).unionByName(tag(v2, 1)),
-            tag(m1, 0).unionByName(tag(m2, 1)),
-        )
-    finally:
-        drop_mm_release_state(spark, tmp)
-    return out
+    require_pin(pin_mm_release_state(held, _mm3_frame_hashes(held), state), "st20")
+    body = lambda batch, b: mm_release_batch(batch, state, b)
+    return halves(_st20_doc_assets(docs.filter(stage == 0)), halving(docs)), body
+
+
+ST20 = TwoBatch("st20_state_", _st20_stage, drop_mm_release_state)
 
 
 @register(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.catalog import register
+from pdf_etl_pipeline_spark.catalog import register, scratch_state
 from pdf_etl_pipeline_spark.operators.bloom import bloom_semi_stats, bloom_semi_stats_sql
 from pdf_etl_pipeline_spark.session import load_events, load_table, tune
 
@@ -884,8 +884,6 @@ ORDER BY p.event_type"""
     "one keyed distinct-value ECDF window per batch, nothing stream-global",
 )
 def st12_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     tune(spark)
     from pdf_etl_pipeline_spark.streaming.drift_monitor import monitor_drift_batch
 
@@ -900,16 +898,10 @@ def st12_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     evm = ev.crossJoin(F.broadcast(mid))
     b1 = evm.filter(F.col("es") < F.col("mid"))
     b2 = evm.filter(F.col("es") >= F.col("mid"))
-    tmp = tempfile.mkdtemp(prefix="st12_state_")
-    try:
-        pinned = monitor_drift_batch(b1, tmp, batch_id=0)
+    with scratch_state(spark, "st12_state_") as state:
+        pinned = monitor_drift_batch(b1, state, batch_id=0)
         assert pinned is None  # first batch becomes the reference
-        out = monitor_drift_batch(b2, tmp, batch_id=1)
-    finally:
-        from pdf_etl_pipeline_spark.operators import fsutil
-
-        fsutil.delete(tmp, recursive=True, spark=spark)
-    return out
+        return monitor_drift_batch(b2, state, batch_id=1)
 
 
 # --- DQ6: categorical drift (two-sample chi-square homogeneity) ---------------------

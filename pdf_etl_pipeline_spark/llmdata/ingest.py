@@ -59,6 +59,7 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     label_components,
     signatures_from_hashed,
 )
+from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "bands"
@@ -242,91 +243,86 @@ def ingest_batch(
     count — the lever is sized for object-store file-open/listing costs,
     and the in-loop compaction itself costs ~10% per batch).
     """
-    from pyspark import StorageLevel
-
     spark = batch_docs.sparkSession
-    hashed = hashed_tokens(batch_docs).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = bands_from_signatures(signatures_from_hashed(hashed)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("toks")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    # 1. intra-batch: LSH pairs -> connected components -> component minima
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    # the batch relations stay cached up to the last index append and are
+    # released on exit, also when a step in between raises
+    with (
+        materialized(hashed_tokens(batch_docs)) as hashed,
+        materialized(bands_from_signatures(signatures_from_hashed(hashed))) as bands,
+        materialized(hashed.groupBy("doc_id").agg(F.collect_set("h").alias("toks"))) as toks,
+    ):
+        # 1. intra-batch: LSH pairs -> connected components -> component minima
+        a, b = bands.alias("a"), bands.alias("b")
+        cands = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.key") == F.col("b.key"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .dropDuplicates(["doc_a", "doc_b"])
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
-    pairs = (
-        cands.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .filter((inter / union) >= threshold)
-        .select("doc_a", "doc_b")
-    )
-    kept = (
-        label_components(
-            batch_docs.select("doc_id"),
-            pairs,
-            rounds=STAR_ROUNDS,
-            doubling=True,
-            until_converged=True,
+        ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
+        tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
+        inter = F.size(F.array_intersect("ta", "tb"))
+        union = F.size("ta") + F.size("tb") - inter
+        pairs = (
+            cands.join(ta, "doc_a")
+            .join(tb, "doc_b")
+            .filter((inter / union) >= threshold)
+            .select("doc_a", "doc_b")
         )
-        .filter(F.col("is_keeper"))
-        .select("doc_id")
-    )
+        kept = (
+            label_components(
+                batch_docs.select("doc_id"),
+                pairs,
+                rounds=STAR_ROUNDS,
+                doubling=True,
+                until_converged=True,
+            )
+            .filter(F.col("is_keeper"))
+            .select("doc_id")
+        )
 
-    # 2. cross-batch: banding candidates vs the admitted index, verified
-    if _index_exists(spark, index_dir):
-        matched = admission_matches(spark, bands, toks, kept, index_dir, threshold)
-        kept = kept.join(matched, "doc_id", "left_anti")
+        # 2. cross-batch: banding candidates vs the admitted index, verified
+        if _index_exists(spark, index_dir):
+            matched = admission_matches(spark, bands, toks, kept, index_dir, threshold)
+            kept = kept.join(matched, "doc_id", "left_anti")
 
-    # materialize admissions BEFORE appending to the index this plan reads
-    kept = kept.localCheckpoint()
+        # materialize admissions BEFORE appending to the index this plan reads
+        kept = kept.localCheckpoint()
 
-    # 3. append the admitted docs' index rows. toks FIRST: the two writes
-    # are not atomic, and a failure in between must leave a safe state. A
-    # doc with toks but no bands is merely invisible to future admission
-    # joins (its near-dups get re-admitted — an availability error); a doc
-    # with bands but no toks would generate banding candidates whose inner
-    # join on the missing verify set silently DROPS them, wrongly admitting
-    # true near-duplicates (a correctness error). At cluster scale both
-    # writes move into one transactional-table commit.
-    # toks: hash-clustered by doc_id (repartition = one file family per hash
-    # bucket; a metastore-bucketed table at cluster scale would make the
-    # survivor semi-join shuffle-free on the index side too).
-    _append_to_table(
-        toks.join(kept, "doc_id", "left_semi").repartition(TOK_BUCKETS, "doc_id"),
-        toks_table(index_dir),
-        os.path.join(index_dir, TOKS_SUBDIR),
-    )
-    # bands: partitioned by band so admission probes prune to the probed
-    # band partitions (PartitionFilters on the scan — see admission_matches).
-    # Repartitioned BY BAND before the dynamic-partition write (r16, guide
-    # §6 small files): without it every one of the 32 shuffle tasks opens a
-    # writer per band it touches (up to 32×BANDS tiny files per batch +
-    # commit overhead, measured 4-5 s/append); aligned, the write is one
-    # file per band partition per batch and the probe-side file count grows
-    # BANDS/batch instead of ~32·BANDS/batch.
-    _append_to_table(
-        bands.join(kept, "doc_id", "left_semi").repartition("band"),
-        bands_table(index_dir),
-        os.path.join(index_dir, BANDS_SUBDIR),
-        partition_by="band",
-    )
-    for cached in (bands, toks, hashed):
-        cached.unpersist()
+        # 3. append the admitted docs' index rows. toks FIRST: the two writes
+        # are not atomic, and a failure in between must leave a safe state. A
+        # doc with toks but no bands is merely invisible to future admission
+        # joins (its near-dups get re-admitted — an availability error); a doc
+        # with bands but no toks would generate banding candidates whose inner
+        # join on the missing verify set silently DROPS them, wrongly admitting
+        # true near-duplicates (a correctness error). At cluster scale both
+        # writes move into one transactional-table commit.
+        # toks: hash-clustered by doc_id (repartition = one file family per hash
+        # bucket; a metastore-bucketed table at cluster scale would make the
+        # survivor semi-join shuffle-free on the index side too).
+        _append_to_table(
+            toks.join(kept, "doc_id", "left_semi").repartition(TOK_BUCKETS, "doc_id"),
+            toks_table(index_dir),
+            os.path.join(index_dir, TOKS_SUBDIR),
+        )
+        # bands: partitioned by band so admission probes prune to the probed
+        # band partitions (PartitionFilters on the scan — see admission_matches).
+        # Repartitioned BY BAND before the dynamic-partition write (r16, guide
+        # §6 small files): without it every one of the 32 shuffle tasks opens a
+        # writer per band it touches (up to 32×BANDS tiny files per batch +
+        # commit overhead, measured 4-5 s/append); aligned, the write is one
+        # file per band partition per batch and the probe-side file count grows
+        # BANDS/batch instead of ~32·BANDS/batch.
+        _append_to_table(
+            bands.join(kept, "doc_id", "left_semi").repartition("band"),
+            bands_table(index_dir),
+            os.path.join(index_dir, BANDS_SUBDIR),
+            partition_by="band",
+        )
     if compact_threshold is not None:
         compact_index(spark, index_dir, max_files_per_band=compact_threshold)
     return kept

@@ -14,7 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_etl_pipeline_spark.catalog import load_registry
+from pdf_etl_pipeline_spark.catalog import halving, load_registry
 from pdf_etl_pipeline_spark.session import get_spark
 
 
@@ -83,7 +83,7 @@ def main() -> None:
         # raw scan, matching the registered st10 site (spread measured a
         # LOSS for st10's per-batch bodies — r17 A/B — so it reads raw)
         docs = load_table(spark, sf_dir, "documents")
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         tmp = tempfile.mkdtemp(prefix="st10_plan_")
         monitor_batch(docs.filter(F.col("doc_id") < split), tmp, batch_id=0)
         return batch_report_df(

@@ -16,7 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_etl_pipeline_spark.catalog import load_registry
+from pdf_etl_pipeline_spark.catalog import halving, load_registry
 from pdf_etl_pipeline_spark.session import get_spark
 
 
@@ -167,7 +167,7 @@ def _staged_span_index(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         ix = tempfile.mkdtemp(prefix="st10_audit_")
         monitor_batch(docs.filter(F.col("doc_id") < split), ix, batch_id=0)
         _SPAN_AUDIT_TMP["dir"], _SPAN_AUDIT_TMP["split"] = ix, split
@@ -219,9 +219,10 @@ def _st14_manifest_body_df(spark, sf_dir):
     one roll-up aggregate. The upstream pieces carry their own audits
     (st13_contamination_guard / st11_curation_batch_body)."""
     if "df" not in _ST14_AUDIT_TMP:
-        from pdf_etl_pipeline_spark.catalog.ingest_q import _st14_outputs
+        from pdf_etl_pipeline_spark.catalog import unroll
+        from pdf_etl_pipeline_spark.catalog.ingest_q import _ST14
 
-        verdicts, _ = _st14_outputs(spark, sf_dir)
+        verdicts, _ = unroll(spark, sf_dir, _ST14)
         _ST14_AUDIT_TMP["df"] = verdicts.localCheckpoint()
     from pdf_etl_pipeline_spark.streaming.corpus_builder import builder_manifest_df
 
@@ -350,7 +351,7 @@ def _st7_probe_df(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         ix = tempfile.mkdtemp(prefix="st7_audit_")
         IG.ingest_batch(docs.filter(F.col("doc_id") < split), ix)
         batch = docs.filter(F.col("doc_id") >= split)
@@ -385,7 +386,7 @@ def _st17_probe_df(spark, sf_dir):
 
         docs = load_table(spark, sf_dir, "documents")
         hashes = _mm1_hashes(docs)
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         ix = tempfile.mkdtemp(prefix="st17_audit_")
         mm_ingest_batch(hashes.filter(F.col("asset_id") < split), ix)
         batch = hashes.filter(F.col("asset_id") >= split).select(
@@ -420,7 +421,7 @@ def _st20_resolve_body_df(spark, sf_dir):
         assets = _st20_doc_assets(docs).select(
             F.col("doc_id").alias("asset_id"), F.col("phash").alias("h")
         )
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         ix = tempfile.mkdtemp(prefix="st20_audit_")
         mm_ingest_batch(
             assets.filter(F.col("asset_id") < split), ix, hash_col="h"
@@ -453,7 +454,7 @@ def _st19_probe_df(spark, sf_dir):
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        split = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        split = halving(docs)
         state = tempfile.mkdtemp(prefix="st19_audit_")
         pin_containment_index(docs.filter(F.col("doc_id") < split), state)
         toks_p, posts_p, df_p = _cont_paths(state)
@@ -595,7 +596,7 @@ def _cc17_diff_body_df(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        cut = halving(docs)
         docs1 = docs.filter(F.col("doc_id") < cut)
         path = tempfile.mkdtemp(prefix="cc17_audit_v1_")
         release_write(
@@ -649,7 +650,7 @@ def _cc18_patch_body_df(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        cut = (docs.agg(F.max("doc_id")).first()[0] + 1) // 2
+        cut = halving(docs)
         docs1 = docs.filter(F.col("doc_id") < cut)
         path = tempfile.mkdtemp(prefix="cc18_audit_v1_")
         release_write(
