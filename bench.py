@@ -21,6 +21,11 @@ stages (``catalog.TwoBatch``: ``ingest_q.ST16``, ``multimodal_q.ST20``)
 inside the same scratch-state scope the queries use; the bench builds no
 pipeline of its own, so a loader or body change in the catalog moves the
 steady numbers with it.
+
+The idle gate, the ``/proc/stat`` contention windows, the memo reset
+between runs and the timed runs come from ``tools/measure.py``, the
+measurement core the timing tools share; this file keeps the query
+tiers, the host-speed calibration and the two JSON records.
 """
 
 from __future__ import annotations
@@ -29,14 +34,21 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdf_etl_pipeline_spark.catalog import load_registry, scratch_state
 from pdf_etl_pipeline_spark.catalog.ingest_q import ST16
 from pdf_etl_pipeline_spark.catalog.multimodal_q import ST20
-from pdf_etl_pipeline_spark.session import forget, get_spark
+from pdf_etl_pipeline_spark.session import get_spark
+from tools.measure import (
+    Window,
+    noop_run,
+    require_idle,
+    reset_session_memos,
+    time_runs,
+    warm_tables,
+)
 
 BENCH_QUERIES = [
     "a8_pricing_summary",
@@ -109,195 +121,6 @@ RUNS = 3  # min-of-N absorbs machine-load noise (r4: 71 s loaded vs 33 s idle;
 # r10: dd3 read 7.7 s min-of-2 on an idle box vs its usual 3.9 — a third
 # run is cheap insurance and min-of-N makes raising N comparability-safe)
 
-# A loaded machine produces garbage readings that min-of-N can't fully absorb
-# (r8/r9: committed ss6 readings 5.5x inflated at load 4.4 vs 1.57 s idle).
-# The guard makes the refusal structural: bench.py itself will not emit JSON
-# under load, so a corrupted artifact can't be committed by forgetting to
-# check. Wait up to LOAD_WAIT_SEC for the machine to drain, then abort.
-LOAD_MAX = 1.5
-LOAD_WAIT_SEC = 600
-LOAD_POLL_SEC = 15
-
-
-# The 5-min average gates too (r14 VERDICT finding 1): both the r13 and
-# r14 inflated driver runs passed the 1-min-only gate while the 5-min
-# average read 2.7-3.0 — a DRAINING box whose co-tenant load returns in
-# bursts that miss a 1-min snapshot but land on the long 32-way queries.
-LOAD5_MAX = 2.5
-
-# Steal-aware pre-run gate (r16 VERDICT finding 3): the r16 driver run
-# passed the loadavg gate (load 0.42) and was then eaten by 1.2-1.8
-# HYPERVISOR-STEAL cores (calib scalar 1.69) — steal never appears in the
-# guest's loadavg, so the load gate is structurally blind to it. Before
-# timing starts, /proc/stat busy+steal deltas are sampled over a short
-# window; CPU burned by anything that is not this process tree (in-guest
-# co-tenants AND hypervisor steal — _machine_busy_jiffies counts both)
-# must stay under PRESTAT_MAX_OTHER cores, with the same wait/abort
-# semantics as the load gate. The passing sample is emitted in the JSON
-# (prestat) so the committed artifact carries the evidence. 0.75 cores
-# catches a single planted burner core (the r15 test) and the r16 steal
-# band while staying above background-daemon noise (~0.1 cores).
-PRESTAT_MAX_OTHER = 0.75
-PRESTAT_SAMPLE_SEC = 3.0
-
-
-def _prestat_sample(sec: float = PRESTAT_SAMPLE_SEC) -> dict:
-    """Sample machine-wide CPU over ``sec``: cores busy, cores that are
-    ours, cores that are other tenants' (incl. steal), steal separately."""
-    b0, s0 = _machine_busy_jiffies()
-    o0 = _tree_jiffies()
-    time.sleep(sec)
-    b1, s1 = _machine_busy_jiffies()
-    o1 = _tree_jiffies()
-    busy = (b1 - b0) / _HZ / sec
-    own = (o1 - o0) / _HZ / sec
-    return {
-        "sample_s": sec,
-        "busy_cores": round(busy, 2),
-        "own_cores": round(own, 2),
-        "other_cores": round(max(busy - own, 0.0), 2),
-        "steal_cores": round((s1 - s0) / _HZ / sec, 2),
-    }
-
-
-def _require_idle() -> tuple[list[float], dict]:
-    """Block until (1) the 1-min load drops under LOAD_MAX AND the 5-min
-    average under LOAD5_MAX, and (2) a /proc/stat sampling window shows
-    other-tenant CPU (including hypervisor steal, which loadavg cannot
-    see) under PRESTAT_MAX_OTHER cores. Returns (loadavg triple, prestat
-    sample) observed at pass time. Those snapshots — not ones taken after
-    the benchmark's own JVM has been warming up — are what load_avg.before
-    and prestat record, so the committed JSON answers 'was the MACHINE
-    idle when the run started', the question round-over-round
-    comparability depends on."""
-    if os.environ.get("SPARK_GRAFT_BENCH_FORCE") == "1":
-        print("WARNING: load guard bypassed (SPARK_GRAFT_BENCH_FORCE=1)", file=sys.stderr)
-        return list(os.getloadavg()), _prestat_sample()
-    deadline = time.time() + LOAD_WAIT_SEC
-    while True:
-        load1, load5, _ = os.getloadavg()
-        if load1 < LOAD_MAX and load5 < LOAD5_MAX:
-            stat = _prestat_sample()
-            if stat["other_cores"] < PRESTAT_MAX_OTHER:
-                return list(os.getloadavg()), stat
-            msg = (
-                f"prestat other_cores {stat['other_cores']:.2f} "
-                f"(steal {stat['steal_cores']:.2f}) >= {PRESTAT_MAX_OTHER}"
-            )
-        else:
-            msg = f"load {load1:.2f}/{load5:.2f} (1m/5m) over gate"
-        if time.time() >= deadline:
-            print(
-                f"ABORT: {msg} after waiting {LOAD_WAIT_SEC}s — "
-                "refusing to emit a noise-corrupted bench JSON",
-                file=sys.stderr,
-            )
-            sys.exit(3)
-        print(f"{msg}; waiting for idle...", file=sys.stderr)
-        time.sleep(LOAD_POLL_SEC)
-
-
-# --- window calibration (r14 VERDICT finding 1) -----------------------------------
-# The probe calibration below times two SHORT workloads once, before the
-# tier — bursty co-tenant load that misses the probes but lands on the
-# long 32-way queries passes as "host at reference speed" (r14: driver
-# scalar 1.0057 on a run reading 18.7 s where idle runs read 14.5-15.4).
-# The WINDOW calibration instead measures the whole bench span from
-# cumulative /proc/stat counters: busy jiffies are snapshotted around
-# every query's timed section, OUR OWN process tree's jiffies (this
-# python + the Spark JVM it owns) are subtracted, and what remains is
-# CPU burned by other tenants INSIDE the measured window — per query and
-# for the whole run. other_cores is directly interpretable: 0 = clean,
-# 2.0 = two stolen cores for the window's whole duration. Caveat: a
-# co-tenant process that STARTS AND EXITS entirely inside one window
-# under-counts (its jiffies vanish from /proc when it dies); sub-window
-# churn shorter than a query is rare for the builds/CI that actually
-# contend on this box, and the whole-run window catches what per-query
-# windows miss.
-_HZ = os.sysconf("SC_CLK_TCK")
-_NCPU = os.cpu_count() or 1
-
-
-def _machine_busy_jiffies() -> tuple[int, int]:
-    """(busy, steal) cumulative jiffies. busy includes steal: stolen
-    capacity inflates wall-clocks exactly like an in-guest co-tenant, so
-    it belongs in other_cores — but on a VM host the reader needs to tell
-    hypervisor steal (nothing we can drain) apart from in-guest tenants
-    (wait for them to finish), so the window reports it separately too."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
-    steal = vals[7] if len(vals) > 7 else 0
-    return sum(vals) - idle, steal
-
-
-def _tree_jiffies() -> int:
-    """utime+stime+cutime+cstime summed over this process and every live
-    descendant (the Spark JVM and its children live under us). cutime/
-    cstime (stat fields 16-17) carry the CPU of REAPED children — without
-    them, our own short-lived workers (e.g. non-reused PySpark daemons
-    killed mid-window) vanish from the live-descendant walk and their
-    jiffies get misattributed to other_cores, falsely indicting a clean
-    run (r15 ADVICE). No double count: a live child's time sits only in
-    its own utime/stime (a parent's cutime accumulates at wait() time),
-    a reaped child's only in its parent's cutime/cstime."""
-    me = os.getpid()
-    ppid_of: dict[int, int] = {}
-    cpu_of: dict[int, int] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                s = f.read()
-        except OSError:
-            continue
-        # field 2 (comm) may contain spaces/parens — split after the LAST ')'
-        rest = s[s.rindex(")") + 2 :].split()
-        pid = int(d)
-        ppid_of[pid] = int(rest[1])
-        # utime + stime + cutime + cstime
-        cpu_of[pid] = int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-    total = 0
-    for pid, cpu in cpu_of.items():
-        p = pid
-        for _ in range(64):  # ancestor walk, bounded
-            if p == me:
-                total += cpu
-                break
-            p = ppid_of.get(p, 0)
-            if p <= 1:
-                break
-    return total
-
-
-class _Window:
-    """Snapshot-delta window: other-tenant CPU cores burned while open."""
-
-    def __init__(self) -> None:
-        self.t0 = time.time()
-        self.b0, self.s0 = _machine_busy_jiffies()
-        self.o0 = _tree_jiffies()
-
-    def close(self) -> dict:
-        wall = max(time.time() - self.t0, 1e-6)
-        b1, s1 = _machine_busy_jiffies()
-        busy = (b1 - self.b0) / _HZ / wall
-        own = (_tree_jiffies() - self.o0) / _HZ / wall
-        other = max(busy - own, 0.0)
-        return {
-            "wall_s": round(wall, 3),
-            "busy_cores": round(busy, 2),
-            "own_cores": round(own, 2),
-            "other_cores": round(other, 2),
-            # hypervisor steal, already inside other_cores (see
-            # _machine_busy_jiffies) — reported so the artifact separates
-            # un-drainable host contention from in-guest co-tenants
-            "steal_cores": round((s1 - self.s0) / _HZ / wall, 2),
-        }
-
-
 # Host-speed calibration (r13 VERDICT finding 1): the 12.1–19.1 s headline
 # band across r12/r13 was adjudicated as host-state inflation from plan
 # fingerprints and uniform per-query scalars — sound, but unfalsifiable
@@ -324,28 +147,24 @@ def _calibrate(spark) -> dict:
 
     import numpy as np
 
-    def cpu_once() -> float:
-        t0 = time.time()
+    def cpu_once() -> None:
         h = b"\x00" * 64
         for _ in range(1_200_000):
             h = hashlib.sha256(h).digest()
         a = np.arange(80_000_000, dtype=np.float64)
         s = float(np.sqrt(a + 1.0).sum())
         assert s > 0 and h
-        return time.time() - t0
 
-    def spark_once() -> float:
-        t0 = time.time()
+    def spark_once() -> None:
         n = (
             spark.range(0, 4_000_000_000, 1, 32)
             .selectExpr("sum(id % 1000) AS s")
             .collect()[0][0]
         )
         assert n == (4_000_000_000 // 1000) * 499_500
-        return time.time() - t0
 
-    cpu_reps = [round(cpu_once(), 3) for _ in range(3)]
-    spark_reps = [round(spark_once(), 3) for _ in range(3)]
+    cpu_reps, _ = time_runs(cpu_once, 3)
+    spark_reps, _ = time_runs(spark_once, 3)
     cpu_s, spark_s = min(cpu_reps), min(spark_reps)
     return {
         "cpu_s": cpu_s,
@@ -357,30 +176,6 @@ def _calibrate(spark) -> dict:
         "spark_ref_s": CALIB_SPARK_REF_S,
         "scalar": round((cpu_s / CALIB_CPU_REF_S + spark_s / CALIB_SPARK_REF_S) / 2, 4),
     }
-
-
-def _reset_session_memos(spark=None) -> None:
-    """Drop every ``session_memo`` entry (``forget()``) so each timed
-    run rebuilds the catalog's shared relations from the parquet scan —
-    min-of-N must measure the query, not a memo hit. This also drops the
-    doc-type parsers' Column trees, so a timed parser query (``t*``) pays a
-    cold parser build; no bench query calls a parser. ``session._SCHEMAS``
-    (the parquet schema memo) is kept: it holds a schema, never a query
-    result, so a hit is what a repeated query really costs.
-
-    Also reap cross-query session state BETWEEN timed windows: discarded
-    localCheckpoint/persist blocks from earlier queries are only released
-    when their RDDs are garbage-collected on both sides of the py4j
-    bridge, so without an explicit gc the block manager's storage pool
-    fills monotonically over a 35-query bench and squeezes whichever
-    shuffle-heavy query runs late (r10's g2 8.6→18.6→28.6 s reading)."""
-    import gc
-
-    forget()
-    if spark is not None:
-        spark.catalog.clearCache()
-        gc.collect()  # drop py4j refs so the JVM side becomes collectable
-        spark._jvm.System.gc()
 
 
 def _steady_batch(spark, sf_dir: str, q, name: str, windows: dict) -> list[float]:
@@ -396,30 +191,19 @@ def _steady_batch(spark, sf_dir: str, q, name: str, windows: dict) -> list[float
     with scratch_state(spark, q.prefix, q.drop) as state:
         (b0, b1), body = q.stage(spark, sf_dir, state)
         body(b0, 0)  # untimed
-        raw: list[float] = []
-        w = _Window()
-        for _ in range(RUNS):
-            t0 = time.time()
-            body(b1, 1)
-            raw.append(round(time.time() - t0, 3))
-        windows[name] = w.close()
+        raw, windows[name] = time_runs(lambda: body(b1, 1), RUNS)
     return raw
 
 
 def main() -> None:
-    load_before, prestat = _require_idle()
+    load_before, prestat = require_idle()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     registry = load_registry()
     spark = get_spark("bench")
 
-    # warm the JVM + parquet footers + page cache for every benched table
-    # so per-query numbers measure the queries, not session bring-up or
-    # first file touch (r11: dd3's first run read 2.7x its min before
-    # documents.parquet was warmed)
-    for t in ("lineitem", "documents", "events", "embeddings"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
+    warm_tables(spark, sf_dir)
 
     calib = _calibrate(spark)
 
@@ -448,28 +232,21 @@ def main() -> None:
     # per-query other-tenant CPU windows (finding 1 — the contention signal
     # the probe scalar can't see); run_window spans every timed section
     windows: dict[str, dict] = {}
-    run_window = _Window()
+    run_window = Window()
 
     def run_set(names: list[str]) -> dict[str, float]:
         times: dict[str, float] = {}
         for name in names:
-            fn = registry[name].fn
+            run = noop_run(spark, registry[name].fn, sf_dir)
             # one UNTIMED warm pass per query: codegen/broadcast build and
             # first-touch effects land here, not in run 1 (r11: four
             # queries' first timed runs read >2x their min purely from
             # per-shape JIT — benign but it muddies the variance signal
             # the runs_detail exists to carry)
             for _ in range(2 if name in DOUBLE_WARM else 1):
-                _reset_session_memos(spark)
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            raw: list[float] = []
-            w = _Window()
-            for _ in range(RUNS):
-                _reset_session_memos(spark)
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                raw.append(round(time.time() - t0, 3))
-            windows[name] = w.close()
+                reset_session_memos(spark)
+                run()
+            raw, windows[name] = time_runs(run, RUNS, before=lambda: reset_session_memos(spark))
             runs_detail[name] = raw
             times[name] = min(raw)
         return times
@@ -495,10 +272,11 @@ def main() -> None:
     # reads as avail < 1 with the guilty queries' windows carrying the
     # other_cores. Diagnostic next to the probe calib — raw totals stay
     # the headline.
+    ncpu = os.cpu_count() or 1
     worst_other = max((w["other_cores"] for w in windows.values()), default=0.0)
     calib["window"] = {
         "run": win_total,
-        "avail_scalar": round(max(_NCPU - win_total["other_cores"], 0.0) / _NCPU, 4),
+        "avail_scalar": round(max(ncpu - win_total["other_cores"], 0.0) / ncpu, 4),
         "worst_query_other_cores": worst_other,
     }
 

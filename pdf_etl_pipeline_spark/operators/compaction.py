@@ -25,8 +25,10 @@ table format (Iceberg/Delta `OPTIMIZE`) ships, expressed Spark-first:
 The reader-visible relation is IDENTICAL before and after (pinned by
 test) — compaction is pure physical-layout maintenance. The contract is a
 LEAF directory (one parquet file family, no partition subdirectories):
-partitioned layouts compact per partition directory, which is exactly how
-``llmdata.ingest.compact_index`` drives this for the st7 index.
+partitioned layouts compact per partition directory. The st7 index does
+not go through here: ``llmdata.ingest.compact_index`` runs its own
+per-band loop with the same append-then-prune rule, because its appends
+go through the index's catalog tables.
 """
 
 from __future__ import annotations
@@ -37,12 +39,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.operators import fsutil
-
-
-def data_file_count(path: str) -> int:
-    return sum(
-        1 for uri, _ in fsutil.list_data_files(path) if uri.endswith(".parquet")
-    )
 
 
 def compact_parquet_dir(
@@ -70,4 +66,4 @@ def compact_parquet_dir(
     df.write.mode("append").parquet(path)
     for uri in old_files:
         fsutil.delete(uri, spark=spark)
-    return data_file_count(path)
+    return fsutil.data_file_count(path, spark)

@@ -219,8 +219,6 @@ def spread_scan(spark: SparkSession, df, path: str, key: str):
     byte gate already proved tiny. The partition count is EXPLICIT so
     AQE's coalescer cannot fold the tiny partitions straight back to one.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":  # measurement A/B switch
-        return df
     para = spark.sparkContext.defaultParallelism
     if para <= 1:
         return df

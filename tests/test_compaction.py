@@ -4,10 +4,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.operators.compaction import (
-    compact_parquet_dir,
-    data_file_count,
-)
+from pdf_etl_pipeline_spark.operators.compaction import compact_parquet_dir
+from pdf_etl_pipeline_spark.operators.fsutil import data_file_count
 from pdf_etl_pipeline_spark.session import load_table
 
 

@@ -117,7 +117,7 @@ def test_dedup_sink_idempotent(spark, tmp_path):
 def test_sink_append_sizes_files_like_an_uncached_write(spark, tmp_path):
     """The appended rows come from a cache that keeps one partition per
     shuffle partition; a small batch must still land as one file."""
-    from pdf_etl_pipeline_spark.operators.compaction import data_file_count
+    from pdf_etl_pipeline_spark.operators.fsutil import data_file_count
 
     sink = str(tmp_path / "invoices")
     assert run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS), sink_path=sink) == 3

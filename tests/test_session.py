@@ -161,6 +161,34 @@ def test_module_level_memo_dicts_live_only_in_session():
     assert offenders == []
 
 
+def test_package_reads_only_deployment_env_vars():
+    """The package reads the environment only for deployment settings (the
+    core count and the driver heap). A switch that exists to flip one arm
+    of a measurement belongs in the tool that measures, not in the code
+    every query runs."""
+    import pdf_etl_pipeline_spark
+
+    root = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+
+    def env_source(node):
+        # os.environ / environ, or os.getenv / getenv
+        name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+        return name in ("environ", "getenv")
+
+    read = set()
+    for p in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Call) and node.args:
+                f = node.func
+                if env_source(f) or (isinstance(f, ast.Attribute) and env_source(f.value)):
+                    read.add(ast.unparse(node.args[0]))
+            elif isinstance(node, ast.Subscript) and env_source(node.value):
+                read.add(ast.unparse(node.slice))
+            elif isinstance(node, ast.Compare) and any(env_source(c) for c in node.comparators):
+                read.add(ast.unparse(node.left))
+    assert read == {"'SPARK_GRAFT_CPUS'", "'SPARK_DRIVER_MEMORY'"}
+
+
 def test_fresh_pin_at_reused_path_rereads_the_row_count(spark, tmp_path):
     """``pin_heldout`` forgets the memoized pin row count when it writes a
     fresh pin where a deleted one was, so the guard sizes its broadcast

@@ -1327,7 +1327,7 @@ def test_ingest_compaction_invariance_and_file_bounds(spark, sf_dir, tmp_path):
         drop_index,
         ingest_batch,
     )
-    from pdf_etl_pipeline_spark.operators.compaction import data_file_count
+    from pdf_etl_pipeline_spark.operators.fsutil import data_file_count
     from pdf_etl_pipeline_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1807,7 +1807,7 @@ def test_span_compaction_sizes_outputs_per_bucket(spark, tmp_path):
         monitor_batch,
         read_index_counts,
     )
-    from pdf_etl_pipeline_spark.operators.compaction import data_file_count
+    from pdf_etl_pipeline_spark.operators.fsutil import data_file_count
 
     ix = str(tmp_path / "ix_nout")
     # seed via the public path (creates the manifest; span_buckets=2)

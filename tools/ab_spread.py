@@ -1,6 +1,8 @@
 """Interleaved A/B of session.spread_scan (ON vs OFF) per query — host
 steal hits both arms equally in expectation, so the per-query min
-contrast is meaningful even on a bursty box. Prints per-query
+contrast is meaningful even on a bursty box. The OFF arm swaps
+``session.spread_scan`` for an identity in-process for the length of its
+run (``load_table`` looks the name up at call time). Prints per-query
 {on: min, off: min, window: other+steal cores}.
 
 Usage: python tools/ab_spread.py [-n REPS_PER_ARM] query [query ...]
@@ -11,57 +13,38 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_etl_pipeline_spark.catalog import load_registry
-from pdf_etl_pipeline_spark.session import get_spark
+from pdf_etl_pipeline_spark import session
+from tools.measure import interleaved_ab, query_runs, reset_session_memos
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    reps = 3
-    if args and args[0] == "-n":
-        reps = int(args[1])
-        args = args[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    registry = load_registry()
-    spark = get_spark("ab_spread")
-    for t in ("lineitem", "documents", "events", "embeddings"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    from bench import _Window, _reset_session_memos
-
+    spark, reps, queries = query_runs("ab_spread")
     out = {}
-    for name in args:
-        fn = registry[name].fn
+    for name, run in queries.items():
 
-        def run(mode_off: bool) -> float:
-            os.environ["SPARK_GRAFT_NO_SPREAD"] = "1" if mode_off else "0"
-            _reset_session_memos(spark)
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return round(time.time() - t0, 3)
+        def off() -> None:
+            # every scan left as parquet splits it
+            with mock.patch.object(session, "spread_scan", lambda spark, df, path, key: df):
+                run()
 
-        # one warm pass per arm
-        run(False)
-        run(True)
-        w = _Window()
-        on, off = [], []
-        for _ in range(reps):
-            on.append(run(False))
-            off.append(run(True))
-        win = w.close()
+        raw, win = interleaved_ab(
+            {"on": run, "off": off},
+            reps,
+            before=lambda: reset_session_memos(spark),
+        )
         out[name] = {
-            "on": min(on),
-            "off": min(off),
-            "on_runs": on,
-            "off_runs": off,
+            "on": min(raw["on"]),
+            "off": min(raw["off"]),
+            "on_runs": raw["on"],
+            "off_runs": raw["off"],
             "other": win["other_cores"],
             "steal": win["steal_cores"],
         }
         print(json.dumps({name: out[name]}), flush=True)
-    os.environ.pop("SPARK_GRAFT_NO_SPREAD", None)
     print(json.dumps(out))
     spark.stop()
 

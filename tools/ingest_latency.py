@@ -24,108 +24,58 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
+from pdf_etl_pipeline_spark.catalog import scratch_state
 from pdf_etl_pipeline_spark.llmdata.ingest import (
     BANDS_SUBDIR,
     MAX_FILES_PER_BAND,
     drop_index,
     ingest_batch,
 )
-from pdf_etl_pipeline_spark.operators import fsutil
 from pdf_etl_pipeline_spark.session import get_spark, load_table
+from tools.measure import max_partition_files, series_record, staged_batches, staged_series
 
 
-def max_band_files(ix: str) -> int:
-    bands_dir = os.path.join(ix, BANDS_SUBDIR)
-    counts = [
-        fsutil.data_file_count(p)
-        for p in fsutil.list_subdirs(bands_dir)
-        if "band=" in p
-    ]
-    return max(counts) if counts else 0
-
-
-def run_series(spark, docs, cuts, compact_threshold):
-    ix = tempfile.mkdtemp(prefix="st7_latency_")
+def run_series(spark, batches, compact_threshold):
+    kept = set()
     # the tables key on the index path; a fresh path per run guarantees
     # fresh catalog state
-    secs, files, kept = [], [], set()
-    try:
-        lo = None
-        for hi in cuts:
-            b = docs.filter(F.col("doc_id") < hi)
-            if lo is not None:
-                b = b.filter(F.col("doc_id") >= lo)
-            t0 = time.time()
+    with scratch_state(spark, "st7_latency_", drop_index) as ix:
+
+        def step(i, b):
             out = ingest_batch(b, ix, compact_threshold=compact_threshold)
-            kept |= {r.doc_id for r in out.collect()}
-            secs.append(round(time.time() - t0, 3))
-            files.append(max_band_files(ix))
-            lo = hi
-    finally:
-        drop_index(spark, ix)
-        shutil.rmtree(ix, ignore_errors=True)
-    return secs, files, kept
+            kept.update(r.doc_id for r in out.collect())
+
+        bands = os.path.join(ix, BANDS_SUBDIR)
+        secs, files = staged_series(batches, step, lambda: max_partition_files(bands, "band"))
+    return series_record(secs, max_band_files=files), kept
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
     spark = get_spark("st7-latency")
-    docs = load_table(spark, sf_dir, "documents")
-    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
-    cuts = [ids[int(len(ids) * i / n_batches)] for i in range(1, n_batches)] + [ids[-1] + 1]
-
+    n_docs, batches = staged_batches(load_table(spark, sf_dir, "documents"), n_batches)
     # warm the plans so batch 1 isn't charged JVM/codegen startup
-    warm = tempfile.mkdtemp(prefix="st7_warm_")
-    try:
-        ingest_batch(docs.filter(F.col("doc_id") < cuts[0]), warm)
-        ingest_batch(docs.filter(F.col("doc_id") < cuts[0]), warm)
-    finally:
-        drop_index(spark, warm)
-        shutil.rmtree(warm, ignore_errors=True)
+    with scratch_state(spark, "st7_warm_", drop_index) as warm:
+        staged_series(batches[:1] * 2, lambda i, b: ingest_batch(b, warm))
 
-    plain_secs, plain_files, kept_plain = run_series(spark, docs, cuts, None)
-    comp_secs, comp_files, kept_comp = run_series(spark, docs, cuts, MAX_FILES_PER_BAND)
+    plain, kept_plain = run_series(spark, batches, None)
+    compacted, kept_comp = run_series(spark, batches, MAX_FILES_PER_BAND)
     assert kept_plain == kept_comp, "compaction changed admission semantics"
-
-    def slope(ys):
-        # least-squares slope in sec/batch over the steady tail (skip 4)
-        ys = ys[4:]
-        n = len(ys)
-        xs = list(range(n))
-        mx, my = sum(xs) / n, sum(ys) / n
-        return round(
-            sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-            / sum((x - mx) ** 2 for x in xs),
-            4,
-        )
 
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "n_batches": n_batches,
-                "n_docs": len(ids),
+                "n_docs": n_docs,
                 "admitted": len(kept_plain),
-                "plain": {
-                    "secs": plain_secs,
-                    "max_band_files": plain_files,
-                    "tail_slope_sec_per_batch": slope(plain_secs),
-                },
-                "compacted": {
-                    "secs": comp_secs,
-                    "max_band_files": comp_files,
-                    "tail_slope_sec_per_batch": slope(comp_secs),
-                },
+                "plain": plain,
+                "compacted": compacted,
                 "load_avg_before": os.getloadavg()[0],
             }
         )

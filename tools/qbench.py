@@ -10,49 +10,34 @@ Usage: python tools/qbench.py [-n RUNS] query [query ...]
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_etl_pipeline_spark.catalog import load_registry
-from pdf_etl_pipeline_spark.session import get_spark
+from tools.measure import query_runs, reset_session_memos, time_runs
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 3
-    if args and args[0] == "-n":
-        runs = int(args[1])
-        args = args[2:]
-    names = args
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    registry = load_registry()
-    spark = get_spark("qbench")
-    for t in ("lineitem", "documents", "events", "embeddings"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    from bench import _Window, _reset_session_memos
-
+    spark, runs, queries = query_runs("qbench")
     out: dict[str, object] = {}
-    for name in names:
-        fn = registry[name].fn
-        spark.sparkContext.setJobDescription(f"qbench:{name}:warm")
-        _reset_session_memos(spark)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        raw = []
-        wins = []
-        for i in range(runs):
-            _reset_session_memos(spark)
-            spark.sparkContext.setJobDescription(f"qbench:{name}:{i}")
-            w = _Window()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            raw.append(round(time.time() - t0, 3))
-            ww = w.close()
-            wins.append((ww["other_cores"], ww["steal_cores"]))
-        out[name] = {"min": min(raw), "runs": raw, "other_steal": wins}
+    for name, run in queries.items():
+        labels = itertools.chain(["warm"], itertools.count())
+
+        def before() -> None:
+            reset_session_memos(spark)
+            spark.sparkContext.setJobDescription(f"qbench:{name}:{next(labels)}")
+
+        before()
+        run()
+        raw, win = time_runs(run, runs, before=before)
+        out[name] = {
+            "min": min(raw),
+            "runs": raw,
+            "other_steal": [win["other_cores"], win["steal_cores"]],
+        }
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps(out))
     spark.stop()

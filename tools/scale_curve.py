@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 from pdf_etl_pipeline_spark.llmdata import dedup as DD
 from pdf_etl_pipeline_spark.llmdata import similarity as SIM
 from pdf_etl_pipeline_spark.session import get_spark, load_table
+from tools.sf1_curves import gen_documents
 
 
 # ---------------------------------------------------------------------------
@@ -62,25 +63,17 @@ def driver_shaped_docs(spark, n_docs: int, seed: int = 7) -> DataFrame:
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def dup_controlled_docs(spark, n_docs: int, dup_rate: float = 0.10, seed: int = 11) -> DataFrame:
+def dup_controlled_docs(spark, n_docs: int) -> DataFrame:
     """Documents whose TRUE near-dup pair count grows linearly: each doc
     draws from its own token namespace (no accidental overlap), and a fixed
     fraction are near-copies of an earlier doc (2 of ~40 tokens replaced →
     Jaccard ≈ 0.9). This is the regime web-scale corpora live in: dups are
-    a per-document rate, not an all-pairs phenomenon."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    n_tok = 40
-    for i in range(n_docs):
-        if i > 0 and rng.random() < dup_rate:
-            src = int(rng.integers(0, i))
-            base = [f"d{src}t{k}" for k in range(n_tok)]
-            for k in rng.choice(n_tok, size=2, replace=False):
-                base[int(k)] = f"d{i}r{int(k)}"
-            rows.append((i, " ".join(base)))
-        else:
-            rows.append((i, " ".join(f"d{i}t{k}" for k in range(n_tok))))
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    a per-document rate, not an all-pairs phenomenon. The rows are
+    ``sf1_curves.gen_documents``' (seed 11, 10% near-copies, ``ns``
+    vocabulary), so both tools measure one corpus."""
+    return spark.createDataFrame(
+        gen_documents(n_docs)[["doc_id", "text"]], "doc_id long, text string"
+    )
 
 
 def shaped_embeddings(spark, n_vecs: int, seed: int = 13) -> DataFrame:

@@ -23,10 +23,11 @@ Generated tables (seeded, reproducible):
   (l_orderkey, l_partkey), the two columns g2 reads (column pruning
   means the rest never leaves the scan anyway).
 
-Queries: st7_neardup_ingest, g2_triangle_count, ss8_ivf_adc_topk,
-dd3_minhash_lsh, rs5_rolling_anomaly, tk2_bpe_encode — each called
-through its REGISTERED catalog entry, so the measured plan is the
-shipped plan.
+Queries: ``CURVE_QUERIES`` — the six headline heavy queries
+(st7_neardup_ingest, g2_triangle_count, ss8_ivf_adc_topk,
+dd3_minhash_lsh, rs5_rolling_anomaly, tk2_bpe_encode) and the families
+added since — each looked up in ``load_registry()`` and called through
+its REGISTERED catalog entry, so the measured plan is the shipped plan.
 
 Usage:
     python tools/sf1_curves.py [workdir]         # default /tmp/sfgen
@@ -41,18 +42,39 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 import pandas as pd
 
-import bench  # repo root on sys.path — _Window + _require_idle (r15 VERDICT task 1)
+from pdf_etl_pipeline_spark.catalog import load_registry
 from pdf_etl_pipeline_spark.session import get_spark
+from tools.measure import require_idle, reset_session_memos, time_runs
 
 SCALES = {"1x": 1, "10x": 10, "100x": 100, "1000x": 1000}
 BASE = {"documents": 500, "events": 10_000, "embeddings": 500, "lineitem": 60_000}
+
+CURVE_QUERIES = (
+    "st7_neardup_ingest", "g2_triangle_count", "g2a_triangle_doulion",
+    "ss8_ivf_adc_topk", "dd3_minhash_lsh", "rs5_rolling_anomaly", "tk2_bpe_encode",
+    "tk6_bpe_capped_encode", "dd10_dup_token_coverage", "dd11_span_trim",
+    "st10_span_monitor", "tx12_ppl_buckets", "tx13_ngram_novelty",
+    "dd12_span_provenance", "dd13_cluster_size_histogram", "dq4_distribution_drift",
+    "dp4_ks_drift", "rs7_cusum_changepoint", "cc9_trimmed_curation",
+    "cc10_trimmed_shard_manifest", "st11_streaming_curation", "st11_curation_funnel",
+    "cc11_verdict_shard_manifest", "st12_drift_monitor", "st13_contamination_guard",
+    "dq6_categorical_drift", "dq7_embedding_drift", "st14_corpus_builder",
+    "mm1_phash_pairs", "mm2_audio_pairs", "mm3_video_pairs", "mm4_image_in_video",
+    "tx14_vocab_growth", "dd14_best_keeper", "cc12_guarded_corpus_build",
+    "dq8_split_leakage", "ss12_filtered_topk", "cc13_curriculum_order",
+    "cc14_release_manifest", "st15_leakage_guard", "g3_clustering_coeff",
+    "st16_guarded_release", "ev5_inter_event_gaps", "ir2_phrase_topk", "ml8_nb_auc",
+    "tk7_cap_sweep", "mm5_dedup_manifest", "cc15_multimodal_release",
+    "st17_multimodal_ingest", "st18_framegrab_guard", "dq9_multimodal_leakage",
+    "cc16_release_diff", "dd15_containment_pairs", "st19_containment_guard",
+    "dd16_jaccard_join", "st20_mm_release_verdicts", "cc17_stored_release_diff",
+)
 
 
 def gen_documents(
@@ -179,172 +201,17 @@ def main() -> None:
     cap = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     spark = get_spark("sf1-curves")
 
-    from pdf_etl_pipeline_spark.catalog.curation_q import (
-        cc9_trimmed_curation,
-        cc10_trimmed_shard_manifest,
-    )
-    from pdf_etl_pipeline_spark.catalog.dedup_q import (
-        dd3_minhash_lsh,
-        dd10_dup_token_coverage,
-        dd11_span_trim,
-        dd12_span_provenance,
-        dd13_cluster_size_histogram,
-    )
-    from pdf_etl_pipeline_spark.catalog.quality_q import (
-        dp4_ks_drift,
-        dq4_distribution_drift,
-        dq6_categorical_drift,
-        dq7_embedding_drift,
-        st12_drift_monitor,
-    )
-    from pdf_etl_pipeline_spark.catalog.corpus_q import st13_contamination_guard
-    from pdf_etl_pipeline_spark.catalog.text_q import tx12_ppl_buckets, tx13_ngram_novelty
-    from pdf_etl_pipeline_spark.catalog.extended_q import (
-        g2_triangle_count,
-        g2a_triangle_doulion,
-        rs5_rolling_anomaly,
-    )
-    from pdf_etl_pipeline_spark.catalog.ingest_q import (
-        cc11_verdict_shard_manifest,
-        st7_neardup_ingest,
-        st10_span_monitor,
-        st11_curation_funnel,
-        st11_streaming_curation,
-    )
-    from pdf_etl_pipeline_spark.catalog.similarity_q import ss8_ivf_adc_topk
-    from pdf_etl_pipeline_spark.catalog.tokenize_q import (
-        tk2_bpe_encode,
-        tk6_bpe_capped_encode,
-    )
-
-    QUERIES = {
-        "st7_neardup_ingest": st7_neardup_ingest,
-        "g2_triangle_count": g2_triangle_count,
-        "g2a_triangle_doulion": g2a_triangle_doulion,
-        "ss8_ivf_adc_topk": ss8_ivf_adc_topk,
-        "dd3_minhash_lsh": dd3_minhash_lsh,
-        "rs5_rolling_anomaly": rs5_rolling_anomaly,
-        "tk2_bpe_encode": tk2_bpe_encode,
-        "tk6_bpe_capped_encode": tk6_bpe_capped_encode,
-        "dd10_dup_token_coverage": dd10_dup_token_coverage,
-        "dd11_span_trim": dd11_span_trim,
-        "st10_span_monitor": st10_span_monitor,
-        "tx12_ppl_buckets": tx12_ppl_buckets,
-        "tx13_ngram_novelty": tx13_ngram_novelty,
-        "dd12_span_provenance": dd12_span_provenance,
-        "dd13_cluster_size_histogram": dd13_cluster_size_histogram,
-        "dq4_distribution_drift": dq4_distribution_drift,
-        "dp4_ks_drift": dp4_ks_drift,
-        "rs7_cusum_changepoint": __import__(
-            "pdf_etl_pipeline_spark.catalog.extended_q", fromlist=["rs7_cusum_changepoint"]
-        ).rs7_cusum_changepoint,
-        "cc9_trimmed_curation": cc9_trimmed_curation,
-        "cc10_trimmed_shard_manifest": cc10_trimmed_shard_manifest,
-        "st11_streaming_curation": st11_streaming_curation,
-        "st11_curation_funnel": st11_curation_funnel,
-        "cc11_verdict_shard_manifest": cc11_verdict_shard_manifest,
-        "st12_drift_monitor": st12_drift_monitor,
-        "st13_contamination_guard": st13_contamination_guard,
-        "dq6_categorical_drift": dq6_categorical_drift,
-        "dq7_embedding_drift": dq7_embedding_drift,
-        "st14_corpus_builder": __import__(
-            "pdf_etl_pipeline_spark.catalog.ingest_q", fromlist=["st14_corpus_builder"]
-        ).st14_corpus_builder,
-        "mm1_phash_pairs": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["mm1_phash_pairs"]
-        ).mm1_phash_pairs,
-        "mm2_audio_pairs": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["mm2_audio_pairs"]
-        ).mm2_audio_pairs,
-        "mm3_video_pairs": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["mm3_video_pairs"]
-        ).mm3_video_pairs,
-        "mm4_image_in_video": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["mm4_image_in_video"]
-        ).mm4_image_in_video,
-        "tx14_vocab_growth": __import__(
-            "pdf_etl_pipeline_spark.catalog.text_q", fromlist=["tx14_vocab_growth"]
-        ).tx14_vocab_growth,
-        "dd14_best_keeper": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q", fromlist=["dd14_best_keeper"]
-        ).dd14_best_keeper,
-        "cc12_guarded_corpus_build": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q", fromlist=["cc12_guarded_corpus_build"]
-        ).cc12_guarded_corpus_build,
-        "dq8_split_leakage": __import__(
-            "pdf_etl_pipeline_spark.catalog.quality_q", fromlist=["dq8_split_leakage"]
-        ).dq8_split_leakage,
-        "ss12_filtered_topk": __import__(
-            "pdf_etl_pipeline_spark.catalog.similarity_q", fromlist=["ss12_filtered_topk"]
-        ).ss12_filtered_topk,
-        "cc13_curriculum_order": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q", fromlist=["cc13_curriculum_order"]
-        ).cc13_curriculum_order,
-        "cc14_release_manifest": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q", fromlist=["cc14_release_manifest"]
-        ).cc14_release_manifest,
-        "st15_leakage_guard": __import__(
-            "pdf_etl_pipeline_spark.catalog.corpus_q", fromlist=["st15_leakage_guard"]
-        ).st15_leakage_guard,
-        "g3_clustering_coeff": __import__(
-            "pdf_etl_pipeline_spark.catalog.extended_q", fromlist=["g3_clustering_coeff"]
-        ).g3_clustering_coeff,
-        "st16_guarded_release": __import__(
-            "pdf_etl_pipeline_spark.catalog.ingest_q", fromlist=["st16_guarded_release"]
-        ).st16_guarded_release,
-        "ev5_inter_event_gaps": __import__(
-            "pdf_etl_pipeline_spark.catalog.extended_q", fromlist=["ev5_inter_event_gaps"]
-        ).ev5_inter_event_gaps,
-        "ir2_phrase_topk": __import__(
-            "pdf_etl_pipeline_spark.catalog.text_q", fromlist=["ir2_phrase_topk"]
-        ).ir2_phrase_topk,
-        "ml8_nb_auc": __import__(
-            "pdf_etl_pipeline_spark.catalog.text_q", fromlist=["ml8_nb_auc"]
-        ).ml8_nb_auc,
-        "tk7_cap_sweep": __import__(
-            "pdf_etl_pipeline_spark.catalog.tokenize_q", fromlist=["tk7_cap_sweep"]
-        ).tk7_cap_sweep,
-        "mm5_dedup_manifest": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["mm5_dedup_manifest"]
-        ).mm5_dedup_manifest,
-        "cc15_multimodal_release": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["cc15_multimodal_release"]
-        ).cc15_multimodal_release,
-        "st17_multimodal_ingest": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["st17_multimodal_ingest"]
-        ).st17_multimodal_ingest,
-        "st18_framegrab_guard": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["st18_framegrab_guard"]
-        ).st18_framegrab_guard,
-        "dq9_multimodal_leakage": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q", fromlist=["dq9_multimodal_leakage"]
-        ).dq9_multimodal_leakage,
-        "cc16_release_diff": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q", fromlist=["cc16_release_diff"]
-        ).cc16_release_diff,
-        "dd15_containment_pairs": __import__(
-            "pdf_etl_pipeline_spark.catalog.dedup_q", fromlist=["dd15_containment_pairs"]
-        ).dd15_containment_pairs,
-        "st19_containment_guard": __import__(
-            "pdf_etl_pipeline_spark.catalog.dedup_q", fromlist=["st19_containment_guard"]
-        ).st19_containment_guard,
-        "dd16_jaccard_join": __import__(
-            "pdf_etl_pipeline_spark.catalog.dedup_q", fromlist=["dd16_jaccard_join"]
-        ).dd16_jaccard_join,
-        "st20_mm_release_verdicts": __import__(
-            "pdf_etl_pipeline_spark.catalog.multimodal_q",
-            fromlist=["st20_mm_release_verdicts"],
-        ).st20_mm_release_verdicts,
-        "cc17_stored_release_diff": __import__(
-            "pdf_etl_pipeline_spark.catalog.curation_q",
-            fromlist=["cc17_stored_release_diff"],
-        ).cc17_stored_release_diff,
-    }
+    registry = load_registry()
+    missing = [q for q in CURVE_QUERIES if q not in registry]
+    if missing:
+        raise KeyError(f"curve queries missing from the catalog registry: {missing}")
+    names = CURVE_QUERIES
     # optional comma-separated substring filter (argv[3]): measure a
     # subset without paying for the whole battery
     if len(sys.argv) > 3:
         pats = sys.argv[3].split(",")
-        QUERIES = {k: v for k, v in QUERIES.items() if any(p in k for p in pats)}
+        names = [k for k in names if any(p in k for p in pats)]
+    queries = {q: registry[q].fn for q in names}
 
     # optional duplication-rate override (argv[4], default 0.10): the
     # high-dup stress regime for the span family (coverage ≈ corpus)
@@ -372,21 +239,22 @@ def main() -> None:
     # so they get the same measured-clean treatment BENCH_r15 gave the
     # headline (r15 VERDICT finding 1): corpus GENERATION above loads the
     # box, so gate on the 1-min AND 5-min load averages before any timing
-    # starts (bench._require_idle blocks until drained or aborts), and wrap
+    # starts (require_idle blocks until drained or aborts), and wrap
     # every timed point in a /proc/stat contention window so each decade
     # row carries its own other_cores — a contaminated point is identified
     # from the JSON instead of confessed in prose.
-    load_at_start = bench._require_idle()
+    load_at_start = require_idle()
     out = {"scales": {t: {} for t in dirs}, "rows": {}, "windows": {}}
     for tag, d in dirs.items():
-        for qname, fn in QUERIES.items():
+        for qname, fn in queries.items():
+            counts = []
             # every timed point pays its own full plan (the bench.py discipline)
-            bench._reset_session_memos(spark)
-            w = bench._Window()
-            t0 = time.time()
-            n = fn(spark, d).count()
-            sec = round(time.time() - t0, 2)
-            win = w.close()
+            (sec,), win = time_runs(
+                lambda: counts.append(fn(spark, d).count()),
+                1,
+                before=lambda: reset_session_memos(spark),
+            )
+            n = counts[0]
             out["scales"][tag][qname] = sec
             out["rows"].setdefault(qname, {})[tag] = n
             out["windows"].setdefault(qname, {})[tag] = win
@@ -399,7 +267,7 @@ def main() -> None:
     # per-decade exponents between adjacent measured scales
     tags = [t for t in ("1x", "10x", "100x", "1000x") if t in dirs]
     exps = {}
-    for qname in QUERIES:
+    for qname in queries:
         e = {}
         for lo, hi in zip(tags, tags[1:]):
             r = out["scales"][hi][qname] / max(out["scales"][lo][qname], 1e-9)

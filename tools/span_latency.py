@@ -19,115 +19,62 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
+from pdf_etl_pipeline_spark.catalog import scratch_state
 from pdf_etl_pipeline_spark.llmdata.span_ingest import (
     _index_path,
     compact_span_index,
     monitor_batch,
 )
-from pdf_etl_pipeline_spark.operators import fsutil
 from pdf_etl_pipeline_spark.session import get_spark, load_table
+from tools.measure import max_partition_files, series_record, staged_batches, staged_series
 
 
-def max_bucket_files(ix: str) -> int:
-    counts = [
-        fsutil.data_file_count(p)
-        for p in fsutil.list_subdirs(_index_path(ix))
-        if "bucket=" in p
-    ]
-    return max(counts) if counts else 0
+def run_series(spark, batches, compact: bool):
+    reports = {}
+    with scratch_state(spark, "st10_latency_") as ix:
+        index = _index_path(ix)
 
-
-def run_series(spark, docs, cuts, compact: bool):
-    ix = tempfile.mkdtemp(prefix="st10_latency_")
-    secs, files, rows, reports = [], [], [], {}
-    try:
-        lo = None
-        for i, hi in enumerate(cuts):
-            b = docs.filter(F.col("doc_id") < hi)
-            if lo is not None:
-                b = b.filter(F.col("doc_id") >= lo)
-            t0 = time.time()
-            rep = monitor_batch(b, ix, batch_id=i)
-            for r in rep.collect():
+        def step(i, b):
+            for r in monitor_batch(b, ix, batch_id=i).collect():
                 reports[r.doc_id] = (r.n_tokens, r.n_dup_tokens)
             if compact:
                 compact_span_index(spark, ix)
-            secs.append(round(time.time() - t0, 3))
-            files.append(max_bucket_files(ix))
-            rows.append(spark.read.parquet(_index_path(ix)).count())
-            lo = hi
-        distinct_h = (
-            spark.read.parquet(_index_path(ix)).select("h").distinct().count()
-        )
-    finally:
-        shutil.rmtree(ix, ignore_errors=True)
-    return secs, files, rows, distinct_h, reports
+
+        def after():
+            return max_partition_files(index, "bucket"), spark.read.parquet(index).count()
+
+        secs, seen = staged_series(batches, step, after)
+        distinct_h = spark.read.parquet(index).select("h").distinct().count()
+    files, rows = (list(c) for c in zip(*seen))
+    layout = {"max_bucket_files": files, "index_rows": rows, "distinct_hashes": distinct_h}
+    return series_record(secs, **layout), reports
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
     spark = get_spark("st10-latency")
-    docs = load_table(spark, sf_dir, "documents")
-    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
-    cuts = [ids[int(len(ids) * i / n_batches)] for i in range(1, n_batches)] + [ids[-1] + 1]
-
+    n_docs, batches = staged_batches(load_table(spark, sf_dir, "documents"), n_batches)
     # warm plans so batch 1 isn't charged JVM/codegen startup
-    warm = tempfile.mkdtemp(prefix="st10_warm_")
-    try:
-        monitor_batch(docs.filter(F.col("doc_id") < cuts[0]), warm, batch_id=0)
-        monitor_batch(docs.filter(F.col("doc_id") < cuts[0]), warm, batch_id=1)
-    finally:
-        shutil.rmtree(warm, ignore_errors=True)
+    with scratch_state(spark, "st10_warm_") as warm:
+        staged_series(batches[:1] * 2, lambda i, b: monitor_batch(b, warm, batch_id=i))
 
-    plain_secs, plain_files, plain_rows, plain_h, rep_plain = run_series(
-        spark, docs, cuts, compact=False
-    )
-    comp_secs, comp_files, comp_rows, comp_h, rep_comp = run_series(
-        spark, docs, cuts, compact=True
-    )
+    plain, rep_plain = run_series(spark, batches, compact=False)
+    compacted, rep_comp = run_series(spark, batches, compact=True)
     assert rep_plain == rep_comp, "compaction changed admission reports"
-
-    def slope(ys):
-        ys = ys[4:]
-        n = len(ys)
-        xs = list(range(n))
-        mx, my = sum(xs) / n, sum(ys) / n
-        return round(
-            sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-            / sum((x - mx) ** 2 for x in xs),
-            4,
-        )
 
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "n_batches": n_batches,
-                "n_docs": len(ids),
-                "plain": {
-                    "secs": plain_secs,
-                    "max_bucket_files": plain_files,
-                    "index_rows": plain_rows,
-                    "distinct_hashes": plain_h,
-                    "tail_slope_sec_per_batch": slope(plain_secs),
-                },
-                "compacted": {
-                    "secs": comp_secs,
-                    "max_bucket_files": comp_files,
-                    "index_rows": comp_rows,
-                    "distinct_hashes": comp_h,
-                    "tail_slope_sec_per_batch": slope(comp_secs),
-                },
+                "n_docs": n_docs,
+                "plain": plain,
+                "compacted": compacted,
                 "load_avg_before": os.getloadavg()[0],
             }
         )
