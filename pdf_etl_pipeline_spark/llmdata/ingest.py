@@ -45,8 +45,6 @@ anti-join) — from exact keys to near-duplicate content.
 from __future__ import annotations
 
 import os
-import re
-import urllib.parse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,6 +57,8 @@ from pdf_etl_pipeline_spark.llmdata.dedup import (
     label_components,
     signatures_from_hashed,
 )
+from pdf_etl_pipeline_spark.operators import fsutil
+from pdf_etl_pipeline_spark.operators.index_table import MAX_FILES_PER_BAND, Index, IndexTable
 from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.streaming import driver
 
@@ -66,97 +66,15 @@ BANDS_SUBDIR = "bands"
 TOKS_SUBDIR = "toks"
 TOK_BUCKETS = 8  # hash-cluster width for the verify-set files
 
-# Band partitions fragment by one file family per micro-batch (one file
-# per shuffle task per partition); past this many data files per
-# partition the steady-state ingest compacts them (see compact_index).
-# Measured (SCALE.md, r9): 24 staged batches leave 267 files/partition
-# uncompacted vs a bounded count with in-loop compaction; on local SSD
-# the admission latency stays flat either way at this file count — the
-# compaction lever exists for the object-store regime, where every file
-# open is a round trip and listing is priced per entry.
-MAX_FILES_PER_BAND = 8
-
-
-# --- catalog registration -----------------------------------------------------
-# The index is a CATALOG TABLE pair, not a bare directory: existence is a
-# metastore probe (spark.catalog.tableExists), reads go through
-# spark.table() so Spark's table-level file-index cache and partition
-# pruning both apply, and appends go through saveAsTable so the cache
-# invalidates transactionally with the write. The directory layout under
-# index_dir is unchanged (bands/ partitioned by band, toks/
-# hash-clustered) — external tables point AT it, so a catalog that
-# doesn't survive the process (local in-memory metastore) recovers by
-# re-registering the location (_ensure_registered's CREATE TABLE ...
-# LOCATION path, schema and partitions inferred from the files).
-
-
-def _digest(index_dir: str) -> str:
-    import hashlib
-
-    return hashlib.md5(os.path.abspath(index_dir).encode()).hexdigest()[:10]
-
-
-def bands_table(index_dir: str) -> str:
-    return f"st7_bands_{_digest(index_dir)}"
-
-
-def toks_table(index_dir: str) -> str:
-    return f"st7_toks_{_digest(index_dir)}"
-
-
-def _ensure_registered(spark, index_dir: str) -> bool:
-    """True iff the index exists: registered in the catalog, or present
-    on disk from a previous process — in which case it is re-registered
-    (external CREATE TABLE over the existing location; schema and the
-    band partitioning are inferred from the files)."""
-    bt, tt = bands_table(index_dir), toks_table(index_dir)
-    if spark.catalog.tableExists(bt) and spark.catalog.tableExists(tt):
-        return True
-    from pdf_etl_pipeline_spark.operators import fsutil
-
-    bpath = os.path.join(index_dir, BANDS_SUBDIR)
-    tpath = os.path.join(index_dir, TOKS_SUBDIR)
-    # Hadoop-FS existence probe — the recovery path works wherever the
-    # index lives (local disk, HDFS, object store), not just on POSIX
-    if not fsutil.exists(bpath, spark):
-        return False
-    for name, path, partitioned in ((bt, bpath, True), (tt, tpath, False)):
-        if not spark.catalog.tableExists(name):
-            # the table name is md5-derived (safe); the LOCATION path is
-            # caller-controlled, so escape it as a SQL string literal
-            loc = path.replace("'", "''")
-            spark.sql(f"CREATE TABLE `{name}` USING parquet LOCATION '{loc}'")
-            if partitioned:
-                # partition discovery is not implied by schema inference:
-                # without the repair the recovered table lists zero files
-                spark.sql(f"MSCK REPAIR TABLE `{name}`")
-    return True
-
-
-def _index_exists(spark, index_dir: str) -> bool:
-    return _ensure_registered(spark, index_dir)
-
-
-def drop_index(spark, index_dir: str) -> None:
-    """Unregister the index's catalog tables (files untouched) — callers
-    that delete a temporary index directory drop its tables first so the
-    catalog never points at a vanished location."""
-    for name in (bands_table(index_dir), toks_table(index_dir)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def _append_to_table(df: DataFrame, name: str, path: str, partition_by: str | None = None):
-    """Append through the catalog: first write creates the external table
-    at ``path``, later writes append to the registered table (which also
-    invalidates Spark's cached file listing — an external rewrite would
-    not)."""
-    spark = df.sparkSession
-    w = df.write.mode("append").format("parquet")
-    if partition_by is not None:
-        w = w.partitionBy(partition_by)
-    if not spark.catalog.tableExists(name):
-        w = w.option("path", path)
-    w.saveAsTable(name)
+# the index's catalog tables (operators/index_table.py); existence is
+# judged on the bands relation
+BANDS_REL = IndexTable("st7_bands", BANDS_SUBDIR, partition_by="band")
+TOKS_REL = IndexTable("st7_toks", TOKS_SUBDIR)
+INDEX = Index(BANDS_REL, TOKS_REL)
+bands_table = BANDS_REL.name
+toks_table = TOKS_REL.name
+_ensure_registered = INDEX.ensure_registered
+drop_index = INDEX.drop
 
 
 def admission_matches(
@@ -286,7 +204,7 @@ def ingest_batch(
         )
 
         # 2. cross-batch: banding candidates vs the admitted index, verified
-        if _index_exists(spark, index_dir):
+        if _ensure_registered(spark, index_dir):
             matched = admission_matches(spark, bands, toks, kept, index_dir, threshold)
             kept = kept.join(matched, "doc_id", "left_anti")
 
@@ -304,10 +222,9 @@ def ingest_batch(
         # toks: hash-clustered by doc_id (repartition = one file family per hash
         # bucket; a metastore-bucketed table at cluster scale would make the
         # survivor semi-join shuffle-free on the index side too).
-        _append_to_table(
+        TOKS_REL.append(
             toks.join(kept, "doc_id", "left_semi").repartition(TOK_BUCKETS, "doc_id"),
-            toks_table(index_dir),
-            os.path.join(index_dir, TOKS_SUBDIR),
+            index_dir,
         )
         # bands: partitioned by band so admission probes prune to the probed
         # band partitions (PartitionFilters on the scan — see admission_matches).
@@ -317,12 +234,7 @@ def ingest_batch(
         # commit overhead, measured 4-5 s/append); aligned, the write is one
         # file per band partition per batch and the probe-side file count grows
         # BANDS/batch instead of ~32·BANDS/batch.
-        _append_to_table(
-            bands.join(kept, "doc_id", "left_semi").repartition("band"),
-            bands_table(index_dir),
-            os.path.join(index_dir, BANDS_SUBDIR),
-            partition_by="band",
-        )
+        BANDS_REL.append(bands.join(kept, "doc_id", "left_semi").repartition("band"), index_dir)
     if compact_threshold is not None:
         compact_index(spark, index_dir, max_files_per_band=compact_threshold)
     return kept
@@ -380,57 +292,19 @@ def compact_index(
 
     Returns the list of compacted relation names (``band=K`` / ``toks``).
     """
-    from pdf_etl_pipeline_spark.operators import fsutil
-
     if not _ensure_registered(spark, index_dir):
         # never-ingested (or already-dropped) index: nothing to compact —
         # keep the old glob-era no-op contract instead of raising on
         # spark.table() below
         return []
-    bt, tt = bands_table(index_dir), toks_table(index_dir)
-    compacted: list[str] = []
-
-    def _rewrite(old_files: list, df, table: str, path: str, partition_by=None):
-        # read the EXPLICIT old-file list so the plan can never observe
-        # the files the append adds; then append through the catalog
-        # (cache invalidates with the write) and prune the old files
-        _append_to_table(df, table, path, partition_by=partition_by)
-        for uri in old_files:
-            fsutil.delete(uri, spark=spark)
-
-    band_type = {f.name: f.dataType.simpleString() for f in spark.table(bt).schema}["band"]
-    for pdir in fsutil.list_subdirs(os.path.join(index_dir, BANDS_SUBDIR), spark):
-        base = pdir.rstrip("/").rsplit("/", 1)[-1]
-        if not base.startswith("band="):
-            continue
-        # Hive %-escapes special chars in partition-directory values and
-        # spells NULL as __HIVE_DEFAULT_PARTITION__; band is an integer by
-        # construction, so unescape and refuse anything that isn't one
-        # rather than writing a garbage/NULL band column on the rewrite.
-        band_val = urllib.parse.unquote(base.split("=", 1)[1])
-        if not re.fullmatch(r"-?\d+", band_val):
-            continue
-        files = [uri for uri, _ in fsutil.list_data_files(pdir, spark)]
-        if len(files) > max_files_per_band:
-            n_out = max(1, -(-fsutil.dir_bytes(pdir, spark) // target_bytes))
-            df = (
-                spark.read.parquet(*files)
-                .withColumn("band", F.lit(band_val).cast(band_type))
-                .repartition(n_out)
-            )
-            _rewrite(files, df, bt, os.path.join(index_dir, BANDS_SUBDIR), "band")
-            compacted.append(base)
-    tdir = os.path.join(index_dir, TOKS_SUBDIR)
-    tfiles = [uri for uri, _ in fsutil.list_data_files(tdir, spark)]
+    compacted = BANDS_REL.compact(spark, index_dir, max_files_per_band, target_bytes)
+    tfiles = [uri for uri, _ in fsutil.list_data_files(TOKS_REL.path(index_dir), spark)]
     # toks writes one TOK_BUCKETS-file family per batch; same threshold,
     # scaled by the clustering width
     if len(tfiles) > max_files_per_band * TOK_BUCKETS:
         df = spark.read.parquet(*tfiles).repartition(TOK_BUCKETS, "doc_id")
-        _rewrite(tfiles, df, tt, tdir)
+        TOKS_REL.rewrite(spark, index_dir, tfiles, df)
         compacted.append(TOKS_SUBDIR)
     if compacted:
-        for name in (bt, tt):
-            # the prunes happened outside the catalog — drop the cached
-            # file listing so no scan ever serves a vanished file
-            spark.catalog.refreshTable(name)
+        INDEX.refresh(spark, index_dir)
     return compacted

@@ -53,47 +53,18 @@ from pdf_etl_pipeline_spark.llmdata.multimodal import (
     _banded_hash_pairs,
     _require_banding_complete,
 )
+from pdf_etl_pipeline_spark.operators.index_table import MAX_FILES_PER_BAND, Index, IndexTable
 from pdf_etl_pipeline_spark.streaming import driver
 
 BANDS_SUBDIR = "mm_bands"
 DEFAULT_MAX_HAMMING = 3
 
-
-def _digest(index_dir: str) -> str:
-    import hashlib
-
-    return hashlib.md5(os.path.abspath(index_dir).encode()).hexdigest()[:10]
-
-
-def mm_bands_table(index_dir: str) -> str:
-    return f"st17_bands_{_digest(index_dir)}"
-
-
-def _bands_path(index_dir: str) -> str:
-    return os.path.join(index_dir, BANDS_SUBDIR)
-
-
-def _ensure_registered(spark, index_dir: str) -> bool:
-    """True iff the index exists — registered, or recovered from disk via
-    an external CREATE TABLE + partition repair (st7's catalog
-    discipline: reads go through ``spark.table`` so partition pruning
-    and cache invalidation apply)."""
-    name = mm_bands_table(index_dir)
-    if spark.catalog.tableExists(name):
-        return True
-    from pdf_etl_pipeline_spark.operators import fsutil
-
-    path = _bands_path(index_dir)
-    if not fsutil.exists(path, spark):
-        return False
-    loc = path.replace("'", "''")
-    spark.sql(f"CREATE TABLE `{name}` USING parquet LOCATION '{loc}'")
-    spark.sql(f"MSCK REPAIR TABLE `{name}`")
-    return True
-
-
-def drop_mm_index(spark, index_dir: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {mm_bands_table(index_dir)}")
+# the index's single catalog table (operators/index_table.py)
+MM_BANDS_REL = IndexTable("st17_bands", BANDS_SUBDIR, partition_by="band_idx")
+MM_INDEX = Index(MM_BANDS_REL)
+mm_bands_table = MM_BANDS_REL.name
+_ensure_registered = MM_INDEX.ensure_registered
+drop_mm_index = MM_INDEX.drop
 
 
 def asset_bands(hashes: DataFrame, hash_col: str) -> DataFrame:
@@ -119,19 +90,26 @@ def asset_bands(hashes: DataFrame, hash_col: str) -> DataFrame:
     ).select("asset_id", "h", "b.band_idx", "b.band_val")
 
 
-def mm_admission_matches(
-    spark,
-    kept_hashes: DataFrame,
-    index_dir: str,
-    max_hamming: int = DEFAULT_MAX_HAMMING,
-    probe_bands=None,
+def asset_labels(hashes: DataFrame, max_hamming: int) -> DataFrame:
+    """Intra-batch canonicalization of ``(asset_id, h)``: exact banding
+    pairs -> connected components, ``(asset_id, cluster_id, is_keeper)``
+    with the min asset_id of each component as its keeper."""
+    pairs = _banded_hash_pairs(hashes, "h", max_hamming).select(
+        F.col("asset_a").alias("doc_a"), F.col("asset_b").alias("doc_b")
+    )
+    return label_components(
+        hashes.select(F.col("asset_id").alias("doc_id")),
+        pairs,
+        rounds=STAR_ROUNDS,
+        doubling=True,
+        until_converged=True,
+    ).select(F.col("doc_id").alias("asset_id"), "cluster_id", "is_keeper")
+
+
+def _index_probe(
+    spark, kept_hashes: DataFrame, index_dir: str, max_hamming: int, probe_bands=None
 ) -> DataFrame:
-    """Assets of ``kept_hashes`` (``asset_id``, ``h``) that near-dup-match
-    the on-disk index: (band_idx, band_val) equi-join candidates against
-    the probed band partitions (static ``PartitionFilters`` — unprobed
-    partitions never read), same-asset_id replay exclusion, codegen
-    popcount verify on the joined row. Probing a band subset trades
-    recall for index I/O (st7's cheap-admission lever)."""
+    """The verified ``(n, o)`` probe rows both admission plans share."""
     probe = list(range(PHASH_BANDS)) if probe_bands is None else sorted(probe_bands)
     _ensure_registered(spark, index_dir)
     ix = spark.table(mm_bands_table(index_dir)).filter(F.col("band_idx").isin(probe))
@@ -149,6 +127,24 @@ def mm_admission_matches(
         .filter(
             F.bit_count(F.col("n.h").bitwiseXOR(F.col("o.h"))) <= max_hamming
         )
+    )
+
+
+def mm_admission_matches(
+    spark,
+    kept_hashes: DataFrame,
+    index_dir: str,
+    max_hamming: int = DEFAULT_MAX_HAMMING,
+    probe_bands=None,
+) -> DataFrame:
+    """Assets of ``kept_hashes`` (``asset_id``, ``h``) that near-dup-match
+    the on-disk index: (band_idx, band_val) equi-join candidates against
+    the probed band partitions (static ``PartitionFilters`` — unprobed
+    partitions never read), same-asset_id replay exclusion, codegen
+    popcount verify on the joined row. Probing a band subset trades
+    recall for index I/O (st7's cheap-admission lever)."""
+    return (
+        _index_probe(spark, kept_hashes, index_dir, max_hamming, probe_bands)
         .select(F.col("n.asset_id").alias("asset_id"))
         .distinct()
     )
@@ -166,19 +162,8 @@ def mm_admission_canonicals(
     index_canonical)``. Same probe plan (pruned band partitions, same-asset
     replay exclusion, popcount verify on the joined row); MIN is duplicate-
     insensitive, so crash-replayed appends never change the resolution."""
-    probe = list(range(PHASH_BANDS))
-    _ensure_registered(spark, index_dir)
-    ix = spark.table(mm_bands_table(index_dir)).filter(F.col("band_idx").isin(probe))
-    nb = asset_bands(kept_hashes, "h").filter(F.col("band_idx").isin(probe))
     return (
-        nb.alias("n")
-        .join(
-            ix.alias("o"),
-            (F.col("n.band_idx") == F.col("o.band_idx"))
-            & (F.col("n.band_val") == F.col("o.band_val"))
-            & (F.col("n.asset_id") != F.col("o.asset_id")),
-        )
-        .filter(F.bit_count(F.col("n.h").bitwiseXOR(F.col("o.h"))) <= max_hamming)
+        _index_probe(spark, kept_hashes, index_dir, max_hamming)
         .groupBy(F.col("n.asset_id").alias("asset_id"))
         .agg(F.min(F.col("o.asset_id")).alias("index_canonical"))
     )
@@ -200,20 +185,7 @@ def mm_ingest_batch(
     ).localCheckpoint()
 
     # 1. intra-batch: banding pairs -> components -> min-asset_id keepers
-    pairs = _banded_hash_pairs(hashes, "h", max_hamming).select(
-        F.col("asset_a").alias("doc_a"), F.col("asset_b").alias("doc_b")
-    )
-    kept = (
-        label_components(
-            hashes.select(F.col("asset_id").alias("doc_id")),
-            pairs,
-            rounds=STAR_ROUNDS,
-            doubling=True,
-            until_converged=True,
-        )
-        .filter(F.col("is_keeper"))
-        .select(F.col("doc_id").alias("asset_id"))
-    )
+    kept = asset_labels(hashes, max_hamming).filter(F.col("is_keeper")).select("asset_id")
     kept_hashes = hashes.join(kept, "asset_id", "left_semi")
 
     # 2. cross-batch admission against the accumulated index
@@ -225,23 +197,14 @@ def mm_ingest_batch(
     kept_hashes = kept_hashes.localCheckpoint()
 
     # 3. append admitted band rows (single relation — no torn-write window)
-    name = mm_bands_table(index_dir)
-    w = (
-        asset_bands(kept_hashes, "h")
-        .write.mode("append")
-        .format("parquet")
-        .partitionBy("band_idx")
-    )
-    if not spark.catalog.tableExists(name):
-        w = w.option("path", _bands_path(index_dir))
-    w.saveAsTable(name)
+    MM_BANDS_REL.append(asset_bands(kept_hashes, "h"), index_dir)
     return kept_hashes.select("asset_id")
 
 
 def compact_mm_index(
     spark,
     index_dir: str,
-    max_files_per_band: int = 8,
+    max_files_per_band: int = MAX_FILES_PER_BAND,
     target_bytes: int = 128 << 20,
 ) -> list:
     """Steady-state maintenance for the st17 index (st7's
@@ -254,48 +217,15 @@ def compact_mm_index(
     probe is duplicate-insensitive: ``distinct`` on matches), pinned by
     test. A crash between append and prune leaves duplicate index rows —
     an I/O cost, never a correctness one; re-running converges."""
-    import re
-    import urllib.parse
-
-    from pdf_etl_pipeline_spark.operators import fsutil
-
     if not _ensure_registered(spark, index_dir):
         return []
-    name = mm_bands_table(index_dir)
     # driver-side partition loop: bounded by PHASH_BANDS (= 4) band_idx
     # directories, never by data volume — a wider-banding refactor that
     # grows the partition count must re-check this bound (same discipline
     # as _distinct_hash_band_pairs' band comment)
-    compacted: list[str] = []
-    band_type = {
-        f.name: f.dataType.simpleString() for f in spark.table(name).schema
-    }["band_idx"]
-    for pdir in fsutil.list_subdirs(_bands_path(index_dir), spark):
-        base = pdir.rstrip("/").rsplit("/", 1)[-1]
-        if not base.startswith("band_idx="):
-            continue
-        band_val = urllib.parse.unquote(base.split("=", 1)[1])
-        if not re.fullmatch(r"-?\d+", band_val):
-            continue
-        files = [uri for uri, _ in fsutil.list_data_files(pdir, spark)]
-        if len(files) > max_files_per_band:
-            n_out = max(1, -(-fsutil.dir_bytes(pdir, spark) // target_bytes))
-            df = (
-                spark.read.parquet(*files)
-                .withColumn("band_idx", F.lit(band_val).cast(band_type))
-                .repartition(n_out)
-            )
-            (
-                df.write.mode("append")
-                .format("parquet")
-                .partitionBy("band_idx")
-                .saveAsTable(name)
-            )
-            for uri in files:
-                fsutil.delete(uri, spark=spark)
-            compacted.append(base)
+    compacted = MM_BANDS_REL.compact(spark, index_dir, max_files_per_band, target_bytes)
     if compacted:
-        spark.catalog.refreshTable(name)
+        MM_INDEX.refresh(spark, index_dir)
     return compacted
 
 

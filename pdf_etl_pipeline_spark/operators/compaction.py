@@ -25,10 +25,10 @@ table format (Iceberg/Delta `OPTIMIZE`) ships, expressed Spark-first:
 The reader-visible relation is IDENTICAL before and after (pinned by
 test) — compaction is pure physical-layout maintenance. The contract is a
 LEAF directory (one parquet file family, no partition subdirectories):
-partitioned layouts compact per partition directory. The st7 index does
-not go through here: ``llmdata.ingest.compact_index`` runs its own
-per-band loop with the same append-then-prune rule, because its appends
-go through the index's catalog tables.
+partitioned layouts compact per partition directory. The st7 and st17
+indexes do not go through here: their appends go through the index's
+catalog tables, so ``operators.index_table.IndexTable.compact`` runs the
+per-partition loop with the same append-then-prune rule.
 """
 
 from __future__ import annotations

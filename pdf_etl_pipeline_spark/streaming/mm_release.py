@@ -61,8 +61,6 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.llmdata.corpus import PACK_BUDGET, pack_counts
 from pdf_etl_pipeline_spark.llmdata.dedup import (
     SHINGLE_N,
-    STAR_ROUNDS,
-    label_components,
     shingles_col,
     tokens_col,
 )
@@ -147,17 +145,14 @@ def mm_release_batch(
     carry a NULL canonical (they never reach resolution). Raises when
     either pin is missing (st13's refuse-to-run contract)."""
     from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
-        _bands_path,
+        MM_BANDS_REL,
         _ensure_registered,
         asset_bands,
+        asset_labels,
         guard_framegrab_batch,
         mm_admission_canonicals,
-        mm_bands_table,
     )
-    from pdf_etl_pipeline_spark.llmdata.multimodal import (
-        _banded_hash_pairs,
-        _require_banding_complete,
-    )
+    from pdf_etl_pipeline_spark.llmdata.multimodal import _require_banding_complete
     from pdf_etl_pipeline_spark.streaming.containment_guard import (
         guard_containment_batch,
     )
@@ -190,16 +185,7 @@ def mm_release_batch(
     hashes = s2.select(
         F.col("doc_id").alias("asset_id"), F.col("phash").alias("h")
     ).localCheckpoint()
-    pairs = _banded_hash_pairs(hashes, "h", max_hamming).select(
-        F.col("asset_a").alias("doc_a"), F.col("asset_b").alias("doc_b")
-    )
-    labels = label_components(
-        hashes.select(F.col("asset_id").alias("doc_id")),
-        pairs,
-        rounds=STAR_ROUNDS,
-        doubling=True,
-        until_converged=True,
-    ).select(F.col("doc_id").alias("asset_id"), "cluster_id", "is_keeper")
+    labels = asset_labels(hashes, max_hamming)
     kept_hashes = hashes.join(
         labels.filter(F.col("is_keeper")).select("asset_id"), "asset_id", "left_semi"
     )
@@ -210,16 +196,7 @@ def mm_release_batch(
         canon_ix = spark.createDataFrame([], "asset_id long, index_canonical long")
         admitted = kept_hashes
     admitted = admitted.localCheckpoint()
-    name = mm_bands_table(index_dir)
-    w = (
-        asset_bands(admitted, "h")
-        .write.mode("append")
-        .format("parquet")
-        .partitionBy("band_idx")
-    )
-    if not spark.catalog.tableExists(name):
-        w = w.option("path", _bands_path(index_dir))
-    w.saveAsTable(name)
+    MM_BANDS_REL.append(asset_bands(admitted, "h"), index_dir)
     # canonical per surviving doc: its component keeper, redirected to the
     # keeper's min index match when the keeper was already represented
     resolved = (

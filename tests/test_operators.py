@@ -1528,13 +1528,12 @@ def test_clustering_coefficients_known_graphs(spark):
     assert 3 not in got
 
 
-def test_inter_event_gaps_planted(spark):
+def test_inter_event_gaps_planted(spark, tmp_path):
     """ev5: gaps are PER (user, event_type) — interleaved other-type and
     other-user events must not contribute; percentiles are exact."""
     from pyspark.sql import functions as F
 
     from pdf_etl_pipeline_spark.catalog import load_registry
-    import tempfile, os
 
     rows = [
         # user 1 clicks at t=0, 10, 30 -> gaps 10, 20
@@ -1548,9 +1547,8 @@ def test_inter_event_gaps_planted(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
     ).withColumn("ts", F.to_timestamp("ts"))
-    tmp = tempfile.mkdtemp(prefix="ev5_")
-    df.write.mode("overwrite").parquet(os.path.join(tmp, "events.parquet"))
-    out = {r.event_type: r for r in load_registry()["ev5_inter_event_gaps"].fn(spark, tmp).collect()}
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    out = {r.event_type: r for r in load_registry()["ev5_inter_event_gaps"].fn(spark, str(tmp_path)).collect()}
     assert out["click"].n_gaps == 2
     assert out["click"].p50_gap_s == 15.0  # exact continuous median of {10, 20}
     assert out["click"].max_gap_s == 20

@@ -300,11 +300,12 @@ def test_failed_ingest_batch_releases_its_cached_relations(spark, sf_dir, tmp_pa
     import pytest
 
     from pdf_etl_pipeline_spark.llmdata import ingest
+    from pdf_etl_pipeline_spark.operators.index_table import IndexTable
 
     def fail(*_args, **_kwargs):
         raise RuntimeError("append failed")
 
-    monkeypatch.setattr(ingest, "_append_to_table", fail)
+    monkeypatch.setattr(IndexTable, "append", fail)
     spark.catalog.clearCache()
     docs = load_table(spark, sf_dir, "documents").limit(40)
     with pytest.raises(RuntimeError, match="append failed"):

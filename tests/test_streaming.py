@@ -595,7 +595,7 @@ def test_st17_index_compaction_preserves_admission(spark, tmp_path):
     and the next batch's admitted set is bit-identical to an uncompacted
     twin's."""
     from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
-        _bands_path,
+        MM_BANDS_REL,
         compact_mm_index,
         mm_ingest_batch,
     )
@@ -613,7 +613,7 @@ def test_st17_index_compaction_preserves_admission(spark, tmp_path):
     def files_per_band(ix):
         return max(
             len(fsutil.list_data_files(p, spark))
-            for p in fsutil.list_subdirs(_bands_path(ix), spark)
+            for p in fsutil.list_subdirs(MM_BANDS_REL.path(ix), spark)
             if "band_idx=" in p
         )
 
@@ -629,6 +629,40 @@ def test_st17_index_compaction_preserves_admission(spark, tmp_path):
     got_a = {r.asset_id for r in mm_ingest_batch(probe, ix_a).collect()}
     got_b = {r.asset_id for r in mm_ingest_batch(probe, ix_b).collect()}
     assert got_a == got_b == {101}
+
+
+def test_st17_index_catalog_recovery(spark, tmp_path):
+    """st17's index recovers like st7's: once its catalog table is dropped
+    (a new process with an in-memory metastore), the next batch
+    re-registers the on-disk location — no index row is lost, and the
+    admitted set equals that of an undropped twin."""
+    from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
+        drop_mm_index,
+        mm_bands_table,
+        mm_ingest_batch,
+    )
+    from pdf_etl_pipeline_spark.llmdata.multimodal import PHASH_BANDS
+
+    base = 0x0F0F_1234_5678_9ABC
+    first = _mm17(spark, [(1, base), (2, 0x7123_4567_0000_FFFF)])
+    # 3 is 2 bits off the admitted asset 1 (rejected); 4 is far from all
+    second = _mm17(spark, [(3, base ^ 0b101), (4, 0x0246_8ACE_1357_9BDF)])
+    ix_d, ix_u = str(tmp_path / "dropped"), str(tmp_path / "undropped")
+    for ix in (ix_d, ix_u):
+        assert {r.asset_id for r in mm_ingest_batch(first, ix).collect()} == {1, 2}
+    n = spark.table(mm_bands_table(ix_d)).count()
+    assert n == 2 * PHASH_BANDS
+
+    drop_mm_index(spark, ix_d)
+    assert not spark.catalog.tableExists(mm_bands_table(ix_d))
+    got_d = {r.asset_id for r in mm_ingest_batch(second, ix_d).collect()}
+    assert spark.catalog.tableExists(mm_bands_table(ix_d))
+    got_u = {r.asset_id for r in mm_ingest_batch(second, ix_u).collect()}
+    assert got_d == got_u == {4}
+    assert spark.table(mm_bands_table(ix_d)).count() == n + PHASH_BANDS
+    assert spark.table(mm_bands_table(ix_u)).count() == n + PHASH_BANDS
+    for ix in (ix_d, ix_u):
+        drop_mm_index(spark, ix)
 
 
 # --- ST18: frame-grab admission guard -------------------------------------------
@@ -1262,7 +1296,7 @@ def test_ingest_index_catalog_registration_and_recovery(spark, sf_dir, tmp_path)
     from pyspark.sql import functions as F2
 
     from pdf_etl_pipeline_spark.llmdata.ingest import (
-        _index_exists,
+        _ensure_registered as _index_exists,
         bands_table,
         drop_index,
         ingest_batch,
@@ -1385,7 +1419,7 @@ def test_ingest_index_quote_bearing_path(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F2
 
     from pdf_etl_pipeline_spark.llmdata.ingest import (
-        _index_exists,
+        _ensure_registered as _index_exists,
         bands_table,
         drop_index,
         ingest_batch,
@@ -1456,6 +1490,44 @@ def test_maintenance_paths_have_no_posix_layout_surgery():
                 if len(parts) >= 2 and tuple(parts[-2:]) in banned:
                     offenders.append(f"{f.name}:{node.lineno} uses {'.'.join(parts)}")
     assert not offenders, "POSIX layout surgery reintroduced:\n" + "\n".join(offenders)
+
+
+def test_ingest_index_catalog_calls_live_only_in_index_table():
+    """One index-table layer: in package code the catalog calls an index
+    table needs (``saveAsTable``, ``refreshTable``, ``CREATE TABLE`` and
+    ``MSCK REPAIR`` statements) appear only in ``operators/index_table.py``.
+    The S12 bucketed writer (``operators/bucketed.py``) keeps its own
+    ``saveAsTable``: it overwrites a bucketed table, a different contract.
+    AST-based, so docstrings and comments may still name the calls."""
+    import ast
+    import pathlib
+
+    import pdf_etl_pipeline_spark
+
+    pkg = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+    allowed = {pkg / "operators" / "index_table.py", pkg / "operators" / "bucketed.py"}
+    offenders = []
+    for f in sorted(set(pkg.rglob("*.py")) - allowed):
+        tree = ast.parse(f.read_text())
+        docs = {
+            id(n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            hits = []
+            if isinstance(node, ast.Attribute) and node.attr in ("saveAsTable", "refreshTable"):
+                hits = [node.attr]
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+            ):
+                hits = [k for k in ("CREATE TABLE", "MSCK REPAIR") if k in node.value.upper()]
+            offenders += [f"{f.relative_to(pkg)}:{node.lineno} {h}" for h in hits]
+    assert not offenders, "index-table catalog calls outside the index module:\n" + "\n".join(
+        offenders
+    )
 
 
 def test_compact_index_on_missing_index_is_noop(spark, tmp_path):

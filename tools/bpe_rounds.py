@@ -74,6 +74,7 @@ def main() -> None:
     round_size = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     vocab_words = int(sys.argv[3]) if len(sys.argv) > 3 else 20_000
     margin = 4
+    load_at_start = os.getloadavg()[0]
     spark = get_spark("bpe-rounds")
 
     docs = gen_rich_docs(spark, vocab_words)
@@ -125,7 +126,7 @@ def main() -> None:
                 "total_sec": total,
                 "sec_per_merge": round(total / max(1, len(merges)), 4),
                 "rounds": rounds,
-                "load_avg_before": os.getloadavg()[0],
+                "load_avg_before": load_at_start,
             }
         )
     )

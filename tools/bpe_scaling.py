@@ -45,6 +45,7 @@ def corpus_bpe_total(docs, rel) -> int:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     max_n = int(sys.argv[2]) if len(sys.argv) > 2 else 256
+    load_at_start = os.getloadavg()[0]
     spark = get_spark("bpe-scaling")
     docs = load_table(spark, sf_dir, "documents")
     docs.count()  # warm scan
@@ -73,7 +74,7 @@ def main() -> None:
         out["points"].append(point)
         print(json.dumps(point), file=sys.stderr)
         n *= 4
-    out["load_avg_before"] = os.getloadavg()[0]
+    out["load_avg_before"] = load_at_start
     print(json.dumps(out))
 
 

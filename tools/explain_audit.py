@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_etl_pipeline_spark.catalog import halving, load_registry
+from pdf_etl_pipeline_spark.catalog import halving, load_registry, scratch_state
 from pdf_etl_pipeline_spark.session import get_spark
 
 
@@ -104,6 +105,27 @@ def _pk1_tiny_window_input(plan: str) -> list[str]:
     return _sp_fed_by_bucket_agg(plan, ("bkt",))
 
 
+# every check's staged state lives under one scratch root per run: "root"
+# is set by main, "drops" holds the (drop, path) of each catalog-backed
+# index staged there
+_SCRATCH: dict = {"drops": []}
+
+
+def _scratch(prefix: str, drop=None) -> str:
+    """A fresh directory for one check's staged state under the run's
+    scratch root; ``drop(spark, path)`` unregisters what the check put in
+    the catalog before ``main`` deletes the root."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH["root"])
+    if drop is not None:
+        _SCRATCH["drops"].append((drop, path))
+    return path
+
+
+def _drop_staged(spark, _root: str) -> None:
+    for drop, path in _SCRATCH["drops"]:
+        drop(spark, path)
+
+
 _FORGET_TMP: dict = {}
 
 
@@ -111,14 +133,12 @@ def _forget_table(spark, sf_dir: str) -> str:
     """A small day-partitioned event log for the S17 audits (memoized —
     both checks share one write)."""
     if "path" not in _FORGET_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.operators.partitioned_sink import write_partitioned
         from pdf_etl_pipeline_spark.session import load_events
 
-        path = tempfile.mkdtemp(prefix="forget_audit_") + "/log"
+        path = _scratch("forget_audit_") + "/log"
         ev = load_events(spark, sf_dir).withColumn(
             "day", F.date_format("ts", "yyyy-MM-dd")
         )
@@ -159,8 +179,6 @@ def _staged_span_index(spark, sf_dir):
     foreachBatch body's probe plan can be audited against live index
     files, exactly what a later micro-batch sees."""
     if "dir" not in _SPAN_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.llmdata.span_ingest import monitor_batch
@@ -168,7 +186,7 @@ def _staged_span_index(spark, sf_dir):
 
         docs = load_table(spark, sf_dir, "documents")
         split = halving(docs)
-        ix = tempfile.mkdtemp(prefix="st10_audit_")
+        ix = _scratch("st10_audit_")
         monitor_batch(docs.filter(F.col("doc_id") < split), ix, batch_id=0)
         _SPAN_AUDIT_TMP["dir"], _SPAN_AUDIT_TMP["split"] = ix, split
     return _SPAN_AUDIT_TMP["dir"], _SPAN_AUDIT_TMP["split"]
@@ -245,9 +263,7 @@ def _st12_drift_body_df(spark, sf_dir):
     )
 
     if "dir" not in _ST12_AUDIT_TMP:
-        import tempfile
-
-        _ST12_AUDIT_TMP["dir"] = tempfile.mkdtemp(prefix="st12_audit_")
+        _ST12_AUDIT_TMP["dir"] = _scratch("st12_audit_")
     state = _ST12_AUDIT_TMP["dir"]
     ev = (
         load_events(spark, sf_dir)
@@ -282,9 +298,7 @@ def _st13_guard_body_df(spark, sf_dir):
     )
 
     if "dir" not in _ST13_AUDIT_TMP:
-        import tempfile
-
-        _ST13_AUDIT_TMP["dir"] = tempfile.mkdtemp(prefix="st13_audit_")
+        _ST13_AUDIT_TMP["dir"] = _scratch("st13_audit_")
     state = _ST13_AUDIT_TMP["dir"]
     docs = load_table(spark, sf_dir, "documents")
     if "pinned" not in _ST13_AUDIT_TMP:
@@ -314,9 +328,7 @@ def _st15_guard_body_df(spark, sf_dir):
     )
 
     if "dir" not in _ST15_AUDIT_TMP:
-        import tempfile
-
-        _ST15_AUDIT_TMP["dir"] = tempfile.mkdtemp(prefix="st15_audit_")
+        _ST15_AUDIT_TMP["dir"] = _scratch("st15_audit_")
     state = _ST15_AUDIT_TMP["dir"]
     docs = load_table(spark, sf_dir, "documents")
     stage = split_stage(F.col("doc_id"))
@@ -338,8 +350,6 @@ def _st7_probe_df(spark, sf_dir):
     read) against a real half-corpus index — the plan whose contracts are
     band PartitionFilters, equi-joins only, and no window anywhere."""
     if "df" not in _ST7_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.llmdata import ingest as IG
@@ -352,7 +362,7 @@ def _st7_probe_df(spark, sf_dir):
 
         docs = load_table(spark, sf_dir, "documents")
         split = halving(docs)
-        ix = tempfile.mkdtemp(prefix="st7_audit_")
+        ix = _scratch("st7_audit_", IG.drop_index)
         IG.ingest_batch(docs.filter(F.col("doc_id") < split), ix)
         batch = docs.filter(F.col("doc_id") >= split)
         hashed = hashed_tokens(batch)
@@ -373,12 +383,11 @@ def _st17_probe_df(spark, sf_dir):
     PartitionFilters, one equi-join with codegen popcount verify, no
     window, no Python."""
     if "df" not in _ST17_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.catalog.multimodal_q import _mm1_hashes
         from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
+            drop_mm_index,
             mm_admission_matches,
             mm_ingest_batch,
         )
@@ -387,7 +396,7 @@ def _st17_probe_df(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents")
         hashes = _mm1_hashes(docs)
         split = halving(docs)
-        ix = tempfile.mkdtemp(prefix="st17_audit_")
+        ix = _scratch("st17_audit_", drop_mm_index)
         mm_ingest_batch(hashes.filter(F.col("asset_id") < split), ix)
         batch = hashes.filter(F.col("asset_id") >= split).select(
             "asset_id", F.col("phash").alias("h")
@@ -406,12 +415,11 @@ def _st20_resolve_body_df(spark, sf_dir):
     aggregate that redirects a deduped doc to the asset the release
     actually ships."""
     if "df" not in _ST20_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.catalog.multimodal_q import _st20_doc_assets
         from pdf_etl_pipeline_spark.llmdata.mm_ingest import (
+            drop_mm_index,
             mm_admission_canonicals,
             mm_ingest_batch,
         )
@@ -422,7 +430,7 @@ def _st20_resolve_body_df(spark, sf_dir):
             F.col("doc_id").alias("asset_id"), F.col("phash").alias("h")
         )
         split = halving(docs)
-        ix = tempfile.mkdtemp(prefix="st20_audit_")
+        ix = _scratch("st20_audit_", drop_mm_index)
         mm_ingest_batch(
             assets.filter(F.col("asset_id") < split), ix, hash_col="h"
         )
@@ -442,8 +450,6 @@ def _st19_probe_df(spark, sf_dir):
     exact verify on survivors, one keyed verdict aggregate — no corpus
     window, no nested loop, no Python."""
     if "df" not in _ST19_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.session import load_table
@@ -455,7 +461,7 @@ def _st19_probe_df(spark, sf_dir):
 
         docs = load_table(spark, sf_dir, "documents")
         split = halving(docs)
-        state = tempfile.mkdtemp(prefix="st19_audit_")
+        state = _scratch("st19_audit_")
         pin_containment_index(docs.filter(F.col("doc_id") < split), state)
         toks_p, posts_p, df_p = _cont_paths(state)
         _ST19_AUDIT_TMP["df"] = containment_batch_df(
@@ -476,8 +482,6 @@ def _st18_probe_df(spark, sf_dir):
     verify, output-bounded expansion, one keyed roll-up — no window over
     the corpus, no nested-loop join, no Python."""
     if "df" not in _ST18_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.catalog.multimodal_q import (
@@ -491,7 +495,7 @@ def _st18_probe_df(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        state = tempfile.mkdtemp(prefix="st18_audit_")
+        state = _scratch("st18_audit_")
         pin_frame_index(_mm3_frame_hashes(docs), state)
         _ST18_AUDIT_TMP["df"] = framegrab_batch_df(
             _mm1_hashes(docs), spark.read.parquet(os.path.join(state, "fg_frames"))
@@ -582,8 +586,6 @@ def _cc17_diff_body_df(spark, sf_dir):
     release would be), v2 built fresh, the diff read LAZILY so the audit
     sees the join plan — v1 must enter as a column-pruned parquet scan."""
     if "df" not in _CC17_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.catalog.curation_q import (
@@ -598,7 +600,7 @@ def _cc17_diff_body_df(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents")
         cut = halving(docs)
         docs1 = docs.filter(F.col("doc_id") < cut)
-        path = tempfile.mkdtemp(prefix="cc17_audit_v1_")
+        path = _scratch("cc17_audit_v1_")
         release_write(
             release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9)),
             path,
@@ -634,8 +636,6 @@ def _cc18_patch_body_df(spark, sf_dir):
     stored v1 entering as a pruned scan and the patch as an anti-join,
     never a second curation rebuild."""
     if "df" not in _CC18_AUDIT_TMP:
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from pdf_etl_pipeline_spark.catalog.curation_q import (
@@ -652,7 +652,7 @@ def _cc18_patch_body_df(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents")
         cut = halving(docs)
         docs1 = docs.filter(F.col("doc_id") < cut)
-        path = tempfile.mkdtemp(prefix="cc18_audit_v1_")
+        path = _scratch("cc18_audit_v1_")
         release_write(
             release_manifest_df(docs1, minhash_lsh_pairs(docs1, 0.9)),
             path,
@@ -675,8 +675,6 @@ def _dq11_certify_body_df(spark, sf_dir):
     the audit pins that every invariant check is an AGGREGATE — position
     contiguity via min/max/count-distinct, never a corpus-wide window."""
     if "df" not in _DQ11_AUDIT_TMP:
-        import tempfile
-
         from pdf_etl_pipeline_spark.catalog.curation_q import (
             certify_release,
             release_manifest_df,
@@ -687,7 +685,7 @@ def _dq11_certify_body_df(spark, sf_dir):
         from pdf_etl_pipeline_spark.session import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="dq11_audit_rel_")
+        path = _scratch("dq11_audit_rel_")
         release_write(
             release_manifest_df(docs, shared_pairs(spark, sf_dir, 0.9)), path
         )
@@ -2146,18 +2144,22 @@ def main() -> int:
     registry = load_registry()
     spark = get_spark("explain_audit")
     failed = []
-    for name, spec in CHECKS.items():
-        build = spec.get("build") or registry[name].fn
-        plan = plan_of(build(spark, sf_dir))
-        problems = [f"missing: {m}" for m in spec["must"] if m not in plan]
-        problems += [f"present: {m}" for m in spec["must_not"] if m in plan]
-        if "check" in spec:
-            problems += spec["check"](plan)
-        if problems:
-            failed.append(name)
-            print(f"AUDIT FAIL {name}: {problems}")
-        else:
-            print(f"AUDIT PASS {name}")
+    # the root is deleted on exit, also when a check raises, after the
+    # staged indexes' catalog tables are dropped
+    with scratch_state(spark, "explain_audit_", _drop_staged) as root:
+        _SCRATCH["root"] = root
+        for name, spec in CHECKS.items():
+            build = spec.get("build") or registry[name].fn
+            plan = plan_of(build(spark, sf_dir))
+            problems = [f"missing: {m}" for m in spec["must"] if m not in plan]
+            problems += [f"present: {m}" for m in spec["must_not"] if m in plan]
+            if "check" in spec:
+                problems += spec["check"](plan)
+            if problems:
+                failed.append(name)
+                print(f"AUDIT FAIL {name}: {problems}")
+            else:
+                print(f"AUDIT PASS {name}")
     print(f"\n{len(CHECKS) - len(failed)}/{len(CHECKS)} plans match the scale contract")
     return 1 if failed else 0
 

@@ -77,6 +77,7 @@ def timed_join(spark, fact, dim, salted: bool):
 
 def main() -> None:
     n_fact = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
+    load_at_start = os.getloadavg()[0]
     spark = get_spark("skew-study")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # shuffle partitions modest so the hot partition is clearly oversized
@@ -126,7 +127,7 @@ def main() -> None:
 
     assert check0 == check1 == check2, f"variants disagree: {check0} {check1} {check2}"
     results["results_identical"] = True
-    results["load_avg_before"] = os.getloadavg()[0]
+    results["load_avg_before"] = load_at_start
     print(json.dumps(results))
 
 

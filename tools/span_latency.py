@@ -57,6 +57,7 @@ def run_series(spark, batches, compact: bool):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
+    load_at_start = os.getloadavg()[0]
     spark = get_spark("st10-latency")
     n_docs, batches = staged_batches(load_table(spark, sf_dir, "documents"), n_batches)
     # warm plans so batch 1 isn't charged JVM/codegen startup
@@ -75,7 +76,7 @@ def main() -> None:
                 "n_docs": n_docs,
                 "plain": plain,
                 "compacted": compacted,
-                "load_avg_before": os.getloadavg()[0],
+                "load_avg_before": load_at_start,
             }
         )
     )
