@@ -328,7 +328,7 @@ def _st13_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
     require_pin(pin_benchmark(docs.filter(F.col("doc_id") % CP.BENCH_MOD == 0), state), "st13")
     corpus = docs.filter(F.col("doc_id") % CP.BENCH_MOD != 0)
-    body = lambda batch, b: guard_contamination_batch(batch, state, batch_id=b)
+    body = lambda batch, b: guard_contamination_batch(batch, state)
     return halves(corpus, halving(docs)), body
 
 
@@ -411,7 +411,7 @@ def _st15_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
     stage = CP.split_stage(F.col("doc_id"))
     require_pin(pin_heldout(docs.filter(stage >= 1), state), "st15")
-    body = lambda batch, b: guard_leakage_batch(batch, state, batch_id=b)
+    body = lambda batch, b: guard_leakage_batch(batch, state)
     return halves(docs.filter(stage == 0), halving(docs)), body
 
 

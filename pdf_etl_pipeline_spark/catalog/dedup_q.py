@@ -771,7 +771,7 @@ def _st19_stage(spark: SparkSession, sf_dir: str, state: str):
     cut = halving(docs)
     held, incoming = halves(docs, cut)
     require_pin(pin_containment_index(held, state), "st19")
-    body = lambda batch, b: guard_containment_batch(batch, state, b)
+    body = lambda batch, b: guard_containment_batch(batch, state)
     return halves(incoming, halving(docs, lo=cut)), body
 
 

@@ -639,7 +639,7 @@ def st18_framegrab_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _st18_stage(spark: SparkSession, sf_dir: str, state: str):
     docs = load_table(spark, sf_dir, "documents")
     require_pin(pin_frame_index(_mm3_frame_hashes(docs), state), "st18")
-    body = lambda batch, b: guard_framegrab_batch(batch, state, b)
+    body = lambda batch, b: guard_framegrab_batch(batch, state)
     return halves(_mm1_hashes(docs), halving(docs), "asset_id"), body
 
 
@@ -911,7 +911,7 @@ def _st20_stage(spark: SparkSession, sf_dir: str, state: str):
     stage = _CPm.split_stage(F.col("doc_id"))
     held = docs.filter(stage >= 1)
     require_pin(pin_mm_release_state(held, _mm3_frame_hashes(held), state), "st20")
-    body = lambda batch, b: mm_release_batch(batch, state, b)
+    body = lambda batch, b: mm_release_batch(batch, state)
     return halves(_st20_doc_assets(docs.filter(stage == 0)), halving(docs)), body
 
 

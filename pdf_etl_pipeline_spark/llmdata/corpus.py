@@ -628,20 +628,22 @@ def near_decontaminate(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
     run — uncached, Catalyst replicates the tokenize+md5 explode per
     consumer (the dd3 lesson) — and released before returning.
     """
-    result, hashed = _near_decontaminate_plan(docs, threshold)
+    result, hashed, _ = _near_decontaminate_plan(docs, threshold)
     with materialized(hashed):
         return result.localCheckpoint()
 
 
-def _near_decontaminate_plan(
-    docs: DataFrame, threshold: float
-) -> tuple[DataFrame, DataFrame]:
-    """:func:`near_decontaminate`'s lazy plan and the hashed tokens it
-    caches (see ``dedup._minhash_lsh_plan``)."""
+def _near_decontaminate_plan(docs: DataFrame, threshold: float) -> tuple[DataFrame, ...]:
+    """:func:`near_decontaminate`'s lazy plan, the hashed tokens it caches
+    (see ``dedup._minhash_lsh_plan``) and its banding candidates."""
     from pdf_etl_pipeline_spark.llmdata.dedup import (
         bands_from_signatures,
         hashed_tokens,
+        jaccard,
+        pair_sets,
+        reported,
         signatures_from_hashed,
+        verified,
     )
 
     is_bench = F.col("doc_id") % BENCH_MOD == 0
@@ -657,21 +659,13 @@ def _near_decontaminate_plan(
         .dropDuplicates()
     )
     toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("th"))
-    ta = toks.select(F.col("doc_id").alias("doc_id"), F.col("th").alias("ta"))
-    tb = toks.select(F.col("doc_id").alias("bench_id"), F.col("th").alias("tb"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
-    # threshold the UNROUNDED ratio (matching the oracle) — filtering the
-    # rounded value would admit pairs in [threshold - 5e-7, threshold)
+    pairs = pair_sets(cands, toks, "th", "doc_id", "bench_id")
     result = (
-        cands.join(ta, "doc_id")
-        .join(tb, "bench_id")
-        .select("doc_id", "bench_id", (inter / union).alias("jac_raw"))
-        .filter(F.col("jac_raw") >= threshold)
-        .select("doc_id", "bench_id", F.round("jac_raw", 6).alias("jaccard"))
+        verified(pairs, ["doc_id", "bench_id"], threshold, jaccard=jaccard("ta", "tb"))
+        .select("doc_id", "bench_id", reported("jaccard"))
         .orderBy("doc_id", "bench_id")
     )
-    return result, hashed
+    return result, hashed, cands
 
 
 # --- T5-style deterministic span corruption (sp5) ---------------------------------

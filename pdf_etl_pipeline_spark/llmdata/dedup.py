@@ -23,6 +23,14 @@ Five dedup families over the ``documents`` / ``embeddings`` tables:
 
 Every hash is the engine-portable md5-fold (``functions.scalars.
 portable_hash32``) so the DuckDB oracle reproduces results bit-for-bit.
+
+Set-similarity core: every near-dup plan (dd2, dd3, dd5, dd15, dd16, dc2,
+st7 ingest, the st15/st19 guards) is candidates → both sides' sets →
+exact ratio → threshold, each step written once here. Candidates:
+:func:`band_rows` + :func:`band_pairs` (LSH) or :func:`ppjoin_candidates`
+(exact; bounds in ``_ppjoin_prefix`` / ``_ppjoin_positional``). Verify:
+:func:`pair_sets`, :func:`jaccard` / :func:`containment`, then
+:func:`verified` (unrounded threshold) and :func:`reported` (rounding).
 """
 
 from __future__ import annotations
@@ -163,14 +171,10 @@ def jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("nb"))
-    # threshold the UNROUNDED ratio (the oracle's WHERE is unrounded) —
-    # filtering the rounded value would admit [threshold - 5e-7, threshold)
-    jac_raw = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac_raw >= threshold)
-        .select("doc_a", "doc_b", F.round(jac_raw, 6).alias("jaccard"))
+    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    joined = common.join(sa, "doc_a").join(sb, "doc_b")
+    return verified(joined, ["doc_a", "doc_b"], threshold, jaccard=jac).select(
+        "doc_a", "doc_b", reported("jaccard")
     )
 
 
@@ -250,21 +254,20 @@ def minhash_signatures_agg(docs: DataFrame) -> DataFrame:
     aggregates keeps cost at |tokens| md5s + one map-side-combined shuffle,
     and band keys then reference plain columns.
     """
-    tok = docs.select("doc_id", F.explode(tokens_col("text")).alias("t"))
-    h = (portable_hash32(F.col("t")) % P31).alias("h")
-    hashed = tok.select("doc_id", h)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % P31).alias(f"s{i}")
-        for i, (a, b) in enumerate(zip(PERM_A, PERM_B))
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return signatures_from_hashed(hashed_tokens(docs))
 
 
 def hashed_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, h) relation: every distinct token md5-hashed ONCE mod p —
     the single-pass source both the signatures and the verify sets derive
     from (shared by the batch pair query and the streaming ingest)."""
-    return docs.select("doc_id", F.explode(tokens_col("text")).alias("t")).select(
+    return hashed_units(docs, tokens_col("text"))
+
+
+def hashed_units(docs: DataFrame, units: Column) -> DataFrame:
+    """(doc_id, h) relation over any set unit: every element of the array
+    column ``units`` md5-hashed once mod p."""
+    return docs.select("doc_id", F.explode(units).alias("t")).select(
         "doc_id", (portable_hash32(F.col("t")) % P31).alias("h")
     )
 
@@ -279,20 +282,88 @@ def signatures_from_hashed(hashed: DataFrame) -> DataFrame:
 
 
 def bands_from_signatures(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, key) LSH banding relation — the equi-join/shuffle key
-    for candidate generation, and the on-disk index schema for ingest."""
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"s{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-            ).alias("key"),
-        )
-        for b in range(BANDS)
-    ]
-    return sigs.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    """(doc_id, band, key) MinHash banding relation — the equi-join/shuffle
+    key for candidate generation, and the on-disk index schema for ingest."""
+    return band_rows(
+        sigs,
+        "doc_id",
+        [
+            F.concat_ws("-", *[F.col(f"s{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)])
+            for b in range(BANDS)
+        ],
     )
+
+
+# ---------------------------------------------------------------------------
+# Set-similarity core: LSH band candidates and the exact verify
+# ---------------------------------------------------------------------------
+def band_rows(df: DataFrame, id_col: str, keys: list[Column]) -> DataFrame:
+    """(``id_col``, band, key) LSH banding relation: one row per band, band
+    ``b``'s key being ``keys[b]``."""
+    band_structs = [F.struct(F.lit(b).alias("band"), k.alias("key")) for b, k in enumerate(keys)]
+    return df.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def band_pairs(bands: DataFrame, id_col: str, out_a: str, out_b: str) -> DataFrame:
+    """LSH candidate pairs ``(out_a, out_b)``: ids sharing any ``(band,
+    key)`` of :func:`band_rows`' relation, each unordered pair once with
+    ``out_a < out_b``. The band key is the shuffle key, so the join output
+    tracks the true near-dup pairs, never an all-pairs product."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias(out_a), F.col(f"b.{id_col}").alias(out_b))
+        .dropDuplicates([out_a, out_b])
+    )
+
+
+def pair_sets(
+    pairs: DataFrame, sets: DataFrame, col: str, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """``pairs`` with both sides' hash sets joined on from the ``(doc_id,
+    col)`` relation ``sets``: side ``a``'s as ``ta``, side ``b``'s as ``tb``
+    — the input of :func:`jaccard` / :func:`containment`."""
+    side = lambda key, name: sets.select(F.col("doc_id").alias(key), F.col(col).alias(name))
+    return pairs.join(side(a, "ta"), a).join(side(b, "tb"), b)
+
+
+def jaccard(a: str, b: str) -> Column:
+    """|A∩B| / |A∪B| of two distinct hash-set array columns."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def containment(a: str, b: str) -> Column:
+    """|A∩B| / min(|A|, |B|) of two distinct hash-set array columns: how
+    much of the smaller set the larger one covers."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / F.least(F.size(a), F.size(b))
+
+
+def verified(pairs: DataFrame, keys: list[str], threshold: float, **ratios: Column) -> DataFrame:
+    """``keys`` and the named ``ratios`` of the ``pairs`` rows whose FIRST
+    ratio is at least ``threshold``, the ratios unrounded.
+
+    The threshold reads the UNROUNDED ratio, as the oracles' WHERE does —
+    filtering the rounded value would admit [threshold - 5e-7, threshold).
+    A caller reports a ratio through :func:`reported` after its last filter
+    or aggregate on it."""
+    first = next(iter(ratios))
+    return pairs.select(*keys, *[r.alias(n) for n, r in ratios.items()]).filter(
+        F.col(first) >= threshold
+    )
+
+
+def reported(ratio: str) -> Column:
+    """A verified ratio as the near-dup relations report it: 6 digits."""
+    return F.round(ratio, 6).alias(ratio)
 
 
 def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
@@ -333,18 +404,7 @@ def _minhash_lsh_plan(docs: DataFrame, threshold: float) -> tuple[DataFrame, ...
     The plan audit reads the lazy plan from here."""
     hashed = hashed_tokens(docs)
     sigs = signatures_from_hashed(hashed)
-    bands = bands_from_signatures(sigs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cands = band_pairs(bands_from_signatures(sigs), "doc_id", "doc_a", "doc_b")
     # verify on distinct token-HASH sets: intersecting 64-bit ints is far
     # cheaper than strings at 1M+ candidate pairs (same Jaccard modulo hash
     # collisions; the oracle hashes identically so results match exactly).
@@ -359,16 +419,9 @@ def _minhash_lsh_plan(docs: DataFrame, threshold: float) -> tuple[DataFrame, ...
         .agg(F.collect_set("h").alias("toks"))
         .join(cand_ids, "doc_id", "left_semi")
     )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    verified = cands.join(ta, "doc_a").join(tb, "doc_b")
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
-    # threshold the UNROUNDED ratio (oracle parity; see the dd2 note)
-    result = (
-        verified.filter((inter / union) >= threshold)
-        .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
-    )
+    result = verified(
+        pair_sets(cands, toks, "toks"), ["doc_a", "doc_b"], threshold, jaccard=jaccard("ta", "tb")
+    ).select("doc_a", "doc_b", reported("jaccard"))
     return result, hashed, sigs, cands
 
 
@@ -1173,18 +1226,7 @@ def ppjoin_candidates(
     ranked = sized.withColumn(
         "_r", F.row_number().over(W.partitionBy("doc_id").orderBy("_df", "h"))
     )
-    t_micro = ppjoin_threshold_micro(threshold)
-    M = 1_000_000
-    if sim == "containment":
-        # _r <= floor((1-t)*n) + 1  <=>  (_r-1)*1e6 <= n*(1e6 - t_micro)
-        pref_cond = (F.col("_r") - 1) * F.lit(M) <= F.col("_n") * F.lit(M - t_micro)
-    else:
-        # _r <= n - ceil(t*n) + 1  <=>  ceil(t*n) <= n - _r + 1
-        # <=>  t_micro*n <= (n - _r + 1)*1e6
-        pref_cond = F.lit(t_micro) * F.col("_n") <= (
-            F.col("_n") - F.col("_r") + 1
-        ) * F.lit(M)
-    prefix = ranked.filter(pref_cond).select("doc_id", "h", "_r", "_n")
+    prefix = ranked.filter(_ppjoin_prefix(sim, threshold)).select("doc_id", "h", "_r", "_n")
     posts = ranked.select("doc_id", "h", "_r", "_n")
     cond = (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") != F.col("b.doc_id"))
     if length_filter:
@@ -1193,32 +1235,51 @@ def ppjoin_candidates(
         cond = cond & (F.col("a._n") <= F.col("b._n"))
         if sim == "jaccard":
             # the REAL length filter: J >= t and na <= nb force nb <= na/t
-            cond = cond & (F.lit(t_micro) * F.col("b._n") <= F.lit(M) * F.col("a._n"))
+            t_micro = ppjoin_threshold_micro(threshold)
+            cond = cond & (F.lit(t_micro) * F.col("b._n") <= F.lit(_MICRO) * F.col("a._n"))
     joined = prefix.alias("a").join(posts.alias("b"), cond)
     if positional_filter:
-        # positional upper bound on |A intersect B| for a match at ranks
-        # (ra, rb): min(ra-1, rb-1) common tokens can precede h + h itself
-        # + the shorter remaining suffix
-        pos_bound = F.least(F.col("a._r"), F.col("b._r")) + F.least(
-            F.col("a._n") - F.col("a._r"), F.col("b._n") - F.col("b._r")
-        )
-        if sim == "containment":
-            # required overlap t*min(na, nb)
-            joined = joined.filter(
-                pos_bound * F.lit(M)
-                >= F.lit(t_micro) * F.least(F.col("a._n"), F.col("b._n"))
-            )
-        else:
-            # required overlap ceil(t*(na+nb)/(1+t)); integer bound >=
-            # ceil(x) <=> bound*(1e6+t_micro) >= t_micro*(na+nb)
-            joined = joined.filter(
-                pos_bound * F.lit(M + t_micro)
-                >= F.lit(t_micro) * (F.col("a._n") + F.col("b._n"))
-            )
+        joined = joined.filter(_ppjoin_positional(sim, threshold, "a", "b"))
     return joined.select(
         F.least("a.doc_id", "b.doc_id").alias("doc_a"),
         F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
     ).dropDuplicates(["doc_a", "doc_b"])
+
+
+_MICRO = 1_000_000  # the threshold scale of ppjoin_threshold_micro
+
+
+def _ppjoin_prefix(sim: str, threshold: float) -> Column:
+    """The PPJoin prefix condition on a ranked ``(_r, _n)`` relation as an
+    exact division-free LONG comparison: the threshold is scaled to micros
+    once, per-row arithmetic stays integer — never per-row decimals, never
+    float floors."""
+    t_micro = ppjoin_threshold_micro(threshold)
+    if sim == "containment":
+        # _r <= floor((1-t)*n) + 1  <=>  (_r-1)*1e6 <= n*(1e6 - t_micro)
+        return (F.col("_r") - 1) * F.lit(_MICRO) <= F.col("_n") * F.lit(_MICRO - t_micro)
+    # _r <= n - ceil(t*n) + 1  <=>  ceil(t*n) <= n - _r + 1
+    # <=>  t_micro*n <= (n - _r + 1)*1e6
+    return F.lit(t_micro) * F.col("_n") <= (F.col("_n") - F.col("_r") + 1) * F.lit(_MICRO)
+
+
+def _ppjoin_positional(sim: str, threshold: float, a: str, b: str) -> Column:
+    """PPJoin's positional filter on a token match between sides ``a`` and
+    ``b`` (aliases of ranked relations under ONE (df, h) order): the
+    row-local overlap bound reaches the overlap ``sim`` >= ``threshold``
+    requires."""
+    t_micro = ppjoin_threshold_micro(threshold)
+    ra, na, rb, nb = F.col(f"{a}._r"), F.col(f"{a}._n"), F.col(f"{b}._r"), F.col(f"{b}._n")
+    # positional upper bound on |A intersect B| for a match at ranks
+    # (ra, rb): min(ra-1, rb-1) common tokens can precede h + h itself
+    # + the shorter remaining suffix
+    pos_bound = F.least(ra, rb) + F.least(na - ra, nb - rb)
+    if sim == "containment":
+        # required overlap t*min(na, nb)
+        return pos_bound * F.lit(_MICRO) >= F.lit(t_micro) * F.least(na, nb)
+    # required overlap ceil(t*(na+nb)/(1+t)); integer bound >=
+    # ceil(x) <=> bound*(1e6+t_micro) >= t_micro*(na+nb)
+    return pos_bound * F.lit(_MICRO + t_micro) >= F.lit(t_micro) * (na + nb)
 
 
 JACCARD_JOIN_THRESHOLD = 0.8
@@ -1248,33 +1309,7 @@ def ppjoin_jaccard_pairs(
     candidate. The Jaccard prefix is ~(1-t)/(1+...) shorter and the size
     filter prunes harder than containment's, so candidates are a strict
     subset of what dd15 generates at the same threshold."""
-    reps = (
-        docs.groupBy(F.md5("text").alias("_k"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    hashed = (
-        hashed_tokens(docs.join(reps, "doc_id", "left_semi"))
-        .dropDuplicates(["doc_id", "h"])
-    )
-    cands = ppjoin_candidates(hashed, threshold, sim="jaccard")
-    toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("ts"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    jac = inter / (F.size("ta") + F.size("tb") - inter)
-    cont = inter / F.least(F.size("ta"), F.size("tb"))
-    return (
-        cands.join(toks.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ta")), "doc_a")
-        .join(toks.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("tb")), "doc_b")
-        # threshold the UNROUNDED ratio (dc2's convention)
-        .filter(jac >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    return _ppjoin_pairs(docs, threshold, "jaccard")
 
 
 def ppjoin_containment_pairs(
@@ -1326,30 +1361,20 @@ def ppjoin_containment_pairs(
     a skewed vocabulary would otherwise pay). The df relation is one
     keyed aggregate; the per-doc ordering is a doc_id-partitioned
     window; the verify is one array_intersect per surviving candidate."""
-    reps = (
-        docs.groupBy(F.md5("text").alias("_k"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    hashed = (
-        hashed_tokens(docs.join(reps, "doc_id", "left_semi"))
-        .dropDuplicates(["doc_id", "h"])
-    )
-    cands = ppjoin_candidates(hashed, threshold)
+    return _ppjoin_pairs(docs, threshold, "containment")
+
+
+def _ppjoin_pairs(docs: DataFrame, threshold: float, sim: str) -> DataFrame:
+    """The exact PPJoin pair relation behind both public joins: exact-dup
+    texts collapse to their :func:`exact_dedup` representative, the
+    representatives' distinct token hashes feed :func:`ppjoin_candidates`,
+    and the candidates are verified on ``sim`` — reported first, the other
+    ratio after it."""
+    reps = exact_dedup(docs).select(F.col("keep_doc_id").alias("doc_id"))
+    hashed = hashed_tokens(docs.join(reps, "doc_id", "left_semi")).dropDuplicates(["doc_id", "h"])
     toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("ts"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    cont = inter / F.least(F.size("ta"), F.size("tb"))
-    jac = inter / (F.size("ta") + F.size("tb") - inter)
-    return (
-        cands.join(toks.select(F.col("doc_id").alias("doc_a"), F.col("ts").alias("ta")), "doc_a")
-        .join(toks.select(F.col("doc_id").alias("doc_b"), F.col("ts").alias("tb")), "doc_b")
-        # threshold the UNROUNDED ratio (dc2's convention)
-        .filter(cont >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(cont, 6).alias("containment"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    pairs = pair_sets(ppjoin_candidates(hashed, threshold, sim=sim), toks, "ts")
+    ratios = {"jaccard": jaccard("ta", "tb"), "containment": containment("ta", "tb")}
+    order = sorted(ratios, key=lambda n: n != sim)
+    out = verified(pairs, ["doc_a", "doc_b"], threshold, **{n: ratios[n] for n in order})
+    return out.select("doc_a", "doc_b", *map(reported, order)).orderBy("doc_a", "doc_b")

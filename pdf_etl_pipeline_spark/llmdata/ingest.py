@@ -52,10 +52,14 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.llmdata.dedup import (
     BANDS,
     STAR_ROUNDS,
+    band_pairs,
     bands_from_signatures,
     hashed_tokens,
+    jaccard,
     label_components,
+    pair_sets,
     signatures_from_hashed,
+    verified,
 )
 from pdf_etl_pipeline_spark.operators import fsutil
 from pdf_etl_pipeline_spark.operators.index_table import MAX_FILES_PER_BAND, Index, IndexTable
@@ -101,8 +105,6 @@ def admission_matches(
     probe = list(range(BANDS)) if probe_bands is None else sorted(probe_bands)
     _ensure_registered(spark, index_dir)
     ex_bands = spark.table(bands_table(index_dir)).filter(F.col("band").isin(probe))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
     xc = (
         bands.filter(F.col("band").isin(probe))
         .join(kept, "doc_id", "left_semi")
@@ -129,13 +131,11 @@ def admission_matches(
         # BEFORE the verify join — the full index never shuffles
         .join(xc.select(F.col("old_id").alias("doc_id")).distinct(), "doc_id", "left_semi")
     )
+    pairs = xc.join(
+        toks.select(F.col("doc_id").alias("new_id"), F.col("toks").alias("ta")), "new_id"
+    ).join(ex_toks.select(F.col("doc_id").alias("old_id"), F.col("toks").alias("tb")), "old_id")
     return (
-        xc.join(toks.select(F.col("doc_id").alias("new_id"), F.col("toks").alias("ta")), "new_id")
-        .join(
-            ex_toks.select(F.col("doc_id").alias("old_id"), F.col("toks").alias("tb")),
-            "old_id",
-        )
-        .filter((inter / union) >= threshold)
+        verified(pairs, ["new_id"], threshold, jaccard=jaccard("ta", "tb"))
         .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )
@@ -170,26 +170,9 @@ def ingest_batch(
         materialized(hashed.groupBy("doc_id").agg(F.collect_set("h").alias("toks"))) as toks,
     ):
         # 1. intra-batch: LSH pairs -> connected components -> component minima
-        a, b = bands.alias("a"), bands.alias("b")
-        cands = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-        tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-        inter = F.size(F.array_intersect("ta", "tb"))
-        union = F.size("ta") + F.size("tb") - inter
-        pairs = (
-            cands.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .filter((inter / union) >= threshold)
-            .select("doc_a", "doc_b")
+        cands = band_pairs(bands, "doc_id", "doc_a", "doc_b")
+        pairs = verified(
+            pair_sets(cands, toks, "toks"), ["doc_a", "doc_b"], threshold, jaccard=jaccard("ta", "tb")
         )
         kept = (
             label_components(

@@ -327,7 +327,6 @@ def framegrab_batch_df(
 def guard_framegrab_batch(
     image_hashes: DataFrame,
     state_dir: str,
-    batch_id: int,
     max_hamming: int = DEFAULT_MAX_HAMMING,
 ) -> DataFrame:
     """Screen one image batch against the pinned frame index; returns the
@@ -351,7 +350,7 @@ def framegrab_guard_stream(images_stream: DataFrame, state_dir: str):
     before the stream starts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = guard_framegrab_batch(batch_df, state_dir, batch_id)
+        rows = guard_framegrab_batch(batch_df, state_dir)
         driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
     return driver.run_batches(images_stream, _batch, os.path.join(state_dir, "_checkpoint"))

@@ -20,7 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdf_etl_pipeline_spark.llmdata.dedup import cosine, cosine_sql
+from pdf_etl_pipeline_spark.llmdata.dedup import (
+    band_pairs,
+    band_rows,
+    cosine,
+    cosine_sql,
+    reported,
+    verified,
+)
 from pdf_etl_pipeline_spark.llmdata.dedup import dot as dedup_dot
 from pdf_etl_pipeline_spark.session import materialized
 
@@ -294,35 +301,17 @@ def _embedding_lsh_plan(embeddings: DataFrame, threshold: float) -> tuple[DataFr
     e = embeddings.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    band_structs = [
-        F.struct(F.lit(b).alias("band"), sign_key(F.col("v"), ps).alias("key"))
-        for b, ps in enumerate(BAND_PLANE_SETS)
-    ]
-    bands = e.select("vec_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    bands = band_rows(e, "vec_id", [sign_key(F.col("v"), ps) for ps in BAND_PLANE_SETS])
+    cands = band_pairs(bands, "vec_id", "id_a", "id_b")
     # verify join pulls vectors ONLY for ids that survived banding
     cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("vec_id")).distinct()
     vecs = e.join(cand_ids, "vec_id", "left_semi")
     va = vecs.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     vb = vecs.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    result = (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cosine"))
+    pairs = cands.join(va, "id_a").join(vb, "id_b")
+    cos = cosine(F.col("va"), F.col("vb"))
+    result = verified(pairs, ["id_a", "id_b"], threshold, cosine=cos).select(
+        "id_a", "id_b", reported("cosine")
     )
     return result, bands, cands
 

@@ -20,6 +20,13 @@ total order, so the row-local overlap bound
 load-bearing, and rows whose bound falls below ``t·min(na, nb)`` are
 shed before the collect_set verify joins. Pin-only screening — replays
 bit-identical.
+
+The prefix condition and the positional bound are ``llmdata.dedup``'s
+PPJoin helpers (``_ppjoin_prefix``, ``_ppjoin_positional``), the same
+expressions :func:`~pdf_etl_pipeline_spark.llmdata.dedup.ppjoin_candidates`
+filters with, and the verify is dedup's ``containment`` / ``verified``.
+Only the ranking relation is the guard's own: a LEFT join on the pin's df
+(unseen tokens at df 0), where ppjoin ranks by an inner join on its own df.
 """
 
 from __future__ import annotations
@@ -54,13 +61,10 @@ def _hashed_units(docs: DataFrame, unit_col) -> DataFrame:
     that stays meaningful on tiny-vocabulary corpora) hashed once mod p.
     Pin and probe must use the SAME unit column — the pin's df order and
     verify sets are expressed in it."""
-    from pdf_etl_pipeline_spark.functions.scalars import portable_hash32
-    from pdf_etl_pipeline_spark.llmdata.dedup import P31, tokens_col
+    from pdf_etl_pipeline_spark.llmdata.dedup import hashed_units, tokens_col
 
     units = tokens_col("text") if unit_col is None else unit_col
-    return docs.select("doc_id", F.explode(units).alias("t")).select(
-        "doc_id", (portable_hash32(F.col("t")) % P31).alias("h")
-    ).dropDuplicates(["doc_id", "h"])
+    return hashed_units(docs, units).dropDuplicates(["doc_id", "h"])
 
 
 def _ranked_of(hashed: DataFrame, dfreq: DataFrame) -> DataFrame:
@@ -79,41 +83,22 @@ def _ranked_of(hashed: DataFrame, dfreq: DataFrame) -> DataFrame:
     ).select("doc_id", "h", "_r", "_n")
 
 
-def _prefix_cond(threshold: float, r="_r", n="_n"):
-    """The PPJoin prefix condition ``rank <= floor((1−t)·n)+1`` as an
-    exact division-free LONG comparison (dd15's discipline: threshold
-    scaled to micros once, per-row arithmetic stays integer — never
-    per-row decimals, never float floors)."""
-    from pdf_etl_pipeline_spark.llmdata.dedup import ppjoin_threshold_micro
-
-    t_micro = ppjoin_threshold_micro(threshold)
-    return (F.col(r) - 1) * F.lit(1_000_000) <= F.col(n) * F.lit(
-        1_000_000 - t_micro
-    )
-
-
-def pin_containment_index(held_docs: DataFrame, state_dir: str,
-                          threshold: float = CONTAINMENT_GUARD_T,
-                          unit_col=None) -> bool:
+def pin_containment_index(held_docs: DataFrame, state_dir: str, unit_col=None) -> bool:
     """Pin the held corpus's representative token sets, df relation and
     RANKED postings (write-once; existence judged on the TOKS relation,
     written LAST — a torn pin reads as unpinned and the guard refuses).
     Ranks pin instead of a baked prefix: the probe derives prefixes of any
     threshold from (_r, _n), and the positional filter needs the full
-    ranked postings anyway. ``threshold`` is kept for signature
-    compatibility; the pin is threshold-free. ``unit_col`` picks the set
-    unit (None = distinct tokens; st20 pins shingles)."""
+    ranked postings anyway, so the pin is threshold-free. ``unit_col``
+    picks the set unit (None = distinct tokens; st20 pins shingles)."""
+    from pdf_etl_pipeline_spark.llmdata.dedup import exact_dedup
     from pdf_etl_pipeline_spark.operators import fsutil
 
     spark = held_docs.sparkSession
     toks_p, posts_p, df_p = _cont_paths(state_dir)
     if fsutil.list_data_files(toks_p, spark):
         return False
-    reps = (
-        held_docs.groupBy(F.md5("text").alias("_k"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    reps = exact_dedup(held_docs).select(F.col("keep_doc_id").alias("doc_id"))
     with materialized(
         _hashed_units(held_docs.join(reps, "doc_id", "left_semi"), unit_col)
     ) as hashed:
@@ -147,19 +132,19 @@ def containment_batch_df(
     length filter (only the smaller set's prefix is load-bearing) and
     positional overlap bound before the exact containment verify touches
     the survivors. ``unit_col`` must match the pin's."""
-    from pdf_etl_pipeline_spark.llmdata.dedup import ppjoin_threshold_micro
+    from pdf_etl_pipeline_spark.llmdata.dedup import (
+        _ppjoin_positional,
+        _ppjoin_prefix,
+        containment,
+        reported,
+        verified,
+    )
 
     hashed = _hashed_units(batch_docs, unit_col)
     my_ranked = _ranked_of(hashed, pinned_df)
-    my_prefix = my_ranked.filter(_prefix_cond(threshold))
-    pin_prefix = pinned_posts.filter(_prefix_cond(threshold))
-    t_micro = ppjoin_threshold_micro(threshold)
-    pos_bound = F.least(F.col("a._r"), F.col("p._r")) + F.least(
-        F.col("a._n") - F.col("a._r"), F.col("p._n") - F.col("p._r")
-    )
-    bound_ok = pos_bound * F.lit(1_000_000) >= F.lit(t_micro) * F.least(
-        F.col("a._n"), F.col("p._n")
-    )
+    my_prefix = my_ranked.filter(_ppjoin_prefix("containment", threshold))
+    pin_prefix = pinned_posts.filter(_ppjoin_prefix("containment", threshold))
+    bound_ok = _ppjoin_positional("containment", threshold, "a", "p")
     c1 = (
         my_prefix.alias("a")
         .join(
@@ -180,20 +165,16 @@ def containment_batch_df(
     )
     cands = c1.unionByName(c2).dropDuplicates(["doc_id", "held_id"])
     my_toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("ta"))
-    inter = F.size(F.array_intersect("ta", "th"))
-    cont = inter / F.least(F.size("ta"), F.size("th"))
+    pairs = cands.join(my_toks, "doc_id").join(pinned_toks, "held_id")
     hits = (
-        cands.join(my_toks, "doc_id")
-        .join(pinned_toks, "held_id")
-        .select("doc_id", "held_id", cont.alias("c_raw"))
-        .filter(F.col("c_raw") >= threshold)
+        verified(pairs, ["doc_id", "held_id"], threshold, c_raw=containment("ta", "th"))
         .groupBy("doc_id")
         .agg(F.countDistinct("held_id").alias("nh"), F.max("c_raw").alias("mx"))
     )
     return batch_docs.select("doc_id").join(hits, "doc_id", "left").select(
         "doc_id",
         F.coalesce("nh", F.lit(0)).cast("long").alias("n_held_matches"),
-        F.round("mx", 6).alias("max_containment"),
+        reported("mx").alias("max_containment"),
         (F.coalesce("nh", F.lit(0)) > 0).alias("is_excerpt"),
     )
 
@@ -201,7 +182,6 @@ def containment_batch_df(
 def guard_containment_batch(
     batch_docs: DataFrame,
     state_dir: str,
-    batch_id: int,
     threshold: float = CONTAINMENT_GUARD_T,
     unit_col=None,
 ) -> DataFrame:
@@ -233,7 +213,7 @@ def containment_guard_stream(docs_stream: DataFrame, state_dir: str):
     pinned before the stream starts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = guard_containment_batch(batch_df, state_dir, batch_id)
+        rows = guard_containment_batch(batch_df, state_dir)
         driver.append_batch(rows, batch_id, os.path.join(state_dir, CONT_REPORTS_SUBDIR))
 
     return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))

@@ -76,9 +76,7 @@ def guard_batch_df(docs: DataFrame, bench_hashes: DataFrame, n: int = DECON_N) -
     )
 
 
-def guard_contamination_batch(
-    docs: DataFrame, state_dir: str, batch_id: int, n: int = DECON_N
-) -> DataFrame:
+def guard_contamination_batch(docs: DataFrame, state_dir: str, n: int = DECON_N) -> DataFrame:
     """Screen one batch against the pinned benchmark; returns the
     materialized verdict rows. Raises if no benchmark was pinned — a
     guard with nothing to guard against is a wiring error, not an
@@ -100,7 +98,7 @@ def contamination_guard_stream(docs_stream: DataFrame, state_dir: str):
     the stream starts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = guard_contamination_batch(batch_df, state_dir, batch_id)
+        rows = guard_contamination_batch(batch_df, state_dir)
         driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
     return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))

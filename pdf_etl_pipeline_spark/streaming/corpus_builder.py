@@ -108,7 +108,7 @@ def build_corpus_batch(
         guard_contamination_batch,
     )
 
-    guard = guard_contamination_batch(docs, state_dir, batch_id, decon_n)
+    guard = guard_contamination_batch(docs, state_dir, decon_n)
     clean = docs.join(
         guard.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi"
     )
@@ -116,9 +116,7 @@ def build_corpus_batch(
     if leakage_guard:
         from pdf_etl_pipeline_spark.streaming.leakage_guard import guard_leakage_batch
 
-        leak = guard_leakage_batch(
-            clean, os.path.join(state_dir, LEAKAGE_SUBDIR), batch_id, threshold
-        )
+        leak = guard_leakage_batch(clean, os.path.join(state_dir, LEAKAGE_SUBDIR), threshold)
         leaking = leak.filter(F.col("leaks")).select("doc_id")
         v_leak = (
             clean.join(leaking, "doc_id", "left_semi")

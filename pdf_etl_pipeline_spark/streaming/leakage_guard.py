@@ -44,7 +44,10 @@ from pyspark.sql import functions as F
 from pdf_etl_pipeline_spark.llmdata.dedup import (
     bands_from_signatures,
     hashed_tokens,
+    jaccard,
+    reported,
     signatures_from_hashed,
+    verified,
 )
 from pdf_etl_pipeline_spark.session import forget, materialized, session_memo
 from pdf_etl_pipeline_spark.streaming import driver
@@ -194,15 +197,9 @@ def _leakage_plan(
         .dropDuplicates()
     )
     my_toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("ta"))
-    inter = F.size(F.array_intersect("ta", "th"))
-    union = F.size("ta") + F.size("th") - inter
-    # threshold the UNROUNDED ratio (dc2's convention) — filtering the
-    # rounded value would admit pairs in [threshold - 5e-7, threshold)
+    pairs = cands.join(my_toks, "doc_id").join(heldout_toks, "heldout_id")
     hits = (
-        cands.join(my_toks, "doc_id")
-        .join(heldout_toks, "heldout_id")
-        .select("doc_id", "heldout_id", (inter / union).alias("jac_raw"))
-        .filter(F.col("jac_raw") >= threshold)
+        verified(pairs, ["doc_id", "heldout_id"], threshold, jac_raw=jaccard("ta", "th"))
         .groupBy("doc_id")
         .agg(
             F.countDistinct("heldout_id").alias("nh"),
@@ -212,7 +209,7 @@ def _leakage_plan(
     out = train_docs.select("doc_id").join(hits, "doc_id", "left").select(
         "doc_id",
         F.coalesce("nh", F.lit(0)).cast("long").alias("n_heldout_dups"),
-        F.round("mx", 6).alias("max_jaccard"),
+        reported("mx").alias("max_jaccard"),
         (F.coalesce("nh", F.lit(0)) > 0).alias("leaks"),
     )
     return out, hashed
@@ -221,7 +218,6 @@ def _leakage_plan(
 def guard_leakage_batch(
     train_docs: DataFrame,
     state_dir: str,
-    batch_id: int,
     threshold: float = LEAK_THRESHOLD,
 ) -> DataFrame:
     """Screen one training batch against the pinned held-out index; returns
@@ -251,7 +247,7 @@ def leakage_guard_stream(docs_stream: DataFrame, state_dir: str):
     before the stream starts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = guard_leakage_batch(batch_df, state_dir, batch_id)
+        rows = guard_leakage_batch(batch_df, state_dir)
         driver.append_batch(rows, batch_id, os.path.join(state_dir, REPORTS_SUBDIR))
 
     return driver.run_batches(docs_stream, _batch, os.path.join(state_dir, "_checkpoint"))

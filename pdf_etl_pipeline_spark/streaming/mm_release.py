@@ -133,7 +133,6 @@ def mm_release_manifest_df(verdicts: DataFrame, budget: int = PACK_BUDGET) -> Da
 def mm_release_batch(
     docs: DataFrame,
     state_dir: str,
-    batch_id: int,
     threshold: float = 0.9,
     max_hamming: int = 3,
     budget: int = PACK_BUDGET,
@@ -164,7 +163,7 @@ def mm_release_batch(
     # 1. containment guard (text) — FINAL drop, never reaches the index
     cont = guard_containment_batch(
         docs.select("doc_id", "text"), os.path.join(state_dir, CONT_SUBDIR),
-        batch_id, threshold, unit_col=shingles_col("text", CONT_UNIT_N),
+        threshold, unit_col=shingles_col("text", CONT_UNIT_N),
     )
     contained = cont.filter(F.col("is_excerpt")).select("doc_id")
     s1 = docs.join(contained, "doc_id", "left_anti")
@@ -172,7 +171,7 @@ def mm_release_batch(
     # 2. frame-grab guard (image vs pinned held frames)
     fg = guard_framegrab_batch(
         s1.select(F.col("doc_id").alias("asset_id"), "phash"),
-        os.path.join(state_dir, FG_SUBDIR), batch_id, max_hamming,
+        os.path.join(state_dir, FG_SUBDIR), max_hamming,
     )
     grabbed = fg.filter(F.col("is_framegrab")).select(
         F.col("asset_id").alias("doc_id")
@@ -244,7 +243,7 @@ def mm_release_stream(docs_stream: DataFrame, state_dir: str):
     before the stream starts."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts, manifest = mm_release_batch(batch_df, state_dir, batch_id)
+        verdicts, manifest = mm_release_batch(batch_df, state_dir)
         driver.append_batch(verdicts, batch_id, os.path.join(state_dir, VERDICTS_SUBDIR))
         driver.append_batch(manifest, batch_id, os.path.join(state_dir, MANIFEST_SUBDIR))
 

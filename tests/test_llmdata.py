@@ -1651,6 +1651,20 @@ def test_dd15_containment_excerpt_and_exact_boundary(spark):
     assert set(got) == {(1, 2), (4, 5)}
 
 
+def _skewed_hub_rows():
+    """(doc_id, text) rows of a planted SKEWED vocabulary, every text
+    distinct (no exact-dup collapse interference)."""
+    # 30 docs, each a 30-token cyclic run over a 61-token hub vocabulary
+    # (every token in ~15 docs — every PREFIX token is common); runs with
+    # start offset within ±1 intersect in >= 27 tokens -> genuine
+    # containment-0.9 pairs exist INSIDE the skewed regime
+    hubs = [f"hub{i:02d}" for i in range(61)]
+    rows = [(i, " ".join(hubs[(i * 3 + j) % 61] for j in range(30))) for i in range(30)]
+    # a rare-vocab near-dup pair as a control: 29/30 shared
+    uniq = [f"d{i}" for i in range(30)]
+    return rows + [(100, " ".join(uniq)), (101, " ".join(uniq[:29] + ["rare_tail"]))]
+
+
 def test_dd15_positional_length_filters_prune_skewed_vocab(spark):
     """PPJoin's positional + length filters on a planted SKEWED vocabulary
     (20 hub tokens shared across 30 docs — every prefix token is common,
@@ -1664,16 +1678,7 @@ def test_dd15_positional_length_filters_prune_skewed_vocab(spark):
         ppjoin_containment_pairs,
     )
 
-    # 30 docs, each a 30-token cyclic run over a 61-token hub vocabulary
-    # (every token in ~15 docs — every PREFIX token is common); runs with
-    # start offset within ±1 intersect in >= 27 tokens -> genuine
-    # containment-0.9 pairs exist INSIDE the skewed regime; all texts
-    # distinct (no exact-dup collapse interference)
-    hubs = [f"hub{i:02d}" for i in range(61)]
-    rows = [(i, " ".join(hubs[(i * 3 + j) % 61] for j in range(30))) for i in range(30)]
-    # a rare-vocab near-dup pair as a control: 29/30 shared
-    uniq = [f"d{i}" for i in range(30)]
-    rows += [(100, " ".join(uniq)), (101, " ".join(uniq[:29] + ["rare_tail"]))]
+    rows = _skewed_hub_rows()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     sets = {i: set(t.split()) for i, t in rows}
@@ -1700,6 +1705,41 @@ def test_dd15_positional_length_filters_prune_skewed_vocab(spark):
     # the positional bound collapses that
     assert n_filtered <= n_raw / 2, (n_filtered, n_raw)
     assert n_filtered >= len(expect)  # still a superset of the true pairs
+
+
+def test_st19_guard_matches_brute_force_on_skewed_vocab(spark, tmp_path):
+    """st19's bipartite prefix × postings candidates, pruned by the PPJoin
+    length and positional bounds, on dd15's skewed hub vocabulary: half
+    the docs pin (plus an exact dup that collapses to its representative),
+    the other half screen, and every screened doc's (n_held_matches,
+    max_containment) equals Python brute force over the pinned
+    representative sets."""
+    from pdf_etl_pipeline_spark.streaming import containment_guard as CG
+
+    rows = _skewed_hub_rows()
+    held_rows = [r for r in rows if r[0] % 2 == 0] + [(200, rows[0][1])]
+    batch_rows = [r for r in rows if r[0] % 2 == 1]
+    schema = "doc_id long, text string"
+    state = str(tmp_path / "cg")
+    assert CG.pin_containment_index(spark.createDataFrame(held_rows, schema), state)
+    got = {
+        r.doc_id: (r.n_held_matches, r.max_containment)
+        for r in CG.guard_containment_batch(spark.createDataFrame(batch_rows, schema), state).collect()
+    }
+
+    reps = {}
+    for i, t in sorted(held_rows):
+        reps.setdefault(t, i)  # md5-group representative: the min doc_id
+    held = [set(t.split()) for t in reps]
+    expect = {}
+    for i, t in batch_rows:
+        s = set(t.split())
+        hits = [c for c in (len(s & h) / min(len(s), len(h)) for h in held) if c >= 0.9]
+        expect[i] = (len(hits), round(max(hits), 6) if hits else None)
+    # in-regime matches exist, and the rare-vocab control matches its twin
+    assert sum(n for n, _ in expect.values()) >= 10
+    assert expect[101] == (1, round(29 / 30, 6))
+    assert got == expect
 
 
 def test_dd16_jaccard_join_boundaries(spark):

@@ -365,6 +365,31 @@ def test_two_batch_scaffolding_lives_only_in_the_catalog_core():
     }
 
 
+def test_set_similarity_core_lives_only_in_dedup():
+    """``llmdata/dedup.py`` owns the set-similarity core: across the
+    package, ``bench.py`` and ``tools/``, the exact-ratio intersection
+    (``array_intersect(``) and the LSH band self-join condition are written
+    only there, so every near-dup plan verifies and pairs through one
+    copy."""
+    import pdf_etl_pipeline_spark
+
+    root = pathlib.Path(pdf_etl_pipeline_spark.__file__).parent
+    core = root / "llmdata" / "dedup.py"
+    sources = sorted(
+        set(root.rglob("*.py")) | set((root.parent / "tools").glob("*.py")) | {root.parent / "bench.py"}
+    )
+    band_self_join = 'F.col("a.band") == F.col("b.band")'
+    copies = [
+        f"{p.relative_to(root.parent)}:{i}"
+        for p in sources
+        if p != core
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "array_intersect(" in line or band_self_join in line
+    ]
+    assert copies == []
+    assert band_self_join in core.read_text()
+
+
 def test_failed_two_batch_query_drops_its_state(spark, sf_dir, monkeypatch):
     """A two-batch query whose second batch raises still drops its scratch
     state: the error propagates, the temporary directory is gone and the

@@ -693,13 +693,13 @@ def test_st18_framegrab_guard_pin_replay_and_stream(spark, tmp_path):
 
     state = str(tmp_path / "fg")
     with pytest.raises(ValueError, match="pin_frame_index"):
-        guard_framegrab_batch(imgs1, state, 0)
+        guard_framegrab_batch(imgs1, state)
     assert pin_frame_index(frames, state)
     assert not pin_frame_index(frames.limit(1), state)  # write-once
 
     got = {
         r.asset_id: (r.n_matched_videos, r.n_matched_frames, r.best_hamming, r.is_framegrab)
-        for r in guard_framegrab_batch(imgs1, state, 0).collect()
+        for r in guard_framegrab_batch(imgs1, state).collect()
     }
     # image 1 == frame (100,0) at H0 and matches (100,1) at H1
     assert got[1] == (1, 2, 0, True)
@@ -709,7 +709,7 @@ def test_st18_framegrab_guard_pin_replay_and_stream(spark, tmp_path):
     # replay of the same batch is bit-identical (pin-only screening)
     assert {
         r.asset_id: (r.n_matched_videos, r.n_matched_frames, r.best_hamming, r.is_framegrab)
-        for r in guard_framegrab_batch(imgs1, state, 0).collect()
+        for r in guard_framegrab_batch(imgs1, state).collect()
     } == got
 
     drop_dir = str(tmp_path / "img_drops")
@@ -765,28 +765,28 @@ def test_st19_containment_guard_pin_replay_and_stream(spark, tmp_path):
 
     state = str(tmp_path / "cg")
     with pytest.raises(ValueError, match="pin_containment_index"):
-        CG.guard_containment_batch(b1, state, 0)
+        CG.guard_containment_batch(b1, state)
     # TORN pin: df + prefixes written, toks (the existence marker) not
     torn = str(tmp_path / "cg_torn")
     spark.createDataFrame([(1, 2)], "h long, _df long").write.parquet(
         _os.path.join(torn, CG.CONT_DF_SUBDIR)
     )
     with pytest.raises(ValueError, match="pin_containment_index"):
-        CG.guard_containment_batch(b1, torn, 0)
+        CG.guard_containment_batch(b1, torn)
 
     assert CG.pin_containment_index(held, state)
     assert not CG.pin_containment_index(b2, state)  # write-once
 
     got = {
         r.doc_id: (r.n_held_matches, r.max_containment, r.is_excerpt)
-        for r in CG.guard_containment_batch(b1, state, 0).collect()
+        for r in CG.guard_containment_batch(b1, state).collect()
     }
     assert got[1] == (1, 1.0, True)
     assert got[2] == (0, None, False)
     assert got[3] == (1, 1.0, True)  # containing direction via pinned prefixes
     assert got == {
         r.doc_id: (r.n_held_matches, r.max_containment, r.is_excerpt)
-        for r in CG.guard_containment_batch(b1, state, 0).collect()
+        for r in CG.guard_containment_batch(b1, state).collect()
     }  # replay bit-identical (pin-only screening)
 
     drop_dir = str(tmp_path / "cg_drops")
@@ -858,10 +858,10 @@ def test_st20_mm_release_precedence_replay_and_stream(spark, tmp_path):
 
     state = str(tmp_path / "mmr")
     with pytest.raises(ValueError, match="pin"):
-        MR.mm_release_batch(b1, state, 0)
+        MR.mm_release_batch(b1, state)
     assert MR.pin_mm_release_state(held, frames, state)
 
-    v1, m1 = MR.mm_release_batch(b1, state, 0)
+    v1, m1 = MR.mm_release_batch(b1, state)
     got = {r.doc_id: (r.verdict, r.canonical_asset) for r in v1.collect()}
     assert got[1] == ("drop_contained", None)
     assert got[2] == ("drop_framegrab", None)
@@ -871,14 +871,14 @@ def test_st20_mm_release_precedence_replay_and_stream(spark, tmp_path):
     man1 = m1.collect()
     assert len(man1) == 1 and man1[0].n_docs == 1 and man1[0].first_doc_id == 3
 
-    v2, _ = MR.mm_release_batch(b2, state, 1)
+    v2, _ = MR.mm_release_batch(b2, state)
     got2 = {r.doc_id: (r.verdict, r.canonical_asset) for r in v2.collect()}
     assert got2[5] == ("drop_dup_asset", 3)  # min admitted index asset
     assert got2[6] == ("admit", 6)
 
     # replay batch 1: bit-identical verdicts (guards pin-only; admission
     # excludes the batch's own appends; admitted assets Hamming-separated)
-    v1r, _ = MR.mm_release_batch(b1, state, 0)
+    v1r, _ = MR.mm_release_batch(b1, state)
     assert sorted(map(tuple, v1.collect())) == sorted(map(tuple, v1r.collect()))
 
     # the guard-dropped assets never entered the index: replaying a doc
@@ -886,7 +886,7 @@ def test_st20_mm_release_precedence_replay_and_stream(spark, tmp_path):
     v3, _ = MR.mm_release_batch(
         spark.createDataFrame([(8, fresh(8), H0 ^ 1)],
                               "doc_id long, text string, phash long"),
-        state, 2,
+        state,
     )
     assert v3.collect()[0].verdict == "drop_framegrab"
 
@@ -1055,7 +1055,7 @@ def test_st20_pin_half_pinned_retry_succeeds(spark, tmp_path):
         [(3, " ".join(f"t3w{j}" for j in range(12)), 31 << 40)],
         "doc_id long, text string, phash long",
     )
-    v, _ = MR.mm_release_batch(b, state, 0)
+    v, _ = MR.mm_release_batch(b, state)
     assert v.collect()[0].verdict == "admit"
     MR.drop_mm_release_state(spark, state)
 
@@ -2535,7 +2535,7 @@ def test_st13_contamination_guard_stream_and_pin(spark, tmp_path):
 
     state = str(tmp_path / "state")
     with pytest.raises(ValueError, match="pin_benchmark"):
-        guard_contamination_batch(b1, state, 0)
+        guard_contamination_batch(b1, state)
 
     assert pin_benchmark(bench, state)
     assert not pin_benchmark(mk([(9, "other words entirely here now")]), state)  # write-once
@@ -2797,7 +2797,7 @@ def test_st15_leakage_guard_stream_and_pin(spark, tmp_path):
 
     state = str(tmp_path / "state")
     with pytest.raises(ValueError, match="pin_heldout"):
-        guard_leakage_batch(b1, state, 0)
+        guard_leakage_batch(b1, state)
 
     # TORN pin: toks written, bands not -> still refuses
     import os as _os
@@ -2809,7 +2809,7 @@ def test_st15_leakage_guard_stream_and_pin(spark, tmp_path):
         _os.path.join(torn, TOKS_SUBDIR)
     )
     with pytest.raises(ValueError, match="pin_heldout"):
-        guard_leakage_batch(b1, torn, 0)
+        guard_leakage_batch(b1, torn)
 
     assert pin_heldout(heldout, state)
     assert not pin_heldout(mk([(9, "entirely different words")]), state)  # write-once
@@ -2870,7 +2870,7 @@ def test_st15_oversized_pin_drops_broadcast_and_matches(spark, tmp_path, monkeyp
     def verdicts():
         return {
             r.doc_id: (r.n_heldout_dups, r.max_jaccard, r.leaks)
-            for r in LG.guard_leakage_batch(batch, state, 0).collect()
+            for r in LG.guard_leakage_batch(batch, state).collect()
         }
 
     base = verdicts()

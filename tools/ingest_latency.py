@@ -12,10 +12,15 @@ stays flat.
 
 The two runs admit the BIT-IDENTICAL doc set (also asserted here — the
 invariance test in tests/test_streaming.py pins the same thing at
-smaller scale), so any timing difference is pure physical layout.
+smaller scale), so any timing difference is pure physical layout. One
+batch adds one file per band partition, so compaction first runs at
+batch ``MAX_FILES_PER_BAND + 1``: ``n_batches`` must exceed
+``MAX_FILES_PER_BAND`` (8), or the two runs would be the same run. The
+compacted run's peak per-band file count is asserted below the plain
+run's, so the invariance check always compares two different layouts.
 
 Usage:
-    python tools/ingest_latency.py [sf_dir] [n_batches]   # default sf0.01, 24
+    python tools/ingest_latency.py [sf_dir] [n_batches]   # default sf0.01, 24; n_batches > 8
 
 Prints one JSON line with both curves and writes nothing outside /tmp.
 """
@@ -57,6 +62,11 @@ def run_series(spark, batches, compact_threshold):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 24
+    if n_batches <= MAX_FILES_PER_BAND:
+        sys.exit(
+            f"n_batches must exceed MAX_FILES_PER_BAND={MAX_FILES_PER_BAND}: "
+            "compaction never runs before that, so both series would be one run"
+        )
     load_at_start = os.getloadavg()[0]
     spark = get_spark("st7-latency")
     n_docs, batches = staged_batches(load_table(spark, sf_dir, "documents"), n_batches)
@@ -66,6 +76,11 @@ def main() -> None:
 
     plain, kept_plain = run_series(spark, batches, None)
     compacted, kept_comp = run_series(spark, batches, MAX_FILES_PER_BAND)
+    assert max(compacted["max_band_files"]) < max(plain["max_band_files"]), (
+        "compaction never ran",
+        compacted["max_band_files"],
+        plain["max_band_files"],
+    )
     assert kept_plain == kept_comp, "compaction changed admission semantics"
 
     print(

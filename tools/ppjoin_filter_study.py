@@ -37,9 +37,12 @@ def main() -> None:
     spark = get_spark("ppjoin-filter-study")
 
     from pdf_etl_pipeline_spark.llmdata.dedup import (
+        containment,
         hashed_tokens,
+        pair_sets,
         ppjoin_candidates,
         ppjoin_containment_pairs,
+        verified,
     )
     from tools.sf1_curves import SCALES, ensure_corpus
 
@@ -70,18 +73,11 @@ def main() -> None:
             from pyspark.sql import functions as F
 
             toks = hashed.groupBy("doc_id").agg(F.collect_set("h").alias("ts"))
-            inter = F.size(F.array_intersect("ta", "tb"))
-            cont = inter / F.least(F.size("ta"), F.size("tb"))
 
             def _verify(cands):
-                df = (
-                    cands.join(
-                        toks.select(F.col("doc_id").alias("doc_a"),
-                                    F.col("ts").alias("ta")), "doc_a")
-                    .join(
-                        toks.select(F.col("doc_id").alias("doc_b"),
-                                    F.col("ts").alias("tb")), "doc_b")
-                    .filter(cont >= 0.9)
+                df = verified(
+                    pair_sets(cands, toks, "ts"), ["doc_a", "doc_b"], 0.9,
+                    containment=containment("ta", "tb"),
                 )
                 t0 = time.time()
                 n = df.count()

@@ -18,8 +18,8 @@ wall time of the verified-pair query. Corpora:
   twin pairs) at sf0.01/sf0.1 and a generated 3× corpus of the same shape.
 
 Candidate counts reuse the library's own building blocks
-(minhash_signatures_agg, sign_key/BAND_PLANE_SETS) so the measured joins
-are the measured code paths. Usage:
+(minhash_signatures_agg, sign_key/BAND_PLANE_SETS, and dedup's band_rows /
+band_pairs) so the measured joins are the measured code paths. Usage:
 
     python tools/scale_curve.py [--quick]   # quick = skip the 3x corpora
 """
@@ -109,55 +109,17 @@ def twin_augment(emb: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 def dd3_candidates(docs: DataFrame) -> int:
     sigs = DD.minhash_signatures_agg(docs).persist()
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"s{b * DD.ROWS_PER_BAND + r}") for r in range(DD.ROWS_PER_BAND)]
-            ).alias("key"),
-        )
-        for b in range(DD.BANDS)
-    ]
-    bands = sigs.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    n = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id"), F.col("b.doc_id"))
-        .dropDuplicates()
-        .count()
-    )
+    n = DD.band_pairs(DD.bands_from_signatures(sigs), "doc_id", "doc_a", "doc_b").count()
     sigs.unpersist()
     return n
 
 
 def dd5_candidates(emb: DataFrame) -> int:
     e = emb.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    band_structs = [
-        F.struct(F.lit(b).alias("band"), SIM.sign_key(F.col("v"), ps).alias("key"))
-        for b, ps in enumerate(SIM.BAND_PLANE_SETS)
-    ]
-    bands = e.select("vec_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    bands = DD.band_rows(
+        e, "vec_id", [SIM.sign_key(F.col("v"), ps) for ps in SIM.BAND_PLANE_SETS]
     ).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    n = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id"), F.col("b.vec_id"))
-        .dropDuplicates()
-        .count()
-    )
+    n = DD.band_pairs(bands, "vec_id", "id_a", "id_b").count()
     bands.unpersist()
     return n
 
@@ -381,29 +343,18 @@ def measure_dc2(label: str, docs: DataFrame) -> dict:
     """Bipartite decontamination volumes: benchmark size, banding
     candidates (the quantity that must stay linear in corpus size for a
     fixed benchmark), and verified contamination pairs."""
-    from pdf_etl_pipeline_spark.llmdata.corpus import BENCH_MOD, near_decontaminate
-    from pdf_etl_pipeline_spark.llmdata.dedup import (
-        bands_from_signatures,
-        hashed_tokens,
-        signatures_from_hashed,
+    from pdf_etl_pipeline_spark.llmdata.corpus import (
+        BENCH_MOD,
+        _near_decontaminate_plan,
+        near_decontaminate,
     )
 
     docs = docs.persist()
     n = docs.count()
     n_bench = docs.filter(F.col("doc_id") % BENCH_MOD == 0).count()
-    hashed = hashed_tokens(docs).dropDuplicates(["doc_id", "h"]).persist()
-    bands = bands_from_signatures(signatures_from_hashed(hashed))
-    is_b = F.col("doc_id") % BENCH_MOD == 0
-    cands = (
-        bands.filter(~is_b)
-        .join(
-            bands.filter(is_b).select(F.col("doc_id").alias("bench_id"), "band", "key"),
-            ["band", "key"],
-        )
-        .select("doc_id", "bench_id")
-        .dropDuplicates()
-        .count()
-    )
+    _, hashed, cands = _near_decontaminate_plan(docs, 0.9)
+    hashed.persist()
+    cands = cands.count()
     t0 = time.time()
     verified = near_decontaminate(docs).count()
     wall = round(time.time() - t0, 2)
