@@ -293,7 +293,7 @@ def t8_item_c(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t11_dispatch_union",
-    doc="T11/T12/U1: detect → per-type parser → unionByName across heterogeneous schemas (rows-only)",
+    doc="T11/T12/U1: detect → one CASE over per-type row arrays → inline into RECORD_SCHEMA (rows-only)",
 )
 def t11_dispatch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
@@ -652,7 +652,8 @@ REGISTRY["t8_item_c"].oracle = _T8_ORACLE
 REGISTRY["t8_item_c"].doc = "T8 item C: sentinel-block segmentation × vendor rows (full DuckDB oracle)"
 REGISTRY["t11_dispatch_union"].oracle = _T11_ORACLE
 REGISTRY["t11_dispatch_union"].doc = (
-    "T11/T12/U1: detect → per-type parser → unionByName; oracle unions every branch oracle BY NAME"
+    "T11/T12/U1: detect → one CASE over per-type row arrays → inline into RECORD_SCHEMA;"
+    " oracle unions every branch oracle BY NAME"
 )
 
 

@@ -29,9 +29,9 @@ def _try_cast(c: Column, dtype: str) -> Column:
 # F1 — parse_float (reference: lib/parse_utils.py:27-35)
 # ---------------------------------------------------------------------------
 def parse_float(c: Column | str) -> Column:
-    """Strip ``,`` and ``$`` then cast to double; null on failure."""
-    cleaned = F.regexp_replace(F.trim(_col(c)), r"[,$]", "")
-    return _try_cast(F.nullif(cleaned, F.lit("")), "double")
+    """Strip ``,`` and ``$`` then cast to double; null on failure (an empty
+    string fails the cast too)."""
+    return _try_cast(F.regexp_replace(F.trim(_col(c)), r"[,$]", ""), "double")
 
 
 # F1b — clean_currency over many columns (reference: lib/parse_utils.py:38-43)
@@ -46,11 +46,16 @@ def clean_currency(df, cols: list[str]):
 _DATE_FORMATS = ["MMM d, yyyy", "MMMM d, yyyy", "yyyy-M-d", "d-M-yyyy", "M/d/yyyy"]
 
 
-def parse_date(c: Column | str) -> Column:
-    """First-match-wins date parse over the reference's 5 formats → DateType."""
-    s = F.trim(_col(c))
-    candidates = [F.try_to_timestamp(s, F.lit(fmt)).cast("date") for fmt in _DATE_FORMATS]
-    return F.coalesce(*candidates)
+def parse_date(c: Column | str, extra_formats: tuple[str, ...] = ()) -> Column:
+    """First-match-wins date parse over the reference's 5 formats, then
+    ``extra_formats`` → DateType. ``c`` is bound once (``let_col``): the
+    formats would otherwise repeat it, and inside a CASE branch or a lambda
+    body Spark evaluates each copy."""
+    formats = [*_DATE_FORMATS, *extra_formats]
+    return let_col(
+        F.trim(_col(c)),
+        lambda s: F.coalesce(*[F.try_to_timestamp(s, F.lit(fmt)).cast("date") for fmt in formats]),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -97,23 +102,23 @@ def find_dates_in_lines(lines: Column | str) -> Column:
     the minimum.
     """
     lines = _col(lines)
-    repaired = F.transform(lines, coerce_ocr_digits)
-    # all matches in every line, flattened
-    matches = F.flatten(F.transform(repaired, lambda l: F.regexp_extract_all(l, F.lit(_DATE_IN_TEXT), 0)))
-    norm = F.transform(
-        matches,
-        lambda m: F.concat_ws(
-            "-",
-            F.regexp_extract(m, _DATE_IN_TEXT, 1),
-            F.regexp_extract(m, _DATE_IN_TEXT, 2),
-            coerce_year(F.regexp_extract(m, _DATE_IN_TEXT, 3)),
-        ),
+
+    def dates(m: Column) -> Column:
+        d, mo, y = (F.regexp_extract(m, _DATE_IN_TEXT, g) for g in (1, 2, 3))
+        return F.try_to_timestamp(F.concat_ws("-", d, mo, coerce_year(y)), F.lit("d-M-yyyy")).cast("date")
+
+    # every match in every repaired line; array_min skips the null (invalid)
+    # dates
+    return F.array_min(
+        F.flatten(
+            F.transform(
+                lines,
+                lambda l: F.transform(
+                    F.regexp_extract_all(coerce_ocr_digits(l), F.lit(_DATE_IN_TEXT), 0), dates
+                ),
+            )
+        )
     )
-    parsed = F.filter(
-        F.transform(norm, lambda s: F.try_to_timestamp(s, F.lit("d-M-yyyy")).cast("date")),
-        lambda d: d.isNotNull(),
-    )
-    return F.array_min(parsed)
 
 
 # ---------------------------------------------------------------------------
@@ -226,8 +231,10 @@ def standardize_columns(df):
 # single-element array wrapper makes the whole subtree that element.
 # ---------------------------------------------------------------------------
 def let_col(value: Column, body) -> Column:
-    """Bind ``value`` once per row; ``body`` receives the bound Column."""
-    return F.transform(F.array(value), body).getItem(0)
+    """Bind ``value`` once per row; ``body`` receives the bound Column.
+    ``element_at`` rather than ``getItem``: the analyzer resolves a function
+    in the same pass as its argument, a field/item access one pass later."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 # ---------------------------------------------------------------------------

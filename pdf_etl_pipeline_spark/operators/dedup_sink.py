@@ -72,6 +72,8 @@ def insert_dataframe(
     (0 = all duplicates — reference db_connection.py:63 semantics)."""
     fresh = dedup_against_existing(df, table_path, keys, spark)
     with materialized(fresh):
+        # a separate count, not an Observation on the append: an observed
+        # append of zero rows still writes an empty part file
         n = fresh.count()
         if n:
             # AQE does not coalesce a cached plan's partitions, so the cache

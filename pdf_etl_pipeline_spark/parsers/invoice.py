@@ -7,7 +7,7 @@ Reference behavior (cited for parity, re-expressed Spark-first):
 
 The whole parser is **native Column expressions** over ``lines:
 array<string>`` — no Python UDF. Per-document work is embarrassingly
-parallel (one row in, n rows out via ``posexplode``); at 100 TB this scales
+parallel (one row in, n rows out via ``inline``); at 100 TB this scales
 linearly with input splits and never shuffles.
 """
 
@@ -18,10 +18,13 @@ from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions import scalars as S
 from pdf_etl_pipeline_spark.parsers.lines import (
+    bind,
     cascade,
+    fields,
     first_extract,
     first_matching_line,
-    plan_columns,
+    outer,
+    parse_rows,
     slice_between,
 )
 
@@ -101,39 +104,29 @@ def invoice_line_items(lines: Column) -> Column:
     )
 
 
-def _invoice_plan(
-    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None
-) -> tuple[list[Column], ...]:
+def _invoice_rows(
+    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None, row
+) -> Column:
     lines = F.col(lines_col)
-    with_meta = [
-        F.col(path_col).alias("file"),
-        invoice_metadata(lines).alias("m"),
-        invoice_line_items(lines).alias("items"),
-    ]
-    exploded = [F.col("file"), F.col("m"), F.posexplode_outer("items").alias("pos", "item")]
-    out = [
-        F.lit(company_id).alias("company_id"),
-        F.lit(country).alias("country"),
-        (
-            F.lit(processed_date).cast("date") if processed_date else F.current_date()
-        ).alias("processed_date"),
-        F.col("m.supplier_name").alias("supplier_name"),
-        F.col("m.supplier_tin").alias("supplier_tin"),
-        F.col("m.client_name").alias("client_name"),
-        F.col("m.client_tin").alias("client_tin"),
-        F.col("m.invoice_number").alias("invoice_number"),
-        F.col("m.invoice_date").alias("invoice_date"),
-        F.col("m.due_date").alias("due_date"),
-        F.col("item.description").alias("description"),
-        F.col("item.qty").alias("qty"),
-        F.col("item.price").alias("price"),
-        F.col("item.total").alias("total"),
-        F.col("m.tax_label").alias("tax_label"),
-        F.col("m.tax_amount").alias("tax_amount"),
-        F.col("m.total_amount").alias("total_amount"),
-        F.col("file"),
-    ]
-    return with_meta, exploded, out
+    processed = F.lit(processed_date).cast("date") if processed_date else F.current_date()
+
+    def rows(h):
+        m = h["m"]
+        return F.transform(
+            outer(h["items"]),
+            lambda item: row(
+                company_id=F.lit(company_id),
+                country=F.lit(country),
+                processed_date=processed,
+                **fields(m, "supplier_name", "supplier_tin", "client_name", "client_tin"),
+                **fields(m, "invoice_number", "invoice_date", "due_date"),
+                **fields(item, "description", "qty", "price", "total"),
+                **fields(m, "tax_label", "tax_amount", "total_amount"),
+                file=F.col(path_col),
+            ),
+        )
+
+    return bind({"m": invoice_metadata(lines), "items": invoice_line_items(lines)}, rows)
 
 
 def parse_invoices(
@@ -149,7 +142,4 @@ def parse_invoices(
     lib/pipeline_runner.py:148-164). The Columns are built once per Spark
     application (``lines.plan_columns``).
     """
-    with_meta, exploded, out = plan_columns(
-        docs, _invoice_plan, lines_col, path_col, company_id, country, processed_date
-    )
-    return docs.select(*with_meta).select(*exploded).select(*out)
+    return parse_rows(docs, _invoice_rows, lines_col, path_col, company_id, country, processed_date)

@@ -20,10 +20,14 @@ from pyspark.sql import functions as F
 
 from pdf_etl_pipeline_spark.functions import scalars as S
 from pdf_etl_pipeline_spark.parsers.lines import (
+    bind,
     cascade,
+    fields,
     first_extract,
     first_matching_line,
-    plan_columns,
+    outer,
+    parse_rows,
+    record,
 )
 
 M = r"[\d,]+\.\d{2}"
@@ -117,9 +121,9 @@ def _item_struct(s: Column, lines: Column) -> Column:
     )
 
 
-def _receipt_plan(
-    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None
-) -> tuple:
+def _receipt_rows(
+    lines_col: str, path_col: str, company_id: int, country: str, processed_date: str | None, row
+) -> Column:
     lines = F.col(lines_col)
     tax_line = first_matching_line(lines, TAX_LINE)
     n1 = S.parse_float(F.regexp_extract(tax_line, TAX_LINE, 1))
@@ -130,66 +134,46 @@ def _receipt_plan(
     # _match_price_line re.sub(r"\s+"," ") + strip), and totals/tenders
     # lines are never items
     item_lines = F.filter(
-        F.transform(
-            lines,
-            lambda l, i: F.struct(S.collapse_whitespace(l).alias("line"), i.alias("pos")),
-        ),
+        F.transform(lines, lambda l, i: record(line=S.collapse_whitespace(l), pos=i)),
         lambda s: s["line"].rlike(ANY_ITEM) & ~F.upper(s["line"]).rlike(NOT_ITEM_WORDS),
     )
-
-    base = [
-        F.col(path_col).alias("file"),
-        F.coalesce(
-            first_matching_line(lines, SUPPLIER_SUFFIX), F.try_element_at(lines, F.lit(1))
-        ).alias("supplier_name"),
-        first_matching_line(lines, ADDRESS_HINT).alias("supplier_address"),
-        cascade(lines, r"GST\s+ID\s+No\s*:?\s*(\d{6,})", r"\b([RT]\d{6,})\b").alias(
-            "invoice_number"
-        ),
-        S.find_dates_in_lines(lines).alias("invoice_date"),
-        S.parse_float(F.regexp_extract(tax_line, TAX_LINE, 2)).alias("_rate"),
-        F.least(n1, n2).alias("tax_amount"),
-        F.greatest(n1, n2).alias("subtotal_amount"),
-        S.parse_float(
-            first_extract(lines, rf"^TOTAL\b.*?({M})\s*$")
-        ).alias("_total_line"),
-        F.transform(item_lines, lambda s: _item_struct(s, lines)).alias("_items"),
-    ]
-    # A6: per-receipt subtotal = sum of item totals (fallback when no tax line)
-    items_sum = F.aggregate(
-        F.col("_items"), F.lit(0.0), lambda acc, it: acc + F.coalesce(it["total"], F.lit(0.0))
-    )
-    enriched = {
-        "total_amount": S.fix_null_total(
-            F.col("_total_line"), F.col("subtotal_amount"), F.col("tax_amount")
-        ),
-        "_items_sum": items_sum,
+    header = {
+        "supplier_name": F.coalesce(first_matching_line(lines, SUPPLIER_SUFFIX), F.try_element_at(lines, F.lit(1))),
+        "supplier_address": first_matching_line(lines, ADDRESS_HINT),
+        "invoice_number": cascade(lines, r"GST\s+ID\s+No\s*:?\s*(\d{6,})", r"\b([RT]\d{6,})\b"),
+        "invoice_date": S.find_dates_in_lines(lines),
+        "tax_label": S.parse_float(F.regexp_extract(tax_line, TAX_LINE, 2)),
+        "tax_amount": F.least(n1, n2),
+        "subtotal_amount": F.greatest(n1, n2),
+        "total_line": S.parse_float(first_extract(lines, rf"^TOTAL\b.*?({M})\s*$")),
+        "items": F.transform(item_lines, lambda s: _item_struct(s, lines)),
     }
-    exploded = [F.col("*"), F.posexplode_outer("_items").alias("pos", "item")]
-    qty_fixed = S.infer_qty(F.col("item.qty"), F.col("item.price"), F.col("item.total"))
-    out = [
-        F.lit(company_id).alias("company_id"),
-        F.lit(country).alias("country"),
-        (
-            F.lit(processed_date).cast("date") if processed_date else F.current_date()
-        ).alias("processed_date"),
-        F.col("supplier_name"),
-        F.col("supplier_address"),
-        F.col("invoice_number"),
-        F.col("invoice_date"),
-        F.coalesce(F.col("item.desc"), F.col("item.sku")).alias("description"),
-        F.col("item.sku").alias("sku"),
-        qty_fixed.alias("qty"),
-        F.col("item.price").alias("price"),
-        F.col("item.total").alias("total"),
-        F.col("_rate").alias("tax_label"),
-        F.col("tax_amount"),
-        F.col("subtotal_amount"),
-        F.col("total_amount"),
-        F.col("_items_sum").alias("items_total"),
-        F.col("file"),
-    ]
-    return base, enriched, exploded, out
+    processed = F.lit(processed_date).cast("date") if processed_date else F.current_date()
+
+    def rows(h):
+        items = h["items"]
+        return F.transform(
+            outer(items),
+            lambda item: row(
+                company_id=F.lit(company_id),
+                country=F.lit(country),
+                processed_date=processed,
+                **fields(h, "supplier_name", "supplier_address", "invoice_number", "invoice_date"),
+                description=F.coalesce(item["desc"], item["sku"]),
+                sku=item["sku"],
+                qty=S.infer_qty(item["qty"], item["price"], item["total"]),
+                price=item["price"],
+                total=item["total"],
+                **fields(h, "tax_label", "tax_amount", "subtotal_amount"),
+                total_amount=S.fix_null_total(h["total_line"], h["subtotal_amount"], h["tax_amount"]),
+                # A6: per-receipt subtotal = sum of item totals (fallback
+                # when no tax line), summed on each of the receipt's rows
+                items_total=F.aggregate(items, F.lit(0.0), lambda acc, it: acc + F.coalesce(it["total"], F.lit(0.0))),
+                file=F.col(path_col),
+            ),
+        )
+
+    return bind(header, rows)
 
 
 def parse_receipts(
@@ -200,13 +184,4 @@ def parse_receipts(
     country: str = "USA",
     processed_date: str | None = None,
 ) -> DataFrame:
-    base, enriched, exploded, out = plan_columns(
-        docs, _receipt_plan, lines_col, path_col, company_id, country, processed_date
-    )
-    return (
-        docs.select(*base)
-        .withColumns(enriched)
-        .select(*exploded)
-        .drop("_items")
-        .select(*out)
-    )
+    return parse_rows(docs, _receipt_rows, lines_col, path_col, company_id, country, processed_date)

@@ -3,18 +3,18 @@
 lifecycle documented in SURVEY.md §3.1).
 
     corpus scan (S1) → text extraction (S2/S3/S4 UDFs | fixture lines)
-      → doc-type classification (T12/P5) → per-type parser branches
-      (T1–T9) → unionByName (U1) → dedup-insert sink (J1/S7)
+      → doc-type classification (T12/P5) → one CASE over the per-type
+      parsers' row arrays (T1–T9) → inline into RECORD_SCHEMA (U1)
+      → dedup-insert sink (J1/S7)
 
 The whole thing is ONE lazy logical plan: Catalyst prunes the binary
 content column for doc types that don't need it, pushes the extension
 filter into the file listing, and fans the per-file parser work across
 executors. Nothing here loops on the driver.
 
-A sink run materializes the extracted ``(path, lines)`` rows once and
-releases them when it returns: the parser fans them into 7 doc-type
-branches and the sink runs two actions (count, append), and uncached each
-branch of each action would re-scan and re-extract every PDF.
+The parser reads the extracted ``(path, lines)`` rows in one pass, so a
+sink run extracts each PDF once: the sink holds its anti-joined rows in
+one ``materialized`` scope, and its count and append both read that cache.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf_etl_pipeline_spark.operators.dedup_sink import insert_dataframe
 from pdf_etl_pipeline_spark.parsers.nc import parse_documents_by_type
-from pdf_etl_pipeline_spark.session import materialized
 from pdf_etl_pipeline_spark.sources.files import scan_corpus
 from pdf_etl_pipeline_spark.sources.pdf import extract_text_lines
 
@@ -39,13 +38,9 @@ def run_extraction_pipeline(
     inserted count), else return the records DataFrame.
 
     With ``sink_path=None`` the records stay lazy: every action on them
-    re-runs the scan and the extraction once per parser branch, so a caller
-    that runs several actions should hold them in ``session.materialized``."""
-    docs = extract_text_lines(scan_corpus(spark, root, glob=glob))
-    if sink_path is None:
-        return run_on_lines(docs)
-    with materialized(docs):
-        return run_on_lines(docs, sink_path)
+    re-runs the scan and the extraction, so a caller that runs several
+    actions should hold them in ``session.materialized``."""
+    return run_on_lines(extract_text_lines(scan_corpus(spark, root, glob=glob)), sink_path)
 
 
 def run_on_lines(docs: DataFrame, sink_path: str | None = None) -> DataFrame | int:

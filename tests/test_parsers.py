@@ -157,17 +157,151 @@ def test_dispatch_union_schema(spark):
     assert inv.award_value is None
 
 
+# the by-name union of the seven parsers' outputs, as the seven-branch
+# unionByName dispatcher produced it: receipt columns, doc_type, then each
+# later branch's new columns in branch order
+_RECORD_FIELDS = [
+    ("company_id", "int", True), ("country", "string", True), ("processed_date", "date", True),
+    ("supplier_name", "string", True), ("supplier_address", "string", True),
+    ("invoice_number", "string", True), ("invoice_date", "date", True),
+    ("description", "string", True), ("sku", "string", True), ("qty", "double", True),
+    ("price", "double", True), ("total", "double", True), ("tax_label", "double", True),
+    ("tax_amount", "double", True), ("subtotal_amount", "double", True),
+    ("total_amount", "double", True), ("items_total", "double", True), ("file", "string", True),
+    ("doc_type", "string", False), ("state", "string", True), ("owner", "string", True),
+    ("contract_id", "string", True), ("project_number", "string", True),
+    ("county", "string", True), ("vendor", "string", True), ("letting_date", "date", True),
+    ("award_value", "double", True), ("division", "string", True),
+    ("proposal_description", "string", True), ("date_available", "date", True),
+    ("completion_date", "date", True), ("letting_time", "string", True),
+    ("engineers_estimate", "double", True), ("total_bids_received", "int", True),
+    ("contractor_name", "string", True), ("amount_bid", "double", True),
+    ("call_number", "string", True), ("fed_aid", "string", True), ("counties", "string", True),
+    ("line_no", "string", True), ("item_no", "string", True),
+    ("item_description", "string", True), ("unit", "string", True),
+    ("vendor_name", "string", True), ("unit_price", "double", True), ("block_id", "bigint", True),
+    ("type_of_work", "string", True), ("location", "string", True), ("estimate", "double", True),
+    ("final_completion", "date", True), ("estimate_total", "double", True),
+    ("vendor_city", "string", True), ("vendor_total", "double", True), ("pct_diff", "double", True),
+    ("supplier_tin", "string", True), ("client_name", "string", True),
+    ("client_tin", "string", True), ("due_date", "date", True),
+]
+
+
+def _triples(schema):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields]
+
+
+def test_dispatch_schema_is_the_record_schema(spark):
+    from pdf_etl_pipeline_spark.parsers.nc import RECORD_SCHEMA
+
+    assert _triples(RECORD_SCHEMA) == _RECORD_FIELDS
+    out = parse_documents_by_type(FX.corpus_df(spark, FX.ALL_DOCS))
+    assert out.schema == RECORD_SCHEMA
+
+
+# sha256 prefix of the sorted row reprs each parser gave over FX.ALL_DOCS
+# when the dispatcher still unioned seven per-type branches (T8 by window)
+_GOLDEN_ROWS = {
+    "dispatch": (22, "3c922a05489eedd0"),
+    "invoices": (12, "46892f73ace960e4"),
+    "receipts": (12, "6d7ce2e5d1b9bf93"),
+    "award": (9, "0a13ca8b4e888a24"),
+    "invitation": (9, "d027a03ec267a2a3"),
+    "bids_as_read": (13, "6606286286b49c51"),
+    "bid_tabs": (4, "ee7c2c92f1d9f011"),
+    "item_c": (3, "286cb5fcb08b0f85"),
+}
+
+
+def test_parser_rows_match_the_union_dispatcher(spark):
+    import hashlib
+
+    from pdf_etl_pipeline_spark.parsers.receipt import parse_receipts
+
+    docs, day = FX.corpus_df(spark, FX.ALL_DOCS), "2023-06-01"
+    outs = {
+        "dispatch": parse_documents_by_type(docs, processed_date=day),
+        "invoices": parse_invoices(docs, processed_date=day),
+        "receipts": parse_receipts(docs, processed_date=day),
+        "award": parse_award_letter(docs),
+        "invitation": parse_invitation(docs),
+        "bids_as_read": parse_bids_as_read(docs),
+        "bid_tabs": parse_bid_tabs(docs),
+        "item_c": parse_item_c(docs),
+    }
+    got = {}
+    for name, df in outs.items():
+        rows = sorted(map(repr, df.collect()))
+        got[name] = (len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16])
+    assert got == _GOLDEN_ROWS
+
+
+def _plan_nodes(plan) -> list[str]:
+    children = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(children.size()) for n in _plan_nodes(children.apply(i))
+    ]
+
+
+def test_dispatch_is_one_pass(spark):
+    out = parse_documents_by_type(FX.corpus_df(spark, FX.ALL_DOCS))
+    plan = out._jdf.queryExecution().optimizedPlan()
+    nodes = _plan_nodes(plan)
+    assert not {"Union", "Window", "Aggregate"} & set(nodes), nodes
+    assert nodes.count("LogicalRDD") == 1, nodes  # one scan of docs
+    # detect_doc_type's text probes run once per row, not once per branch
+    assert plan.toString().count("NOTIFICATION OF AWARD") == 1
+
+
+def test_item_c_block_edges(spark):
+    """Block k runs from sentinel k to just before sentinel k+1."""
+
+    def parse(lines):
+        rows = parse_item_c(FX.corpus_df(spark, [("x.pdf", lines)]))
+        return [
+            (r.block_id, r.contract_id, r.type_of_work, r.location, r.estimate, r.vendor_name)
+            for r in rows.orderBy("block_id", "vendor_name").collect()
+        ]
+
+    block = [
+        "DA00570",
+        "TYPE OF WORK  PAVING",
+        "$ TOTALS",
+        "ACME PAVING INC  RALEIGH, NC  12,345.00  -1.5",
+        "LETTING TOTAL",
+    ]
+    # lines before the first sentinel belong to no block
+    assert parse(["ITEM C", "junk before", "ESTIMATE 1,000.00"] + block) == [
+        (1, "DA00570", "PAVING", None, None, "ACME PAVING INC")
+    ]
+    # consecutive sentinels: a one-line block with one null-vendor row
+    assert parse(["DA00001", "DA00002", "LOCATION  X"]) == [
+        (1, "DA00001", None, None, None, None),
+        (2, "DA00002", None, "X", None, None),
+    ]
+    # no sentinel, no block
+    assert parse(["ITEM C", "$ TOTALS", "ACME PAVING INC  RALEIGH, NC  12,345.00  -1.5"]) == []
+    # no $ TOTALS section: one null-vendor row
+    assert parse(["DA00003", "TYPE OF WORK  BRIDGE", "ESTIMATE 2,000.00"]) == [
+        (1, "DA00003", "BRIDGE", None, 2000.0, None)
+    ]
+
+
 def _py4j_calls(monkeypatch, fn):
-    """``fn()`` and the number of commands it sent to the JVM over py4j."""
+    """``fn()`` and the number of commands it sent to the JVM over py4j,
+    not counting py4j's deferred frees of earlier proxies: those are sent
+    with whichever later call comes first."""
     from py4j.java_gateway import GatewayClient
+    from py4j.protocol import MEMORY_COMMAND_NAME
 
     send = GatewayClient.send_command
     calls = 0
 
-    def counting(self, *args, **kwargs):
+    def counting(self, command, *args, **kwargs):
         nonlocal calls
-        calls += 1
-        return send(self, *args, **kwargs)
+        calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counting)
     try:
@@ -181,8 +315,8 @@ def test_parser_plan_is_built_once_per_session(spark, monkeypatch):
     parse_documents_by_type(FX.corpus_df(spark, FX.ALL_DOCS))
     docs = FX.corpus_df(spark, FX.ALL_DOCS)
     out, calls = _py4j_calls(monkeypatch, lambda: parse_documents_by_type(docs))
-    # a cold build sends ~13k commands; applying the memoized Columns ~500
-    assert calls <= 1000
+    # a cold build sends ~28k commands; applying the memoized Columns 28
+    assert calls <= 42
     assert out.count() == 22
 
 

@@ -75,9 +75,8 @@ def test_sink_run_leaves_nothing_persisted(spark, tmp_path):
 
 
 def test_sink_run_extracts_each_document_once(spark, tmp_path, monkeypatch):
-    """The parser's 7 branches and the sink's count and append share one
-    extraction per document instead of running it once per branch per
-    action."""
+    """The one-pass parser and the sink's count and append share one
+    extraction per document instead of running it once per action."""
     from pdf_etl_pipeline_spark.sources import pdf
 
     calls = spark.sparkContext.accumulator(0)
@@ -112,6 +111,19 @@ def test_dedup_sink_idempotent(spark, tmp_path):
     assert n2 == 0  # re-run inserts nothing (reference db_connection.py:63)
     stored = spark.read.parquet(sink)
     assert stored.count() == 3
+
+
+def test_all_duplicate_batch_writes_no_file(spark, tmp_path):
+    """Why the parquet sink counts before it appends: an all-duplicate
+    batch inserts nothing and adds no (empty) part file."""
+    from pdf_etl_pipeline_spark.operators.fsutil import data_file_count
+
+    sink = str(tmp_path / "invoices")
+    docs = FX.corpus_df(spark, FX.INVOICE_DOCS)
+    assert run_on_lines(docs, sink_path=sink) == 3
+    files = data_file_count(sink)
+    assert run_on_lines(docs, sink_path=sink) == 0
+    assert data_file_count(sink) == files
 
 
 def test_sink_append_sizes_files_like_an_uncached_write(spark, tmp_path):

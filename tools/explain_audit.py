@@ -780,6 +780,12 @@ CHECKS = {
         "must": ["Generate"],
         "must_not": ["BatchEvalPython", "ArrowEvalPython"],
     },
+    "t11_dispatch_union": {
+        # one pass: a CASE over per-type row arrays and one inline, no
+        # per-type branches unioned, no T8 window
+        "must": ["Generate"],
+        "must_not": ["Union", "Window", "BatchEvalPython", "ArrowEvalPython"],
+    },
     "w5_topk_per_group": {
         "must": ["Window"],
         "must_not": ["BatchEvalPython"],
