@@ -77,8 +77,6 @@ def detect_doc_type(path: Column, lines: Column) -> Column:
     )
 
 
-
-
 # --- T5: award letter → 1 row ----------------------------------------------
 def _award_rows(lines_col: str, row) -> Column:
     lines = F.col(lines_col)
@@ -348,14 +346,15 @@ RECORD_SCHEMA = StructType(
 )
 
 
-def _padded(doc_type: str):
+def _padded(doc_type: str, nulls: dict[str, Column]):
     """The row builder of one dispatch branch: the parser's columns and its
-    doc_type at their RECORD_SCHEMA places, typed nulls everywhere else."""
+    doc_type at their RECORD_SCHEMA places, the named typed ``nulls``
+    everywhere else."""
 
     def row(**cols: Column) -> Column:
         cols["doc_type"] = F.lit(doc_type)
-        assert cols.keys() <= set(RECORD_SCHEMA.names), cols.keys() - set(RECORD_SCHEMA.names)
-        return record(**{f.name: cols.get(f.name, F.lit(None).cast(f.dataType)) for f in RECORD_SCHEMA})
+        assert cols.keys() <= nulls.keys(), cols.keys() - nulls.keys()
+        return F.struct(*[cols[n].alias(n) if n in cols else null for n, null in nulls.items()])
 
     return row
 
@@ -374,9 +373,12 @@ def _dispatch_plan(lines_col: str, processed_date: str | None) -> tuple[Column, 
         "nc_item_c": lambda row: _item_c_rows(lines_col, row),
         "invoice": lambda row: _invoice_rows(lines_col, "path", 1, "USA", processed_date, row),
     }
+    # one set of named typed nulls serves all seven branches: each costs a
+    # dozen py4j calls, so per-branch copies would double the cold build
+    nulls = {f.name: F.lit(None).cast(f.dataType).alias(f.name) for f in RECORD_SCHEMA}
     records = None
     for t, build in rows.items():
-        is_t, arr = F.col("doc_type") == t, build(_padded(t))
+        is_t, arr = F.col("doc_type") == t, build(_padded(t, nulls))
         records = F.when(is_t, arr) if records is None else records.when(is_t, arr)
     return doc_type.alias("doc_type"), F.inline(records)
 

@@ -100,7 +100,7 @@ def test_bids_as_read(spark):
 def test_bids_as_read_null_fallback(spark):
     empty_doc = [("x.pdf", ["CONTRACT BIDS AS READ", "nothing parsed"])]
     rows = parse_bids_as_read(FX.corpus_df(spark, empty_doc)).collect()
-    assert len(rows) == 1  # all-null fallback row survives (posexplode_outer)
+    assert len(rows) == 1  # all-null fallback row survives (lines.outer)
     assert rows[0].contractor_name is None
 
 
@@ -315,7 +315,7 @@ def test_parser_plan_is_built_once_per_session(spark, monkeypatch):
     parse_documents_by_type(FX.corpus_df(spark, FX.ALL_DOCS))
     docs = FX.corpus_df(spark, FX.ALL_DOCS)
     out, calls = _py4j_calls(monkeypatch, lambda: parse_documents_by_type(docs))
-    # a cold build sends ~28k commands; applying the memoized Columns 28
+    # a cold build sends ~14k commands; applying the memoized Columns 28
     assert calls <= 42
     assert out.count() == 22
 
